@@ -70,10 +70,35 @@ import os
 import re
 import sys
 import time
+from typing import Callable, NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from wellmeet_data_pipeline_spark.plans.queries import REGISTRY
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
+
+from wellmeet_data_pipeline_spark.operators.dedup import (
+    _shingle_pair_stats,
+    minhash_lsh_candidates_sha,
+    minhash_verify_sha,
+    shingles_df,
+)
+from wellmeet_data_pipeline_spark.operators.retrieval import mmr_diversify
+from wellmeet_data_pipeline_spark.operators.scoring import _tokens_with_pos
+from wellmeet_data_pipeline_spark.operators.similarity import (
+    binary_hamming_top_k,
+    binary_packed_candidates,
+    brute_force_top_k,
+    clustered_embeddings,
+    int8_candidate_codes,
+    int8_dot_top_k,
+    ivf_assignments,
+    ivf_pq_top_k,
+    ivf_top_k,
+    pq_encoded_frame,
+)
+from wellmeet_data_pipeline_spark.operators.skew import fanout_small_scan
+from wellmeet_data_pipeline_spark.plans.queries import REGISTRY, table
 from wellmeet_data_pipeline_spark.session import get_spark
 
 # headline set: one per operator family, weighted toward the scale-relevant
@@ -91,7 +116,7 @@ HEADLINE = [
     "doc_fingerprint",
     "dedup_exact_documents",
     "ngram_jaccard_pairs",
-    # moved next to ngram_jaccard_pairs (r13): the whole PAIR_STATS_SHARED
+    # moved next to ngram_jaccard_pairs (r13): the whole shared_pair_stats
     # family consumes one session-shared (id_a, id_b, inter, n_a, n_b)
     # frame, so it must sit inside one restart segment
     "ngram_containment_pairs",
@@ -114,7 +139,7 @@ HEADLINE = [
     "corpus_end_to_end",
     "quality_classifier_score",
     # dedup_vs_reference moved next to dedup_threshold_sweep (r13): both
-    # consume the session-shared raw verify-counts frame (VERIFY_SHARED),
+    # consume the session-shared raw verify-counts frame (shared_verify_counts),
     # so they must sit inside one restart segment
     "hard_negatives_topk",
     "dsir_importance",
@@ -197,7 +222,7 @@ HEADLINE = [
     "token_pmi_collocations",
     "calibration_ece",
     "rag_context_pack",
-    # moved next to their family (r13): every DEDUP_SHARED consumer now
+    # moved next to their family (r13): every shared_lsh_edges consumer now
     # sits in ONE session segment, so the shared edge frame builds once
     "dup_graph_kcore",
     "dup_triangle_count",
@@ -221,7 +246,7 @@ HEADLINE = [
     "cluster_label_purity",
     "tail_index_hill",
     "minhash_union_parity",
-    # moved next to their family (r13): every LM_SHARED consumer now
+    # moved next to their family (r13): every shared_tokens consumer now
     # sits in ONE session segment, so the token frame builds once
     "ngram_lm_perplexity",
     "perplexity_lang_buckets",
@@ -274,7 +299,7 @@ HEADLINE = [
     "stratified_sample_plan",
     "t_closeness_audit",
     "dup_graph_pagerank",
-    # r13 dup-graph additions sit NEXT to the family so DEDUP_SHARED
+    # r13 dup-graph additions sit NEXT to the family so shared_lsh_edges
     # stays inside one restart segment (test_shared_families_single_segment)
     "dup_graph_hits",
     "dup_link_prediction",
@@ -286,10 +311,10 @@ HEADLINE = [
     "term_burstiness_top_df",
     "returnflag_status_chi2",
     "dedup_threshold_sweep",
-    # moved next to dedup_threshold_sweep (r13): same VERIFY_SHARED frame
+    # moved next to dedup_threshold_sweep (r13): same shared_verify_counts frame
     "dedup_vs_reference",
-    # moved next to the VERIFY_SHARED family (r14): consumes the same
-    # session-shared distinct-shingle base (SHINGLE_BASE_SHARED) the
+    # moved next to the shared_verify_counts family (r14): consumes the same
+    # session-shared distinct-shingle base (shared_shingle_base) the
     # verify-counts build reduces over, so the base builds once per
     # segment and both consumers sit inside one restart segment
     "jaccard_prefix_join",
@@ -350,98 +375,313 @@ MATMUL_MIN2 = {
     "mmr_diversified_topk",
 }
 
-# Dup-graph family: every member consumes the SAME
-# minhash_lsh_candidates_sha(documents) edge frame, and before round 10
-# each rebuilt the whole shingle→signature→band→bucket-join pipeline from
-# scratch (the recompute shape the IVF tiers had before the r9 shared
-# probe-assignment pass).  bench builds the frame once per session,
-# localCheckpoints it, times the build as its own entry
-# ("dedup_lsh_candidates_build"), and passes it via each query's
-# shared_lsh_edges kwarg — per-query times below are honest INCREMENTAL
-# costs and the build cost stays visible in the total.  Correctness is
-# pinned by tests/test_shared_lsh_edges.py (shared == standalone, exact).
-DEDUP_SHARED = {
-    "dup_triangle_count",
-    "dup_graph_kcore",
-    "dedup_graph_communities",
-    "dedup_best_of_cluster",
-    "dup_graph_clustering",
-    "dup_graph_assortativity",
-    # consume the SAME minhash_lsh_candidates_sha(documents) edge frame
-    # as the dup-graph family (self_bleu also rides LM_SHARED)
-    "self_bleu_pairs",
-    "dedup_char_savings",
-    "dup_graph_pagerank",
-    "dup_graph_hits",
-    "dup_link_prediction",
-}
 
-# Pair-stats family (r13): four headline queries consume the IDENTICAL
-# inverted-index (id_a, id_b, inter, n_a, n_b) frame —
-# _shingle_pair_stats(documents, "text", "doc_id", 3, None, 10_000) —
-# and differ only in the projection/threshold applied on top (Jaccard
-# 0.15, Jaccard 0.5 + split labels, containment 0.5, S-curve sweep).
-# bench builds the frame once per session, localCheckpoints it, times
-# the build as its own entry ("shingle_pair_stats_build"), and passes
-# it via each query's shared_pair_stats kwarg.  Correctness pinned by
-# tests/test_shared_pair_stats.py (shared == standalone, exact).
-PAIR_STATS_SHARED = {
-    "ngram_jaccard_pairs",
-    "ngram_containment_pairs",
-    "minhash_band_plan",
-    "split_leakage_audit",
-}
+class SharedFrame(NamedTuple):
+    """One session-shared frame: built once per session by SharedFrames,
+    billed to its own entry, and passed to every consumer as `kwarg`."""
 
-# Shingle-base family (r14): the VERIFY_SHARED build (minhash_verify_sha's
-# signature + intersect legs) and jaccard_prefix_join's `t` frame all
-# reduce over the IDENTICAL distinct (doc_id, shingle) 3-gram frame —
-# shingles_df(documents, "text", "doc_id", 3).distinct().  bench builds
-# that base once per session, localCheckpoints it, times the build as its
-# own entry ("shingle_base_build"), feeds it to the verify-counts build,
-# and passes it to jaccard_prefix_join via its shared_shingle_base kwarg.
-# Both consumers sit in the same restart segment as the build trigger.
-# Row-identity is by construction (min is idempotent for the signatures;
-# the other consumers already took distinct over these rows) and pinned
-# by tests/test_shared_shingle_base.py; the driver's correctness runs use
-# the standalone paths.
-SHINGLE_BASE_SHARED = {
-    "jaccard_prefix_join",
-}
+    kwarg: str
+    stem: str  # billed as <stem>_build (first session) / <stem>_rebuild
+    consumers: frozenset[str]
+    build: Callable  # (sess, sf_dir, get) -> DataFrame; get(kwarg) -> a need
+    needs: tuple[str, ...] = ()  # kwargs of rows the build consumes
 
-# Verify family (r13): dedup_vs_reference and dedup_threshold_sweep both
-# run the FULL minhash_verify_sha pipeline (signatures + shingles + band
-# pairs + agree/intersect joins) over the same corpus — the rounded form
-# the first reports is a pure projection of the raw-counts frame the
-# second consumes.  bench builds the raw-counts frame once per session,
-# localCheckpoints it, times the build as its own entry
-# ("dedup_verify_counts_build"), and passes it via each query's
-# shared_verify_counts kwarg.  Correctness pinned by
-# tests/test_shared_verify_counts.py (shared == standalone, exact).
-VERIFY_SHARED = {
-    "dedup_vs_reference",
-    "dedup_threshold_sweep",
-}
 
-# LM/token family: every member re-tokenized the corpus from scratch
-# (normalized_text regexes + posexplode — the dominant per-query CPU for
-# the scorers).  bench builds ONE _tokens_with_pos(documents) frame per
-# session, localCheckpoints it, times the build as its own entry
-# ("lm_tokens_build"), and passes it via each query's shared_tokens
-# kwarg; the LM-reference fifth (doc_id % 5 == 0) is a row filter of the
-# shared frame inside each query fn, exact because tokenization is
-# per-row.  Correctness pinned by tests/test_shared_lm_tokens.py
-# (shared == standalone, exact rows).
-LM_SHARED = {
-    "bigram_cond_entropy",
-    "ngram_lm_perplexity",
-    "perplexity_lang_buckets",
-    "doremi_weight_step",
-    "min_k_prob_score",
-    "stupid_backoff_nll",
-    "quality_length_spearman",
-    "source_keyness_chi2",
-    "self_bleu_pairs",
-}
+SHARED_FRAMES = (
+    # Dup-graph family: every member consumes the SAME
+    # minhash_lsh_candidates_sha(documents) edge frame, and before round 10
+    # each rebuilt the whole shingle→signature→band→bucket-join pipeline
+    # from scratch (the recompute shape the IVF tiers had before the r9
+    # shared probe-assignment pass).  Per-query times are honest
+    # INCREMENTAL costs and the build cost stays visible in the total.
+    # self_bleu_pairs also rides the LM token frame.
+    SharedFrame(
+        "shared_lsh_edges",
+        "dedup_lsh_candidates",
+        frozenset({
+            "dup_triangle_count",
+            "dup_graph_kcore",
+            "dedup_graph_communities",
+            "dedup_best_of_cluster",
+            "dup_graph_clustering",
+            "dup_graph_assortativity",
+            "self_bleu_pairs",
+            "dedup_char_savings",
+            "dup_graph_pagerank",
+            "dup_graph_hits",
+            "dup_link_prediction",
+        }),
+        lambda sess, sf_dir, get: minhash_lsh_candidates_sha(
+            table(sess, sf_dir, "documents")
+        ),
+    ),
+    # LM/token family: every member re-tokenized the corpus from scratch
+    # (normalized_text regexes + posexplode — the dominant per-query CPU
+    # for the scorers).  The LM-reference fifth (doc_id % 5 == 0) is a row
+    # filter of the shared frame inside each query fn, exact because
+    # tokenization is per-row.
+    SharedFrame(
+        "shared_tokens",
+        "lm_tokens",
+        frozenset({
+            "bigram_cond_entropy",
+            "ngram_lm_perplexity",
+            "perplexity_lang_buckets",
+            "doremi_weight_step",
+            "min_k_prob_score",
+            "stupid_backoff_nll",
+            "quality_length_spearman",
+            "source_keyness_chi2",
+            "self_bleu_pairs",
+        }),
+        lambda sess, sf_dir, get: _tokens_with_pos(
+            table(sess, sf_dir, "documents"), "text", "doc_id"
+        ),
+    ),
+    # Pair-stats family (r13): four headline queries consume the IDENTICAL
+    # inverted-index (id_a, id_b, inter, n_a, n_b) frame and differ only in
+    # the projection/threshold applied on top (Jaccard 0.15, Jaccard 0.5 +
+    # split labels, containment 0.5, S-curve sweep).
+    SharedFrame(
+        "shared_pair_stats",
+        "shingle_pair_stats",
+        frozenset({
+            "ngram_jaccard_pairs",
+            "ngram_containment_pairs",
+            "minhash_band_plan",
+            "split_leakage_audit",
+        }),
+        lambda sess, sf_dir, get: _shingle_pair_stats(
+            table(sess, sf_dir, "documents"), "text", "doc_id", 3, None, 10_000
+        ),
+    ),
+    # Shingle-base family (r14): the verify-counts build (minhash_verify_sha's
+    # signature + intersect legs) and jaccard_prefix_join's `t` frame all
+    # reduce over the IDENTICAL distinct (doc_id, shingle) 3-gram frame.
+    # Row-identity is by construction (min is idempotent for the
+    # signatures; the other consumers already took distinct over these
+    # rows); the driver's correctness runs use the standalone paths.
+    SharedFrame(
+        "shared_shingle_base",
+        "shingle_base",
+        frozenset({"jaccard_prefix_join"}),
+        lambda sess, sf_dir, get: shingles_df(
+            fanout_small_scan(table(sess, sf_dir, "documents")), "text", "doc_id", 3
+        ).distinct(),
+    ),
+    # Verify family (r13): dedup_vs_reference and dedup_threshold_sweep both
+    # run the FULL minhash_verify_sha pipeline (signatures + shingles + band
+    # pairs + agree/intersect joins) over the same corpus — the rounded
+    # form the first reports is a pure projection of the raw-counts frame
+    # the second consumes.  r14: its signature and intersect legs consume
+    # the shared shingle base instead of re-deriving it twice.
+    SharedFrame(
+        "shared_verify_counts",
+        "dedup_verify_counts",
+        frozenset({"dedup_vs_reference", "dedup_threshold_sweep"}),
+        lambda sess, sf_dir, get: minhash_verify_sha(
+            table(sess, sf_dir, "documents"),
+            raw_counts=True,
+            shingle_base=get("shared_shingle_base"),
+        ),
+        needs=("shared_shingle_base",),
+    ),
+)
+SHARED = {row.kwarg: row for row in SHARED_FRAMES}
+
+
+class SharedFrames:
+    """Lazy, session-keyed instances of the SHARED_FRAMES rows.
+
+    A frame is built on first use, localCheckpointed, and rebuilt when the
+    session changes (a restart drops its checkpoint blocks).  With `times`,
+    the first build bills `<stem>_build` and later rebuilds accumulate into
+    `<stem>_rebuild` (r12 verdict item 3: accumulating rebuilds into the
+    build entry made its round-over-round comparison depend on the restart
+    cadence).  A row's needs are built before its clock starts, so each
+    entry bills only its own work.  Shared == standalone is pinned per
+    consumer by tests/test_shared_*.py."""
+
+    def __init__(self, sf_dir: str, times: dict | None = None):
+        self.sf_dir = sf_dir
+        self.times = times
+        self._built: dict[str, tuple] = {}  # kwarg -> (session, frame)
+
+    def get(self, sess, kwarg: str) -> DataFrame:
+        built = self._built.get(kwarg)
+        if built is not None and built[0] is sess:
+            return built[1]
+        row = SHARED[kwarg]
+        needs = {k: self.get(sess, k) for k in row.needs}
+        t0 = time.perf_counter()
+        frame = row.build(sess, self.sf_dir, needs.__getitem__).localCheckpoint(
+            eager=True
+        )
+        if self.times is not None:
+            key = f"{row.stem}_build"
+            if key in self.times:
+                key = f"{row.stem}_rebuild"
+            self.times[key] = round(
+                self.times.get(key, 0.0) + time.perf_counter() - t0, 3
+            )
+        self._built[kwarg] = (sess, frame)
+        return frame
+
+    def kwargs(self, sess, name: str) -> dict:
+        """The shared-frame kwargs bench passes to query `name`."""
+        return {
+            row.kwarg: self.get(sess, row.kwarg)
+            for row in SHARED_FRAMES
+            if name in row.consumers
+        }
+
+
+def min2(run):
+    """Scale-tier variant of the min-of-2 protocol (module docstring):
+    (rows of the second run, min seconds)."""
+    t0 = time.perf_counter()
+    rows = run()
+    dt = time.perf_counter() - t0
+    t0 = time.perf_counter()
+    rows = run()
+    return rows, round(min(dt, time.perf_counter() - t0), 3)
+
+
+def truth_sets(rows) -> dict[int, set]:
+    t: dict[int, set] = {}
+    for r in rows:
+        t.setdefault(r["query_id"], set()).add(r["neighbor_id"])
+    return t
+
+
+def recall_vs(rows, truth):
+    hit = tot = 0
+    for r in rows:
+        ts = truth.get(r["query_id"])
+        if ts is not None:
+            tot += 1
+            hit += r["neighbor_id"] in ts
+    return round(hit / tot, 4) if tot else None
+
+
+def scale_fixture(spark, sf_dir: str, reps: int = 1) -> DataFrame:
+    """32k-vector scale-tier fixture: 16 deterministically perturbed
+    copies of the clustered embeddings (vec_id + copy * 1_000_000), each
+    vector the concatenation of `reps` phase-shifted perturbations (1: the
+    16x tier, dim 64; 8: the hd tier, dim 512).  localCheckpoint-
+    materialized so the timed tiers pay zero fixture cost."""
+    e = clustered_embeddings(table(spark, sf_dir, "embeddings"))
+    copies = spark.range(16).select(F.col("id").alias("copy"))
+    return (
+        e.crossJoin(F.broadcast(copies))
+        .select(
+            (F.col("vec_id") + F.col("copy") * 1_000_000).alias("vec_id"),
+            F.flatten(
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(reps - 1)),
+                    lambda rep: F.transform(
+                        F.col("embedding"),
+                        lambda x, d: x
+                        + F.lit(0.02)
+                        * F.col("copy").cast("double")
+                        * F.sin(
+                            d.cast("double") * 1.7
+                            + F.col("copy").cast("double")
+                            + rep.cast("double") * 0.37
+                        ),
+                    ),
+                )
+            ).alias("embedding"),
+        )
+        # r13: spread the fixture across the worker cores BEFORE
+        # checkpointing.  The 2k-row embeddings parquet is a 1-partition
+        # scan, crossJoin(broadcast) preserves it, and every downstream
+        # serving scan that doesn't re-shuffle internally (the int8 /
+        # binary candidate passes) was running its 2M-pair dot loop on
+        # ONE core — int8_quant_16x read 18s where the same shape on 32
+        # partitions costs ~2s.  A real corpus is never 1 partition, so
+        # the 1-partition timing measured the synthetic fixture's
+        # lineage, not the operator.
+        .repartition(spark.sparkContext.defaultParallelism)
+        .localCheckpoint(eager=True)
+    )
+
+
+def ivf_tier(e: DataFrame, tag: str, oversample: int, times: dict, truth):
+    """Time the flat IVF and IVF-PQ tiers on fixture `e` into `times`
+    (entries suffixed `_<tag>`) and return their recall@5 against
+    `truth()`, which is called only after the timed runs.
+
+    Shared probe-assignment pass (r8 verdict item 2): the flat and PQ
+    variants consume IDENTICAL centroid samples + assignment matmuls, so
+    that frame is built ONCE per tier and billed to its own entry — the
+    per-variant times are then honest INCREMENTAL costs.  r12 (verdict
+    item 4): PQ codebook training + residual encoding is shared across the
+    min-of-2 runs the same way, billed to pq_encode_build_<tag>; shared ==
+    standalone pinned by tests/test_shared_quant_builds.py.
+
+    score_dtype="float32" on these recall-gated tiers (r14, guide §4.2,
+    VERDICT item 1 A/B): SGEMM bucket scoring, survivors re-rounded in
+    float64.  Measured quiet-box min-of-2 vs the float64 control on the
+    same tree: ivf_hd 3.55->3.18s, ivfpq_hd 4.17->3.52s; recall gates
+    ivf_hd 1.0->0.9999, ivfpq_hd 0.9992->0.9991, 16x gates byte-identical.
+    Declared/oracle-checked queries keep the float64 default (the exact
+    anchors feeding these recall gates are still float64)."""
+    t0 = time.perf_counter()
+    cids, C, assigned = ivf_assignments(e, n_centroids=64, nprobe=4, seed_mod=421)
+    shared = (cids, C, assigned.localCheckpoint(eager=True))
+    times[f"ivf_assignments_{tag}"] = round(time.perf_counter() - t0, 3)
+    iv, times[f"cosine_topk_ivf_{tag}"] = min2(
+        lambda: ivf_top_k(
+            e, k=5, n_centroids=64, nprobe=4, seed_mod=421, kmeans_iters=0,
+            round_digits=4, shared=shared, score_dtype="float32",
+        ).collect()
+    )
+    t0 = time.perf_counter()
+    books, encoded = pq_encoded_frame(e, shared, m_subspaces=16, n_codes=256)
+    encoded = encoded.localCheckpoint(eager=True)
+    times[f"pq_encode_build_{tag}"] = round(time.perf_counter() - t0, 3)
+    pq, times[f"cosine_topk_ivfpq_{tag}"] = min2(
+        lambda: ivf_pq_top_k(
+            e, k=5, n_centroids=64, nprobe=4, seed_mod=421, m_subspaces=16,
+            n_codes=256, oversample=oversample, round_digits=4, shared=shared,
+            shared_pq=(books, encoded), score_dtype="float32",
+        ).collect()
+    )
+    t = truth()
+    return recall_vs(iv, t), recall_vs(pq, t)
+
+
+def hd_tier(spark, sf_dir: str, times: dict):
+    """High-dim tier (round 4): dim 512 (realistic text-embedding width;
+    8 phase-shifted concatenations of the base vectors preserve cluster
+    structure), 32k vectors; returns ivf_tier's recalls.
+
+    Tracked as a DELIBERATE null result: with ADC-by-reconstruction,
+    m*sub == dim means the candidate matmul has byte-for-byte the SAME
+    FLOPs as flat IVF scoring, so PQ can never win on single-node latency
+    at ANY dim — it runs at IVF-plus-training-overhead (repeated
+    alternating runs: IVF 17-22s, PQ 24-27s; a one-off cold-JVM run that
+    showed PQ 'winning' was variance).  What the tier DOES prove: recall
+    parity (>= 0.999) from a 16 B/vector index — 256x smaller than the
+    dim-512 raw vectors — the property that pays at 100 TB, where
+    candidates ship codes over the network and flat vectors don't fit
+    executor RAM.  Full analysis: NOTES.md round-4 entry.  Exact truth for
+    recall is computed on the copy-0 query subset only: full brute force
+    at dim 512 x 32k costs ~70s and adds nothing statistically."""
+    e_hd = scale_fixture(spark, sf_dir, reps=8)
+    sample_q = e_hd.filter(F.col("vec_id") < 1_000_000)  # the copy-0 originals
+    return ivf_tier(
+        e_hd,
+        "hd",
+        128,
+        times,
+        lambda: truth_sets(
+            brute_force_top_k(
+                sample_q, e_hd, k=5, n_blocks=32, round_digits=4
+            ).collect()
+        ),
+    )
 
 
 def _prev_detail(sf_val):
@@ -555,164 +795,8 @@ def main() -> None:
 
     _sentinel(spark)  # point 1: fresh warm session, before the headline
 
-    # shared dup-graph edge frame (see DEDUP_SHARED): built lazily on first
-    # use and rebuilt if the mid-headline session restart invalidated its
-    # localCheckpoint blocks; build seconds accumulate into their own entry
-    dedup_shared_state: dict = {"session": None, "edges": None}
-
-    def _dedup_edges(sess):
-        if dedup_shared_state["session"] is not sess:
-            from wellmeet_data_pipeline_spark.operators.dedup import (
-                minhash_lsh_candidates_sha,
-            )
-            from wellmeet_data_pipeline_spark.plans.queries import table as _table
-
-            t0 = time.perf_counter()
-            edges = minhash_lsh_candidates_sha(
-                _table(sess, sf_dir, "documents")
-            ).localCheckpoint(eager=True)
-            # r12 verdict item 3: the first build and any post-restart
-            # rebuilds bill to DISTINCT entries — accumulating rebuilds
-            # into the build entry made its round-over-round comparison
-            # depend on the restart cadence (the r12 "regression" flag
-            # was two builds billed as one), while the rebuild cost
-            # stays visible in the total under its own key
-            key = (
-                "dedup_lsh_candidates_build"
-                if "dedup_lsh_candidates_build" not in times
-                else "dedup_lsh_candidates_rebuild"
-            )
-            times[key] = round(
-                times.get(key, 0.0) + time.perf_counter() - t0, 3
-            )
-            dedup_shared_state["session"] = sess
-            dedup_shared_state["edges"] = edges
-        return dedup_shared_state["edges"]
-
-    # shared pair-stats frame (see PAIR_STATS_SHARED): same lifecycle as
-    # the dedup edge frame — lazy, session-keyed, build time in its own
-    # entry with the build/rebuild split
-    pair_stats_state: dict = {"session": None, "stats": None}
-
-    def _pair_stats(sess):
-        if pair_stats_state["session"] is not sess:
-            from wellmeet_data_pipeline_spark.operators.dedup import (
-                _shingle_pair_stats,
-            )
-            from wellmeet_data_pipeline_spark.plans.queries import table as _table
-
-            t0 = time.perf_counter()
-            stats = _shingle_pair_stats(
-                _table(sess, sf_dir, "documents"), "text", "doc_id", 3, None, 10_000
-            ).localCheckpoint(eager=True)
-            key = (
-                "shingle_pair_stats_build"
-                if "shingle_pair_stats_build" not in times
-                else "shingle_pair_stats_rebuild"
-            )
-            times[key] = round(
-                times.get(key, 0.0) + time.perf_counter() - t0, 3
-            )
-            pair_stats_state["session"] = sess
-            pair_stats_state["stats"] = stats
-        return pair_stats_state["stats"]
-
-    # shared distinct-shingle base (see SHINGLE_BASE_SHARED): same
-    # lifecycle as the dedup edge frame — lazy, session-keyed, build time
-    # in its own entry with the build/rebuild split
-    shingle_base_state: dict = {"session": None, "base": None}
-
-    def _shingle_base(sess):
-        if shingle_base_state["session"] is not sess:
-            from wellmeet_data_pipeline_spark.operators.dedup import shingles_df
-            from wellmeet_data_pipeline_spark.operators.skew import (
-                fanout_small_scan,
-            )
-            from wellmeet_data_pipeline_spark.plans.queries import table as _table
-
-            t0 = time.perf_counter()
-            base = (
-                shingles_df(
-                    fanout_small_scan(_table(sess, sf_dir, "documents")),
-                    "text",
-                    "doc_id",
-                    3,
-                )
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            key = (
-                "shingle_base_build"
-                if "shingle_base_build" not in times
-                else "shingle_base_rebuild"
-            )
-            times[key] = round(
-                times.get(key, 0.0) + time.perf_counter() - t0, 3
-            )
-            shingle_base_state["session"] = sess
-            shingle_base_state["base"] = base
-        return shingle_base_state["base"]
-
-    # shared raw verify-counts frame (see VERIFY_SHARED): same lifecycle
-    # as the dedup edge frame — lazy, session-keyed, build time in its
-    # own entry with the build/rebuild split.  r14: its signature and
-    # intersect legs consume the session-shared shingle base (billed
-    # above) instead of re-deriving the distinct shingle frame twice.
-    verify_shared_state: dict = {"session": None, "counts": None}
-
-    def _verify_counts(sess):
-        if verify_shared_state["session"] is not sess:
-            from wellmeet_data_pipeline_spark.operators.dedup import (
-                minhash_verify_sha,
-            )
-            from wellmeet_data_pipeline_spark.plans.queries import table as _table
-
-            base = _shingle_base(sess)
-            t0 = time.perf_counter()
-            counts = minhash_verify_sha(
-                _table(sess, sf_dir, "documents"),
-                raw_counts=True,
-                shingle_base=base,
-            ).localCheckpoint(eager=True)
-            key = (
-                "dedup_verify_counts_build"
-                if "dedup_verify_counts_build" not in times
-                else "dedup_verify_counts_rebuild"
-            )
-            times[key] = round(
-                times.get(key, 0.0) + time.perf_counter() - t0, 3
-            )
-            verify_shared_state["session"] = sess
-            verify_shared_state["counts"] = counts
-        return verify_shared_state["counts"]
-
-    # shared LM token frame (see LM_SHARED): same lifecycle as the dedup
-    # edge frame — lazy, session-keyed, build time in its own entry
-    lm_shared_state: dict = {"session": None, "tokens": None}
-
-    def _lm_tokens(sess):
-        if lm_shared_state["session"] is not sess:
-            from wellmeet_data_pipeline_spark.operators.scoring import (
-                _tokens_with_pos,
-            )
-            from wellmeet_data_pipeline_spark.plans.queries import table as _table
-
-            t0 = time.perf_counter()
-            toks = _tokens_with_pos(
-                _table(sess, sf_dir, "documents"), "text", "doc_id"
-            ).localCheckpoint(eager=True)
-            # same rebuild-vs-build split as the dedup edge frame above
-            key = (
-                "lm_tokens_build"
-                if "lm_tokens_build" not in times
-                else "lm_tokens_rebuild"
-            )
-            times[key] = round(
-                times.get(key, 0.0) + time.perf_counter() - t0, 3
-            )
-            lm_shared_state["session"] = sess
-            lm_shared_state["tokens"] = toks
-        return lm_shared_state["tokens"]
+    # session-shared frames (SHARED_FRAMES), billed into `times`
+    frames = SharedFrames(sf_dir, times)
 
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
@@ -736,17 +820,7 @@ def main() -> None:
             _sentinel(spark)  # point 3: deep in the grown session
         if name in skip_stable:
             continue
-        kwargs = {}
-        if name in DEDUP_SHARED:
-            kwargs["shared_lsh_edges"] = _dedup_edges(spark)
-        if name in LM_SHARED:
-            kwargs["shared_tokens"] = _lm_tokens(spark)
-        if name in VERIFY_SHARED:
-            kwargs["shared_verify_counts"] = _verify_counts(spark)
-        if name in PAIR_STATS_SHARED:
-            kwargs["shared_pair_stats"] = _pair_stats(spark)
-        if name in SHINGLE_BASE_SHARED:
-            kwargs["shared_shingle_base"] = _shingle_base(spark)
+        kwargs = frames.kwargs(spark, name)
         t0 = time.perf_counter()
         rows = REGISTRY[name].fn(spark, sf_dir, **kwargs).collect()
         times[name] = round(time.perf_counter() - t0, 3)
@@ -781,40 +855,12 @@ def main() -> None:
                 key=lambda n: _prev_q[n] - times[n],
             )[:12]
             for name in flagged:
-                kwargs = {}
-                if name in DEDUP_SHARED:
-                    kwargs["shared_lsh_edges"] = _dedup_edges(spark)
-                if name in LM_SHARED:
-                    kwargs["shared_tokens"] = _lm_tokens(spark)
-                if name in VERIFY_SHARED:
-                    kwargs["shared_verify_counts"] = _verify_counts(spark)
-                if name in PAIR_STATS_SHARED:
-                    kwargs["shared_pair_stats"] = _pair_stats(spark)
-                if name in SHINGLE_BASE_SHARED:
-                    kwargs["shared_shingle_base"] = _shingle_base(spark)
+                kwargs = frames.kwargs(spark, name)
                 t0 = time.perf_counter()
                 REGISTRY[name].fn(spark, sf_dir, **kwargs).collect()
                 second = round(time.perf_counter() - t0, 3)
                 retimed[name] = {"first": times[name], "retimed": second}
                 times[name] = min(times[name], second)
-
-    # 16x scale tier: at the base SF (2k vectors) every embedding query is
-    # Spark-job-overhead-bound and the IVF probe-fraction advantage cannot
-    # show; at 32k vectors (16 deterministically perturbed copies of the
-    # clustered fixture) the exact tier is compute-dominant and the
-    # crossover is measurable.  The fixture is localCheckpoint-materialized
-    # BEFORE timing so both tiers pay zero fixture cost.
-    from pyspark.sql import functions as F  # noqa: E402
-
-    from wellmeet_data_pipeline_spark.operators.similarity import (  # noqa: E402
-        brute_force_top_k,
-        clustered_embeddings,
-        ivf_assignments,
-        ivf_pq_top_k,
-        ivf_top_k,
-        pq_encoded_frame,
-    )
-    from wellmeet_data_pipeline_spark.plans.queries import table  # noqa: E402
 
     _sentinel(spark)  # point 4: end of headline, before the scale tiers
 
@@ -828,107 +874,19 @@ def main() -> None:
     spark.stop()
     spark = get_spark("bench-tiers")
     spark.sparkContext.setLogLevel("ERROR")
-    e = clustered_embeddings(table(spark, sf_dir, "embeddings"))
-    copies = spark.range(16).select(F.col("id").alias("copy"))
-    e16 = (
-        e.crossJoin(F.broadcast(copies))
-        .select(
-            (F.col("vec_id") + F.col("copy") * 1_000_000).alias("vec_id"),
-            F.transform(
-                F.col("embedding"),
-                lambda x, d: x
-                + F.lit(0.02)
-                * F.col("copy").cast("double")
-                * F.sin(d.cast("double") * 1.7 + F.col("copy").cast("double")),
-            ).alias("embedding"),
-        )
-        # r13: spread the fixture across the worker cores BEFORE
-        # checkpointing.  The 2k-row embeddings parquet is a 1-partition
-        # scan, crossJoin(broadcast) preserves it, and every downstream
-        # serving scan that doesn't re-shuffle internally (the int8 /
-        # binary candidate passes) was running its 2M-pair dot loop on
-        # ONE core — int8_quant_16x read 18s where the same shape on 32
-        # partitions costs ~2s.  A real corpus is never 1 partition, so
-        # the 1-partition timing measured the synthetic fixture's
-        # lineage, not the operator.
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
-    )
-    def _min2(run):
-        # scale-tier variant of the min-of-2 protocol (module docstring)
-        t0 = time.perf_counter()
-        rows = run()
-        dt = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        rows = run()
-        return rows, round(min(dt, time.perf_counter() - t0), 3)
-
-    bf16, times["cosine_topk_bruteforce_16x"] = _min2(
+    # 16x scale tier: at the base SF (2k vectors) every embedding query is
+    # Spark-job-overhead-bound and the IVF probe-fraction advantage cannot
+    # show; at 32k vectors (scale_fixture) the exact tier is
+    # compute-dominant and the crossover is measurable.
+    e16 = scale_fixture(spark, sf_dir)
+    bf16, times["cosine_topk_bruteforce_16x"] = min2(
         lambda: brute_force_top_k(e16, e16, k=5, n_blocks=32, round_digits=4).collect()
     )
-    # Shared probe-assignment pass (r8 verdict item 2): the flat and PQ
-    # variants of a tier consume IDENTICAL centroid samples + assignment
-    # matmuls, so build that frame ONCE per tier, materialize it, and
-    # time the build as its own entry — the per-variant times below are
-    # then honest INCREMENTAL costs, and the assignment cost stays
-    # visible in the total instead of vanishing from the bench.
-    t0 = time.perf_counter()
-    cids16, C16, a16 = ivf_assignments(e16, n_centroids=64, nprobe=4, seed_mod=421)
-    shared16 = (cids16, C16, a16.localCheckpoint(eager=True))
-    times["ivf_assignments_16x"] = round(time.perf_counter() - t0, 3)
-    # score_dtype="float32" on the recall-gated scale tiers (r14, guide
-    # §4.2, VERDICT item 1 A/B): SGEMM bucket scoring, survivors
-    # re-rounded in float64.  Measured quiet-box min-of-2 vs the float64
-    # control on the same tree: ivf_hd 3.55->3.18s, ivfpq_hd
-    # 4.17->3.52s; recall gates ivf_hd 1.0->0.9999, ivfpq_hd
-    # 0.9992->0.9991, 16x gates byte-identical.  Declared/oracle-checked
-    # queries keep the float64 default (the exact anchors feeding these
-    # recall gates are still float64).
-    iv16, times["cosine_topk_ivf_16x"] = _min2(
-        lambda: ivf_top_k(
-            e16, k=5, n_centroids=64, nprobe=4, seed_mod=421, kmeans_iters=0,
-            round_digits=4, shared=shared16, score_dtype="float32",
-        ).collect()
-    )
+    truth16 = truth_sets(bf16)
     # oversample=64 (320 exact re-ranks per query) closes the ADC
     # shortlist gap at 32k vectors: recall 0.9536 -> 0.9974, matching
     # flat IVF's 0.9974 — the residual codebooks were never the loss.
-    # r12 (verdict item 4): PQ codebook training + residual encoding is
-    # shared across the min-of-2 runs the same way the probe assignments
-    # are (r9) — built once, localCheckpointed, billed to its own entry;
-    # shared == standalone pinned by tests/test_shared_quant_builds.py
-    t0 = time.perf_counter()
-    books16, enc16 = pq_encoded_frame(
-        e16, shared16, m_subspaces=16, n_codes=256
-    )
-    enc16 = enc16.localCheckpoint(eager=True)
-    times["pq_encode_build_16x"] = round(time.perf_counter() - t0, 3)
-    pq16, times["cosine_topk_ivfpq_16x"] = _min2(
-        lambda: ivf_pq_top_k(
-            e16, k=5, n_centroids=64, nprobe=4, seed_mod=421, m_subspaces=16,
-            n_codes=256, oversample=64, round_digits=4, shared=shared16,
-            shared_pq=(books16, enc16), score_dtype="float32",
-        ).collect()
-    )
-
-    def _truth_sets(rows):
-        t: dict[int, set] = {}
-        for r in rows:
-            t.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        return t
-
-    def _recall_vs(rows, truth):
-        hit = tot = 0
-        for r in rows:
-            ts = truth.get(r["query_id"])
-            if ts is not None:
-                tot += 1
-                hit += r["neighbor_id"] in ts
-        return round(hit / tot, 4) if tot else None
-
-    truth16 = _truth_sets(bf16)
-    recall16 = _recall_vs(iv16, truth16)
-    recall16_pq = _recall_vs(pq16, truth16)
+    recall16, recall16_pq = ivf_tier(e16, "16x", 64, times, lambda: truth16)
 
     # Matryoshka tiered search at the 16x tier (r9 verdict item 6): the
     # MRL serving pattern — scan on the HALF-dim prefix, exact full-dim
@@ -938,14 +896,12 @@ def main() -> None:
     # 1/16th.  Prefix-only search is NOT the gate on purpose: these
     # synthetic embeddings spread information uniformly across dims
     # (recall@5 ~0.18 without rerank), unlike MRL-trained ones.
-    from pyspark.sql import Window  # noqa: E402
-
     # r13 optimization round, measurement fix (guide §1): matryoshka and
     # MMR were the only tier entries timed single-run while every
-    # sibling uses _min2 — their reads carried the first-execution
+    # sibling uses min2 — their reads carried the first-execution
     # python-worker position cost the protocol exists to strip
     # (matryoshka warm cost ~4.1s vs 9.4s single-run on a quiet box).
-    # Both now run the SAME lazy pipeline through _min2; old single-run
+    # Both now run the SAME lazy pipeline through min2; old single-run
     # numbers live in BENCH_DETAIL_r13.json / OPTIMIZATION_r13.md.
     sample_q16 = e16.filter(F.col("vec_id") < 1_000_000)
     pre_q = sample_q16.select(
@@ -1000,10 +956,10 @@ def main() -> None:
             .collect()
         )
 
-    mat16, times["matryoshka_tiered_16x"] = _min2(
+    mat16, times["matryoshka_tiered_16x"] = min2(
         lambda: _exact_rerank5(shortlist)
     )
-    recall_mat16 = _recall_vs(mat16, truth16)
+    recall_mat16 = recall_vs(mat16, truth16)
     del mat16
 
     # Quantization rungs at the 16x tier (r10 verdict item 7): binary
@@ -1016,13 +972,6 @@ def main() -> None:
     # near-identical perturbed copies per query (cosine gaps ~1e-3 that
     # 1-bit/8-bit codes cannot resolve: raw-scan recall@5 is 0.205 /
     # 0.07), not the rung's serving quality.
-    from wellmeet_data_pipeline_spark.operators.similarity import (  # noqa: E402
-        binary_hamming_top_k,
-        binary_packed_candidates,
-        int8_candidate_codes,
-        int8_dot_top_k,
-    )
-
     # The dot-ranking rungs' serving contract is UNIT-NORM input (the
     # embeddings fixture is unit-norm; every real dot-product index
     # normalizes at ingest).  The 16x perturbation inflates high-copy
@@ -1065,14 +1014,14 @@ def main() -> None:
     t0 = time.perf_counter()
     bpack16 = binary_packed_candidates(e16n, dim=64).localCheckpoint(eager=True)
     times["binary_pack_build_16x"] = round(time.perf_counter() - t0, 3)
-    bq16, times["binary_quant_16x"] = _min2(
+    bq16, times["binary_quant_16x"] = min2(
         lambda: _exact_rerank5(
             binary_hamming_top_k(
                 quant_q16, e16n, k=_k_short, dim=64, shared_packed=bpack16
             ).select("query_id", "neighbor_id")
         )
     )
-    recall_bq16 = _recall_vs(bq16, truth16)
+    recall_bq16 = recall_vs(bq16, truth16)
     del bq16
     t0 = time.perf_counter()
     arrs16, cc16 = int8_candidate_codes(e16n)
@@ -1081,14 +1030,14 @@ def main() -> None:
         cc16.localCheckpoint(eager=True),
     )
     times["int8_codes_build_16x"] = round(time.perf_counter() - t0, 3)
-    i816, times["int8_quant_16x"] = _min2(
+    i816, times["int8_quant_16x"] = min2(
         lambda: _exact_rerank5(
             int8_dot_top_k(
                 quant_q16, e16n, k=_k_short, shared_codes=i8codes16
             ).select("query_id", "neighbor_id")
         )
     )
-    recall_i816 = _recall_vs(i816, truth16)
+    recall_i816 = recall_vs(i816, truth16)
     del i816
 
     # MMR at the 16x tier: candidates are the exact top-5 with cosine
@@ -1097,8 +1046,6 @@ def main() -> None:
     # query (an exact invariant of the greedy — lam*rel dominates when
     # nothing is selected yet), and the top-3 overlap with pure-relevance
     # ranking is recorded as the diversification measure.
-    from wellmeet_data_pipeline_spark.operators.retrieval import mmr_diversify  # noqa: E402
-
     q0 = [r for r in bf16 if r["query_id"] < 1_000_000]
     cand16 = spark.createDataFrame(
         [
@@ -1138,7 +1085,7 @@ def main() -> None:
             .alias("jac_micro"),
         )
     )
-    mmr16, times["mmr_diversified_16x"] = _min2(
+    mmr16, times["mmr_diversified_16x"] = min2(
         lambda: mmr_diversify(cand16, pair16, k=3, lam_micro=500_000).collect()
     )
     _rel_best: dict[int, tuple] = {}
@@ -1161,93 +1108,22 @@ def main() -> None:
         overlap_sum += len(rel3 & set(picks.values())) / 3.0
     mmr16_rank1 = round(n_match / n_q, 4) if n_q else None
     mmr16_overlap = round(overlap_sum / n_q, 4) if n_q else None
-    del bf16, iv16, pq16, truth16, mmr16, q0
+    del bf16, truth16, mmr16, q0
 
-    # high-dim tier (round 4): dim 512 (realistic text-embedding width; 8
-    # phase-shifted concatenations of the base vectors preserve cluster
-    # structure), 32k vectors.  Tracked as a DELIBERATE null result: with
-    # ADC-by-reconstruction, m*sub == dim means the candidate matmul has
-    # byte-for-byte the SAME FLOPs as flat IVF scoring, so PQ can never
-    # win on single-node latency at ANY dim — it runs at IVF-plus-
-    # training-overhead (repeated alternating runs: IVF 17-22s, PQ 24-27s;
-    # a one-off cold-JVM run that showed PQ 'winning' was variance).  What
-    # the tier DOES prove: recall parity (>= 0.999) from a 16 B/vector
-    # index — 256x smaller than the dim-512 raw vectors — the property
-    # that pays at 100 TB, where candidates ship codes over the network
-    # and flat vectors don't fit executor RAM.  Full analysis: NOTES.md
-    # round-4 entry.  Exact truth for recall is computed on the copy-0
-    # query subset only: full brute force at dim 512 x 32k costs ~70s and
-    # adds nothing statistically.
     # same worker-pool recycling as before the 16x tier (the 16x runs
     # themselves churn ~1 GB of Arrow batches through the workers)
     _reclaim(spark)
     spark.stop()
     spark = get_spark("bench-hd")
     spark.sparkContext.setLogLevel("ERROR")
-    e = clustered_embeddings(table(spark, sf_dir, "embeddings"))
-    copies = spark.range(16).select(F.col("id").alias("copy"))
-    hd_reps = 8
-    e_hd = (
-        e.crossJoin(F.broadcast(copies))
-        .select(
-            (F.col("vec_id") + F.col("copy") * 1_000_000).alias("vec_id"),
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(hd_reps - 1)),
-                    lambda rep: F.transform(
-                        F.col("embedding"),
-                        lambda x, d: x
-                        + F.lit(0.02)
-                        * F.col("copy").cast("double")
-                        * F.sin(
-                            d.cast("double") * 1.7
-                            + F.col("copy").cast("double")
-                            + rep.cast("double") * 0.37
-                        ),
-                    ),
-                )
-            ).alias("embedding"),
-        )
-        # same fixture-partitioning fix as the 16x tier above
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
-    )
-    t0 = time.perf_counter()
-    cids_hd, C_hd, a_hd = ivf_assignments(e_hd, n_centroids=64, nprobe=4, seed_mod=421)
-    shared_hd = (cids_hd, C_hd, a_hd.localCheckpoint(eager=True))
-    times["ivf_assignments_hd"] = round(time.perf_counter() - t0, 3)
-    iv_hd, times["cosine_topk_ivf_hd"] = _min2(
-        lambda: ivf_top_k(
-            e_hd, k=5, n_centroids=64, nprobe=4, seed_mod=421, kmeans_iters=0,
-            round_digits=4, shared=shared_hd, score_dtype="float32",
-        ).collect()
-    )
-    t0 = time.perf_counter()
-    books_hd, enc_hd = pq_encoded_frame(
-        e_hd, shared_hd, m_subspaces=16, n_codes=256
-    )
-    enc_hd = enc_hd.localCheckpoint(eager=True)
-    times["pq_encode_build_hd"] = round(time.perf_counter() - t0, 3)
-    pq_hd, times["cosine_topk_ivfpq_hd"] = _min2(
-        lambda: ivf_pq_top_k(
-            e_hd, k=5, n_centroids=64, nprobe=4, seed_mod=421, m_subspaces=16,
-            n_codes=256, oversample=128, round_digits=4, shared=shared_hd,
-            shared_pq=(books_hd, enc_hd), score_dtype="float32",
-        ).collect()
-    )
-    sample_q = e_hd.filter(F.col("vec_id") < 1_000_000)  # the copy-0 originals
-    bf_hd = brute_force_top_k(sample_q, e_hd, k=5, n_blocks=32, round_digits=4).collect()
-    truth_hd = _truth_sets(bf_hd)
-    recall_hd = _recall_vs(iv_hd, truth_hd)
-    recall_hd_pq = _recall_vs(pq_hd, truth_hd)
-    del iv_hd, pq_hd, bf_hd, truth_hd
+    recall_hd, recall_hd_pq = hd_tier(spark, sf_dir, times)
 
     # approximate-tier quality: recall@5 of IVF / IVF-PQ vs the exact tier
     # ON THE SAME clustered fixture — tracked per round so the approximate
     # path's quality is measured, not asserted
-    exact = _truth_sets(results.get("cosine_topk_exact_clustered", []))
-    recall = _recall_vs(results.get("cosine_topk_ivf", []), exact)
-    recall_pq = _recall_vs(results.get("cosine_topk_ivfpq", []), exact)
+    exact = truth_sets(results.get("cosine_topk_exact_clustered", []))
+    recall = recall_vs(results.get("cosine_topk_ivf", []), exact)
+    recall_pq = recall_vs(results.get("cosine_topk_ivfpq", []), exact)
 
     out = {
         "metric": "headline_queries_total",

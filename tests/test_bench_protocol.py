@@ -10,10 +10,13 @@ honest as the headline grows:
   crash the driver's bench run, discovered only per-round);
 - each shared-frame family's consumers sit inside ONE restart segment,
   so the session-keyed frame builds exactly once per run and the
-  *_rebuild entries stay absent on a normal run.
+  *_rebuild entries stay absent on a normal run;
+- the SHARED_FRAMES table and the registry fns' shared_* kwargs agree.
 """
 
 from __future__ import annotations
+
+import inspect
 
 import bench
 from wellmeet_data_pipeline_spark.plans.queries import REGISTRY
@@ -38,23 +41,42 @@ def test_headline_names_resolve():
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)
 
 
+def _users(row) -> set[str]:
+    """Headline entries that use `row`'s frame: its consumers, plus the
+    consumers of every row whose build needs it."""
+    out = set(row.consumers)
+    for r in bench.SHARED_FRAMES:
+        if row.kwarg in r.needs:
+            out |= _users(r)
+    return out
+
+
 def test_shared_families_single_segment():
     idx = {n: i for i, n in enumerate(bench.HEADLINE)}
-    for fam_name, fam in (
-        ("DEDUP_SHARED", bench.DEDUP_SHARED),
-        ("LM_SHARED", bench.LM_SHARED),
-        ("VERIFY_SHARED", bench.VERIFY_SHARED),
-        ("PAIR_STATS_SHARED", bench.PAIR_STATS_SHARED),
-        # the shingle base feeds BOTH the verify-counts build and the
-        # SHINGLE_BASE_SHARED consumers, so the union must share a segment
-        ("SHINGLE_BASE+VERIFY", bench.SHINGLE_BASE_SHARED | bench.VERIFY_SHARED),
-    ):
-        segs = {_segment_of(idx[n]) for n in fam if n in idx}
+    for row in bench.SHARED_FRAMES:
+        segs = {_segment_of(idx[n]) for n in _users(row) if n in idx}
         assert len(segs) == 1, (
-            f"{fam_name} consumers straddle a session restart (segments "
+            f"{row.kwarg} users straddle a session restart (segments "
             f"{sorted(segs)}): the shared frame would rebuild mid-run and "
-            f"bill a *_rebuild entry — keep the family inside one segment"
+            f"bill {row.stem}_rebuild — keep the family inside one segment"
         )
+
+
+def test_shared_kwargs_match_consumers():
+    # a headline fn taking a shared_* kwarg outside its row's consumers
+    # would silently run standalone; a consumer whose fn lacks the kwarg
+    # would crash bench's call
+    headline = set(bench.HEADLINE)
+    for name in bench.HEADLINE:
+        for kw in inspect.signature(REGISTRY[name].fn).parameters:
+            if kw.startswith("shared_"):
+                assert kw in bench.SHARED, (name, kw)
+                assert name in bench.SHARED[kw].consumers, (name, kw)
+    for row in bench.SHARED_FRAMES:
+        assert row.consumers <= headline, row.consumers - headline
+        for name in row.consumers:
+            params = inspect.signature(REGISTRY[name].fn).parameters
+            assert row.kwarg in params, (name, row.kwarg)
 
 
 def test_min2_set_members_exist():

@@ -1,80 +1,29 @@
-"""Shared LM-token frame parity (bench.py LM_SHARED contract).
+"""Shared LM-token frame parity (bench.py `shared_tokens` row).
 
 bench.py builds _tokens_with_pos(documents) once per session and passes
 it to the LM/token scorer family via each query's shared_tokens kwarg
 (the LM-reference fifth becomes a row filter of the shared frame, exact
 because tokenization is per-row).  That is only legitimate if the shared
 path is EXACTLY the standalone path — these tests pin shared ==
-standalone row-for-row for every family member, on the driver's real
-sf0.001 parquet.  self_bleu_pairs additionally rides the dup-graph
-shared edge frame; its parity leg passes both kwargs at once, exactly
+standalone row-for-row for every consumer the row names, on the driver's
+real sf0.001 parquet.  self_bleu_pairs additionally rides the dup-graph
+shared edge frame; its two-frame leg passes both kwargs at once, exactly
 like bench does.
 """
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
-from wellmeet_data_pipeline_spark.plans.queries import REGISTRY, table
+import bench
 
-SF_DIR = "/root/testdata/sf0.001"
-
-FAMILY = [
-    "bigram_cond_entropy",
-    "ngram_lm_perplexity",
-    "perplexity_lang_buckets",
-    "doremi_weight_step",
-    "min_k_prob_score",
-    "stupid_backoff_nll",
-    "quality_length_spearman",
-    "source_keyness_chi2",
-]
+KWARG = "shared_tokens"
 
 
-@pytest.fixture(scope="module")
-def shared_tokens(spark):
-    from wellmeet_data_pipeline_spark.operators.scoring import _tokens_with_pos
-
-    if not os.path.isdir(SF_DIR):
-        pytest.skip(f"{SF_DIR} missing")
-    return _tokens_with_pos(
-        table(spark, SF_DIR, "documents"), "text", "doc_id"
-    ).localCheckpoint(eager=True)
+@pytest.mark.parametrize("name", sorted(bench.SHARED[KWARG].consumers))
+def test_shared_matches_standalone(shared_parity, name):
+    shared_parity(name, KWARG)
 
 
-@pytest.mark.parametrize("name", FAMILY)
-def test_shared_matches_standalone(spark, shared_tokens, name):
-    fn = REGISTRY[name].fn
-    standalone = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-    shared = sorted(
-        map(tuple, fn(spark, SF_DIR, shared_tokens=shared_tokens).collect())
-    )
-    assert standalone == shared
-    assert standalone  # the family must exercise real rows at sf0.001
-
-
-def test_self_bleu_shared_both_frames(spark, shared_tokens):
-    from wellmeet_data_pipeline_spark.operators.dedup import (
-        minhash_lsh_candidates_sha,
-    )
-
-    edges = minhash_lsh_candidates_sha(
-        table(spark, SF_DIR, "documents")
-    ).localCheckpoint(eager=True)
-    fn = REGISTRY["self_bleu_pairs"].fn
-    standalone = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-    shared = sorted(
-        map(
-            tuple,
-            fn(
-                spark,
-                SF_DIR,
-                shared_tokens=shared_tokens,
-                shared_lsh_edges=edges,
-            ).collect(),
-        )
-    )
-    assert standalone == shared
-    assert standalone
+def test_self_bleu_shared_both_frames(shared_parity):
+    shared_parity("self_bleu_pairs", "shared_tokens", "shared_lsh_edges")

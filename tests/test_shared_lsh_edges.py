@@ -1,52 +1,21 @@
-"""Shared dup-graph edge frame parity (bench.py DEDUP_SHARED contract).
+"""Shared dup-graph edge frame parity (bench.py `shared_lsh_edges` row).
 
 bench.py builds minhash_lsh_candidates_sha(documents) once per session and
 passes it to the whole dup-graph family via each query's shared_lsh_edges
 kwarg.  That is only legitimate if the shared path is EXACTLY the
 standalone path — these tests pin shared == standalone row-for-row for
-every family member, on the driver's real sf0.001 parquet.
+every consumer the row names, on the driver's real sf0.001 parquet.
 """
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
-from wellmeet_data_pipeline_spark.plans.queries import REGISTRY, table
+import bench
 
-SF_DIR = "/root/testdata/sf0.001"
-
-FAMILY = [
-    "dup_triangle_count",
-    "dup_graph_kcore",
-    "dedup_graph_communities",
-    "dedup_best_of_cluster",
-    "dup_graph_clustering",
-    "dup_graph_assortativity",
-    "dup_graph_pagerank",
-]
+KWARG = "shared_lsh_edges"
 
 
-@pytest.fixture(scope="module")
-def shared_edges(spark):
-    from wellmeet_data_pipeline_spark.operators.dedup import (
-        minhash_lsh_candidates_sha,
-    )
-
-    if not os.path.isdir(SF_DIR):
-        pytest.skip(f"{SF_DIR} missing")
-    return minhash_lsh_candidates_sha(
-        table(spark, SF_DIR, "documents")
-    ).localCheckpoint(eager=True)
-
-
-@pytest.mark.parametrize("name", FAMILY)
-def test_shared_matches_standalone(spark, shared_edges, name):
-    fn = REGISTRY[name].fn
-    standalone = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-    shared = sorted(
-        map(tuple, fn(spark, SF_DIR, shared_lsh_edges=shared_edges).collect())
-    )
-    assert standalone == shared
-    assert standalone  # the family must exercise real rows at sf0.001
+@pytest.mark.parametrize("name", sorted(bench.SHARED[KWARG].consumers))
+def test_shared_matches_standalone(shared_parity, name):
+    shared_parity(name, KWARG)

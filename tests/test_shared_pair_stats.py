@@ -1,50 +1,25 @@
-"""Shared shingle pair-stats frame parity (bench.py PAIR_STATS_SHARED).
+"""Shared shingle pair-stats frame parity (bench.py `shared_pair_stats`
+row).
 
 bench.py builds _shingle_pair_stats(documents, "text", "doc_id", 3,
-None, 10_000) once per session and passes it to the four inverted-index
+None, 10_000) once per session and passes it to the inverted-index
 consumers via each query's shared_pair_stats kwarg; everything each
 query applies on top (Jaccard/containment thresholds, rounding, split
 labels, the S-curve sweep) is a projection over that frame.  That is
 only legitimate if the shared path is EXACTLY the standalone path —
-these tests pin shared == standalone row-for-row on the driver's real
-sf0.001 parquet.
+these tests pin shared == standalone row-for-row for every consumer the
+row names, on the driver's real sf0.001 parquet.
 """
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
-from wellmeet_data_pipeline_spark.plans.queries import REGISTRY, table
+import bench
 
-SF_DIR = "/root/testdata/sf0.001"
-
-FAMILY = [
-    "ngram_jaccard_pairs",
-    "ngram_containment_pairs",
-    "minhash_band_plan",
-    "split_leakage_audit",
-]
+KWARG = "shared_pair_stats"
 
 
-@pytest.fixture(scope="module")
-def shared_stats(spark):
-    from wellmeet_data_pipeline_spark.operators.dedup import _shingle_pair_stats
-
-    if not os.path.isdir(SF_DIR):
-        pytest.skip(f"{SF_DIR} missing")
-    return _shingle_pair_stats(
-        table(spark, SF_DIR, "documents"), "text", "doc_id", 3, None, 10_000
-    ).localCheckpoint(eager=True)
-
-
-@pytest.mark.parametrize("name", FAMILY)
-def test_shared_matches_standalone(spark, shared_stats, name):
-    fn = REGISTRY[name].fn
-    standalone = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-    shared = sorted(
-        map(tuple, fn(spark, SF_DIR, shared_pair_stats=shared_stats).collect())
-    )
-    assert standalone == shared
-    assert standalone  # the family must exercise real rows at sf0.001
+@pytest.mark.parametrize("name", sorted(bench.SHARED[KWARG].consumers))
+def test_shared_matches_standalone(shared_parity, name):
+    shared_parity(name, KWARG)

@@ -21,15 +21,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import (  # noqa: E402
-    DEDUP_SHARED,
-    HEADLINE,
-    LM_SHARED,
-    PAIR_STATS_SHARED,
-    SHINGLE_BASE_SHARED,
-    VERIFY_SHARED,
-)
-from wellmeet_data_pipeline_spark.plans.queries import REGISTRY, table  # noqa: E402
+from bench import HEADLINE, SharedFrames  # noqa: E402
+from wellmeet_data_pipeline_spark.plans.queries import REGISTRY  # noqa: E402
 from wellmeet_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
@@ -43,81 +36,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     REGISTRY["pricing_summary"].fn(spark, args.sf).collect()
 
-    shared: dict = {}
-
-    def _kwargs(name):
-        kw = {}
-        if name in DEDUP_SHARED:
-            if "edges" not in shared:
-                from wellmeet_data_pipeline_spark.operators.dedup import (
-                    minhash_lsh_candidates_sha,
-                )
-
-                shared["edges"] = minhash_lsh_candidates_sha(
-                    table(spark, args.sf, "documents")
-                ).localCheckpoint(eager=True)
-            kw["shared_lsh_edges"] = shared["edges"]
-        if name in LM_SHARED:
-            if "tokens" not in shared:
-                from wellmeet_data_pipeline_spark.operators.scoring import (
-                    _tokens_with_pos,
-                )
-
-                shared["tokens"] = _tokens_with_pos(
-                    table(spark, args.sf, "documents"), "text", "doc_id"
-                ).localCheckpoint(eager=True)
-            kw["shared_tokens"] = shared["tokens"]
-        if name in SHINGLE_BASE_SHARED or name in VERIFY_SHARED:
-            if "base" not in shared:
-                from wellmeet_data_pipeline_spark.operators.dedup import shingles_df
-                from wellmeet_data_pipeline_spark.operators.skew import (
-                    fanout_small_scan,
-                )
-
-                shared["base"] = (
-                    shingles_df(
-                        fanout_small_scan(table(spark, args.sf, "documents")),
-                        "text",
-                        "doc_id",
-                        3,
-                    )
-                    .distinct()
-                    .localCheckpoint(eager=True)
-                )
-        if name in VERIFY_SHARED:
-            if "counts" not in shared:
-                from wellmeet_data_pipeline_spark.operators.dedup import (
-                    minhash_verify_sha,
-                )
-
-                shared["counts"] = minhash_verify_sha(
-                    table(spark, args.sf, "documents"),
-                    raw_counts=True,
-                    shingle_base=shared["base"],
-                ).localCheckpoint(eager=True)
-            kw["shared_verify_counts"] = shared["counts"]
-        if name in SHINGLE_BASE_SHARED:
-            kw["shared_shingle_base"] = shared["base"]
-        if name in PAIR_STATS_SHARED:
-            if "stats" not in shared:
-                from wellmeet_data_pipeline_spark.operators.dedup import (
-                    _shingle_pair_stats,
-                )
-
-                shared["stats"] = _shingle_pair_stats(
-                    table(spark, args.sf, "documents"),
-                    "text",
-                    "doc_id",
-                    3,
-                    None,
-                    10_000,
-                ).localCheckpoint(eager=True)
-            kw["shared_pair_stats"] = shared["stats"]
-        return kw
-
+    frames = SharedFrames(args.sf)
     out = {}
     for name in HEADLINE:
-        kw = _kwargs(name)
+        kw = frames.kwargs(spark, name)
         t0 = time.perf_counter()
         df = REGISTRY[name].fn(spark, args.sf, **kw)
         t_fn = time.perf_counter() - t0

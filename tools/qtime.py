@@ -6,8 +6,9 @@ min-of-N timing of the same collect() action bench.py times.  Usage:
 
     python tools/qtime.py [--sf SF_DIR] [--runs N] [--explain-dir DIR] q1 q2 ...
 
-Shared-frame queries (bench DEDUP_SHARED / LM_SHARED) get the same
-shared kwargs bench passes, so the printed seconds are comparable to
+Consumers of a shared frame (bench.SHARED_FRAMES) get the same shared_*
+kwargs bench passes, built once through bench.SharedFrames before the
+timed runs and not billed, so the printed seconds are comparable to the
 BENCH_DETAIL entries.
 """
 
@@ -23,14 +24,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import (  # noqa: E402
-    DEDUP_SHARED,
-    LM_SHARED,
-    PAIR_STATS_SHARED,
-    SHINGLE_BASE_SHARED,
-    VERIFY_SHARED,
-)
-from wellmeet_data_pipeline_spark.plans.queries import REGISTRY, table  # noqa: E402
+from bench import SharedFrames  # noqa: E402
+from wellmeet_data_pipeline_spark.plans.queries import REGISTRY  # noqa: E402
 from wellmeet_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
@@ -47,96 +42,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     REGISTRY["pricing_summary"].fn(spark, args.sf).collect()
 
-    shared_edges = None
-    shared_tokens = None
-
-    def _edges():
-        nonlocal shared_edges
-        if shared_edges is None:
-            from wellmeet_data_pipeline_spark.operators.dedup import (
-                minhash_lsh_candidates_sha,
-            )
-
-            shared_edges = minhash_lsh_candidates_sha(
-                table(spark, args.sf, "documents")
-            ).localCheckpoint(eager=True)
-        return shared_edges
-
-    def _tokens():
-        nonlocal shared_tokens
-        if shared_tokens is None:
-            from wellmeet_data_pipeline_spark.operators.scoring import _tokens_with_pos
-
-            shared_tokens = _tokens_with_pos(
-                table(spark, args.sf, "documents"), "text", "doc_id"
-            ).localCheckpoint(eager=True)
-        return shared_tokens
-
-    shared_base = None
-
-    def _base():
-        nonlocal shared_base
-        if shared_base is None:
-            from wellmeet_data_pipeline_spark.operators.dedup import shingles_df
-            from wellmeet_data_pipeline_spark.operators.skew import (
-                fanout_small_scan,
-            )
-
-            shared_base = (
-                shingles_df(
-                    fanout_small_scan(table(spark, args.sf, "documents")),
-                    "text",
-                    "doc_id",
-                    3,
-                )
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-        return shared_base
-
-    shared_counts = None
-
-    def _counts():
-        nonlocal shared_counts
-        if shared_counts is None:
-            from wellmeet_data_pipeline_spark.operators.dedup import (
-                minhash_verify_sha,
-            )
-
-            shared_counts = minhash_verify_sha(
-                table(spark, args.sf, "documents"),
-                raw_counts=True,
-                shingle_base=_base(),
-            ).localCheckpoint(eager=True)
-        return shared_counts
-
-    shared_stats = None
-
-    def _stats():
-        nonlocal shared_stats
-        if shared_stats is None:
-            from wellmeet_data_pipeline_spark.operators.dedup import (
-                _shingle_pair_stats,
-            )
-
-            shared_stats = _shingle_pair_stats(
-                table(spark, args.sf, "documents"), "text", "doc_id", 3, None, 10_000
-            ).localCheckpoint(eager=True)
-        return shared_stats
-
+    frames = SharedFrames(args.sf)
     out: dict[str, float] = {}
     for name in args.queries:
-        kwargs = {}
-        if name in DEDUP_SHARED:
-            kwargs["shared_lsh_edges"] = _edges()
-        if name in LM_SHARED:
-            kwargs["shared_tokens"] = _tokens()
-        if name in VERIFY_SHARED:
-            kwargs["shared_verify_counts"] = _counts()
-        if name in PAIR_STATS_SHARED:
-            kwargs["shared_pair_stats"] = _stats()
-        if name in SHINGLE_BASE_SHARED:
-            kwargs["shared_shingle_base"] = _base()
+        kwargs = frames.kwargs(spark, name)
         spark.sparkContext.setJobDescription(f"qtime:{name}")
         if args.explain_dir:
             os.makedirs(args.explain_dir, exist_ok=True)

@@ -1,7 +1,7 @@
 """Isolated timing of the bench 16x/hd matmul tiers (optimization-round
-measurement harness).  Replicates bench.py's fixture construction and
-min-of-2 protocol in a fresh session so tier timings are comparable to
-BENCH_DETAIL entries without running the whole headline.
+measurement harness).  Runs bench.py's own fixtures, tier functions and
+min-of-2 protocol in a fresh session, so tier timings and recalls are
+those bench reports, without running the whole headline.
 
 Usage: python tools/tiertime.py [16x|hd|both]
 """
@@ -11,155 +11,32 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from wellmeet_data_pipeline_spark.operators.similarity import (  # noqa: E402
-    brute_force_top_k,
-    clustered_embeddings,
-    ivf_assignments,
-    ivf_pq_top_k,
-    ivf_top_k,
-    pq_encoded_frame,
+from bench import (  # noqa: E402
+    hd_tier,
+    ivf_tier,
+    min2,
+    scale_fixture,
+    truth_sets,
 )
-from wellmeet_data_pipeline_spark.plans.queries import REGISTRY, table  # noqa: E402
+from wellmeet_data_pipeline_spark.operators.similarity import brute_force_top_k  # noqa: E402
+from wellmeet_data_pipeline_spark.plans.queries import REGISTRY  # noqa: E402
 from wellmeet_data_pipeline_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# A/B knob for the r14 float32 tier experiment (VERDICT item 1)
-SCORE_DTYPE = os.environ.get("SPARK_GRAFT_TIER_DTYPE", "float64")
-
-
-def _min2(run):
-    t0 = time.perf_counter()
-    rows = run()
-    dt = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    rows = run()
-    return rows, round(min(dt, time.perf_counter() - t0), 3)
-
-
-def _truth_sets(rows):
-    t: dict[int, set] = {}
-    for r in rows:
-        t.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    return t
-
-
-def _recall_vs(rows, truth):
-    hit = tot = 0
-    for r in rows:
-        ts = truth.get(r["query_id"])
-        if ts is not None:
-            tot += 1
-            hit += r["neighbor_id"] in ts
-    return round(hit / tot, 4) if tot else None
 
 
 def run_16x(spark, times):
-    e = clustered_embeddings(table(spark, SF_DIR, "embeddings"))
-    copies = spark.range(16).select(F.col("id").alias("copy"))
-    e16 = (
-        e.crossJoin(F.broadcast(copies))
-        .select(
-            (F.col("vec_id") + F.col("copy") * 1_000_000).alias("vec_id"),
-            F.transform(
-                F.col("embedding"),
-                lambda x, d: x
-                + F.lit(0.02)
-                * F.col("copy").cast("double")
-                * F.sin(d.cast("double") * 1.7 + F.col("copy").cast("double")),
-            ).alias("embedding"),
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
-    )
-    bf16, times["cosine_topk_bruteforce_16x"] = _min2(
+    e16 = scale_fixture(spark, SF_DIR)
+    bf16, times["cosine_topk_bruteforce_16x"] = min2(
         lambda: brute_force_top_k(e16, e16, k=5, n_blocks=32, round_digits=4).collect()
     )
-    t0 = time.perf_counter()
-    cids16, C16, a16 = ivf_assignments(e16, n_centroids=64, nprobe=4, seed_mod=421)
-    shared16 = (cids16, C16, a16.localCheckpoint(eager=True))
-    times["ivf_assignments_16x"] = round(time.perf_counter() - t0, 3)
-    iv16, times["cosine_topk_ivf_16x"] = _min2(
-        lambda: ivf_top_k(
-            e16, k=5, n_centroids=64, nprobe=4, seed_mod=421, kmeans_iters=0,
-            round_digits=4, shared=shared16, score_dtype=SCORE_DTYPE,
-        ).collect()
+    truth16 = truth_sets(bf16)
+    times["ivf_16x_recall_at_5"], times["ivfpq_16x_recall_at_5"] = ivf_tier(
+        e16, "16x", 64, times, lambda: truth16
     )
-    t0 = time.perf_counter()
-    books16, enc16 = pq_encoded_frame(e16, shared16, m_subspaces=16, n_codes=256)
-    enc16 = enc16.localCheckpoint(eager=True)
-    times["pq_encode_build_16x"] = round(time.perf_counter() - t0, 3)
-    pq16, times["cosine_topk_ivfpq_16x"] = _min2(
-        lambda: ivf_pq_top_k(
-            e16, k=5, n_centroids=64, nprobe=4, seed_mod=421, m_subspaces=16,
-            n_codes=256, oversample=64, round_digits=4, shared=shared16,
-            shared_pq=(books16, enc16), score_dtype=SCORE_DTYPE,
-        ).collect()
-    )
-    truth16 = _truth_sets(bf16)
-    times["ivf_16x_recall_at_5"] = _recall_vs(iv16, truth16)
-    times["ivfpq_16x_recall_at_5"] = _recall_vs(pq16, truth16)
-
-
-def run_hd(spark, times):
-    e = clustered_embeddings(table(spark, SF_DIR, "embeddings"))
-    copies = spark.range(16).select(F.col("id").alias("copy"))
-    hd_reps = 8
-    e_hd = (
-        e.crossJoin(F.broadcast(copies))
-        .select(
-            (F.col("vec_id") + F.col("copy") * 1_000_000).alias("vec_id"),
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(hd_reps - 1)),
-                    lambda rep: F.transform(
-                        F.col("embedding"),
-                        lambda x, d: x
-                        + F.lit(0.02)
-                        * F.col("copy").cast("double")
-                        * F.sin(
-                            d.cast("double") * 1.7
-                            + F.col("copy").cast("double")
-                            + rep.cast("double") * 0.37
-                        ),
-                    ),
-                )
-            ).alias("embedding"),
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
-    )
-    t0 = time.perf_counter()
-    cids_hd, C_hd, a_hd = ivf_assignments(e_hd, n_centroids=64, nprobe=4, seed_mod=421)
-    shared_hd = (cids_hd, C_hd, a_hd.localCheckpoint(eager=True))
-    times["ivf_assignments_hd"] = round(time.perf_counter() - t0, 3)
-    iv_hd, times["cosine_topk_ivf_hd"] = _min2(
-        lambda: ivf_top_k(
-            e_hd, k=5, n_centroids=64, nprobe=4, seed_mod=421, kmeans_iters=0,
-            round_digits=4, shared=shared_hd, score_dtype=SCORE_DTYPE,
-        ).collect()
-    )
-    t0 = time.perf_counter()
-    books_hd, enc_hd = pq_encoded_frame(e_hd, shared_hd, m_subspaces=16, n_codes=256)
-    enc_hd = enc_hd.localCheckpoint(eager=True)
-    times["pq_encode_build_hd"] = round(time.perf_counter() - t0, 3)
-    pq_hd, times["cosine_topk_ivfpq_hd"] = _min2(
-        lambda: ivf_pq_top_k(
-            e_hd, k=5, n_centroids=64, nprobe=4, seed_mod=421, m_subspaces=16,
-            n_codes=256, oversample=128, round_digits=4, shared=shared_hd,
-            shared_pq=(books_hd, enc_hd), score_dtype=SCORE_DTYPE,
-        ).collect()
-    )
-    sample_q = e_hd.filter(F.col("vec_id") < 1_000_000)
-    bf_hd = brute_force_top_k(sample_q, e_hd, k=5, n_blocks=32, round_digits=4).collect()
-    truth_hd = _truth_sets(bf_hd)
-    times["ivf_hd_recall_at_5"] = _recall_vs(iv_hd, truth_hd)
-    times["ivfpq_hd_recall_at_5"] = _recall_vs(pq_hd, truth_hd)
 
 
 def main() -> None:
@@ -171,7 +48,9 @@ def main() -> None:
     if which in ("16x", "both"):
         run_16x(spark, times)
     if which in ("hd", "both"):
-        run_hd(spark, times)
+        times["ivf_hd_recall_at_5"], times["ivfpq_hd_recall_at_5"] = hd_tier(
+            spark, SF_DIR, times
+        )
     print(json.dumps(times, indent=1))
 
 

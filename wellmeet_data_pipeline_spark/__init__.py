@@ -14,7 +14,7 @@ Layout:
     session.py    SparkSession factory tuned for the scale posture
     catalog.py    table loading / temp-view registration
     schemas.py    fixed StructType schemas (the reference is schemaless)
-    functions/    scalar/column expression library (text, vectors)
+    functions/    scalar/column expression library (text, enrichment)
     operators/    relational + dataflow operators (joins, dedup, aggs, ...)
     sources/      ingest patterns (JSON-array reader, high-water-mark scan)
     sinks/        merge-append parquet, insert-if-absent, HTTP-with-errors

@@ -1,1 +1,1 @@
-from wellmeet_data_pipeline_spark.functions import text, vectors  # noqa: F401
+from wellmeet_data_pipeline_spark.functions import text  # noqa: F401

@@ -219,7 +219,7 @@ def ngram_jaccard_pairs(
     partitioning as the self-join (both keyed on shingle).  Set
     max_shingle_df=None for the exact uncapped semantics.
 
-    `stats_frame` (r13 optimization round, bench PAIR_STATS_SHARED)
+    `stats_frame` (r13 optimization round, bench shared_pair_stats)
     injects a prebuilt _shingle_pair_stats(docs, text, id, shingle_n,
     None, max_shingle_df) frame — the caller owns parameter parity;
     everything below it (threshold + rounding) is a pure projection.
@@ -414,18 +414,6 @@ def simhash_df(
             F.when(F.col(f"v{i}") > 0, F.lit(m).cast("long")).otherwise(F.lit(0).cast("long"))
         )
     return votes.select(id_col, acc.alias("simhash"))
-
-
-def simhash_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Docs sharing an identical simhash64 — the exact-collision slice of
-    SimHash near-dup (full hamming-ball search adds banded prefix joins)."""
-    h = simhash_df(docs, text_col, id_col)
-    dup = h.groupBy("simhash").agg(F.count("*").alias("n"), F.min(id_col).alias("keep_id")).filter(F.col("n") > 1)
-    return (
-        h.join(dup.select("simhash", "keep_id"), "simhash")
-        .filter(F.col(id_col) != F.col("keep_id"))
-        .select(F.col(id_col).alias("dup_id"), F.col("keep_id"), F.col("simhash"))
-    )
 
 
 def simhash_sha_df(

@@ -59,12 +59,6 @@ def fill_rds_defaults(df: DataFrame) -> DataFrame:
     return df.fillna({"address": "", "latitude": 0.0, "longitude": 0.0})
 
 
-def flatten_nested_lists(df: DataFrame, map_col: str, out_col: str) -> DataFrame:
-    """P8 (submit-aws-batch-lambda/lambda_function.py:86-91): dict-of-lists ->
-    flat rows; explode on the values."""
-    return df.select(F.explode(F.flatten(F.map_values(F.col(map_col)))).alias(out_col))
-
-
 def k_anonymity_audit(
     df: DataFrame,
     quasi_cols: Sequence[str],

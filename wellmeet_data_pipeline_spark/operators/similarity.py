@@ -2195,14 +2195,6 @@ def ivf_cross_top_k(
     return _merge_tile_partials(bucket_results, k)
 
 
-def _sign_bit(vec_col: str, i: int):
-    """Bit i of the sign quantization: 1 iff dim i is strictly positive
-    (zeros and negatives are 0 — the tie rule is pinned, not incidental)."""
-    return F.when(F.element_at(F.col(vec_col), i + 1) > 0, F.lit(1)).otherwise(
-        F.lit(0)
-    ).cast("long")
-
-
 def hamming_block_bounds(dim: int, n_blocks: int) -> list[tuple[int, int]]:
     """[start, end) dim ranges of the pigeonhole blocks (sizes differ by
     at most one)."""

@@ -1123,7 +1123,7 @@ def q_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_jaccard(
     spark: SparkSession, sf_dir: str, shared_pair_stats: DataFrame | None = None
 ) -> DataFrame:
-    # bench PAIR_STATS_SHARED: the (id_a, id_b, inter, n_a, n_b) frame
+    # bench shared_pair_stats: the (id_a, id_b, inter, n_a, n_b) frame
     # is built once per session (billed shingle_pair_stats_build);
     # threshold + rounding here are a pure projection over it
     d = table(spark, sf_dir, "documents")
@@ -2763,7 +2763,7 @@ def q_minhash_verify(
         minhash_verify_sha,
     )
 
-    # bench VERIFY_SHARED: the raw-counts verify frame is built once per
+    # bench shared_verify_counts: the raw-counts verify frame is built once per
     # session (billed as dedup_verify_counts_build) and the rounded form
     # here is a bit-identical projection over it — shared == standalone
     # pinned by tests/test_shared_verify_counts.py

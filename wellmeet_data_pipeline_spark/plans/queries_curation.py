@@ -1779,7 +1779,7 @@ def q_dedup_vs_reference(
     d = table(spark, sf_dir, "documents")
     new = d.filter((F.col("doc_id") % 4) != 0)
     if shared_verify_counts is not None:
-        # bench VERIFY_SHARED: the cross-corpus candidate pairs are the
+        # bench shared_verify_counts: the cross-corpus candidate pairs are the
         # exactly-one-ref-side subset of the union self-join pairs the
         # shared raw-counts frame already carries (signatures and
         # shingle counts are corpus-membership-independent — the same

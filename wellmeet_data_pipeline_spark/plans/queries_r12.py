@@ -928,7 +928,7 @@ def q_dedup_threshold_sweep(
 ) -> DataFrame:
     from wellmeet_data_pipeline_spark.operators.dedup import minhash_verify_sha
 
-    # bench VERIFY_SHARED: consume the session-shared raw-counts frame
+    # bench shared_verify_counts: consume the session-shared raw-counts frame
     # when provided (shared == standalone pinned by
     # tests/test_shared_verify_counts.py)
     if shared_verify_counts is not None:

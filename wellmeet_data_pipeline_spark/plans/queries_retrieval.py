@@ -870,7 +870,7 @@ def q_ngram_containment(
     from wellmeet_data_pipeline_spark.operators.dedup import ngram_containment_pairs
 
     d = table(spark, sf_dir, "documents")
-    # bench PAIR_STATS_SHARED (see q_jaccard)
+    # bench shared_pair_stats (see q_jaccard)
     return ngram_containment_pairs(
         d, threshold=0.5, stats_frame=shared_pair_stats
     )
@@ -1342,7 +1342,7 @@ def q_minhash_band_plan(
     from wellmeet_data_pipeline_spark.operators.dedup import minhash_band_plan
 
     d = table(spark, sf_dir, "documents")
-    # bench PAIR_STATS_SHARED (see q_jaccard)
+    # bench shared_pair_stats (see q_jaccard)
     return minhash_band_plan(
         d, n_hashes=32, threshold=0.5, stats_frame=shared_pair_stats
     )

@@ -198,7 +198,7 @@ def q_split_leakage_audit(
     from wellmeet_data_pipeline_spark.operators.dedup import ngram_jaccard_pairs
 
     d = table(spark, sf_dir, "documents")
-    # bench PAIR_STATS_SHARED (see q_jaccard)
+    # bench shared_pair_stats (see q_jaccard)
     pairs = ngram_jaccard_pairs(
         d, threshold=0.5, stats_frame=shared_pair_stats
     ).select("id_a", "id_b")
