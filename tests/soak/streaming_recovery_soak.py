@@ -134,8 +134,8 @@ def patch_merge_append_to_kill():
     successful store commit durably lands and then the driver dies —
     the checkpoint's commit marker for that epoch is never written."""
     import wellmeet_data_pipeline_spark.sinks.merge as merge_mod
-    import wellmeet_data_pipeline_spark.streaming.analytics as analytics_mod
     import wellmeet_data_pipeline_spark.streaming.kcore as kcore_mod
+    import wellmeet_data_pipeline_spark.streaming.pipeline as pipeline_mod
 
     orig = merge_mod.merge_append
 
@@ -144,9 +144,11 @@ def patch_merge_append_to_kill():
         sys.stdout.flush()
         os._exit(KILL_EXIT)
 
-    merge_mod.merge_append = commit_then_die  # bloom imports at call time
-    analytics_mod.merge_append = commit_then_die  # bound at module import
+    merge_mod.merge_append = commit_then_die
+    # bound at module import: kcore calls merge_append directly; bloom,
+    # psi and cusum write through pipeline.append_nonempty
     kcore_mod.merge_append = commit_then_die
+    pipeline_mod.merge_append = commit_then_die
 
 
 def n_checkpoint_commits(ckpt):

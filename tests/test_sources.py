@@ -117,25 +117,21 @@ def test_paginated_datasource_streaming_exactly_once(spark, tmp_path):
     pages in offset order; a second activation with the same checkpoint
     adds nothing once the page horizon is reached (offsets are durable)."""
     from wellmeet_data_pipeline_spark.sources.datasource import PaginatedFeedDataSource
+    from wellmeet_data_pipeline_spark.streaming.pipeline import drain
 
     spark.dataSource.register(PaginatedFeedDataSource)
     out, ckpt = str(tmp_path / "pf_out"), str(tmp_path / "pf_ckpt")
 
     def activate():
-        q = (
+        feed = (
             spark.readStream.format("paginated_feed")
             .option("keys", "p1,p2")
             .option("rows_per_page", "3")
             .option("pages_per_batch", "1")
             .option("max_pages", "4")
             .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+        drain(feed.writeStream.format("parquet").option("path", out), ckpt)
         return spark.read.parquet(out).count()
 
     # each activation advances the durable {"page": n} offset by one

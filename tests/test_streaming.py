@@ -19,12 +19,14 @@ def test_streaming_ingest_idempotent(spark, tmp_path):
     _drop(landing, "p1.json", [r(1, "p1"), r(2, "p1"), r(2, "p1")])  # in-file dup
     _drop(landing, "p2.json", [r(3, "p2")])
 
-    run_ingest_pipeline(spark, str(landing), store, ckpt, REVIEW)
+    progress = run_ingest_pipeline(spark, str(landing), store, ckpt, REVIEW)
     assert read_current(spark, store).count() == 3
+    assert sum(p.numInputRows for p in progress) == 4
 
     # second activation: one new file, one re-delivered id (T4)
     _drop(landing, "p1_again.json", [r(2, "p1"), r(4, "p1")])
-    run_ingest_pipeline(spark, str(landing), store, ckpt, REVIEW)
+    progress = run_ingest_pipeline(spark, str(landing), store, ckpt, REVIEW)
+    assert sum(p.numInputRows for p in progress) == 2
 
     cur = read_current(spark, store)
     assert cur.count() == 4
@@ -76,6 +78,47 @@ def test_windowed_counts_stream(spark, tmp_path):
     rows = {(r["window_start"], r["event_type"]): r["n_events"] for r in spark.read.parquet(out).collect()}
     assert rows[("2024-01-01 00:00:00", "click")] == 2
     assert rows[("2024-01-01 00:10:00", "view")] == 1
+
+    # second activation: the watermark (09:00 - 30m) is restored from the
+    # checkpoint, so a planted 00:03 click is late; it is dropped, and the
+    # progress reports the drop
+    _drop(
+        landing,
+        "ev2.json",
+        [
+            {"ts": "2024-01-01T00:03:00.000Z", "event_type": "click"},
+            {"ts": "2024-01-01T10:00:00.000Z", "event_type": "late-watermark-advancer"},
+        ],
+    )
+    progress = run_windowed_counts(spark, str(landing), out, ckpt, schema, minutes=10)
+    dropped = sum(op.numRowsDroppedByWatermark for p in progress for op in p.stateOperators)
+    assert dropped == 1
+    clicks = [
+        r["n_events"]
+        for r in spark.read.parquet(out).collect()
+        if (r["window_start"], r["event_type"]) == ("2024-01-01 00:00:00", "click")
+    ]
+    assert clicks == [2]
+
+
+def test_drain_raises_when_a_batch_fails(spark, tmp_path):
+    """A failing foreachBatch callback surfaces from drain as
+    StreamingQueryException, never as a silent empty progress."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream
+
+    landing = tmp_path / "fail_landing"
+    landing.mkdir()
+    _drop(landing, "a.json", [{"id": "h1", "place_id": "p1"}])
+
+    def boom(batch_df, batch_id):
+        raise RuntimeError("planted batch failure")
+
+    stream = landing_stream(spark, str(landing), REVIEW)
+    with pytest.raises(StreamingQueryException, match="planted batch failure"):
+        drain(stream.writeStream.foreachBatch(boom), str(tmp_path / "fail_ckpt"))
 
 
 def test_embedding_pipeline_and_near_dups(spark, tmp_path):
@@ -385,7 +428,7 @@ def test_debounce_stream_kept_anchored(spark, tmp_path):
         TimestampType,
     )
 
-    from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+    from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream
     from wellmeet_data_pipeline_spark.streaming.stateful import debounce_stream
 
     schema = StructType(
@@ -401,15 +444,10 @@ def test_debounce_stream_kept_anchored(spark, tmp_path):
 
     def run():
         stream = landing_stream(spark, str(landing), schema)
-        (
-            debounce_stream(stream, ["user_id"], "ts", cooldown_seconds=300)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+        debounced = debounce_stream(stream, ["user_id"], "ts", cooldown_seconds=300)
+        drain(
+            debounced.writeStream.format("parquet").option("path", out).outputMode("append"),
+            ckpt,
         )
 
     # chain at 0, 2, 4, 6 minutes: lag-gap thinning would keep 0 only

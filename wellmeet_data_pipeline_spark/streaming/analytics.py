@@ -29,9 +29,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
-from wellmeet_data_pipeline_spark.sinks.merge import merge_append, read_current_or_none
+from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
+from wellmeet_data_pipeline_spark.streaming.pipeline import (
+    append_nonempty,
+    drain,
+    landing_stream,
+)
 
 
 def run_streaming_key_counts(
@@ -41,33 +47,17 @@ def run_streaming_key_counts(
     checkpoint_dir: str,
     schema: StructType,
     key_col: str,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Drain the landing stream (availableNow), appending per-batch
     partial counts keyed by (key, batch) — one dim-sized groupBy per
     micro-batch, never a rescan of the store."""
-    stream = spark.readStream.schema(schema).option("multiLine", "true").json(
-        landing_dir
-    )
+    stream = landing_stream(spark, landing_dir, schema)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         counts = batch_df.groupBy(key_col).agg(F.count("*").alias("n"))
-        if counts.isEmpty():
-            return
-        merge_append(
-            counts,
-            store_path,
-            id_col=key_col,
-            partition_col=None,
-            batch_seq=batch_id,
-        )
+        append_nonempty(counts, store_path, key_col, batch_id)
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_heavy_hitters(
@@ -106,7 +96,7 @@ def run_streaming_active_days(
     schema: StructType,
     user_col: str,
     ts_col: str,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Streaming twin of rolling_distinct_active's INPUT maintenance:
     drain the landing stream (availableNow), appending each batch's
     distinct (user, day) pairs under (user, day, batch) identity.  The
@@ -115,32 +105,16 @@ def run_streaming_active_days(
     merge-append store here.  The rolling read (current_rolling_active)
     is then a pure function of the store: no window state, no event
     rescan."""
-    stream = spark.readStream.schema(schema).option("multiLine", "true").json(
-        landing_dir
-    )
+    stream = landing_stream(spark, landing_dir, schema)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         pairs = batch_df.select(
             F.to_date(F.col(ts_col)).alias("__day"),
             F.col(user_col).alias("__u"),
         ).distinct()
-        if pairs.isEmpty():
-            return
-        merge_append(
-            pairs,
-            store_path,
-            id_col="__u",
-            partition_col=None,
-            batch_seq=batch_id,
-        )
+        append_nonempty(pairs, store_path, "__u", batch_id)
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_rolling_active(
@@ -172,7 +146,7 @@ def run_streaming_term_counts(
     schema: StructType,
     group_col: str = "source",
     text_col: str = "text",
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Drain the landing document stream (availableNow), appending each
     micro-batch's (group, term) partial token counts — the incremental
     state behind the streaming drift monitor.  Same store contract as
@@ -181,9 +155,7 @@ def run_streaming_term_counts(
     exactly-once without read-modify-write."""
     from wellmeet_data_pipeline_spark.functions.text import normalized_text
 
-    stream = spark.readStream.schema(schema).option("multiLine", "true").json(
-        landing_dir
-    )
+    stream = landing_stream(spark, landing_dir, schema)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         counts = (
@@ -195,30 +167,10 @@ def run_streaming_term_counts(
             .filter(F.col("term") != "")
             .groupBy("grp", "term")
             .agg(F.count("*").alias("a"))
-            # the emptiness probe and the write both consume the frame —
-            # persist so the token-explode aggregation runs once per batch
-            .persist()
         )
-        try:
-            if counts.isEmpty():
-                return
-            merge_append(
-                counts,
-                store_path,
-                id_col="grp",
-                partition_col=None,
-                batch_seq=batch_id,
-            )
-        finally:
-            counts.unpersist()
+        append_nonempty(counts, store_path, "grp", batch_id)
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_source_drift(
@@ -255,7 +207,7 @@ def run_streaming_quantile_sketch(
     value_col: str,
     group_cols: tuple[str, ...] = (),
     sub_bits: int = 5,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Streaming twin of the mergeable quantile sketch
     (aggregations.quantile_sketch): each micro-batch appends its own
     sketch PARTIAL — (group, bucket_lb, cnt) keyed by (group, bucket,
@@ -271,31 +223,15 @@ def run_streaming_quantile_sketch(
     here."""
     from wellmeet_data_pipeline_spark.operators.aggregations import quantile_sketch
 
-    stream = spark.readStream.schema(schema).option("multiLine", "true").json(
-        landing_dir
-    )
+    stream = landing_stream(spark, landing_dir, schema)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         sk = quantile_sketch(
             batch_df, value_col, group_cols=group_cols, sub_bits=sub_bits
         )
-        if sk.isEmpty():
-            return
-        merge_append(
-            sk,
-            store_path,
-            id_col="bucket_lb",
-            partition_col=None,
-            batch_seq=batch_id,
-        )
+        append_nonempty(sk, store_path, "bucket_lb", batch_id)
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_quantiles(
@@ -335,14 +271,13 @@ def run_streaming_length_bins(
     schema: StructType,
     width: int = 64,
     n_bins: int = 10,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Landing documents -> persisted (source, bin, c) partial counts,
     availableNow — the PSI drift monitor's state (same exactly-once
     partial-count discipline as run_streaming_term_counts: the partial
     is keyed (source, bin, batch), so a replayed batch overwrites its
     own contribution instead of double-counting)."""
     from wellmeet_data_pipeline_spark.operators.scoring import length_bins
-    from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
 
     stream = landing_stream(spark, landing_dir, schema)
 
@@ -351,28 +286,11 @@ def run_streaming_length_bins(
             length_bins(batch_df, width=width, n_bins=n_bins)
             .groupBy("source", "bin")
             .agg(F.count("*").cast("long").alias("c"))
-            .persist()
         )
-        try:
-            if partial.isEmpty():
-                # an all-filtered batch (NULL sources/lengths) must not
-                # commit a zero-part append — the store-poisoning case
-                # read_current_or_none's docstring warns about
-                return
-            merge_append(
-                partial, bins_store, id_col="source", partition_col=None,
-                batch_seq=batch_id,
-            )
-        finally:
-            partial.unpersist()
+        # an all-filtered batch (NULL sources/lengths) is empty
+        append_nonempty(partial, bins_store, "source", batch_id)
 
-    (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
 
 
 def current_source_psi(spark: SparkSession, bins_store: str, n_bins: int = 10) -> DataFrame:
@@ -403,16 +321,14 @@ def run_streaming_period_totals(
     group_col: str,
     period_col: str,
     value_col: str,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Drain the landing stream (availableNow), appending per-batch
     PARTIAL (group, period) value totals — the incremental substrate of
     the CUSUM drift monitor.  Same store contract as
     run_streaming_key_counts: partials are identified by (group, period,
     batch seq), replays re-append the same identity and dedup on read,
     so period totals are exactly-once without read-modify-write."""
-    stream = spark.readStream.schema(schema).option("multiLine", "true").json(
-        landing_dir
-    )
+    stream = landing_stream(spark, landing_dir, schema)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         totals = (
@@ -422,23 +338,9 @@ def run_streaming_period_totals(
             .groupBy(group_col, period_col)
             .agg(F.sum(value_col).cast("long").alias("x"))
         )
-        if totals.isEmpty():
-            return
-        merge_append(
-            totals,
-            store_path,
-            id_col=group_col,
-            partition_col=None,
-            batch_seq=batch_id,
-        )
+        append_nonempty(totals, store_path, group_col, batch_id)
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_changepoint(
@@ -585,7 +487,7 @@ def run_streaming_event_log(
     checkpoint_dir: str,
     schema: StructType,
     id_col: str,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Drain the landing stream (availableNow) into a RAW-ROW store
     keyed by (id, batch seq) — the substrate for consumers that need
     whole observations rather than pre-aggregated partials (the SCD2
@@ -593,29 +495,13 @@ def run_streaming_event_log(
     tie)).  Same store contract as the partial-count stores: replays
     re-append the same identity and dedup on read, so the log is
     exactly-once under the foreachBatch replay contract."""
-    stream = spark.readStream.schema(schema).option("multiLine", "true").json(
-        landing_dir
-    )
+    stream = landing_stream(spark, landing_dir, schema)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         rows = batch_df.filter(F.col(id_col).isNotNull())
-        if rows.isEmpty():
-            return
-        merge_append(
-            rows,
-            store_path,
-            id_col=id_col,
-            partition_col=None,
-            batch_seq=batch_id,
-        )
+        append_nonempty(rows, store_path, id_col, batch_id)
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_scd2_history(

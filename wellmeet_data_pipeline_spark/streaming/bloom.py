@@ -22,11 +22,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.operators.joins import bloom_bit_positions
 from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import (
+    append_nonempty,
+    drain,
+    landing_stream,
+)
 
 
 def run_streaming_bloom_bits(
@@ -38,14 +43,12 @@ def run_streaming_bloom_bits(
     key_col: str,
     m_bits: int = 4096,
     k_hashes: int = 3,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Landing build-side rows -> persisted Bloom bit set, availableNow.
     Store rows: (pos) under first-wins identity."""
     stream = landing_stream(spark, landing_dir, schema)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from wellmeet_data_pipeline_spark.sinks.merge import merge_append
-
         new_bits = (
             batch_df.filter(F.col(key_col).isNotNull())
             .select(
@@ -58,30 +61,10 @@ def run_streaming_bloom_bits(
         cur = read_current_or_none(spark, bits_store, id_col="pos")
         if cur is not None:
             new_bits = new_bits.join(cur.select("pos"), "pos", "left_anti")
-        # same store-poisoning guard as the analytics monitors
-        # (analytics.py run_streaming_length_bins): an all-NULL first
-        # batch would commit a zero-part store, and a fully-duplicate or
-        # saturated batch would burn an empty commit.  persist: new_bits
-        # is consumed twice (isEmpty + the write) and recomputing it
-        # re-runs the anti-join against the whole store.
-        new_bits = new_bits.persist()
-        try:
-            if new_bits.isEmpty():
-                return
-            merge_append(
-                new_bits, bits_store, id_col="pos", partition_col=None,
-                batch_seq=batch_id,
-            )
-        finally:
-            new_bits.unpersist()
+        # empty for an all-NULL, fully-duplicate or saturated batch
+        append_nonempty(new_bits, bits_store, "pos", batch_id)
 
-    (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
 
 
 def current_bloom_prefilter_stats(

@@ -25,15 +25,18 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.operators.dedup import (
     cdc_apply_latest,
     latest_per_key,
 )
-from wellmeet_data_pipeline_spark.sinks.merge import (
-    merge_append,
-    read_current_or_none,
+from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
+from wellmeet_data_pipeline_spark.streaming.pipeline import (
+    append_nonempty,
+    drain,
+    landing_stream,
 )
 
 
@@ -45,39 +48,19 @@ def run_streaming_cdc_apply(
     schema: StructType,
     key_col: str,
     order_cols: Sequence[str],
-    batch_format: str = "json",
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Drain the changelog landing stream (availableNow), appending each
     batch's per-key latest rows (tombstones included) to the store."""
-    reader = spark.readStream.schema(schema)
-    if batch_format == "json":
-        stream = reader.option("multiLine", "true").json(landing_dir)
-    else:
-        stream = reader.format(batch_format).load(landing_dir)
-
+    stream = landing_stream(spark, landing_dir, schema)
     orders = list(order_cols)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # same reducer (and tie-breaking) as the batch operator — the
         # batch-vs-stream equivalence depends on sharing it
         latest = latest_per_key(batch_df, [key_col], orders)
-        if latest.isEmpty():
-            return
-        merge_append(
-            latest,
-            store_path,
-            id_col=key_col,
-            partition_col=None,
-            batch_seq=batch_id,
-        )
+        append_nonempty(latest, store_path, key_col, batch_id)
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_state(

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.functions.text import document_fingerprint, token_count
@@ -34,7 +35,7 @@ from wellmeet_data_pipeline_spark.sinks.merge import (
     read_current,
     read_current_or_none,
 )
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream
 
 
 def run_corpus_pipeline(
@@ -56,7 +57,7 @@ def run_corpus_pipeline(
     ref_index_path: str | None = None,
     dsir_model: DataFrame | None = None,
     bloom_path: str | None = None,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """availableNow activation of the curation DAG over a landing dir.
 
     With `near_dup=True` a MinHash-LSH stage runs after exact dedup: each
@@ -235,13 +236,7 @@ def run_corpus_pipeline(
             fresh, store_path, id_col="fingerprint", partition_col=None, batch_seq=batch_id
         )
 
-    (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
 
 
 def read_corpus(spark: SparkSession, store_path: str) -> DataFrame:

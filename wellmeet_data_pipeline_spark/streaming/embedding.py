@@ -16,12 +16,13 @@ similarity operators consume without touching the text.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.functions.enrichment import embed_text
 from wellmeet_data_pipeline_spark.operators.similarity import embedding_near_dup_pairs
 from wellmeet_data_pipeline_spark.sinks.merge import merge_append, read_current
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream
 
 
 def run_embedding_pipeline(
@@ -33,7 +34,7 @@ def run_embedding_pipeline(
     text_col: str = "content",
     id_col: str = "id",
     dim: int = 64,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Landing JSON -> embed -> merge-append, availableNow."""
     stream = landing_stream(spark, landing_dir, schema)
 
@@ -41,13 +42,7 @@ def run_embedding_pipeline(
         embedded = embed_text(batch_df.dropDuplicates([id_col]), text_col=text_col, dim=dim)
         merge_append(embedded, store_path, id_col=id_col, partition_col=None, batch_seq=batch_id)
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def store_near_dups(
@@ -74,7 +69,7 @@ def run_rag_index_pipeline(
     window: int = 32,
     stride: int = 16,
     dim: int = 64,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """RAG index build as a stream: landing docs -> overlapping chunks ->
     per-chunk embedding -> idempotent merge-append keyed on
     (doc_id, chunk_no).  The batch twins are `chunk_documents` and
@@ -107,10 +102,4 @@ def run_rag_index_pipeline(
         )
         merge_append(keyed, store_path, id_col="chunk_key", partition_col=None, batch_seq=batch_id)
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)

@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.operators.corpus import (
@@ -46,7 +47,7 @@ from wellmeet_data_pipeline_spark.sinks.merge import (
     read_current,
     read_current_or_none,
 )
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream
 
 
 def run_exactsubstr_dedup(
@@ -59,7 +60,7 @@ def run_exactsubstr_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     span_w: int = 3,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Landing docs -> incremental ExactSubstr scrub -> cleaned store,
     availableNow."""
     stream = landing_stream(spark, landing_dir, schema)
@@ -161,13 +162,7 @@ def run_exactsubstr_dedup(
             cleaned, out_store, id_col=id_col, partition_col=None, batch_seq=batch_id
         )
 
-    (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
 
 
 def read_clean_corpus(

@@ -25,10 +25,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import (
+    append_nonempty,
+    drain,
+    landing_stream,
+)
 
 
 def run_streaming_fingerprint_registry(
@@ -39,7 +44,7 @@ def run_streaming_fingerprint_registry(
     schema: StructType,
     k: int = 3,
     w: int = 4,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Landing reference documents -> persisted winnowing-fingerprint
     registry, availableNow.  Store rows: (doc_id, pos, fp) under
     first-wins compound identity."""
@@ -48,31 +53,13 @@ def run_streaming_fingerprint_registry(
     stream = landing_stream(spark, landing_dir, schema)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from wellmeet_data_pipeline_spark.sinks.merge import merge_append
-
+        # empty for all-NULL or too-short docs
         fps = winnowing_fingerprints(
             batch_df.filter(F.col("text").isNotNull()), k=k, w=w
-        ).persist()
-        try:
-            # empty-batch guard (all-NULL / too-short docs): a zero-part
-            # first commit would poison the store (the analytics/bloom
-            # monitors' discipline)
-            if fps.isEmpty():
-                return
-            merge_append(
-                fps, store, id_col=["doc_id", "pos", "fp"], partition_col=None,
-                batch_seq=batch_id,
-            )
-        finally:
-            fps.unpersist()
+        )
+        append_nonempty(fps, store, ["doc_id", "pos", "fp"], batch_id)
 
-    (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
 
 
 def current_fingerprint_matches(

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.operators.similarity import (
@@ -38,7 +39,7 @@ from wellmeet_data_pipeline_spark.operators.similarity import (
     ivf_seed_centroids,
 )
 from wellmeet_data_pipeline_spark.sinks.merge import merge_append, read_current
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream
 
 
 def init_ivf_store(
@@ -76,7 +77,7 @@ def run_ivf_maintenance(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     quant: int = 1_000_000,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Landing vector batches -> assign to the PERSISTED centroids ->
     idempotent merge-append, availableNow.  batch_seq >= 1 marks the
     rows as post-init (__new = 1) for the drift read."""
@@ -103,13 +104,7 @@ def run_ivf_maintenance(
             batch_seq=batch_id + 1,
         )
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_index_report(

@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.sinks.merge import (
@@ -42,7 +43,7 @@ from wellmeet_data_pipeline_spark.sinks.merge import (
     read_current,
     read_current_or_none,
 )
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream
 
 
 def _normalize_edges(df: DataFrame, id_a: str, id_b: str) -> DataFrame:
@@ -68,7 +69,7 @@ def run_streaming_kcore_edges(
     schema: StructType,
     id_a: str = "id_a",
     id_b: str = "id_b",
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Landing edge batches -> deduped canonical edge store, availableNow."""
     stream = landing_stream(spark, landing_dir, schema)
 
@@ -85,13 +86,7 @@ def run_streaming_kcore_edges(
             new, edge_store, id_col="id_a", partition_col=None, batch_seq=batch_id
         )
 
-    (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
 
 
 def current_kcore(

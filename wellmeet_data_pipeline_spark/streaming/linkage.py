@@ -22,9 +22,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
-from wellmeet_data_pipeline_spark.sinks.merge import merge_append, read_current_or_none
+from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
+from wellmeet_data_pipeline_spark.streaming.pipeline import (
+    append_nonempty,
+    drain,
+    landing_stream,
+)
 
 _REGISTRY_SCHEMA = "entity_id long, entity_name string"
 
@@ -37,7 +43,7 @@ def run_streaming_fuzzy_upsert(
     schema: StructType,
     id_col: str = "record_id",
     name_col: str = "record_name",
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Drain the landing record stream (availableNow); each micro-batch
     inserts the records that match NO registered entity, exactly or
     within one deletion (in either direction: a dirty incoming name one
@@ -45,9 +51,7 @@ def run_streaming_fuzzy_upsert(
     1-short variant was registered first)."""
     from wellmeet_data_pipeline_spark.operators.linkage import fuzzy_link_edit1
 
-    stream = spark.readStream.schema(schema).option("multiLine", "true").json(
-        landing_dir
-    )
+    stream = landing_stream(spark, landing_dir, schema)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # exact within-batch dedup: keep the lowest record id per name.
@@ -103,29 +107,11 @@ def run_streaming_fuzzy_upsert(
                 .distinct()
             )
             recs = recs.join(matched, "entity_id", "left_anti")
-        # the emptiness probe and the write both consume the matched
-        # frame — persist so the semi/fuzzy join pipeline runs once
-        recs = recs.persist()
-        try:
-            if recs.isEmpty():
-                return
-            merge_append(
-                recs.select("entity_id", "entity_name"),
-                store_path,
-                id_col="entity_id",
-                partition_col=None,
-                batch_seq=batch_id,
-            )
-        finally:
-            recs.unpersist()
+        append_nonempty(
+            recs.select("entity_id", "entity_name"), store_path, "entity_id", batch_id
+        )
 
-    (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_entities(spark: SparkSession, store_path: str) -> DataFrame:

@@ -21,12 +21,13 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 
 from wellmeet_data_pipeline_spark.operators.projections import fill_rds_defaults, require_fields
 from wellmeet_data_pipeline_spark.pipelines import ingest_reviews
 from wellmeet_data_pipeline_spark.schemas import RESTAURANT
 from wellmeet_data_pipeline_spark.sinks.merge import merge_append, read_current_or_none
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream
 
 
 def _read_backlog_or_none(spark: SparkSession, path: str) -> DataFrame | None:
@@ -127,8 +128,9 @@ def run_orchestration(
     review_fetcher: Callable[[str, int], list[dict]],
     max_keys_per_batch: int | None = None,
     backlog_store: str | None = None,
-) -> None:
-    """availableNow activation of the whole §3.3 DAG.
+) -> list[StreamingQueryProgress]:
+    """availableNow activation of the whole §3.3 DAG; returns the
+    stream's progress (drain), read after the post-stream backlog drain.
 
     `max_keys_per_batch` bounds the one driver-side materialization (the
     new-key list driving the per-key review fan-out): each micro-batch
@@ -186,17 +188,12 @@ def run_orchestration(
             review_fetcher, max_keys_per_batch, batch_id,
         )
 
-    (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    progress = drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
     if max_keys_per_batch is not None:
         drain_backlog(
             spark, backlog_store, review_store, review_fetcher, max_keys_per_batch
         )
+    return progress
 
 
 def compact_backlog(spark: SparkSession, backlog_store: str, out_path: str) -> None:

@@ -4,22 +4,31 @@ The reference's choreography — S3 ObjectCreated -> Lambda -> AWS Batch ->
 Lambda (§3.3: 4 processes, 3 network hops) — collapses into file-source
 micro-batches:
 
-  T1 trigger        readStream on the landing dir + Trigger.AvailableNow
-                    (drain-to-quiescence = the reference's event-per-upload
-                    + convergence loop R5)
+  T1 trigger        a file-source stream on the landing dir (landing_stream) +
+                    Trigger.AvailableNow via drain(), which runs one
+                    activation to quiescence (= the reference's
+                    event-per-upload + convergence loop R5) and returns
+                    the query's StreamingQueryProgress list: rows in,
+                    per-batch durationMs, state-operator sizes
   T2 state          the file-source checkpoint tracks processed files;
-                    cross-batch id dedup via watermark + dropDuplicates
+                    cross-batch id dedup via watermark + dropDuplicates;
+                    state size is in drain()'s progress (numRowsTotal)
   T4 idempotency    foreachBatch -> merge_append sink (exactly-once per id
-                    through the dedup-on-read view)
+                    through the dedup-on-read view); partial-count stores
+                    write through append_nonempty
   T5 backpressure   maxFilesPerTrigger replaces the [:10] caps and sleeps
   T6 late data      explicit watermark instead of the silent newest-first
-                    assumption (naver_crawler.py:243-247)
+                    assumption (naver_crawler.py:243-247); the rows it
+                    drops are reported, not silent: each state operator's
+                    numRowsDroppedByWatermark in drain()'s progress
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.sinks.merge import merge_append
@@ -40,6 +49,40 @@ def landing_stream(
     return reader.json(landing_dir)
 
 
+def drain(writer: DataStreamWriter, checkpoint_dir: str) -> list[StreamingQueryProgress]:
+    """T1/R5: run one availableNow activation of `writer` to quiescence.
+
+    Returns the query's `recentProgress`: one StreamingQueryProgress per
+    micro-batch, carrying numInputRows, durationMs and, per state
+    operator, numRowsTotal and numRowsDroppedByWatermark (T6).  Only the
+    last `spark.sql.streaming.numRecentProgressUpdates` (default 100)
+    batches are kept.  A failed batch raises StreamingQueryException."""
+    query = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    return query.recentProgress
+
+
+def append_nonempty(
+    frame: DataFrame, store: str, id_col: str | list[str], batch_seq: int
+) -> None:
+    """merge_append one micro-batch's rows unless there are none.  A
+    zero-row first commit would leave a zero-part store (the
+    store-poisoning case read_current_or_none's docstring warns about),
+    and a later one burns an empty commit.  The frame is persisted
+    because the emptiness probe and the write both consume it."""
+    frame = frame.persist()
+    try:
+        if frame.isEmpty():
+            return
+        merge_append(frame, store, id_col=id_col, partition_col=None, batch_seq=batch_seq)
+    finally:
+        frame.unpersist()
+
+
 def run_ingest_pipeline(
     spark: SparkSession,
     landing_dir: str,
@@ -48,7 +91,7 @@ def run_ingest_pipeline(
     schema: StructType,
     id_col: str = "id",
     partition_col: str | None = "place_id",
-) -> None:
+) -> list[StreamingQueryProgress]:
     """§3.3 as ONE streaming pipeline: validate -> per-batch dedup ->
     idempotent merge-append.  Cross-batch duplicates are handled by the
     sink's dedup-on-read (T4): re-delivered ids never surface twice.
@@ -61,13 +104,7 @@ def run_ingest_pipeline(
         merge_append(fresh, store_path, id_col=id_col, partition_col=partition_col,
                      batch_seq=batch_id)
 
-    (
-        valid.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(valid.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def run_windowed_counts(
@@ -79,10 +116,11 @@ def run_windowed_counts(
     ts_col: str = "ts",
     minutes: int = 10,
     watermark: str = "30 minutes",
-) -> None:
+) -> list[StreamingQueryProgress]:
     """T6/T7: watermarked tumbling-window counts over an event stream —
     late rows beyond the watermark are dropped *explicitly* (the reference
-    silently truncated via its newest-first assumption)."""
+    silently truncated via its newest-first assumption), and the returned
+    progress counts them (numRowsDroppedByWatermark)."""
     stream = landing_stream(spark, landing_dir, schema)
     agg = (
         stream.withWatermark(ts_col, watermark)
@@ -94,14 +132,9 @@ def run_windowed_counts(
             "n_events",
         )
     )
-    (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    return drain(
+        agg.writeStream.format("parquet").option("path", out_path).outputMode("append"),
+        checkpoint_dir,
     )
 
 
@@ -115,7 +148,7 @@ def run_session_windows(
     key_col: str = "user_id",
     gap_minutes: int = 30,
     watermark: str = "2 hours",
-) -> None:
+) -> list[StreamingQueryProgress]:
     """T7's streaming twin of operators.windows.session_window_agg:
     watermarked F.session_window sessionization.  The state store keys on
     (key, merging session) and shards on the groupBy shuffle — the same
@@ -147,40 +180,27 @@ def run_session_windows(
             "sum_value",
         )
     )
-    (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    return drain(
+        agg.writeStream.format("parquet").option("path", out_path).outputMode("append"),
+        checkpoint_dir,
     )
 
 
-def run_stream_stream_range_join(
+def _stream_stream_join(
     spark: SparkSession,
     left_dir: str,
     right_dir: str,
     out_path: str,
     checkpoint_dir: str,
     schema: StructType,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    window_seconds: int = 1800,
-    watermark: str = "1 hour",
-) -> None:
-    """Watermarked stream-stream range join — the streaming twin of
-    `range_join_events` (click ⋈ purchase within a window per user).
-    Both sides watermark on event time; the join condition bounds the
-    right side's timestamp to [left.ts, left.ts + window], which is what
-    lets Structured Streaming EVICT state: a buffered left row can be
-    dropped once the right watermark passes left.ts + window.  An
-    unbounded-condition stream-stream join would hold both sides
-    forever — the time bound IS the state-retention contract at scale.
-
-    Output columns mirror the batch operator: (user_id, l_event_id,
-    r_event_id, delta_us).  Append-mode parquet sink; availableNow."""
+    key_col: str,
+    ts_col: str,
+    window_seconds: int,
+    watermark: str,
+    how: str,
+) -> list[StreamingQueryProgress]:
+    """The body of both watermarked stream-stream joins below; `how` is
+    the join type."""
     left = (
         landing_stream(spark, left_dir, schema)
         .withWatermark(ts_col, watermark)
@@ -204,21 +224,45 @@ def run_stream_stream_range_join(
         (F.col(key_col) == F.col("__rk"))
         & (F.col("r_ts") >= F.col("l_ts"))
         & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {window_seconds} SECONDS")),
-        "inner",
+        how,
     ).select(
         key_col,
         "l_event_id",
         "r_event_id",
         (F.unix_micros("r_ts") - F.unix_micros("l_ts")).alias("delta_us"),
     )
-    (
-        joined.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    return drain(
+        joined.writeStream.format("parquet").option("path", out_path).outputMode("append"),
+        checkpoint_dir,
+    )
+
+
+def run_stream_stream_range_join(
+    spark: SparkSession,
+    left_dir: str,
+    right_dir: str,
+    out_path: str,
+    checkpoint_dir: str,
+    schema: StructType,
+    key_col: str = "user_id",
+    ts_col: str = "ts",
+    window_seconds: int = 1800,
+    watermark: str = "1 hour",
+) -> list[StreamingQueryProgress]:
+    """Watermarked stream-stream range join — the streaming twin of
+    `range_join_events` (click ⋈ purchase within a window per user).
+    Both sides watermark on event time; the join condition bounds the
+    right side's timestamp to [left.ts, left.ts + window], which is what
+    lets Structured Streaming EVICT state: a buffered left row can be
+    dropped once the right watermark passes left.ts + window.  An
+    unbounded-condition stream-stream join would hold both sides
+    forever — the time bound IS the state-retention contract at scale.
+
+    Output columns mirror the batch operator: (user_id, l_event_id,
+    r_event_id, delta_us).  Append-mode parquet sink; availableNow."""
+    return _stream_stream_join(
+        spark, left_dir, right_dir, out_path, checkpoint_dir, schema,
+        key_col, ts_col, window_seconds, watermark, "inner",
     )
 
 
@@ -233,7 +277,7 @@ def run_stream_stream_left_outer_join(
     ts_col: str = "ts",
     window_seconds: int = 1800,
     watermark: str = "1 hour",
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Watermarked stream-stream LEFT OUTER join: every left event is
     emitted exactly once — matched rows as soon as the match arrives,
     UNMATCHED rows only when the watermark proves no match can still
@@ -244,45 +288,7 @@ def run_stream_stream_left_outer_join(
     timing is exactly why the time-bound + watermark are mandatory on
     BOTH sides: without them unmatched rows could never be declared
     final.  Output mirrors the inner twin plus nullable right columns."""
-    left = (
-        landing_stream(spark, left_dir, schema)
-        .withWatermark(ts_col, watermark)
-        .select(
-            F.col(key_col),
-            F.col("event_id").alias("l_event_id"),
-            F.col(ts_col).alias("l_ts"),
-        )
-    )
-    right = (
-        landing_stream(spark, right_dir, schema)
-        .withWatermark(ts_col, watermark)
-        .select(
-            F.col(key_col).alias("__rk"),
-            F.col("event_id").alias("r_event_id"),
-            F.col(ts_col).alias("r_ts"),
-        )
-    )
-    joined = left.join(
-        right,
-        (F.col(key_col) == F.col("__rk"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (
-            F.col("r_ts")
-            <= F.col("l_ts") + F.expr(f"INTERVAL {window_seconds} SECONDS")
-        ),
-        "left_outer",
-    ).select(
-        key_col,
-        "l_event_id",
-        "r_event_id",
-        (F.unix_micros("r_ts") - F.unix_micros("l_ts")).alias("delta_us"),
-    )
-    (
-        joined.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    return _stream_stream_join(
+        spark, left_dir, right_dir, out_path, checkpoint_dir, schema,
+        key_col, ts_col, window_seconds, watermark, "left_outer",
     )

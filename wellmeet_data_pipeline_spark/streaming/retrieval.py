@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.functions.text import normalized_text
@@ -44,7 +45,7 @@ from wellmeet_data_pipeline_spark.operators.retrieval import (
     bm25_rank_cut,
 )
 from wellmeet_data_pipeline_spark.sinks.merge import merge_append, read_current
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream
 
 
 def run_lexical_index_pipeline(
@@ -55,7 +56,7 @@ def run_lexical_index_pipeline(
     schema: StructType,
     text_col: str = "text",
     id_col: str = "doc_id",
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Landing JSON -> postings + doclen merge-append, availableNow."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -105,13 +106,9 @@ def run_lexical_index_pipeline(
         merge_append(doclen, f"{store_path}/doclen", id_col=id_col,
                      partition_col=None, batch_seq=batch_id)
 
-    (
-        landing_stream(spark, landing_dir, schema)
-        .writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    return drain(
+        landing_stream(spark, landing_dir, schema).writeStream.foreachBatch(write_batch),
+        checkpoint_dir,
     )
 
 

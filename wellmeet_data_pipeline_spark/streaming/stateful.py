@@ -17,6 +17,7 @@ from collections.abc import Iterator, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 _STATE_SCHEMA = "seen integer"
@@ -67,22 +68,17 @@ def run_stateful_dedup(
     checkpoint_dir: str,
     schema,
     id_col: str = "id",
-) -> None:
+) -> list[StreamingQueryProgress]:
     """availableNow pipeline: landing JSON -> stateful first-per-id ->
     parquet append.  Re-delivered ids in later activations never reach the
     sink (contrast sinks.merge, which admits them and hides them on read)."""
-    from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+    from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream
 
     stream = landing_stream(spark, landing_dir, schema)
     deduped = dedup_stream_by_id(stream, id_col)
-    (
-        deduped.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    return drain(
+        deduped.writeStream.format("parquet").option("path", out_path).outputMode("append"),
+        checkpoint_dir,
     )
 
 
@@ -222,15 +218,18 @@ def run_streaming_transitions(
     ts_col: str = "ts",
     id_col: str = "event_id",
     state_col: str = "event_type",
-) -> None:
+) -> list[StreamingQueryProgress]:
     """availableNow pipeline: landing JSON -> stateful per-entity
     transition emission -> per-batch (from, to) partial counts appended
     to a dedup-on-read store keyed by (from, to, batch seq).  Replays
     re-append the same identity and vanish on read — the exactly-once
     partial-count store contract shared with the CUSUM / PSI / hot-key
     monitors (streaming/analytics.py)."""
-    from wellmeet_data_pipeline_spark.sinks.merge import merge_append
-    from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+    from wellmeet_data_pipeline_spark.streaming.pipeline import (
+        append_nonempty,
+        drain,
+        landing_stream,
+    )
 
     stream = landing_stream(spark, landing_dir, schema)
     trans = transition_stream(stream, entity_col, ts_col, id_col, state_col)
@@ -239,23 +238,9 @@ def run_streaming_transitions(
         counts = batch_df.groupBy("from_state", "to_state").agg(
             F.count("*").cast("long").alias("n_trans")
         )
-        if counts.isEmpty():
-            return
-        merge_append(
-            counts,
-            store_path,
-            id_col="from_state",
-            partition_col=None,
-            batch_seq=batch_id,
-        )
+        append_nonempty(counts, store_path, "from_state", batch_id)
 
-    (
-        trans.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(trans.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 def current_transition_probs(spark, store_path: str) -> DataFrame:

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.operators.web import url_domain
@@ -38,7 +39,7 @@ from wellmeet_data_pipeline_spark.sinks.merge import (
     read_current,
     read_current_or_none,
 )
-from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream
 
 
 def run_streaming_domain_caps(
@@ -50,7 +51,7 @@ def run_streaming_domain_caps(
     url_col: str = "url",
     id_col: str = "doc_id",
     cap: int = 3,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Landing docs -> per-domain capped admission decisions, availableNow."""
     stream = landing_stream(spark, landing_dir, schema)
 
@@ -99,13 +100,7 @@ def run_streaming_domain_caps(
             batch_seq=batch_id,
         )
 
-    (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
 
 
 def current_domain_survivors(
