@@ -68,13 +68,24 @@ def rest(pid, name):
     }
 
 
+# on_batch consumes its micro-batch in two writes (the todo-mark append
+# and the restaurant-store commit), each a fresh scan of the batch, and
+# numInputRows adds up the rows of every scan: each landed row counts twice.
+SCANS_PER_BATCH = 2
+
+
+def n_input_rows(progress):
+    return sum(p.numInputRows for p in progress)
+
+
 def drop(fname, rows):
     with open(os.path.join(landing, fname), "w") as fh:
         json.dump(rows, fh, ensure_ascii=False)
 
 
 def activate():
-    run_orchestration(
+    """One availableNow activation; returns the stream's query progress."""
+    return run_orchestration(
         spark, landing, rest_store, rev_store, ckpt, fetch,
         max_keys_per_batch=2, backlog_store=backlog,
     )
@@ -82,7 +93,7 @@ def activate():
 
 # batch 1: p1's fetch task fails once; the task RETRY must absorb it
 drop("r1.json", [rest("p1", "집밥"), rest("p2", "국수")])
-activate()
+assert n_input_rows(activate()) == SCANS_PER_BATCH * 2
 assert sorted(os.listdir(ledger)) == ["p1.0"], os.listdir(ledger)
 assert read_current(spark, rev_store).count() == 4  # task retry was invisible
 
@@ -97,12 +108,12 @@ assert died, "second activation should have failed (task attempts exhausted)"
 
 # restart: checkpoint replays the failed batch; third fetch attempt succeeds.
 # The durable todo-marks (appended before the restaurant commit) carry the
-# obligation across the crash.
-activate()
+# obligation across the crash.  Only r2.json's one restaurant replays.
+assert n_input_rows(activate()) == SCANS_PER_BATCH * 1
 
 # batch 3: p2 re-landed (no re-crawl) + p4 new
 drop("r3.json", [rest("p2", "국수"), rest("p4", "순대")])
-activate()
+assert n_input_rows(activate()) == SCANS_PER_BATCH * 2
 
 # exactly-once vs the batch twin: 4 places x 2 reviews, first version wins
 rests = sorted(r["place_id"] for r in read_current(spark, rest_store, id_col="place_id").collect())

@@ -95,6 +95,7 @@ SCHEMAS = {
 
 
 def activate(spark, tmp, twin):
+    """One availableNow activation of `twin`; returns its query progress."""
     from pyspark.sql.types import StructType
 
     landing, store, ckpt = paths(tmp, twin)
@@ -104,7 +105,7 @@ def activate(spark, tmp, twin):
             run_streaming_bloom_bits,
         )
 
-        run_streaming_bloom_bits(
+        return run_streaming_bloom_bits(
             spark, landing, store, ckpt, schema, "c_custkey", m_bits=64, k_hashes=3
         )
     elif twin == "kcore":
@@ -112,13 +113,13 @@ def activate(spark, tmp, twin):
             run_streaming_kcore_edges,
         )
 
-        run_streaming_kcore_edges(spark, landing, store, ckpt, schema)
+        return run_streaming_kcore_edges(spark, landing, store, ckpt, schema)
     elif twin == "cusum":
         from wellmeet_data_pipeline_spark.streaming.analytics import (
             run_streaming_period_totals,
         )
 
-        run_streaming_period_totals(
+        return run_streaming_period_totals(
             spark, landing, store, ckpt, schema, "event_type", "day", "value"
         )
     else:
@@ -126,7 +127,7 @@ def activate(spark, tmp, twin):
             run_streaming_length_bins,
         )
 
-        run_streaming_length_bins(spark, landing, store, ckpt, schema)
+        return run_streaming_length_bins(spark, landing, store, ckpt, schema)
 
 
 def patch_merge_append_to_kill():
@@ -149,6 +150,10 @@ def patch_merge_append_to_kill():
     # psi and cusum write through pipeline.append_nonempty
     kcore_mod.merge_append = commit_then_die
     pipeline_mod.merge_append = commit_then_die
+
+
+def n_input_rows(progress):
+    return sum(p.numInputRows for p in progress)
 
 
 def n_checkpoint_commits(ckpt):
@@ -248,8 +253,9 @@ def main():
         landing, store, ckpt = paths(tmp, twin)
         spark = get_session()
         drop(landing, "b1.json", BATCHES[twin][0])
-        activate(spark, tmp, twin)  # epoch 0, clean
+        progress = activate(spark, tmp, twin)  # epoch 0, clean
         assert n_checkpoint_commits(ckpt) == 1, twin
+        assert n_input_rows(progress) == len(BATCHES[twin][0]), twin
         drop(landing, "b2.json", BATCHES[twin][1])
         spark.stop()
 
@@ -268,10 +274,13 @@ def main():
         stored_batches = spark.read.parquet(store).select("_batch_seq").distinct().count()
         assert stored_batches == 2, (twin, stored_batches)
 
-        activate(spark, tmp, twin)  # recovery: epoch 1 replays idempotently
+        progress = activate(spark, tmp, twin)  # recovery: epoch 1 replays idempotently
         assert n_checkpoint_commits(ckpt) == 2, twin
+        # only the torn epoch replays: b2.json's rows, not b1.json's again
+        assert n_input_rows(progress) == len(BATCHES[twin][1]), twin
         drop(landing, "b3.json", BATCHES[twin][2])
-        activate(spark, tmp, twin)  # life goes on: epoch 2
+        progress = activate(spark, tmp, twin)  # life goes on: epoch 2
+        assert n_input_rows(progress) == len(BATCHES[twin][2]), twin
         verify_parity(spark, tmp, twin)
         spark.stop()
         print(f"RECOVERY-OK {twin}", flush=True)

@@ -567,3 +567,36 @@ def test_bm25_prf_expansion_retrieves_term_disjoint_doc(spark):
     again = {r["doc_id"]: r["rank"]
              for r in bm25_prf_topk(docs.repartition(7), q, k=5).collect()}
     assert again == prf
+
+
+def _run_bm25_prf(spark):
+    from wellmeet_data_pipeline_spark.operators.retrieval import bm25_prf_topk
+
+    docs = spark.createDataFrame(
+        [(i, f"spark catalyst doc {i}") for i in range(12)], "doc_id long, text string"
+    )
+    bm25_prf_topk(docs, {0: ["spark"]}, k=3).collect()
+
+
+def _run_rfm_segments(spark):
+    from conftest import SHARED_SF_DIR
+    from wellmeet_data_pipeline_spark.plans.queries import REGISTRY
+
+    REGISTRY["customer_rfm_segments"].fn(spark, SHARED_SF_DIR).collect()
+
+
+@pytest.mark.parametrize("run", [_run_bm25_prf, _run_rfm_segments])
+def test_thread_pool_jobs_keep_caller_job_group(spark, run):
+    """Jobs launched from an operator's thread pool run under the
+    caller's job group: none of them lands among the group-less jobs."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("pool-inherit", "thread-pool job group test")
+    try:
+        run(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(tracker.getJobIdsForGroup("pool-inherit"))
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()

@@ -283,7 +283,8 @@ def test_ivf_cross_top_k_contract_matches_bruteforce_on_clusters(spark):
         for i in range(30)
     ]
     q = spark.createDataFrame(mk(0), ["vec_id", "embedding"])
-    c = spark.createDataFrame(mk(1000), ["vec_id", "embedding"])
+    c_rows = mk(1000)
+    c = spark.createDataFrame(c_rows, ["vec_id", "embedding"])
     exact = {
         (r["query_id"], r["rank"]): r["neighbor_id"]
         for r in brute_force_top_k(q, c, 3).collect()
@@ -294,6 +295,19 @@ def test_ivf_cross_top_k_contract_matches_bruteforce_on_clusters(spark):
     }
     agree = sum(1 for k_ in exact if approx.get(k_) == exact[k_])
     assert agree / len(exact) >= 0.95
+
+    # full probe (nprobe == n_centroids): every query meets every
+    # candidate's bucket, so the result is row-identical to brute force —
+    # same rounding, same tie order (the duplicated candidates tie
+    # exactly and must break on the lower id)
+    dups = spark.createDataFrame(
+        [(2000 + i, v) for i, (_, v) in enumerate(c_rows[:6])], ["vec_id", "embedding"]
+    )
+    c_full = c.unionByName(dups)
+    rows = lambda df: sorted(map(tuple, df.collect()))
+    assert rows(
+        ivf_cross_top_k(q, c_full, 5, n_centroids=8, nprobe=8, round_digits=4)
+    ) == rows(brute_force_top_k(q, c_full, 5, round_digits=4))
 
 
 def test_k_anonymity_audit_flags_rare_groups(spark):

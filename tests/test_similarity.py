@@ -1,4 +1,12 @@
-from wellmeet_data_pipeline_spark.operators.similarity import brute_force_top_k, ivf_top_k
+import pytest
+
+from wellmeet_data_pipeline_spark.operators.similarity import (
+    brute_force_top_k,
+    ivf_cross_top_k,
+    ivf_pq_top_k,
+    ivf_top_k,
+    semantic_dedup,
+)
 
 
 def _vecs(spark):
@@ -366,16 +374,58 @@ def test_ivfpq_full_probe_matches_bruteforce(spark):
     assert got_pq == got_bf
 
 
-def test_ivfpq_parameter_validation(spark):
-    import pytest
-
-    from wellmeet_data_pipeline_spark.operators.similarity import ivf_pq_top_k
-
-    df = _vecs(spark)  # dim 3
-    with pytest.raises(ValueError, match="not divisible"):
-        ivf_pq_top_k(df, k=1, n_centroids=2, seed_mod=1, m_subspaces=2).collect()
-    with pytest.raises(ValueError, match="n_codes"):
-        ivf_pq_top_k(df, k=1, n_centroids=2, seed_mod=1, m_subspaces=3, n_codes=300)
+@pytest.mark.parametrize(
+    "call, match",
+    [
+        pytest.param(
+            lambda df: ivf_pq_top_k(
+                df, k=1, n_centroids=2, seed_mod=1, m_subspaces=2
+            ).collect(),
+            "not divisible",
+            id="ivf_pq_top_k-m_subspaces",
+        ),
+        pytest.param(
+            lambda df: ivf_pq_top_k(
+                df, k=1, n_centroids=2, seed_mod=1, m_subspaces=3, n_codes=300
+            ),
+            "n_codes",
+            id="ivf_pq_top_k-n_codes",
+        ),
+        pytest.param(
+            lambda df: ivf_pq_top_k(df, k=1, n_centroids=2, nprobe=0, m_subspaces=3),
+            "nprobe",
+            id="ivf_pq_top_k-nprobe",
+        ),
+        pytest.param(
+            lambda df: ivf_top_k(df, 5, n_centroids=0),
+            "n_centroids",
+            id="ivf_top_k-n_centroids",
+        ),
+        pytest.param(
+            lambda df: ivf_top_k(df, 5, nprobe=0), "nprobe", id="ivf_top_k-nprobe"
+        ),
+        pytest.param(
+            lambda df: ivf_cross_top_k(df, df, 5, n_centroids=0),
+            "n_centroids",
+            id="ivf_cross_top_k-n_centroids",
+        ),
+        pytest.param(
+            lambda df: ivf_cross_top_k(df, df, 5, nprobe=0),
+            "nprobe",
+            id="ivf_cross_top_k-nprobe",
+        ),
+        pytest.param(
+            lambda df: semantic_dedup(df, 0.9, n_centroids=0),
+            "n_centroids",
+            id="semantic_dedup-n_centroids",
+        ),
+    ],
+)
+def test_ivfpq_parameter_validation(spark, call, match):
+    """Invalid index sizes fail with a ValueError naming the parameter
+    (n_centroids=0 used to divide by zero; nprobe=0 returned no rows)."""
+    with pytest.raises(ValueError, match=match):
+        call(_vecs(spark))
 
 
 def test_ivfpq_survives_zero_vector_rows(spark):

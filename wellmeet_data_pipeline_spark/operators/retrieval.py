@@ -603,17 +603,25 @@ def bm25_prf_topk(
     # projection, never toks) but ran as two serial driver-blocking
     # jobs; a 2-thread pool overlaps them (the customer_rfm_segments
     # pattern).  Both inputs are plain scans, so the threads cannot race
-    # a shared lazy materialization.
+    # a shared lazy materialization.  Each callable carries the caller's
+    # local properties (job group, job description) into its pool thread.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(docs.sparkSession)
     with ThreadPoolExecutor(2) as ex:
         f_toks = ex.submit(
-            lambda: _doc_tokens(docs, text_col, id_col).localCheckpoint(eager=True)
+            inherit(
+                lambda: _doc_tokens(docs, text_col, id_col).localCheckpoint(eager=True)
+            )
         )
         f_stats = ex.submit(
-            lambda: docs.agg(F.count("*").alias("n_docs"))
-            .crossJoin(dl.agg(F.coalesce(F.sum("dl"), F.lit(0)).alias("total_dl")))
-            .localCheckpoint(eager=True)
+            inherit(
+                lambda: docs.agg(F.count("*").alias("n_docs"))
+                .crossJoin(dl.agg(F.coalesce(F.sum("dl"), F.lit(0)).alias("total_dl")))
+                .localCheckpoint(eager=True)
+            )
         )
         toks, stats = f_toks.result(), f_stats.result()
 

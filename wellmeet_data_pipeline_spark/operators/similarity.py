@@ -30,6 +30,15 @@ Two tiers:
   centroid sample itself (n_centroids rows, bounded by the cap — a
   broadcast dim, not a data collect).
 
+Each kernel is written once and shared by every search variant:
+_topk_block scores a group (_frame_top_k is the body of every exact
+tile and IVF bucket scorer, _tile_top_k the cogrouped tile grid),
+_merge_tile_partials merges per-tile and per-bucket lists,
+_ivf_index_setup sizes and samples an index (also semantic_dedup's
+clusters), _assign_probes ranks each vector's nearest centroids,
+_scan_top_k cuts the quantized serving scans, _recall_vs_exact is their
+recall gate, and _int_dot is the exact integer dot of the oracle twins.
+
 Determinism: similarities rounded before ranking, ties broken by
 neighbor_id, so results are stable across partitionings and match the
 DuckDB oracle.  Rounding is half-away-from-zero (the ROUND mode of both
@@ -38,6 +47,8 @@ flip a ranking on an exact .xxxx5 boundary.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pandas as pd
@@ -254,6 +265,32 @@ def _topk_block(
 _TOPK_SCHEMA = "query_id long, neighbor_id long, cosine_sim double, rank int"
 
 
+def _frame_top_k(
+    q_pdf: pd.DataFrame,
+    c_pdf: pd.DataFrame,
+    k: int,
+    round_digits: int,
+    mask=None,
+    dtype: type = np.float64,
+) -> pd.DataFrame:
+    """`_topk_block` of a group's (id, v) query rows against its (id, v)
+    candidate rows — the body of every exact tile and IVF bucket scorer.
+    `mask(q_pdf, c_pdf)` may return an extra (m x n) boolean allow mask
+    (`_topk_block`'s `allow_extra`)."""
+    if len(q_pdf) == 0 or len(c_pdf) == 0:
+        return pd.DataFrame(_EMPTY_TOPK)
+    return _topk_block(
+        q_pdf["id"].to_numpy(),
+        _matrix(q_pdf["v"]),
+        c_pdf["id"].to_numpy(),
+        _matrix(c_pdf["v"]),
+        k,
+        round_digits,
+        allow_extra=None if mask is None else mask(q_pdf, c_pdf),
+        dtype=dtype,
+    )
+
+
 def _merge_tile_partials(partial: DataFrame, k: int) -> DataFrame:
     """Rank-window merge of per-tile top-k lists into the global top-k
     (partitioned by query — never a global window)."""
@@ -295,7 +332,8 @@ def _blocked_sides(
     q_carry: dict[str, str] | None = None,
     c_carry: dict[str, str] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Block both sides for the block-nested-loop cogroup.
+    """Block both sides for the block-nested-loop cogroup: each side is
+    (id, v, carried columns, q_block, c_block).
 
     The grid is b_q x b_c tiles (see _block_split): a query in q-block i
     is replicated to every (i, j); a candidate in c-block j is
@@ -323,23 +361,46 @@ def _blocked_sides(
     q_blocks = F.array(*[F.lit(b).cast("int") for b in range(b_q)])
     q = (
         queries.select(
-            F.col(query_id).alias("qid"),
-            F.col(vec_col).alias("qv"),
+            F.col(query_id).alias("id"),
+            F.col(vec_col).alias("v"),
             *[F.col(src).alias(dst) for dst, src in (q_carry or {}).items()],
         )
-        .withColumn("q_block", F.pmod(F.xxhash64("qid"), F.lit(b_q)).cast("int"))
+        .withColumn("q_block", F.pmod(F.xxhash64("id"), F.lit(b_q)).cast("int"))
         .withColumn("c_block", F.explode(c_blocks))
     )
     c = (
         candidates.select(
-            F.col(cand_id).alias("cid"),
-            F.col(vec_col).alias("cv"),
+            F.col(cand_id).alias("id"),
+            F.col(vec_col).alias("v"),
             *[F.col(src).alias(dst) for dst, src in (c_carry or {}).items()],
         )
-        .withColumn("c_block", F.pmod(F.xxhash64("cid"), F.lit(b_c)).cast("int"))
+        .withColumn("c_block", F.pmod(F.xxhash64("id"), F.lit(b_c)).cast("int"))
         .withColumn("q_block", F.explode(q_blocks))
     )
     return q, c
+
+
+def _tile_top_k(
+    q: DataFrame,
+    c: DataFrame,
+    k: int,
+    round_digits: int,
+    mask=None,
+) -> DataFrame:
+    """Exact top-k over the blocked sides of `_blocked_sides`: every
+    (q_block, c_block) tile meets in one cogrouped applyInPandas scored
+    by `_frame_top_k` (with the optional tile `mask`), then the per-tile
+    partial lists merge by rank window."""
+
+    def tile(key, q_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> pd.DataFrame:
+        return _frame_top_k(q_pdf, c_pdf, k, round_digits, mask)
+
+    partial = (
+        q.groupBy("q_block", "c_block")
+        .cogroup(c.groupBy("q_block", "c_block"))
+        .applyInPandas(tile, _TOPK_SCHEMA)
+    )
+    return _merge_tile_partials(partial, k)
 
 
 def brute_force_top_k(
@@ -357,27 +418,8 @@ def brute_force_top_k(
     (q_block, c_block) tiles, numpy matmul per tile, rank-window merge of
     the per-tile top-k lists.  No driver-side collect anywhere in the
     lineage; at huge N switch to ivf_top_k (same output contract)."""
-
     q, c = _blocked_sides(queries, candidates, query_id, cand_id, vec_col, n_blocks)
-
-    def tile_topk(key, q_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(q_pdf) == 0 or len(c_pdf) == 0:
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "cosine_sim": [], "rank": []})
-        return _topk_block(
-            q_pdf["qid"].to_numpy(),
-            _matrix(q_pdf["qv"]),
-            c_pdf["cid"].to_numpy(),
-            _matrix(c_pdf["cv"]),
-            k,
-            round_digits,
-        )
-
-    partial = (
-        q.groupBy("q_block", "c_block")
-        .cogroup(c.groupBy("q_block", "c_block"))
-        .applyInPandas(tile_topk, _TOPK_SCHEMA)
-    )
-    return _merge_tile_partials(partial, k)
+    return _tile_top_k(q, c, k, round_digits)
 
 
 def hard_negative_top_k(
@@ -408,29 +450,10 @@ def hard_negative_top_k(
         c_carry={"clab": label_col},
     )
 
-    def tile(key, q_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(q_pdf) == 0 or len(c_pdf) == 0:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cosine_sim": [], "rank": []}
-            )
-        qlabs = q_pdf["qlab"].to_numpy()
-        clabs = c_pdf["clab"].to_numpy()
-        return _topk_block(
-            q_pdf["qid"].to_numpy(),
-            _matrix(q_pdf["qv"]),
-            c_pdf["cid"].to_numpy(),
-            _matrix(c_pdf["cv"]),
-            k,
-            round_digits,
-            allow_extra=clabs[None, :] != qlabs[:, None],
-        )
+    def different_label(q_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> np.ndarray:
+        return c_pdf["clab"].to_numpy()[None, :] != q_pdf["qlab"].to_numpy()[:, None]
 
-    partial = (
-        q.groupBy("q_block", "c_block")
-        .cogroup(c.groupBy("q_block", "c_block"))
-        .applyInPandas(tile, _TOPK_SCHEMA)
-    )
-    return _merge_tile_partials(partial, k)
+    return _tile_top_k(q, c, k, round_digits, mask=different_label)
 
 
 def _kmeans_refine(
@@ -501,26 +524,9 @@ def kmeans_assign_step(
     scalar-total joins); argmin is a window over the k candidate rows
     per vector (never doc-cardinality partitions); means ride an exact
     integer grid so accumulation order cannot flip the hash."""
-    # NULL vectors cannot be assigned — dropped (oracle filters identically)
-    e = emb.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
+    best = _kmeans_candidate_frame(emb, k, id_col, vec_col, round_digits).filter(
+        F.col("__rn") == 1
     )
-    seeds = (
-        e.orderBy(id_col)
-        .limit(k)
-        .select(F.col(id_col).alias("__sid"), F.col("__v").alias("__sv"))
-    )
-    dist = F.round(
-        F.aggregate(
-            F.zip_with("__v", "__sv", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        round_digits,
-    )
-    d = e.crossJoin(F.broadcast(seeds)).withColumn("__dist", dist)
-    w = Window.partitionBy(id_col).orderBy("__dist", "__sid")
-    best = d.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
     scale = float(10**round_digits)
     grid = best.withColumn(
         "__mi", F.round(F.col("__dist") * F.lit(scale)).cast("long")
@@ -619,23 +625,21 @@ def ivf_seed_centroids(qvecs: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _int_dot(a, b):
+    """Exact BIGINT dot product of two integer array columns (a JVM
+    fold, so both engines sum the same integers)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, x: acc + x
+    )
+
+
 def _ivf_assign(qvecs: DataFrame, seeds: DataFrame, is_new: int) -> DataFrame:
     """Nearest-existing-centroid assignment by exact quantized cosine:
     broadcast NL join against the model-sized seed frame, vec-grain
     argmax window, (cos DESC, centroid ASC) determinism, zero-norm → 0."""
-    dot = F.aggregate(
-        F.zip_with("__q", "__sq", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    nrm2 = lambda c: F.aggregate(
-        F.transform(c, lambda x: x * x),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    den = F.sqrt(nrm2(F.col("__q")).cast("double")) * F.sqrt(
-        nrm2(F.col("__sq")).cast("double")
-    )
+    dot = _int_dot(F.col("__q"), F.col("__sq"))
+    nrm = lambda c: F.sqrt(_int_dot(F.col(c), F.col(c)).cast("double"))
+    den = nrm("__q") * nrm("__sq")
     cos = F.when(den == 0, F.lit(0.0)).otherwise(dot.cast("double") / den)
     d = qvecs.crossJoin(F.broadcast(seeds)).withColumn("__cos", cos)
     w = Window.partitionBy("__id").orderBy(F.desc_nulls_last("__cos"), F.asc("__sid"))
@@ -792,6 +796,8 @@ def _ivf_index_setup(
     k-means.  Returns (cent_ids, C) — empty cent_ids means empty input.
     NULL-vector rows are excluded (they can neither seed nor refine a
     centroid)."""
+    if n_centroids is not None and n_centroids < 1:
+        raise ValueError(f"n_centroids must be >= 1, got {n_centroids}")
     candidates = candidates.filter(F.col(vec_col).isNotNull())
     if n_centroids is None or seed_mod is None:
         n_rows = candidates.count()
@@ -810,37 +816,21 @@ def _ivf_index_setup(
 _ASSIGN_SCHEMA = "id long, v array<double>, probes array<bigint>"
 
 
-def ivf_assignments(
+def _assign_probes(
     data: DataFrame,
-    n_centroids: int | None = None,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed_mod: int | None = None,
-    kmeans_iters: int = 0,
-) -> tuple[np.ndarray, np.ndarray, DataFrame]:
-    """The shared IVF probe-assignment pass: centroid sample + ONE
-    mapInPandas matmul ranking every vector's nprobe nearest centroids.
-    Returns (cent_ids, C, assigned) where assigned is (id, v, probes) —
-    probes[0] is the row's own bucket (the lexsort winner, lowest cid on
-    ties), probes[1:] the remaining probe targets in rank order.
-
-    This is the frame ivf_top_k and ivf_pq_top_k both consume via their
-    `shared=` parameter: the two variants of a serving tier previously
-    recomputed identical centroid samples and assignment matmuls
-    (bench's _hd pair spent ~19% of the whole run on the duplication).
-    Callers that reuse it across variants should materialize it once
-    (localCheckpoint) so the matmul pass runs once, not per variant.
-    Emitting ONE row per vector with a probes array (nprobe replication
-    happens later via JVM posexplode) also ships each vector through
-    Arrow once instead of nprobe times."""
-    spark = data.sparkSession
-    cent_ids, C = _ivf_index_setup(
-        data, n_centroids, seed_mod, kmeans_iters, id_col, vec_col
-    )
-    if len(cent_ids) == 0:
-        return cent_ids, C, spark.createDataFrame([], _ASSIGN_SCHEMA)
-    bc = spark.sparkContext.broadcast((cent_ids, C))
+    cent_ids: np.ndarray,
+    C: np.ndarray,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(id, v, probes): ONE mapInPandas matmul of every non-NULL vector
+    against the broadcast centroids, ranking its nprobe nearest centroid
+    ids — probes[0] is the row's own bucket (lowest cid on score ties).
+    One row per vector: nprobe replication happens later (JVM
+    posexplode in `_explode_probes`), so each vector crosses Arrow once
+    instead of nprobe times."""
+    bc = data.sparkSession.sparkContext.broadcast((cent_ids, C))
 
     def assign(batches):
         cids, C_ = bc.value
@@ -865,7 +855,37 @@ def ivf_assignments(
     vecs = data.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-    return cent_ids, C, vecs.mapInPandas(assign, _ASSIGN_SCHEMA)
+    return vecs.mapInPandas(assign, _ASSIGN_SCHEMA)
+
+
+def ivf_assignments(
+    data: DataFrame,
+    n_centroids: int | None = None,
+    nprobe: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed_mod: int | None = None,
+    kmeans_iters: int = 0,
+) -> tuple[np.ndarray, np.ndarray, DataFrame]:
+    """The shared IVF probe-assignment pass: centroid sample + ONE
+    mapInPandas matmul ranking every vector's nprobe nearest centroids
+    (`_assign_probes`).  Returns (cent_ids, C, assigned) where assigned
+    is (id, v, probes) — probes[0] is the row's own bucket (the lexsort
+    winner, lowest cid on ties), probes[1:] the remaining probe targets
+    in rank order.
+
+    This is the frame ivf_top_k and ivf_pq_top_k both consume via their
+    `shared=` parameter: the two variants of a serving tier previously
+    recomputed identical centroid samples and assignment matmuls
+    (bench's _hd pair spent ~19% of the whole run on the duplication).
+    Callers that reuse it across variants should materialize it once
+    (localCheckpoint) so the matmul pass runs once, not per variant."""
+    cent_ids, C = _ivf_index_setup(
+        data, n_centroids, seed_mod, kmeans_iters, id_col, vec_col
+    )
+    if len(cent_ids) == 0:
+        return cent_ids, C, data.sparkSession.createDataFrame([], _ASSIGN_SCHEMA)
+    return cent_ids, C, _assign_probes(data, cent_ids, C, nprobe, id_col, vec_col)
 
 
 def _explode_probes(
@@ -882,6 +902,8 @@ def _explode_probes(
     advice).  Callers pass min(nprobe, n_centroids) — the probe list is
     legitimately short when the index has fewer centroids than nprobe.
     The guard is a JVM expression (raise_error), zero extra jobs."""
+    if nprobe < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
     probes = F.col("probes")
     if required is not None:
         probes = F.when(F.size(probes) >= required, probes).otherwise(
@@ -980,26 +1002,10 @@ def ivf_top_k(
         # subset IS the bucket's candidate list — one grouped pass replaces
         # the old probe/candidate cogroup (which recomputed the assignment
         # mapInPandas once per side and shuffled twice)
-        cand_pdf = pdf[pdf["c_rank"] == 1]
-        if len(pdf) == 0 or len(cand_pdf) == 0:
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "cosine_sim": [], "rank": []})
-        return _topk_block(
-            pdf["id"].to_numpy(),
-            _matrix(pdf["v"]),
-            cand_pdf["id"].to_numpy(),
-            _matrix(cand_pdf["v"]),
-            k,
-            round_digits,
-            dtype=dt,
-        )
+        return _frame_top_k(pdf, pdf[pdf["c_rank"] == 1], k, round_digits, dtype=dt)
 
     bucket_results = ranked.groupBy("centroid_id").applyInPandas(bucket_topk, _TOPK_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        bucket_results.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _merge_tile_partials(bucket_results, k)
 
 
 def _pq_assign(Xj: np.ndarray, cb: np.ndarray) -> np.ndarray:
@@ -1362,14 +1368,7 @@ def ivf_pq_top_k(
     bucket_results = ranked.groupBy("centroid_id").applyInPandas(
         bucket_adc_topk, _TOPK_SCHEMA
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        bucket_results.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _merge_tile_partials(bucket_results, k)
 
 
 def clustered_embeddings(
@@ -1665,24 +1664,14 @@ def embedding_lsh_sha_pairs(
     # once per candidate PAIR side in the verify projection — HOF folds
     # run interpreted, and the pair set is ~14x the doc count at the
     # bench tier.  Same long -> same sqrt(double): bit-identical output.
-    nrm2 = lambda c: F.aggregate(
-        F.transform(c, lambda x: x * x), F.lit(0).cast("long"), lambda acc, x: acc + x
-    )
+    nrm2 = _int_dot(F.col("__q"), F.col("__q"))
     qa = sigs.select(
-        F.col(id_col).alias("id_a"),
-        F.col("__q").alias("__qa"),
-        nrm2(F.col("__q")).alias("__na2"),
+        F.col(id_col).alias("id_a"), F.col("__q").alias("__qa"), nrm2.alias("__na2")
     )
     qb = sigs.select(
-        F.col(id_col).alias("id_b"),
-        F.col("__q").alias("__qb"),
-        nrm2(F.col("__q")).alias("__nb2"),
+        F.col(id_col).alias("id_b"), F.col("__q").alias("__qb"), nrm2.alias("__nb2")
     )
-    dot_ab = F.aggregate(
-        F.zip_with("__qa", "__qb", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    dot_ab = _int_dot(F.col("__qa"), F.col("__qb"))
     den = F.sqrt(F.col("__na2").cast("double")) * F.sqrt(F.col("__nb2").cast("double"))
     return (
         cand.join(qa, "id_a")
@@ -1721,13 +1710,13 @@ def embedding_near_dup_pairs(
     def tile_pairs(key, q_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(q_pdf) == 0 or len(c_pdf) == 0:
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine_sim": []})
-        Q = _matrix(q_pdf["qv"])
-        C = _matrix(c_pdf["cv"])
+        Q = _matrix(q_pdf["v"])
+        C = _matrix(c_pdf["v"])
         Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
         Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
         S = _round_half_away(Qn @ Cn.T, round_digits)
-        qids = q_pdf["qid"].to_numpy()
-        cids = c_pdf["cid"].to_numpy()
+        qids = q_pdf["id"].to_numpy()
+        cids = c_pdf["id"].to_numpy()
         # vectorized pair emit (r13 optimization round): one boolean
         # matrix + nonzero replaces the per-query-row python loop;
         # identical pair set (same mask, applied all at once)
@@ -1773,8 +1762,11 @@ def semantic_dedup(
     per-task work is bounded by (N/n_centroids)^2 and the knob that
     holds it flat at 100 TB is n_centroids ~ sqrt(N) (same sizing rule
     as the IVF index; `default_n_centroids`).  Stages:
-      1. deterministic centroid sample (`_centroid_sample` — bounded
-         model collect, n_centroids rows, no RNG);
+      1. deterministic centroid sample (`_ivf_index_setup`, no k-means
+         — bounded model collect, n_centroids rows, no RNG);
+         `n_centroids=None` sizes to ~sqrt(N) from one count(), which
+         keeps the within-cluster quadratic term at ~N total pairwise
+         work as the corpus grows;
       2. ONE mapInPandas pass assigns every vector to its argmax-cosine
          centroid (sims rounded to `round_digits` BEFORE the argmax with
          a centroid-id tie-break, so the oracle's sequential-sum dots
@@ -1802,16 +1794,7 @@ def semantic_dedup(
     # NULL vectors cannot cluster or score — dropped, like every
     # similarity entry point (oracles filter identically)
     data = data.filter(F.col(vec_col).isNotNull())
-    if n_centroids is None or seed_mod is None:
-        n_rows = data.count()
-        if n_centroids is None:
-            # ~sqrt(N) clusters keeps the within-cluster quadratic term at
-            # ~N total pairwise work as the corpus grows (same sizing rule
-            # as the IVF index)
-            n_centroids = default_n_centroids(n_rows)
-        if seed_mod is None:
-            seed_mod = max(1, n_rows // max(n_centroids, 1))
-    cent_ids, C = _centroid_sample(data, n_centroids, seed_mod, id_col, vec_col)
+    cent_ids, C = _ivf_index_setup(data, n_centroids, seed_mod, 0, id_col, vec_col)
     if len(cent_ids) == 0:
         return spark.createDataFrame(
             [], f"{id_col} long, cluster_id long, centroid_sim double, kept boolean"
@@ -2123,69 +2106,16 @@ def ivf_cross_top_k(
     )
     if len(cent_ids) == 0:
         return spark.createDataFrame([], _TOPK_SCHEMA)
-    bc = spark.sparkContext.broadcast((cent_ids, C))
-
-    def assigner(n_buckets: int):
-        def assign(batches):
-            cids, Cm = bc.value
-            # cid-ascending column order so one stable argsort of -S
-            # reproduces the old per-row lexsort((cids, -S[r])) exactly
-            # (score ties break on lowest cid) — r13 optimization round
-            perm = np.argsort(cids, kind="stable")
-            cids_s = cids[perm]
-            Cn = _unit_rows(Cm)[perm]
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                Qn = _unit_rows(_matrix(pdf["v"]))
-                S = Qn @ Cn.T
-                nb = min(n_buckets, S.shape[1])
-                idx = np.argsort(-S, axis=1, kind="stable")[:, :nb]
-                ids = pdf["id"].to_numpy()
-                vs = pdf["v"].to_numpy()
-                yield pd.DataFrame(
-                    {
-                        "id": np.repeat(ids, nb),
-                        "v": np.repeat(vs, nb),
-                        "centroid_id": cids_s[idx].astype(np.int64).ravel(),
-                    }
-                )
-
-        return assign
-
-    schema = "id long, v array<double>, centroid_id long"
-
-    def vecs(df, idc):
-        return df.filter(F.col(vec_col).isNotNull()).select(
-            F.col(idc).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-        )
-
-    q_assigned = (
-        vecs(queries, query_id)
-        .mapInPandas(assigner(nprobe), schema)
-        .withColumn("is_query", F.lit(1))
-    )
-    c_assigned = (
-        vecs(candidates, cand_id)
-        .mapInPandas(assigner(1), schema)
-        .withColumn("is_query", F.lit(0))
+    q_assigned = _explode_probes(
+        _assign_probes(queries, cent_ids, C, nprobe, query_id, vec_col), nprobe
+    ).select("id", "v", "centroid_id", F.lit(1).alias("is_query"))
+    c_assigned = _assign_probes(candidates, cent_ids, C, 1, cand_id, vec_col).select(
+        "id", "v", F.col("probes")[0].alias("centroid_id"), F.lit(0).alias("is_query")
     )
 
     def bucket_topk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        q_pdf = pdf[pdf["is_query"] == 1]
-        c_pdf = pdf[pdf["is_query"] == 0]
-        if len(q_pdf) == 0 or len(c_pdf) == 0:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cosine_sim": [], "rank": []}
-            )
-        return _topk_block(
-            q_pdf["id"].to_numpy(),
-            _matrix(q_pdf["v"]),
-            c_pdf["id"].to_numpy(),
-            _matrix(c_pdf["v"]),
-            k,
-            round_digits,
-        )
+        is_query = pdf["is_query"] == 1
+        return _frame_top_k(pdf[is_query], pdf[~is_query], k, round_digits)
 
     bucket_results = (
         q_assigned.unionByName(c_assigned)
@@ -2308,6 +2238,7 @@ def _kmeans_candidate_frame(
     """(id, __sid, __dist, __rn) — every vector's distance to each of the
     k lowest-id seeds, ranked (dist, sid).  The shared core of
     kmeans_assign_step and the cluster-quality reads below."""
+    # NULL vectors cannot be assigned — dropped (oracle filters identically)
     e = emb.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
     )
@@ -2412,6 +2343,49 @@ def cluster_label_purity(
     )
 
 
+def _scan_top_k(scored: DataFrame, order, score_col: str, k: int) -> DataFrame:
+    """Top-k cut of a quantized serving scan's (query_id, neighbor_id,
+    score_col) rows ranked by (`order`, neighbor_id asc): a partial top-k
+    per (query, input partition) first, then the global merge — never an
+    unpartitioned window, and the shuffle carries at most k rows per
+    (query, partition)."""
+    by = (order, F.col("neighbor_id").asc())
+    w_local = Window.partitionBy("query_id", "__pid").orderBy(*by)
+    pruned = (
+        scored.withColumn("__pid", F.spark_partition_id())
+        .withColumn("__lr", F.row_number().over(w_local))
+        .filter(F.col("__lr") <= k)
+    )
+    w_global = Window.partitionBy("query_id").orderBy(*by)
+    return (
+        pruned.withColumn("rank", F.row_number().over(w_global))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", score_col, F.col("rank").cast("int"))
+    )
+
+
+def _recall_vs_exact(
+    emb: DataFrame, k: int, every: int, id_col: str, vec_col: str, scan
+) -> DataFrame:
+    """Per-query recall@k of a quantized top-k `scan` (called like
+    int8_dot_top_k) against the exact cosine top-k, every `every`-th id
+    a query.  Output: (query_id, n_exact, n_overlap)."""
+    q = emb.filter((F.col(id_col) % every) == 0)
+    ids = dict(query_id=id_col, cand_id=id_col, vec_col=vec_col)
+    pair = ("query_id", "neighbor_id")
+    exact = brute_force_top_k(q, emb, k=k, round_digits=4, **ids).select(*pair)
+    approx = scan(q, emb, k=k, **ids).select(*pair)
+    hits = exact.join(approx, list(pair)).groupBy("query_id").agg(
+        F.count("*").cast("long").alias("n_overlap")
+    )
+    n_exact = exact.groupBy("query_id").agg(F.count("*").cast("long").alias("n_exact"))
+    return (
+        n_exact.join(hits, "query_id", "left")
+        .na.fill({"n_overlap": 0})
+        .select("query_id", "n_exact", F.col("n_overlap").cast("long"))
+    )
+
+
 # ---------------------------------------------------------------------------
 # Binary (sign-bit) quantization: the cheapest vector-compression tier —
 # 64-dim float32 -> 64 bits (32x), scored by XOR+popcount.  The serving
@@ -2503,24 +2477,9 @@ def binary_hamming_top_k(
     for j in range(n_halves):
         term = F.bit_count(F.col(f"__qh{j}").bitwiseXOR(F.col(f"__ch{j}")))
         ham = term if ham is None else ham + term
-    scored = (
-        cp.join(F.broadcast(qp), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("hamming", ham.cast("int"))
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    w_local = Window.partitionBy("query_id", "__pid").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id").asc()
-    )
-    pruned = scored.withColumn("__lr", F.row_number().over(w_local)).filter(
-        F.col("__lr") <= k
-    )
-    w_global = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w_global))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "hamming", F.col("rank").cast("int"))
+    scored = cp.join(F.broadcast(qp), F.col("query_id") != F.col("neighbor_id"))
+    return _scan_top_k(
+        scored.withColumn("hamming", ham.cast("int")), F.col("hamming").asc(), "hamming", k
     )
 
 
@@ -2538,22 +2497,8 @@ def binary_quant_recall(
     n_exact, n_overlap) — n_overlap of the k binary hits land in the
     exact top-k.  Both sides use the deterministic neighbor-id tie
     order, so the sets are exact and oracle-stable."""
-    q = emb.filter((F.col(id_col) % every) == 0)
-    exact = brute_force_top_k(
-        q, emb, k=k, query_id=id_col, cand_id=id_col, vec_col=vec_col, round_digits=4
-    ).select("query_id", "neighbor_id")
-    binary = binary_hamming_top_k(
-        q, emb, k=k, dim=dim, query_id=id_col, cand_id=id_col, vec_col=vec_col
-    ).select("query_id", "neighbor_id")
-    hits = exact.join(binary, ["query_id", "neighbor_id"]).groupBy("query_id").agg(
-        F.count("*").cast("long").alias("n_overlap")
-    )
-    n_exact = exact.groupBy("query_id").agg(F.count("*").cast("long").alias("n_exact"))
-    return (
-        n_exact.join(hits, "query_id", "left")
-        .na.fill({"n_overlap": 0})
-        .select("query_id", "n_exact", F.col("n_overlap").cast("long"))
-    )
+    scan = functools.partial(binary_hamming_top_k, dim=dim)
+    return _recall_vs_exact(emb, k, every, id_col, vec_col, scan)
 
 
 # ---------------------------------------------------------------------------
@@ -2661,29 +2606,10 @@ def int8_dot_top_k(
     qc = _apply_int8_codes(queries, arrs, query_id, vec_col, "query_id").select(
         "query_id", F.col("c").alias("__qc")
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("__qc"), F.col("__cc"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        cc.join(F.broadcast(qc), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("dot_q8", dot)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    w_local = Window.partitionBy("query_id", "__pid").orderBy(
-        F.col("dot_q8").desc(), F.col("neighbor_id").asc()
-    )
-    pruned = scored.withColumn("__lr", F.row_number().over(w_local)).filter(
-        F.col("__lr") <= k
-    )
-    w_global = Window.partitionBy("query_id").orderBy(
-        F.col("dot_q8").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w_global))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot_q8", F.col("rank").cast("int"))
+    dot = _int_dot(F.col("__qc"), F.col("__cc"))
+    scored = cc.join(F.broadcast(qc), F.col("query_id") != F.col("neighbor_id"))
+    return _scan_top_k(
+        scored.withColumn("dot_q8", dot), F.col("dot_q8").desc(), "dot_q8", k
     )
 
 
@@ -2699,22 +2625,7 @@ def int8_quant_recall(
     quantization ladder next to binary_quant_recall (32x) and
     matryoshka_prefix_recall (dimension truncation).  Both sides pin the
     neighbor-id tie order.  Output: (query_id, n_exact, n_overlap)."""
-    q = emb.filter((F.col(id_col) % every) == 0)
-    exact = brute_force_top_k(
-        q, emb, k=k, query_id=id_col, cand_id=id_col, vec_col=vec_col, round_digits=4
-    ).select("query_id", "neighbor_id")
-    quant = int8_dot_top_k(
-        q, emb, k=k, query_id=id_col, cand_id=id_col, vec_col=vec_col
-    ).select("query_id", "neighbor_id")
-    hits = exact.join(quant, ["query_id", "neighbor_id"]).groupBy("query_id").agg(
-        F.count("*").cast("long").alias("n_overlap")
-    )
-    n_exact = exact.groupBy("query_id").agg(F.count("*").cast("long").alias("n_exact"))
-    return (
-        n_exact.join(hits, "query_id", "left")
-        .na.fill({"n_overlap": 0})
-        .select("query_id", "n_exact", F.col("n_overlap").cast("long"))
-    )
+    return _recall_vs_exact(emb, k, every, id_col, vec_col, int8_dot_top_k)
 
 
 def pca_power_integer(

@@ -3114,12 +3114,19 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guide §2.6 (overlap independent jobs): each bucket build contains
     # one EAGER checkpoint job (global_rank_cumsum's range pin); run the
     # three independent builds concurrently instead of serially.
-    # Measured min-of-3 at sf0.1: 4.02 -> 2.12s, output identical.
+    # Measured min-of-3 at sf0.1: 4.02 -> 2.12s, output identical.  The
+    # pool threads run with the caller's local properties (job group,
+    # job description).
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     with ThreadPoolExecutor(3) as ex:
         rb, fb, mb = list(
-            ex.map(bucket, [("r", "r_seg"), ("fq", "f_seg"), ("mc", "m_seg")])
+            ex.map(
+                inheritable_thread_target(spark)(bucket),
+                [("r", "r_seg"), ("fq", "f_seg"), ("mc", "m_seg")],
+            )
         )
     return (
         b.join(rb, "r")
