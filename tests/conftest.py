@@ -5,7 +5,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from wellmeet_data_pipeline_spark.session import get_spark
 

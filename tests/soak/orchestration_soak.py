@@ -8,7 +8,9 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+)
 
 from pyspark.sql import SparkSession
 

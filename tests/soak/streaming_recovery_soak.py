@@ -21,7 +21,9 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+)
 
 KILL_EXIT = 17
 TWINS = ("bloom", "kcore", "psi", "cusum")

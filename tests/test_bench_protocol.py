@@ -17,6 +17,7 @@ honest as the headline grows:
 from __future__ import annotations
 
 import inspect
+import os
 
 import bench
 from wellmeet_data_pipeline_spark.plans.queries import REGISTRY
@@ -102,7 +103,7 @@ def test_stable_class_excludes_arrow_and_slow():
     # actually skip
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
     import bench_snapshot
 
     detail = {

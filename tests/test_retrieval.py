@@ -182,7 +182,7 @@ def test_bm25_broadcasts_query_terms(spark):
 
 def test_lexical_index_stream_matches_batch(spark, tmp_path):
     """Stream-built postings/doclen store scores identically to the batch
-    BM25 operator on the same corpus (shared _bm25_score_frames core)."""
+    BM25 operator on the same corpus (shared _bm25_contribution expression)."""
     import json
 
     from pyspark.sql.types import StructType
@@ -600,3 +600,114 @@ def test_thread_pool_jobs_keep_caller_job_group(spark, run):
         sc.setLocalProperty("spark.job.description", None)
     assert set(tracker.getJobIdsForGroup("pool-inherit"))
     assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+
+# BM25 corner corpus: two NULL ids, NULL / empty / whitespace-
+# only texts, punctuation the normalization strips
+EDGE_DOCS = [
+    (0, "fast query scan fast table"),
+    (1, "join hash join merge join"),
+    (2, "Hash-Join! hash, JOIN."),
+    (3, None),
+    (4, ""),
+    (5, "   \t  "),
+    (6, "\x0b"),
+    (None, "fast join orphan"),
+    (None, "fast again"),
+    (7, "fast fast fast"),
+]
+
+EDGE_QUERIES = {
+    "empty_map": {},
+    "blank_term": {0: ["!!!", "fast"], 1: ["   "]},
+    "two_word_term": {0: ["hash join"], 1: ["hash"]},
+    "absent_term": {0: ["zzzabsent"], 1: ["zzzabsent", "scan"]},
+    "repeated_term": {0: ["join", "join", "hash"], 1: ["fast"]},
+    "case_and_punct": {0: ["FAST", "Scan."], 3: ["orphan"]},
+}
+
+
+def _duck_bm25(docs_parquet, queries):
+    """(query_id, doc_id, score_int) from the registry's DuckDB BM25
+    oracle CTEs over `docs_parquet`, with the query map normalized the
+    way bm25_scores normalizes it."""
+    import duckdb
+
+    from wellmeet_data_pipeline_spark.plans.queries_core import _NORM_SQL
+    from wellmeet_data_pipeline_spark.plans.queries_retrieval import (
+        _BM25_CTES,
+        _RETRIEVAL_QT_VALUES,
+    )
+
+    pinned = f"qt(query_id, term) AS (VALUES {_RETRIEVAL_QT_VALUES})"
+    assert pinned in _BM25_CTES
+    rows = [(q, t) for q, ts in sorted(queries.items()) for t in ts]
+    raw = (
+        "VALUES " + ", ".join(f"({q}, '{t}')" for q, t in rows)
+        if rows
+        else "SELECT CAST(NULL AS INTEGER), CAST(NULL AS VARCHAR) WHERE false"
+    )
+    norm = _NORM_SQL.replace("lower(text)", "lower(term)")
+    ctes = _BM25_CTES.replace(
+        pinned,
+        f"qt AS (SELECT query_id, {norm} AS term FROM ({raw}) v(query_id, term))",
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs_parquet}/*.parquet'")
+    return sorted(con.execute(f"WITH {ctes} SELECT query_id, doc_id, s FROM bs").fetchall())
+
+
+@pytest.mark.parametrize("case", sorted(EDGE_QUERIES))
+def test_bm25_edges_match_duckdb_oracle(spark, tmp_path, case):
+    """bm25_scores equals the registry oracle's scores on every corner:
+    NULL ids count toward df (as one group) but are never scored."""
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(EDGE_DOCS, "doc_id long, text string").coalesce(1).write.parquet(path)
+    queries = EDGE_QUERIES[case]
+    got = sorted(
+        tuple(r)
+        for r in bm25_scores(spark.read.parquet(path), queries)
+        .select("query_id", "doc_id", "score_int")
+        .collect()
+    )
+    assert got == _duck_bm25(path, queries)
+    if case not in ("empty_map", "absent_term"):
+        assert got  # the case scores something, so equality is not vacuous
+
+
+def test_bm25_request_job_count(spark):
+    """One BM25 request runs at most 6 Spark jobs: the stats aggregate
+    while the plan is built (2) and the collect (4: two shuffles, the
+    broadcast and the result)."""
+    import inspect
+
+    from conftest import SHARED_SF_DIR
+    from wellmeet_data_pipeline_spark.catalog import table
+
+    docs = table(spark, SHARED_SF_DIR, "documents")
+    queries = {0: ["fast", "query"], 1: ["join"], 2: ["stream", "window", "batch", "hash"]}
+    sc = spark.sparkContext
+    sc.setJobGroup("bm25-jobs", "bm25 request job count")
+    try:
+        rows = bm25_topk(docs, queries, k=10).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup("bm25-jobs")) <= 6
+    assert "localCheckpoint" not in inspect.getsource(bm25_scores)
+
+
+def test_doc_lengths_null_text_is_zero_without_ansi(spark):
+    """size(NULL) is -1 with ANSI mode off; a NULL text still has dl 0,
+    so total_dl (and every avgdl built on it) matches the oracle."""
+    from wellmeet_data_pipeline_spark.operators.retrieval import _doc_lengths
+
+    df = spark.createDataFrame(DOCS, "doc_id long, text string")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        dl = {r.doc_id: r.dl for r in _doc_lengths(df, "text", "doc_id").collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert dl == {0: 5, 1: 5, 2: 6, 3: 0, 4: 0, 5: 8}

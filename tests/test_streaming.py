@@ -1,4 +1,5 @@
 import json
+import os
 
 from wellmeet_data_pipeline_spark.schemas import REVIEW
 from wellmeet_data_pipeline_spark.sinks.merge import read_current
@@ -1510,7 +1511,11 @@ def test_orchestration_soak_under_task_and_batch_faults(tmp_path):
     import sys
 
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tests/soak/orchestration_soak.py", str(tmp_path)],
+        [
+            sys.executable,
+            os.path.join(os.path.dirname(__file__), "soak", "orchestration_soak.py"),
+            str(tmp_path),
+        ],
         capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stdout[-3000:] + proc.stderr[-3000:]
@@ -1713,7 +1718,7 @@ def test_streaming_recovery_soak_after_midstream_kill(tmp_path):
     proc = subprocess.run(
         [
             sys.executable,
-            "/root/repo/tests/soak/streaming_recovery_soak.py",
+            os.path.join(os.path.dirname(__file__), "soak", "streaming_recovery_soak.py"),
             str(tmp_path),
         ],
         capture_output=True, text=True, timeout=900,

@@ -9,13 +9,15 @@ rendering. Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from wellmeet_data_pipeline_spark.plans.queries import REGISTRY  # noqa: E402
 from wellmeet_data_pipeline_spark.session import get_spark  # noqa: E402

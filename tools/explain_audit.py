@@ -9,11 +9,13 @@ Usage: python tools/explain_audit.py [query ...]
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from wellmeet_data_pipeline_spark.plans.queries import REGISTRY
 from wellmeet_data_pipeline_spark.session import get_spark

@@ -22,7 +22,8 @@ import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 HOSTILE_TEXTS = [
     "a\x0bb vertical\x0btab",
@@ -225,7 +226,12 @@ def main() -> None:
 
     sys.exit(
         subprocess.call(
-            [sys.executable, "tools/check_correctness.py", out, *sys.argv[3:]]
+            [
+                sys.executable,
+                os.path.join(ROOT, "tools", "check_correctness.py"),
+                out,
+                *sys.argv[3:],
+            ]
         )
     )
 

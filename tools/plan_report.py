@@ -8,10 +8,12 @@ Usage: python tools/plan_report.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from wellmeet_data_pipeline_spark.plans.queries import REGISTRY
 from wellmeet_data_pipeline_spark.session import get_spark
@@ -37,7 +39,7 @@ def main() -> None:
         except Exception as e:  # pragma: no cover — report, don't die
             rows.append((name, None, (str(e).splitlines() or ["?"])[0][:80]))
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(
             "# PLANS — AQE final-plan scale signals, every registry query\n\n"
             f"Generated by `tools/plan_report.py` at `{sf_dir}`. Signals from the\n"

@@ -31,7 +31,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -1080,7 +1081,7 @@ def main() -> None:
     # ops instead of clobbering the rest of the record
     out: dict[str, dict] = {"sf_dir": sf_dir, "scales": SCALES, "ops": {}}
     try:
-        with open("/root/repo/SCALESMOKE.json") as fh:
+        with open(os.path.join(ROOT, "SCALESMOKE.json")) as fh:
             prev = json.load(fh)
         if prev.get("sf_dir") == sf_dir and prev.get("scales") == SCALES:
             out["ops"].update(prev.get("ops", {}))
@@ -1159,7 +1160,7 @@ def main() -> None:
     for name, rec in out["ops"].items():
         if name in COMPLEXITY:
             rec["complexity"] = COMPLEXITY[name]
-    with open("/root/repo/SCALESMOKE.json", "w") as fh:
+    with open(os.path.join(ROOT, "SCALESMOKE.json"), "w") as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps(out))
 

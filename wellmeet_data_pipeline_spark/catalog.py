@@ -12,9 +12,11 @@ import os
 import tempfile
 import zipfile
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 _PKG_ZIP: str | None = None
 
@@ -46,6 +48,22 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
         _PKG_ZIP = path
     sc.addPyFile(_PKG_ZIP)
     sc._wellmeet_pyfile_added = True
+
+
+def local_frame(spark: SparkSession, rows: list, schema_ddl: str) -> DataFrame:
+    """A DataFrame over driver-built `rows` (tuples in `schema_ddl` order).
+
+    The rows go through a pyarrow.Table typed by the DDL, so the plan is
+    a LocalRelation: it scans without a Spark job, folds into the
+    projections over it, and an empty one lets the optimizer prune the
+    joins it feeds.  `createDataFrame` over a Python list builds a
+    LogicalRDD through `parallelize` instead, and every scan of it is a
+    job."""
+    schema = to_arrow_schema(StructType.fromDDL(schema_ddl))
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    arrays = [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=schema))
+
 
 TABLES = (
     "region",

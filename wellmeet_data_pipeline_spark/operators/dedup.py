@@ -19,6 +19,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.functions.text import (
     document_fingerprint,
     normalized_text,
@@ -1490,8 +1491,8 @@ def graph_pagerank(
     deg = e2.groupBy("u").agg(F.count("*").alias("deg"))
     n_nodes = deg.count()
     if n_nodes == 0:
-        return edges.sparkSession.createDataFrame(
-            [], "node long, degree long, pagerank double"
+        return local_frame(
+            edges.sparkSession, [], "node long, degree long, pagerank double"
         )
     pr = deg.select(
         F.col("u").alias("node"), (F.lit(1.0) / F.lit(float(n_nodes))).alias("pr")

@@ -24,6 +24,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from wellmeet_data_pipeline_spark.catalog import local_frame
+
 
 def _micro(c: Column) -> Column:
     """floor(x * 1e6 + 0.5) as BIGINT — the repo-wide double→grid snap."""
@@ -80,8 +82,8 @@ def ewma_control_chart(
         F.col(val_col).cast("long").alias("v"),
     ).withColumn("rn", F.row_number().over(Window.partitionBy("g").orderBy("di")))
     spark = daily.sparkSession
-    wt = spark.createDataFrame(
-        [(j, wj) for j, wj in enumerate(ewma_weights())], "j int, w long"
+    wt = local_frame(
+        spark, [(j, wj) for j, wj in enumerate(ewma_weights())], "j int, w long"
     )
     # band self-join: partner rn_p = rn - j for j in [0, W)
     lagged = (
@@ -593,8 +595,8 @@ def srm_check(
     )
     spark = assignments.sparkSession
     exp = expected_micro or {0: 500_000, 1: 500_000}
-    exp_df = spark.createDataFrame(
-        [(a, m) for a, m in sorted(exp.items())], "arm long, exp_share_micro long"
+    exp_df = local_frame(
+        spark, [(a, m) for a, m in sorted(exp.items())], "arm long, exp_share_micro long"
     )
     tot = counts.agg(F.sum("n_obs").cast("long").alias("n_tot"))
     per_arm = (

@@ -25,12 +25,18 @@ Scale/determinism notes shared by every operator here:
 - rankings are ordered by the integer score (never the float), ties
   broken by doc id — stable across partitionings and engines.
 
-Plan shape: the corpus-grain (doc, term) token stream is consumed by
-map-side-combined aggregations only — document lengths as a
-groupBy(doc) count, term stats AFTER a broadcast semi-join on the
-query's own terms — so no corpus-grain frame ever crosses a full
-shuffle; N and total_dl are 1-row broadcast scalars, and the final
-rank window partitions on query_id.  Nothing here is driver-side.
+Plan shape: bm25_scores reads the corpus through ONE tokenize
+projection (id, tokens).  One global aggregate over it brings N,
+total_dl and the df of each distinct query term back to the driver —
+a handful of numbers.  Scoring then keeps only the documents sharing a
+query term, explodes their matched terms with tf and dl on the row, and
+fans them out to the queries through a broadcast local frame, so no
+corpus-grain frame ever crosses a shuffle: the shuffles carry matched
+(query, doc) rows, and the final rank window partitions on query_id.
+Query-side frames are catalog.local_frame LocalRelations, which scan
+without a Spark job.  qld_topk and bm25_prf_topk still build the
+corpus-grain (doc, term) stream and aggregate it map-side after a
+broadcast semi-join on the query's own terms.
 """
 
 from __future__ import annotations
@@ -38,9 +44,10 @@ from __future__ import annotations
 from typing import Mapping, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.functions.text import normalized_text
 
 MICRO = 1_000_000
@@ -65,13 +72,19 @@ def _doc_lengths(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     consumer: dl is only ever (a) inner-joined against docs that matched
     a query term (those have >= 1 token, so the extra rows never match)
     and (b) summed into total_dl (+0 == absent row)."""
-    toks_arr = F.filter(
-        F.split(normalized_text(F.col(text_col)), " "),
-        lambda x: x != F.lit(""),
-    )
     return docs.select(
         F.col(id_col),
-        F.coalesce(F.size(toks_arr), F.lit(0)).cast("long").alias("dl"),
+        F.size(_tokens(text_col)).cast("long").alias("dl"),
+    )
+
+
+def _tokens(text_col: str) -> Column:
+    """The document's tokens under the repo-wide normalization, as an
+    array with empty terms dropped — empty, never NULL, for NULL text:
+    size(NULL) is -1 in a session with ANSI mode off."""
+    return F.coalesce(
+        F.filter(F.split(normalized_text(F.col(text_col)), " "), lambda x: x != F.lit("")),
+        F.array().cast("array<string>"),
     )
 
 
@@ -80,7 +93,7 @@ def _query_terms_df(spark, queries: Mapping[int, Sequence[str]]) -> DataFrame:
     are lowercased through the same normalization as the corpus so a
     caller-supplied 'Fast' matches the indexed 'fast'."""
     rows = [(int(q), t) for q, terms in sorted(queries.items()) for t in terms]
-    qt = spark.createDataFrame(rows, "query_id long, term string")
+    qt = local_frame(spark, rows, "query_id long, term string")
     return qt.select(
         F.col("query_id").cast("int").alias("query_id"),
         normalized_text(F.col("term")).alias("term"),
@@ -94,7 +107,6 @@ def bm25_scores(
     b: float = 0.75,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """Okapi BM25 score of every document against every pinned query:
       idf(t)  = ln(1 + (N - df + 0.5) / (df + 0.5))      (always >= 0)
@@ -106,35 +118,103 @@ def bm25_scores(
     exact bigint product, one correctly-rounded IEEE division — so both
     engines see bit-identical inputs.
 
-    Scale shape: the corpus-grain (doc, term) frame is NEVER shuffled —
-    dl is a map-side-combined groupBy(doc) count, and tf/df aggregate
-    only the tokens surviving the broadcast semi-join on the query's
-    own terms (a handful of terms → tiny frames).  `materialize` (the
-    repo's multi-consumer idiom, cf. ngram_lm_score) checkpoints the
-    two shared frames so the tokenize pass runs once per frame instead
-    of once per consumer.
+    Plan: the query terms are normalized on a local frame (no job), and
+    ONE aggregate over the tokenize projection returns N, total_dl and
+    the df of every distinct query term.  df counts documents holding
+    the term; the NULL-id rows together count as one document, as a
+    group-by on the id would.  Scoring is lazy: documents sharing a
+    term with the queries explode their matched terms with tf and dl
+    already on the row, and a broadcast (query_id, term, df) frame
+    fans them out to the queries that asked; N and total_dl enter as
+    literals.  A NULL-id row counts toward N, total_dl and df but is
+    never scored.  `id_col` is the corpus key: rows repeating an id
+    count toward df, and score, once per row.
 
     Returns (query_id int, doc_id, score double, score_int bigint) for
     every document sharing at least one term with the query; score_int
     is the exact micro-grid sum the caller should rank on."""
-    toks = _doc_tokens(docs, text_col, id_col)
-    qt = F.broadcast(_query_terms_df(docs.sparkSession, queries))
-    # dl as a shuffle-free projection (see _doc_lengths); left lazy even
-    # under `materialize` — recomputing it is one scan+regex projection,
-    # cheaper than the eager-checkpoint job the old groupBy form needed
-    dl = _doc_lengths(docs, text_col, id_col)
-    tfq = (
-        toks.join(F.broadcast(qt.select("term").distinct()), "term")
-        .groupBy(id_col, "term")
-        .agg(F.count("*").alias("tf"))
+    spark = docs.sparkSession
+    qt = [(r.query_id, r.term) for r in _query_terms_df(spark, queries).collect()]
+    terms = sorted({t for _, t in qt if t})
+    doc_id = F.col(id_col)
+    toks = docs.select(doc_id, _tokens(text_col).alias("__toks"))
+    has = [F.array_contains("__toks", t) for t in terms]
+    stats = toks.agg(
+        F.count("*").alias("n_docs"),
+        F.coalesce(F.sum(F.size("__toks")), F.lit(0)).alias("total_dl"),
+        *[
+            F.count_if(h & doc_id.isNotNull())
+            + F.coalesce(F.max((h & doc_id.isNull()).cast("long")), F.lit(0))
+            for h in has
+        ],
+    ).first()
+    df = dict(zip(terms, stats[2:]))
+    qdf = local_frame(
+        spark,
+        [(q, t, df[t]) for q, t in qt if t],
+        "query_id int, term string, df long",
     )
-    if materialize:
-        tfq = tfq.localCheckpoint(eager=True)
-    dfreq = tfq.groupBy("term").agg(F.count("*").alias("df"))
-    stats = docs.agg(F.count("*").alias("n_docs")).crossJoin(
-        dl.agg(F.coalesce(F.sum("dl"), F.lit(0)).alias("total_dl"))
+    terms_arr = F.array(*[F.lit(t) for t in terms]).cast("array<string>")
+    matched = (
+        toks.filter(doc_id.isNotNull() & F.arrays_overlap("__toks", terms_arr))
+        .select(
+            doc_id,
+            "__toks",
+            F.explode(F.array_intersect("__toks", terms_arr)).alias("term"),
+        )
+        .select(
+            doc_id,
+            "term",
+            F.size(F.filter("__toks", lambda x: x == F.col("term"))).cast("long").alias("tf"),
+            F.size("__toks").cast("long").alias("dl"),
+        )
     )
-    return _bm25_score_frames(qt, tfq, dl, dfreq, stats, id_col, k1=k1, b=b)
+    ci = _bm25_contribution(
+        F.col("tf"),
+        F.col("dl"),
+        F.col("df"),
+        F.lit(stats["n_docs"]).cast("long"),
+        F.lit(stats["total_dl"]).cast("long"),
+        k1,
+        b,
+    )
+    return _sum_contributions(
+        matched.join(F.broadcast(qdf), "term").select("query_id", doc_id, ci.alias("__ci")),
+        id_col,
+    )
+
+
+def _bm25_contribution(
+    tf: Column, dl: Column, df: Column, n_docs: Column, total_dl: Column, k1: float, b: float
+) -> Column:
+    """One (query term, doc) BM25 contribution on the micro grid, as a
+    BIGINT column expression.  The idf is snapped to the micro grid
+    BEFORE it enters the product, exactly as the oracle does, so the
+    ln() 1-ulp caveat is confined to the snap boundary.  bm25_scores and
+    _bm25_score_frames both build their contributions here."""
+    d = lambda c: c.cast("double")  # noqa: E731
+    one = F.lit(1.0)
+    idf_int = F.floor(
+        F.log(one + (d(n_docs) - d(df) + F.lit(0.5)) / (d(df) + F.lit(0.5)))
+        * F.lit(float(MICRO))
+        + F.lit(0.5)
+    ).cast("long")
+    idf_d = idf_int.cast("double") / F.lit(float(MICRO))
+    dlr = (dl * n_docs).cast("double") / d(total_dl)
+    k1c = F.lit(k1) + one
+    tfn = (d(tf) * k1c) / (d(tf) + F.lit(k1) * ((one - F.lit(b)) + F.lit(b) * dlr))
+    return F.floor(idf_d * tfn * F.lit(float(MICRO)) + F.lit(0.5)).cast("long")
+
+
+def _sum_contributions(contrib: DataFrame, id_col: str) -> DataFrame:
+    """(query_id, id, __ci) rows -> the exact per-(query, doc) score."""
+    per_doc = contrib.groupBy("query_id", id_col).agg(F.sum("__ci").alias("score_int"))
+    return per_doc.select(
+        "query_id",
+        id_col,
+        (F.col("score_int").cast("double") / F.lit(float(MICRO))).alias("score"),
+        "score_int",
+    )
 
 
 def _bm25_score_frames(
@@ -147,49 +227,23 @@ def _bm25_score_frames(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
-    """Shared BM25 scoring core over pre-built index frames — the batch
-    path (bm25_scores) and the streaming lexical-index store
-    (streaming/retrieval.py) both route here, so the two tiers score
-    bit-identically by construction.  Frames: qt(query_id, term),
-    tfq(id, term, tf), dl(id, dl), dfreq(term, df),
-    stats(n_docs, total_dl) — tfq/dfreq need only cover the query's
-    terms."""
+    """BM25 scores over pre-built index frames — the streaming
+    lexical-index store (streaming/retrieval.py) and the PRF passes
+    route here.  Frames: qt(query_id, term), tfq(id, term, tf),
+    dl(id, dl), dfreq(term, df), stats(n_docs, total_dl) — tfq/dfreq
+    need only cover the query's terms.  The contribution expression is
+    bm25_scores' own (_bm25_contribution), so the tiers score
+    bit-identically by construction."""
     j = (
         qt.join(tfq, "term")
         .join(F.broadcast(dfreq), "term")
         .join(dl, id_col)
         .crossJoin(F.broadcast(stats))
     )
-
-    d = lambda c: c.cast("double")  # noqa: E731
-    one = F.lit(1.0)
-    # idf snapped to the micro grid BEFORE entering the product, exactly
-    # as the oracle does, so the ln() 1-ulp caveat is confined to the
-    # snap boundary.
-    idf_int = F.floor(
-        F.log(one + (d(F.col("n_docs")) - d(F.col("df")) + F.lit(0.5)) / (d(F.col("df")) + F.lit(0.5)))
-        * F.lit(float(MICRO))
-        + F.lit(0.5)
-    ).cast("long")
-    idf_d = idf_int.cast("double") / F.lit(float(MICRO))
-    dlr = (F.col("dl") * F.col("n_docs")).cast("double") / d(F.col("total_dl"))
-    k1c = F.lit(k1) + one
-    tfn = (d(F.col("tf")) * k1c) / (
-        d(F.col("tf")) + F.lit(k1) * ((one - F.lit(b)) + F.lit(b) * dlr)
+    ci = _bm25_contribution(
+        F.col("tf"), F.col("dl"), F.col("df"), F.col("n_docs"), F.col("total_dl"), k1, b
     )
-    ci = F.floor(idf_d * tfn * F.lit(float(MICRO)) + F.lit(0.5)).cast("long")
-
-    per_doc = (
-        j.withColumn("__ci", ci)
-        .groupBy("query_id", id_col)
-        .agg(F.sum("__ci").alias("score_int"))
-    )
-    return per_doc.select(
-        "query_id",
-        id_col,
-        (F.col("score_int").cast("double") / F.lit(float(MICRO))).alias("score"),
-        "score_int",
-    )
+    return _sum_contributions(j.select("query_id", id_col, ci.alias("__ci")), id_col)
 
 
 def bm25_topk(

@@ -55,6 +55,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from wellmeet_data_pipeline_spark.catalog import local_frame
+
 
 def _matrix(series: pd.Series) -> np.ndarray:
     return np.vstack(series.to_numpy()).astype(np.float64)
@@ -90,6 +92,9 @@ def _rank_within_rows(rows: np.ndarray, m: int) -> np.ndarray:
     return (np.arange(len(rows)) - offsets[rows] + 1).astype(np.int64)
 
 
+_NULL_SCORE = -4.0
+
+
 def _topk_select(
     qids: np.ndarray,
     cids: np.ndarray,
@@ -118,9 +123,15 @@ def _topk_select(
     each row's k-th largest raw score; ONE global lexsort of the ~m*k
     rounded survivors (row, -score, id) cuts each row at k with the same
     tie-break the per-row lexsort applied.  Returns the standard
-    (query_id, neighbor_id, cosine_sim, rank) frame."""
+    (query_id, neighbor_id, cosine_sim, rank) frame.
+
+    A pair with a zero-norm side scores NaN (0/0), which the oracles
+    read as NULL: it ranks after every scored pair, ties broken by id,
+    and is emitted as a NULL cosine_sim.  It selects at _NULL_SCORE,
+    below every cosine and above the masked-out -inf."""
     m, n = S_raw.shape
     neg = np.where(allow, S_raw, -np.inf)
+    np.nan_to_num(neg, copy=False, nan=_NULL_SCORE)
     kk = min(k, n)
     if n > kk:
         thresh = np.partition(neg, n - kk, axis=1)[:, n - kk]
@@ -187,8 +198,8 @@ def _rank_cut_survivors(
     survivor (row, id, rounded-sim) triples on (row, sim desc, id asc),
     rank within rows, cut at k.  Exactly the per-row
     lexsort((ids, -sims))[:k] + 1-based rank the old per-row loops
-    produced."""
-    order = np.lexsort((ids, -sims, rows))
+    produced; a NaN (NULL) sim sorts after every number."""
+    order = np.lexsort((ids, np.where(np.isnan(sims), np.inf, -sims), rows))
     rows, ids, sims = rows[order], ids[order], sims[order]
     rank = _rank_within_rows(rows, m)
     keep = rank <= k
@@ -238,7 +249,8 @@ def _topk_block(
     BLAS-vs-oracle summation-order difference the rounded contract
     already absorbs; zero-norm rows divide to NaN vectors whose scores
     stay NaN, exactly like the old 0/0 form (verified row-identical on
-    all three SFs + the recall-gate fixtures)."""
+    all three SFs + the recall-gate fixtures), and _topk_select ranks
+    those NaN scores as the oracle's NULLs."""
     with np.errstate(invalid="ignore", divide="ignore"):
         Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
         Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
@@ -884,7 +896,7 @@ def ivf_assignments(
         data, n_centroids, seed_mod, kmeans_iters, id_col, vec_col
     )
     if len(cent_ids) == 0:
-        return cent_ids, C, data.sparkSession.createDataFrame([], _ASSIGN_SCHEMA)
+        return cent_ids, C, local_frame(data.sparkSession, [], _ASSIGN_SCHEMA)
     return cent_ids, C, _assign_probes(data, cent_ids, C, nprobe, id_col, vec_col)
 
 
@@ -991,7 +1003,7 @@ def ivf_top_k(
         )
     cent_ids, C, assigned = shared
     if len(cent_ids) == 0:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return local_frame(spark, [], _TOPK_SCHEMA)
     ranked = _explode_probes(
         assigned, nprobe, required=min(nprobe, len(cent_ids))
     )
@@ -1242,7 +1254,7 @@ def ivf_pq_top_k(
         )
     cent_ids, C, assigned = shared
     if len(cent_ids) == 0:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return local_frame(spark, [], _TOPK_SCHEMA)
     if shared_pq is None:
         books, encoded = pq_encoded_frame(
             data,
@@ -1600,8 +1612,8 @@ def embedding_lsh_sha_pairs(
     dim = dim_row[0] if dim_row is not None else None
     if dim is None:
         spark = data.sparkSession
-        return spark.createDataFrame(
-            [], f"id_a long, id_b long, hamming integer, cosine_sim double"
+        return local_frame(
+            spark, [], f"id_a long, id_b long, hamming integer, cosine_sim double"
         )
     data = data.filter(F.size(F.col(vec_col)) == dim)
     signs = sha_hyperplane_signs(n_planes, dim)
@@ -1796,8 +1808,8 @@ def semantic_dedup(
     data = data.filter(F.col(vec_col).isNotNull())
     cent_ids, C = _ivf_index_setup(data, n_centroids, seed_mod, 0, id_col, vec_col)
     if len(cent_ids) == 0:
-        return spark.createDataFrame(
-            [], f"{id_col} long, cluster_id long, centroid_sim double, kept boolean"
+        return local_frame(
+            spark, [], f"{id_col} long, cluster_id long, centroid_sim double, kept boolean"
         )
     bc = spark.sparkContext.broadcast((cent_ids, C))
 
@@ -2105,7 +2117,7 @@ def ivf_cross_top_k(
         candidates, n_centroids, seed_mod, kmeans_iters, cand_id, vec_col
     )
     if len(cent_ids) == 0:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return local_frame(spark, [], _TOPK_SCHEMA)
     q_assigned = _explode_probes(
         _assign_probes(queries, cent_ids, C, nprobe, query_id, vec_col), nprobe
     ).select("id", "v", "centroid_id", F.lit(1).alias("is_query"))

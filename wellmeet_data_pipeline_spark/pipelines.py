@@ -23,6 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.functions.enrichment import GeoFn, geocode_with_cache
 from wellmeet_data_pipeline_spark.operators.projections import (
     fill_rds_defaults,
@@ -65,7 +66,7 @@ def discover_restaurants(
     cur = read_current_or_none(spark, store_path, id_col="place_id")
     existing = (
         cur.select("place_id") if cur is not None
-        else spark.createDataFrame([], "place_id string")
+        else local_frame(spark, [], "place_id string")
     )
     fresh = incremental_ingest(projected.filter(F.col("place_id").isNotNull()), existing, "place_id")
     merge_append(fresh, store_path, id_col="place_id", partition_col=None, batch_seq=batch_seq)
@@ -94,7 +95,7 @@ def ingest_reviews(
     cur = read_current_or_none(spark, store_path, id_col=["place_id", "id"])
     existing = (
         cur.select("place_id", "id") if cur is not None
-        else spark.createDataFrame([], "place_id string, id string")
+        else local_frame(spark, [], "place_id string, id string")
     )
     fresh = incremental_ingest(reviews, existing, ["place_id", "id"])
     merge_append(fresh, store_path, id_col="id", partition_col="place_id", batch_seq=batch_seq)

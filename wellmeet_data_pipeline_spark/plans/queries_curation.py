@@ -3,6 +3,7 @@ package facade plans/queries.py for the registry contract."""
 
 from __future__ import annotations
 
+from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.plans.queries_core import (  # noqa: F401
     DataFrame,
     F,
@@ -2097,7 +2098,7 @@ def q_length_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pack_efficiency_by_seqlen(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     t = d.select(bpe_ish_token_count("text").alias("n"))
-    lens = spark.createDataFrame([(128,), (256,), (512,), (1024,)], "seq_len int")
+    lens = local_frame(spark, [(128,), (256,), (512,), (1024,)], "seq_len int")
     c = t.crossJoin(F.broadcast(lens))
     return c.groupBy("seq_len").agg(
         F.count("*").alias("n_docs"),

@@ -11,6 +11,7 @@ pair here follows (micro-grid snaps, BIGINT moments, no raw \\s)."""
 
 from __future__ import annotations
 
+from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.plans.queries_core import (  # noqa: F401
     DataFrame,
     F,
@@ -936,7 +937,7 @@ def q_dedup_threshold_sweep(
     else:
         d = table(spark, sf_dir, "documents")
         counts = minhash_verify_sha(d, raw_counts=True)
-    th = spark.createDataFrame([(t,) for t in _SWEEP_THRESHOLDS], "t_micro long")
+    th = local_frame(spark, [(t,) for t in _SWEEP_THRESHOLDS], "t_micro long")
     judged = counts.crossJoin(F.broadcast(th)).select(
         "t_micro",
         (F.col("agree") * 1_000_000 >= F.col("t_micro") * 16)
@@ -1022,7 +1023,7 @@ def q_dedup_threshold_sweep(
 )
 def q_event_acf_portmanteau(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _daily_cents(spark, sf_dir)
-    lags = spark.createDataFrame([(k,) for k in range(1, 8)], "lag long")
+    lags = local_frame(spark, [(k,) for k in range(1, 8)], "lag long")
     a = d.select("event_type", "di", F.col("v").alias("xa")).crossJoin(
         F.broadcast(lags)
     )

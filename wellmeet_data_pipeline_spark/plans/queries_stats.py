@@ -3,6 +3,7 @@ package facade plans/queries.py for the registry contract."""
 
 from __future__ import annotations
 
+from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.plans.queries_core import (  # noqa: F401
     DataFrame,
     F,
@@ -2439,7 +2440,7 @@ def q_daily_revenue_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ev.groupBy(
         "event_type", F.unix_date(F.to_date("ts")).cast("long").alias("di")
     ).agg(F.sum(F.round(F.col("value") * 100, 0)).cast("long").alias("x"))
-    lags = spark.createDataFrame([(1,), (2,), (3,), (7,)], "lag int")
+    lags = local_frame(spark, [(1,), (2,), (3,), (7,)], "lag int")
     a = d.select("event_type", "di", F.col("x").alias("xa")).crossJoin(
         F.broadcast(lags)
     )

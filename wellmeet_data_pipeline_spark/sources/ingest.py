@@ -20,13 +20,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from wellmeet_data_pipeline_spark.catalog import local_frame
+
 
 def seed_frame(spark: SparkSession, keys: list[str], pages: int) -> DataFrame:
     """S3 (restaurant-crawler.py:354-369): one work unit per (key, page).
     Repartition to one unit per task — partition-per-page is the Spark twin
     of the reference's asyncio.gather over pages 1..4."""
     rows = [(k, p) for k in keys for p in range(1, pages + 1)]
-    df = spark.createDataFrame(rows, "key string, page int")
+    df = local_frame(spark, rows, "key string, page int")
     return df.repartition(max(len(rows), 1))
 
 

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
+from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
 from wellmeet_data_pipeline_spark.streaming.pipeline import (
     append_nonempty,
@@ -81,8 +82,8 @@ def current_heavy_hitters(
 
     cur = read_current_or_none(spark, store_path, id_col=[key_col, "_batch_seq"])
     if cur is None:
-        return spark.createDataFrame(
-            [], f"{key_col} {key_type}, n bigint, share double"
+        return local_frame(
+            spark, [], f"{key_col} {key_type}, n bigint, share double"
         )
     totals = cur.groupBy(key_col).agg(F.sum("n").alias("n"))
     return threshold_heavy_hitters(totals, key_col, min_share, round_digits)
@@ -130,7 +131,7 @@ def current_rolling_active(
         spark, store_path, id_col=["__u", "__day"], batch_col="_batch_seq"
     )
     if store is None:
-        return spark.createDataFrame([], "as_of_day date, n_active long")
+        return local_frame(spark, [], "as_of_day date, n_active long")
     # read_current already dedups to one row per (__u, __day) — no
     # second distinct shuffle needed
     return rolling_distinct_from_pairs(
@@ -189,8 +190,8 @@ def current_source_drift(
         spark, store_path, id_col=["grp", "term", "_batch_seq"]
     )
     if cur is None:
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark, [],
             f"{out_group_col} string, n_tokens bigint, n_terms bigint,"
             " js_micro_nats bigint, js_divergence double",
         )
@@ -254,8 +255,8 @@ def current_quantiles(
         spark, store_path, id_col=[*group_cols, "bucket_lb", "_batch_seq"]
     )
     if cur is None:
-        return spark.createDataFrame(
-            [], f"{group_ddl}quantile string, est bigint, n_rows bigint"
+        return local_frame(
+            spark, [], f"{group_ddl}quantile string, est bigint, n_rows bigint"
         )
     merged = cur.groupBy(*group_cols, "bucket_lb").agg(
         F.sum("cnt").cast("long").alias("cnt")
@@ -307,7 +308,7 @@ def current_source_psi(spark: SparkSession, bins_store: str, n_bins: int = 10) -
         spark, bins_store, id_col=["source", "bin", "_batch_seq"]
     )
     if cur is None:
-        return spark.createDataFrame([], "source string, psi_micro bigint")
+        return local_frame(spark, [], "source string, psi_micro bigint")
     cs = cur.groupBy("source", "bin").agg(F.sum("c").alias("c"))
     return psi_from_source_bin_counts(cs, n_bins=n_bins)
 
@@ -366,8 +367,8 @@ def current_changepoint(
         spark, store_path, id_col=[group_col, period_col, "_batch_seq"]
     )
     if cur is None:
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark, [],
             f"{group_col} {group_type}, cp_period {period_type}, "
             "n_periods bigint, total bigint, dev_max bigint",
         )
@@ -411,8 +412,8 @@ def current_trend(
         spark, store_path, id_col=[group_col, period_col, "_batch_seq"]
     )
     if cur is None:
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark, [],
             f"{group_col} {group_type}, n_periods bigint, s_stat bigint, "
             "tau_b_micro bigint, z_micro bigint",
         )
@@ -468,8 +469,8 @@ def current_ewma_chart(
         spark, store_path, id_col=[group_col, period_col, "_batch_seq"]
     )
     if cur is None:
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark, [],
             f"{group_col} {group_type}, di {period_type}, v bigint, "
             "ewma_micro bigint, ucl_micro bigint, lcl_micro bigint, "
             "breach int",
@@ -529,8 +530,8 @@ def current_scd2_history(
 
     cur = read_current_or_none(spark, store_path, id_col=[tie_col, "_batch_seq"])
     if cur is None:
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark, [],
             f"{key_col} {key_type}, state {state_type}, "
             f"effective_from {ts_type}, effective_to {ts_type}, "
             "version bigint, is_current int",

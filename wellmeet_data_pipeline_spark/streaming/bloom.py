@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
+from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.operators.joins import bloom_bit_positions
 from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
 from wellmeet_data_pipeline_spark.streaming.pipeline import (
@@ -88,7 +89,7 @@ def current_bloom_prefilter_stats(
     bits = (
         cur.select("pos")
         if cur is not None
-        else spark.createDataFrame([], "pos long")
+        else local_frame(spark, [], "pos long")
     )
     return bloom_prefilter_stats(
         build, probe, build_key, probe_key,

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
+from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
 from wellmeet_data_pipeline_spark.streaming.pipeline import (
     append_nonempty,
@@ -78,8 +79,8 @@ def current_fingerprint_matches(
 
     reg = read_current_or_none(spark, store, id_col=["doc_id", "pos", "fp"])
     if reg is None:
-        return spark.createDataFrame(
-            [], "probe_id long, ref_id long, n_shared_fp bigint"
+        return local_frame(
+            spark, [], "probe_id long, ref_id long, n_shared_fp bigint"
         )
     probe_fp = winnowing_fingerprints(
         probe_docs.filter(F.col("text").isNotNull()), k=k, w=w

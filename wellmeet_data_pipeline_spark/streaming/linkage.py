@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
+from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
 from wellmeet_data_pipeline_spark.streaming.pipeline import (
     append_nonempty,
@@ -118,5 +119,5 @@ def current_entities(spark: SparkSession, store_path: str) -> DataFrame:
     """The consumer view of the registry (first version per entity id)."""
     cur = read_current_or_none(spark, store_path, id_col="entity_id")
     if cur is None:
-        return spark.createDataFrame([], _REGISTRY_SCHEMA)
+        return local_frame(spark, [], _REGISTRY_SCHEMA)
     return cur.select("entity_id", "entity_name")

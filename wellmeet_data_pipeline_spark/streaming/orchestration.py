@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryProgress
 
+from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.operators.projections import fill_rds_defaults, require_fields
 from wellmeet_data_pipeline_spark.pipelines import ingest_reviews
 from wellmeet_data_pipeline_spark.schemas import RESTAURANT
@@ -91,7 +92,7 @@ def _ingest_capped(
     if not chunk:
         return
     ingest_reviews(spark, chunk, review_fetcher, review_store, batch_seq=batch_seq)
-    chunk_df = spark.createDataFrame([(k,) for k in chunk], "place_id string")
+    chunk_df = local_frame(spark, [(k,) for k in chunk], "place_id string")
     _append_marks(chunk_df, backlog_store, "done")
 
 
@@ -153,7 +154,7 @@ def run_orchestration(
         cur = read_current_or_none(spark, restaurant_store, id_col="place_id")
         existing = (
             cur.select("place_id") if cur is not None
-            else spark.createDataFrame([], "place_id string")
+            else local_frame(spark, [], "place_id string")
         )
         fresh = valid.join(existing, "place_id", "left_anti")
         # K5's one-Batch-job-per-restaurant → seed frame over the NEW keys
@@ -204,7 +205,7 @@ def compact_backlog(spark: SparkSession, backlog_store: str, out_path: str) -> N
     committed); marks keep accumulating otherwise."""
     pending = _read_pending(spark, backlog_store)
     if pending is None:
-        pending = spark.createDataFrame([], "place_id string")
+        pending = local_frame(spark, [], "place_id string")
     pending.select("place_id", F.lit("todo").alias("_op")).write.mode(
         "error"
     ).parquet(out_path)

@@ -12,7 +12,7 @@ Landing docs -> per-batch postings (doc, term, tf) + document lengths
 
 Queries then score against the growing store through the SAME exact
 micro-grid BM25 core the batch operator uses
-(operators/retrieval.py:_bm25_score_frames), so stream-built and
+(operators/retrieval.py:_bm25_contribution), so stream-built and
 batch-built rankings are bit-identical on identical corpora — pinned by
 tests/test_retrieval.py::test_lexical_index_stream_matches_batch.
 
@@ -37,9 +37,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
-from wellmeet_data_pipeline_spark.functions.text import normalized_text
 from wellmeet_data_pipeline_spark.operators.retrieval import (
     _bm25_score_frames,
+    _doc_lengths,
     _doc_tokens,
     _query_terms_df,
     bm25_rank_cut,
@@ -89,18 +89,7 @@ def run_lexical_index_pipeline(
         # one doclen row per ingested doc, INCLUDING token-free docs
         # (dl = 0) — the doclen family is what defines N and avgdl, and
         # the batch scorer counts every document toward both
-        doclen = deduped.select(
-            F.col(id_col),
-            F.coalesce(
-                F.size(
-                    F.filter(
-                        F.split(normalized_text(F.col(text_col)), " "),
-                        lambda x: x != "",
-                    )
-                ),
-                F.lit(0),
-            ).cast("long").alias("dl"),
-        )
+        doclen = _doc_lengths(deduped, text_col, id_col)
         merge_append(postings, f"{store_path}/postings", id_col="posting_key",
                      partition_col=None, batch_seq=batch_id)
         merge_append(doclen, f"{store_path}/doclen", id_col=id_col,

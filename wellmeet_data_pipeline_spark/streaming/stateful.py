@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from wellmeet_data_pipeline_spark.catalog import local_frame
+
 _STATE_SCHEMA = "seen integer"
 
 
@@ -259,8 +261,8 @@ def current_transition_probs(spark, store_path: str) -> DataFrame:
         spark, store_path, id_col=["from_state", "to_state", "_batch_seq"]
     )
     if cur is None:
-        return spark.createDataFrame(
-            [], "from_state string, to_state string, n_trans bigint, p_micro bigint"
+        return local_frame(
+            spark, [], "from_state string, to_state string, n_trans bigint, p_micro bigint"
         )
     counts = cur.groupBy("from_state", "to_state").agg(
         F.sum("n_trans").cast("long").alias("n_trans")
