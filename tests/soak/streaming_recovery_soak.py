@@ -6,8 +6,8 @@ prove the store converges to batch parity.
 
 Covered twins: Bloom bit-set registry, PageRank edge store, PSI
 length-bin monitor.  The kill is real (os._exit inside foreachBatch,
-injected by patching the twin module's merge_append binding in a CHILD
-process), so the recovery leg exercises Structured Streaming's
+injected by patching the merge_append binding the twins write through,
+in a CHILD process), so the recovery leg exercises Structured Streaming's
 offsets-without-commit replay against each store's idempotency
 discipline: bit anti-join, edge dedup-on-read, (key, batch)-keyed
 partials.
@@ -137,7 +137,6 @@ def patch_merge_append_to_kill():
     successful store commit durably lands and then the driver dies —
     the checkpoint's commit marker for that epoch is never written."""
     import wellmeet_data_pipeline_spark.sinks.merge as merge_mod
-    import wellmeet_data_pipeline_spark.streaming.kcore as kcore_mod
     import wellmeet_data_pipeline_spark.streaming.pipeline as pipeline_mod
 
     orig = merge_mod.merge_append
@@ -148,9 +147,8 @@ def patch_merge_append_to_kill():
         os._exit(KILL_EXIT)
 
     merge_mod.merge_append = commit_then_die
-    # bound at module import: kcore calls merge_append directly; bloom,
-    # psi and cusum write through pipeline.append_nonempty
-    kcore_mod.merge_append = commit_then_die
+    # bound at module import: all four twins (bloom, kcore, psi, cusum)
+    # write through pipeline.run_partials -> append_nonempty
     pipeline_mod.merge_append = commit_then_die
 
 

@@ -508,7 +508,7 @@ def test_streaming_near_dup_survives_sig_store_replay(spark, tmp_path):
     fp = bdf.select("doc_id", document_fingerprint(SF.col("text")).alias("fingerprint"))
     merge_append(
         minhash_band_buckets(bdf, num_hashes=16, bands=4).join(fp, "doc_id"),
-        sigs, id_col="doc_id", partition_col=None, batch_seq=0,
+        sigs, partition_col=None, batch_seq=0,
     )
 
     run_corpus_pipeline(

@@ -1,6 +1,8 @@
 import json
 import os
 
+import pytest
+
 from wellmeet_data_pipeline_spark.schemas import REVIEW
 from wellmeet_data_pipeline_spark.sinks.merge import read_current
 from wellmeet_data_pipeline_spark.streaming.pipeline import run_ingest_pipeline
@@ -120,6 +122,93 @@ def test_drain_raises_when_a_batch_fails(spark, tmp_path):
     stream = landing_stream(spark, str(landing), REVIEW)
     with pytest.raises(StreamingQueryException, match="planted batch failure"):
         drain(stream.writeStream.foreachBatch(boom), str(tmp_path / "fail_ckpt"))
+
+
+_HELPER_CASES = [
+    "unseen_missing_store",
+    "unseen_zero_part_store",
+    "unseen_one_key",
+    "unseen_compound_key",
+    "read_partials_before_commit",
+    "read_partials_first_wins",
+]
+
+
+def _helper_case(spark, store, case):
+    """(got, want) for one case of test_partial_store_helpers."""
+    from wellmeet_data_pipeline_spark.sinks.merge import merge_append
+    from wellmeet_data_pipeline_spark.streaming.pipeline import read_partials, unseen
+
+    frame = spark.createDataFrame([(1, "a"), (1, "b"), (2, "a")], "k long, v string")
+    rows = lambda df: None if df is None else sorted(map(tuple, df.collect()))
+    if case == "unseen_missing_store":
+        return unseen(spark, frame, store, "k") is frame, True
+    if case == "unseen_zero_part_store":
+        # an all-filtered first batch can commit _SUCCESS and no part file
+        os.makedirs(store)
+        open(os.path.join(store, "_SUCCESS"), "w").close()
+        return unseen(spark, frame, store, ["k", "v"]) is frame, True
+    stored = spark.createDataFrame([(1, "a", 9)], "k long, v string, extra int")
+    if case == "unseen_one_key":
+        merge_append(stored, store, partition_col=None, batch_seq=0)
+        return rows(unseen(spark, frame, store, "k")), [(2, "a")]
+    if case == "unseen_compound_key":
+        merge_append(stored, store, partition_col=None, batch_seq=0)
+        return rows(unseen(spark, frame, store, ["k", "v"])), [(1, "b"), (2, "a")]
+    if case == "read_partials_before_commit":
+        return read_partials(spark, store, ["k"]), None
+    # a replayed batch re-appends its own (key, seq) identity and collapses;
+    # the same key's partial from a later batch survives beside it
+    partial = spark.createDataFrame([("a", 1), ("b", 5)], "g string, n long")
+    merge_append(partial, store, partition_col=None, batch_seq=0)
+    merge_append(partial, store, partition_col=None, batch_seq=0)
+    merge_append(
+        spark.createDataFrame([("a", 2)], "g string, n long"),
+        store, partition_col=None, batch_seq=1,
+    )
+    return rows(read_partials(spark, store, ["g"])), [("a", 1), ("a", 2), ("b", 5)]
+
+
+
+@pytest.mark.parametrize("case", _HELPER_CASES)
+def test_partial_store_helpers(spark, tmp_path, case):
+    """unseen returns every row before the store's first commit (missing
+    or zero-part store) and anti-joins on one or a compound key after
+    it; read_partials is None before the first commit and keeps one row
+    per (keys, batch seq) after it."""
+    got, want = _helper_case(spark, str(tmp_path / "store"), case)
+    assert got == want
+
+
+def test_merge_append_store_contract_is_structural():
+    """The write takes no identity and the batch column is a constant;
+    in streaming/ only run_partials appends partials, and no module
+    spells the batch column itself."""
+    import ast
+    import glob
+    import inspect
+
+    from wellmeet_data_pipeline_spark.sinks import merge
+    from wellmeet_data_pipeline_spark.streaming import pipeline
+
+    params = lambda fn: set(inspect.signature(fn).parameters)
+    assert not {"id_col", "batch_col"} & params(merge.merge_append)
+    for fn in (merge.read_current, merge.read_current_or_none, merge.compact):
+        assert "batch_col" not in params(fn), fn.__name__
+    assert "id_col" not in params(pipeline.append_nonempty)
+
+    callers = []
+    for path in sorted(glob.glob(os.path.join(os.path.dirname(pipeline.__file__), "*.py"))):
+        with open(path) as fh:
+            src = fh.read()
+        assert '"_batch_seq"' not in src and "'_batch_seq'" not in src, path
+        for top in ast.parse(src).body:
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call) and "append_nonempty" in (
+                    getattr(node.func, "id", None), getattr(node.func, "attr", None)
+                ):
+                    callers.append((os.path.basename(path), getattr(top, "name", None)))
+    assert callers == [("pipeline.py", "run_partials")]
 
 
 def test_embedding_pipeline_and_near_dups(spark, tmp_path):
@@ -792,7 +881,7 @@ def test_streaming_heavy_hitters_incremental_and_replay_safe(spark, tmp_path):
     # (foreachBatch contract: same batch_id => same data) must not
     # double-count
     replay = spark.createDataFrame([("cold", 4)], "k string, n long")
-    merge_append(replay, store, id_col="k", partition_col=None, batch_seq=1)
+    merge_append(replay, store, partition_col=None, batch_seq=1)
     got = {r["k"]: r["n"] for r in
            current_heavy_hitters(spark, store, "k", 0.5).collect()}
     assert got == {"cold": 5}
@@ -917,7 +1006,7 @@ def test_streaming_cdc_apply_latest_state(spark, tmp_path):
     replay = spark.createDataFrame(
         [(1, 2, "U", 20), (2, 3, "I", 30)], "k long, seq long, op string, v long"
     )
-    merge_append(replay, store, id_col="k", partition_col=None, batch_seq=0)
+    merge_append(replay, store, partition_col=None, batch_seq=0)
     assert state() == {1: ("U", 20), 2: ("I", 60), 3: ("I", 50)}
 
 
@@ -973,7 +1062,7 @@ def test_streaming_rolling_active_users(spark, tmp_path):
     replay = spark.createDataFrame(
         [("2024-05-01", 1), ("2024-05-02", 2)], "d string, u long"
     ).select(F.col("d").cast("date").alias("__day"), F.col("u").alias("__u"))
-    merge_append(replay, store, id_col="__u", partition_col=None, batch_seq=0)
+    merge_append(replay, store, partition_col=None, batch_seq=0)
     assert dau() == {"2024-05-01": 1, "2024-05-02": 2, "2024-05-09": 1}
 
 
@@ -1032,7 +1121,7 @@ def test_streaming_source_drift_matches_batch_and_replay(spark, tmp_path):
     # replayed (grp, term, batch) partial (foreachBatch contract: same
     # batch_id => same data) must dedup on read
     replay = spark.createDataFrame([("web", "cat", 1)], "grp string, term string, a long")
-    merge_append(replay, store, id_col="grp", partition_col=None, batch_seq=1)
+    merge_append(replay, store, partition_col=None, batch_seq=1)
     assert {
         r.source: (r.n_tokens, r.n_terms, r.js_micro_nats)
         for r in current_source_drift(spark, store).collect()
@@ -1432,6 +1521,45 @@ def test_streaming_kcore_matches_batch_and_replays(spark, tmp_path):
     )
     assert store_rows() == before
 
+
+def test_streaming_kcore_commits_no_empty_batch(spark, tmp_path):
+    """A batch with no new edge commits nothing: a first batch of only
+    self-loops leaves no batch directory, and a fresh-checkpoint full
+    replay leaves the store's file listing unchanged."""
+    import glob
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from wellmeet_data_pipeline_spark.streaming.kcore import run_streaming_kcore_edges
+
+    landing = tmp_path / "kce_landing"
+    landing.mkdir()
+    store = str(tmp_path / "kce_edges")
+    schema = StructType.fromDDL("id_a long, id_b long")
+    drop = lambda name, edges: (landing / name).write_text(
+        json.dumps([{"id_a": a, "id_b": b} for a, b in edges])
+    )
+
+    drop("loops.json", [(7, 7), (8, 8)])
+    run_streaming_kcore_edges(spark, str(landing), store, str(tmp_path / "kce_c1"), schema)
+    assert glob.glob(store + "/batch_commit=*") == []
+
+    drop("edges.json", [(1, 2), (2, 3), (3, 1)])
+    run_streaming_kcore_edges(spark, str(landing), store, str(tmp_path / "kce_c1"), schema)
+
+    def listing():
+        return sorted(
+            os.path.relpath(os.path.join(root, f), store)
+            for root, _dirs, files in os.walk(store)
+            for f in files
+        )
+
+    before = listing()
+    assert glob.glob(store + "/batch_commit=*/*.parquet")
+    run_streaming_kcore_edges(spark, str(landing), store, str(tmp_path / "kce_c2"), schema)
+    assert listing() == before
+
 def test_streaming_quantile_sketch_matches_batch_and_replays(spark, tmp_path):
     """Streaming sketch partials merged on read == one batch sketch over
     all rows (the monoid, end-to-end through the store); replays are
@@ -1665,7 +1793,7 @@ def test_streaming_psi_matches_batch_and_replay(spark, tmp_path):
         (F.col("source") == "A") & (F.col("bin") == 0) & (F.col("_batch_seq") == 0)
     )
     replay = orig.select("source", "bin", "c")  # byte-identical partial
-    merge_append(replay, store, id_col="source", partition_col=None, batch_seq=0)
+    merge_append(replay, store, partition_col=None, batch_seq=0)
     again = sorted(map(tuple, current_source_psi(spark, store).collect()))
     assert again == want
 
@@ -1854,7 +1982,7 @@ def test_streaming_cusum_monitor_parity_and_replay(spark, tmp_path):
     # at-least-once replay: same (group, period, batch) identity appended
     # again must not change the answer
     replay = spark.createDataFrame([("t", "2024-01-07", 10)], "g string, day string, x long")
-    merge_append(replay, store, id_col="g", partition_col=None, batch_seq=0)
+    merge_append(replay, store, partition_col=None, batch_seq=0)
     again = current_changepoint(spark, store, "g", "day").collect()
     assert [tuple(r) for r in again] == [tuple(r) for r in batch]
 
@@ -1938,7 +2066,7 @@ def test_streaming_transitions_parity_and_replay(spark, tmp_path):
     replay = spark.createDataFrame(
         [("A", "B", 1)], "from_state string, to_state string, n_trans long"
     )
-    merge_append(replay, store, id_col="from_state", partition_col=None, batch_seq=0)
+    merge_append(replay, store, partition_col=None, batch_seq=0)
     again = sorted(map(tuple, current_transition_probs(spark, store).collect()))
     assert again == got
 
@@ -2051,7 +2179,7 @@ def test_streaming_trend_monitor_parity_and_replay(spark, tmp_path):
     replay = spark.createDataFrame(
         [("up", "2024-02-03", 2)], "g string, day string, x long"
     )
-    merge_append(replay, store, id_col="g", partition_col=None, batch_seq=1)
+    merge_append(replay, store, partition_col=None, batch_seq=1)
     again = sorted(map(tuple, current_trend(spark, store, "g", "day").collect()))
     assert again == got
 

@@ -69,7 +69,7 @@ def discover_restaurants(
         else local_frame(spark, [], "place_id string")
     )
     fresh = incremental_ingest(projected.filter(F.col("place_id").isNotNull()), existing, "place_id")
-    merge_append(fresh, store_path, id_col="place_id", partition_col=None, batch_seq=batch_seq)
+    merge_append(fresh, store_path, partition_col=None, batch_seq=batch_seq)
     return fresh
 
 
@@ -98,7 +98,7 @@ def ingest_reviews(
         else local_frame(spark, [], "place_id string, id string")
     )
     fresh = incremental_ingest(reviews, existing, ["place_id", "id"])
-    merge_append(fresh, store_path, id_col="id", partition_col="place_id", batch_seq=batch_seq)
+    merge_append(fresh, store_path, partition_col="place_id", batch_seq=batch_seq)
     return fresh
 
 

@@ -6,12 +6,14 @@ rewrites it (review-crawler/storage_manager.py:25-61), with dedup
 commented out (:47-54) — at-least-once with duplicates possible.  Plain
 parquet has no MERGE, so exactly-once-per-id is built as:
 
-  write:  append new rows keyed by a stable `id`, partitioned by the
-          grouping key (the reference's one-object-per-place_id layout,
+  write:  append new rows stamped only with their batch seq
+          (`BATCH_COL`), partitioned by the grouping key (the
+          reference's one-object-per-place_id layout,
           storage_manager.py:30, becomes partitionBy) — appends never
-          rewrite existing files;
+          rewrite existing files, and the write takes no identity;
   read:   dedup-on-read view keeps the first version per id
-          deterministically.
+          deterministically — the identity is chosen here, and only
+          here (`read_current(id_col=...)`).
 
 Retries of the same batch re-append the same ids; the read view makes
 that invisible (T4 idempotency the reference only almost had).  A
@@ -47,10 +49,16 @@ from pyspark.sql import functions as F
 
 # Partition-style directory key for the per-batch commit unit
 # (`<store>/batch_commit=<seq>/...`).  Deliberately NOT underscore-prefixed
-# (Hadoop listing hides those) and distinct from the `_batch_seq` DATA
-# column, which stays inside the files because streaming monitors key
-# compound identities on it (e.g. analytics.py id_col=[key, "_batch_seq"]).
+# (Hadoop listing hides those) and distinct from the BATCH_COL data
+# column, which stays inside the files because the partial-store monitors
+# key compound identities on it (streaming/pipeline.read_partials reads
+# with id_col=[*keys, BATCH_COL]).
 BATCH_DIR_KEY = "batch_commit"
+
+# The data column every write stamps with its batch seq: the first-wins
+# order of the read view, and the per-batch half of partial-store
+# identities.
+BATCH_COL = "_batch_seq"
 
 # A claimed-but-uncommitted seq older than this is treated as abandoned by
 # the reader's contiguity pin (writer crashed between claim and commit —
@@ -117,14 +125,15 @@ def claim_batch_seq(path: str, writer_id: str = "", max_attempts: int = 1000) ->
 def merge_append(
     df: DataFrame,
     path: str,
-    id_col: str = "id",
     partition_col: str | None = "place_id",
-    batch_col: str = "_batch_seq",
     batch_seq: int | None = 0,
     writer_id: str = "",
 ) -> int:
-    """K1: append-only write; `batch_seq` records arrival order so the read
-    side can keep the FIRST version per id deterministically.
+    """K1: append-only write; `batch_seq` (stamped as BATCH_COL) records
+    arrival order so the read side can keep the FIRST version per id
+    deterministically.  The write takes no identity: which columns
+    identify a row is decided by the reader (`read_current(id_col=...)`),
+    so one store can be read under any identity its rows carry.
 
     `batch_seq=None` claims the next sequence atomically via
     `claim_batch_seq` — the multi-writer-safe mode (concurrent appends
@@ -144,7 +153,7 @@ def merge_append(
     # object store this maps to a manifest/conditional-PUT commit, same
     # protocol shape as the claim above).
     staging = os.path.join(path, "_staging", f"{batch_seq}-{uuid.uuid4().hex}")
-    out = df.withColumn(batch_col, F.lit(batch_seq))
+    out = df.withColumn(BATCH_COL, F.lit(batch_seq))
     writer = out.write.mode("overwrite")  # staging path is fresh + private
     if partition_col:
         writer = writer.partitionBy(partition_col)
@@ -216,7 +225,6 @@ def read_current(
     spark: SparkSession,
     path: str,
     id_col: str | list[str] = "id",
-    batch_col: str = "_batch_seq",
     stale_claim_seconds: float = STALE_CLAIM_SECONDS,
 ) -> DataFrame:
     """Dedup-on-read view: first-arrived row per id wins (D4 enabled — the
@@ -236,11 +244,11 @@ def read_current(
     if pin is not None and BATCH_DIR_KEY in df.columns:
         df = df.filter(F.col(BATCH_DIR_KEY) <= pin)  # partition-pruned
     keys = [id_col] if isinstance(id_col, str) else list(id_col)
-    w = Window.partitionBy(*keys).orderBy(F.col(batch_col).asc())
+    w = Window.partitionBy(*keys).orderBy(F.col(BATCH_COL).asc())
     df = (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .drop("__rn", batch_col)
+        .drop("__rn", BATCH_COL)
     )
     # the commit-unit partition key is physical layout, not data — hide it
     # (compacted stores have no batch_commit directories and no column)
@@ -250,14 +258,14 @@ def read_current(
 
 
 def compact(spark: SparkSession, path: str, out_path: str, id_col: str = "id",
-            partition_col: str | None = "place_id", batch_col: str = "_batch_seq",
+            partition_col: str | None = "place_id",
             target_rows_per_file: int | None = None) -> None:
     """Materialize the dedup-on-read view (periodic maintenance job).
     `target_rows_per_file` additionally bounds output file sizes — a
     store fed one file set per micro-batch accumulates small files
     whose count, not bytes, dominates scan planning at 100 TB; the
     maintenance pass is where that debt gets paid."""
-    cur = read_current(spark, path, id_col, batch_col).withColumn(batch_col, F.lit(0))
+    cur = read_current(spark, path, id_col).withColumn(BATCH_COL, F.lit(0))
     persisted = None
     if target_rows_per_file:
         from wellmeet_data_pipeline_spark.sinks.compact import evenly_sized
@@ -276,7 +284,6 @@ def read_current_or_none(
     spark: SparkSession,
     path: str,
     id_col: str | list[str] = "id",
-    batch_col: str = "_batch_seq",
 ):
     """read_current with ONLY the store-not-yet-created cases mapped to
     None: missing path, or an existing directory holding no parquet parts
@@ -288,7 +295,7 @@ def read_current_or_none(
     from pyspark.errors import AnalysisException
 
     try:
-        return read_current(spark, path, id_col, batch_col)
+        return read_current(spark, path, id_col)
     except AnalysisException as e:
         msg = str(e)
         if (

@@ -35,9 +35,9 @@ from pyspark.sql.types import StructType
 from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
 from wellmeet_data_pipeline_spark.streaming.pipeline import (
-    append_nonempty,
-    drain,
     landing_stream,
+    read_partials,
+    run_partials,
 )
 
 
@@ -52,13 +52,10 @@ def run_streaming_key_counts(
     """Drain the landing stream (availableNow), appending per-batch
     partial counts keyed by (key, batch) — one dim-sized groupBy per
     micro-batch, never a rescan of the store."""
-    stream = landing_stream(spark, landing_dir, schema)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        counts = batch_df.groupBy(key_col).agg(F.count("*").alias("n"))
-        append_nonempty(counts, store_path, key_col, batch_id)
-
-    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
+    return run_partials(
+        landing_stream(spark, landing_dir, schema), store_path, checkpoint_dir,
+        lambda batch: batch.groupBy(key_col).agg(F.count("*").alias("n")),
+    )
 
 
 def current_heavy_hitters(
@@ -80,7 +77,7 @@ def current_heavy_hitters(
         threshold_heavy_hitters,
     )
 
-    cur = read_current_or_none(spark, store_path, id_col=[key_col, "_batch_seq"])
+    cur = read_partials(spark, store_path, [key_col])
     if cur is None:
         return local_frame(
             spark, [], f"{key_col} {key_type}, n bigint, share double"
@@ -106,16 +103,13 @@ def run_streaming_active_days(
     merge-append store here.  The rolling read (current_rolling_active)
     is then a pure function of the store: no window state, no event
     rescan."""
-    stream = landing_stream(spark, landing_dir, schema)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        pairs = batch_df.select(
+    return run_partials(
+        landing_stream(spark, landing_dir, schema), store_path, checkpoint_dir,
+        lambda batch: batch.select(
             F.to_date(F.col(ts_col)).alias("__day"),
             F.col(user_col).alias("__u"),
-        ).distinct()
-        append_nonempty(pairs, store_path, "__u", batch_id)
-
-    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
+        ).distinct(),
+    )
 
 
 def current_rolling_active(
@@ -127,9 +121,7 @@ def current_rolling_active(
         rolling_distinct_from_pairs,
     )
 
-    store = read_current_or_none(
-        spark, store_path, id_col=["__u", "__day"], batch_col="_batch_seq"
-    )
+    store = read_current_or_none(spark, store_path, id_col=["__u", "__day"])
     if store is None:
         return local_frame(spark, [], "as_of_day date, n_active long")
     # read_current already dedups to one row per (__u, __day) — no
@@ -156,11 +148,9 @@ def run_streaming_term_counts(
     exactly-once without read-modify-write."""
     from wellmeet_data_pipeline_spark.functions.text import normalized_text
 
-    stream = landing_stream(spark, landing_dir, schema)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        counts = (
-            batch_df.filter(F.col(group_col).isNotNull())
+    def partial(batch: DataFrame) -> DataFrame:
+        return (
+            batch.filter(F.col(group_col).isNotNull())
             .select(
                 F.col(group_col).alias("grp"),
                 F.explode(F.split(normalized_text(text_col), " ")).alias("term"),
@@ -169,9 +159,10 @@ def run_streaming_term_counts(
             .groupBy("grp", "term")
             .agg(F.count("*").alias("a"))
         )
-        append_nonempty(counts, store_path, "grp", batch_id)
 
-    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
+    return run_partials(
+        landing_stream(spark, landing_dir, schema), store_path, checkpoint_dir, partial
+    )
 
 
 def current_source_drift(
@@ -186,9 +177,7 @@ def current_source_drift(
         js_from_group_term_counts,
     )
 
-    cur = read_current_or_none(
-        spark, store_path, id_col=["grp", "term", "_batch_seq"]
-    )
+    cur = read_partials(spark, store_path, ["grp", "term"])
     if cur is None:
         return local_frame(
             spark, [],
@@ -224,15 +213,12 @@ def run_streaming_quantile_sketch(
     here."""
     from wellmeet_data_pipeline_spark.operators.aggregations import quantile_sketch
 
-    stream = landing_stream(spark, landing_dir, schema)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sk = quantile_sketch(
-            batch_df, value_col, group_cols=group_cols, sub_bits=sub_bits
-        )
-        append_nonempty(sk, store_path, "bucket_lb", batch_id)
-
-    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
+    return run_partials(
+        landing_stream(spark, landing_dir, schema), store_path, checkpoint_dir,
+        lambda batch: quantile_sketch(
+            batch, value_col, group_cols=group_cols, sub_bits=sub_bits
+        ),
+    )
 
 
 def current_quantiles(
@@ -251,9 +237,7 @@ def current_quantiles(
         quantiles_from_sketch,
     )
 
-    cur = read_current_or_none(
-        spark, store_path, id_col=[*group_cols, "bucket_lb", "_batch_seq"]
-    )
+    cur = read_partials(spark, store_path, [*group_cols, "bucket_lb"])
     if cur is None:
         return local_frame(
             spark, [], f"{group_ddl}quantile string, est bigint, n_rows bigint"
@@ -280,33 +264,28 @@ def run_streaming_length_bins(
     own contribution instead of double-counting)."""
     from wellmeet_data_pipeline_spark.operators.scoring import length_bins
 
-    stream = landing_stream(spark, landing_dir, schema)
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        partial = (
-            length_bins(batch_df, width=width, n_bins=n_bins)
+    # an all-filtered batch (NULL sources/lengths) is empty
+    return run_partials(
+        landing_stream(spark, landing_dir, schema), bins_store, checkpoint_dir,
+        lambda batch: (
+            length_bins(batch, width=width, n_bins=n_bins)
             .groupBy("source", "bin")
             .agg(F.count("*").cast("long").alias("c"))
-        )
-        # an all-filtered batch (NULL sources/lengths) is empty
-        append_nonempty(partial, bins_store, "source", batch_id)
-
-    return drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
+        ),
+    )
 
 
 def current_source_psi(spark: SparkSession, bins_store: str, n_bins: int = 10) -> DataFrame:
     """PSI of every source streamed so far, through the SAME core as the
     batch query (psi_from_source_bin_counts) — parity by construction.
-    Identity is the compound (source, bin, _batch_seq) key (the sibling
+    Identity is the compound (source, bin, batch seq) key (the sibling
     monitors' discipline — no synthetic key column); before the first
     batch lands the view is an empty typed frame, not an exception."""
     from wellmeet_data_pipeline_spark.operators.scoring import (
         psi_from_source_bin_counts,
     )
 
-    cur = read_current_or_none(
-        spark, bins_store, id_col=["source", "bin", "_batch_seq"]
-    )
+    cur = read_partials(spark, bins_store, ["source", "bin"])
     if cur is None:
         return local_frame(spark, [], "source string, psi_micro bigint")
     cs = cur.groupBy("source", "bin").agg(F.sum("c").alias("c"))
@@ -329,19 +308,28 @@ def run_streaming_period_totals(
     run_streaming_key_counts: partials are identified by (group, period,
     batch seq), replays re-append the same identity and dedup on read,
     so period totals are exactly-once without read-modify-write."""
-    stream = landing_stream(spark, landing_dir, schema)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        totals = (
-            batch_df.filter(
-                F.col(group_col).isNotNull() & F.col(period_col).isNotNull()
-            )
+    return run_partials(
+        landing_stream(spark, landing_dir, schema), store_path, checkpoint_dir,
+        lambda batch: (
+            batch.filter(F.col(group_col).isNotNull() & F.col(period_col).isNotNull())
             .groupBy(group_col, period_col)
             .agg(F.sum(value_col).cast("long").alias("x"))
-        )
-        append_nonempty(totals, store_path, group_col, batch_id)
+        ),
+    )
 
-    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
+
+def _period_totals(
+    spark: SparkSession, store_path: str, group_col: str, period_col: str
+) -> DataFrame | None:
+    """The run_streaming_period_totals store rolled up to true (group,
+    period) totals `__x` — the substrate the CUSUM, Mann-Kendall and EWMA
+    monitors share.  None before the first commit."""
+    cur = read_partials(spark, store_path, [group_col, period_col])
+    if cur is None:
+        return None
+    return cur.groupBy(group_col, period_col).agg(
+        F.sum("x").cast("long").alias("__x")
+    )
 
 
 def current_changepoint(
@@ -363,18 +351,13 @@ def current_changepoint(
     columns keep a consistent schema either way)."""
     from wellmeet_data_pipeline_spark.operators.stats import cusum_changepoint
 
-    cur = read_current_or_none(
-        spark, store_path, id_col=[group_col, period_col, "_batch_seq"]
-    )
-    if cur is None:
+    totals = _period_totals(spark, store_path, group_col, period_col)
+    if totals is None:
         return local_frame(
             spark, [],
             f"{group_col} {group_type}, cp_period {period_type}, "
             "n_periods bigint, total bigint, dev_max bigint",
         )
-    totals = cur.groupBy(group_col, period_col).agg(
-        F.sum("x").cast("long").alias("__x")
-    )
     return cusum_changepoint(totals, group_col, period_col, F.col("__x"))
 
 
@@ -408,18 +391,13 @@ def current_trend(
     event grain."""
     from wellmeet_data_pipeline_spark.operators.stats import mann_kendall_by_group
 
-    cur = read_current_or_none(
-        spark, store_path, id_col=[group_col, period_col, "_batch_seq"]
-    )
-    if cur is None:
+    totals = _period_totals(spark, store_path, group_col, period_col)
+    if totals is None:
         return local_frame(
             spark, [],
             f"{group_col} {group_type}, n_periods bigint, s_stat bigint, "
             "tau_b_micro bigint, z_micro bigint",
         )
-    totals = cur.groupBy(group_col, period_col).agg(
-        F.sum("x").cast("long").alias("__x")
-    )
     if window_periods is not None:
         from pyspark.sql import Window
 
@@ -465,19 +443,14 @@ def current_ewma_chart(
     join — calendar-bounded like every consumer of this store."""
     from wellmeet_data_pipeline_spark.operators.experiment import ewma_control_chart
 
-    cur = read_current_or_none(
-        spark, store_path, id_col=[group_col, period_col, "_batch_seq"]
-    )
-    if cur is None:
+    totals = _period_totals(spark, store_path, group_col, period_col)
+    if totals is None:
         return local_frame(
             spark, [],
             f"{group_col} {group_type}, di {period_type}, v bigint, "
             "ewma_micro bigint, ucl_micro bigint, lcl_micro bigint, "
             "breach int",
         )
-    totals = cur.groupBy(group_col, period_col).agg(
-        F.sum("x").cast("long").alias("__x")
-    )
     return ewma_control_chart(totals, group_col, period_col, "__x")
 
 
@@ -496,13 +469,10 @@ def run_streaming_event_log(
     tie)).  Same store contract as the partial-count stores: replays
     re-append the same identity and dedup on read, so the log is
     exactly-once under the foreachBatch replay contract."""
-    stream = landing_stream(spark, landing_dir, schema)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.filter(F.col(id_col).isNotNull())
-        append_nonempty(rows, store_path, id_col, batch_id)
-
-    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
+    return run_partials(
+        landing_stream(spark, landing_dir, schema), store_path, checkpoint_dir,
+        lambda batch: batch.filter(F.col(id_col).isNotNull()),
+    )
 
 
 def current_scd2_history(
@@ -528,7 +498,7 @@ def current_scd2_history(
     incrementally at all.  Empty store → empty typed frame."""
     from wellmeet_data_pipeline_spark.operators.windows import scd2_history
 
-    cur = read_current_or_none(spark, store_path, id_col=[tie_col, "_batch_seq"])
+    cur = read_partials(spark, store_path, [tie_col])
     if cur is None:
         return local_frame(
             spark, [],

@@ -29,9 +29,9 @@ from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.operators.joins import bloom_bit_positions
 from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
 from wellmeet_data_pipeline_spark.streaming.pipeline import (
-    append_nonempty,
-    drain,
     landing_stream,
+    run_partials,
+    unseen,
 )
 
 
@@ -47,11 +47,10 @@ def run_streaming_bloom_bits(
 ) -> list[StreamingQueryProgress]:
     """Landing build-side rows -> persisted Bloom bit set, availableNow.
     Store rows: (pos) under first-wins identity."""
-    stream = landing_stream(spark, landing_dir, schema)
 
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        new_bits = (
-            batch_df.filter(F.col(key_col).isNotNull())
+    def new_bits(batch: DataFrame) -> DataFrame:
+        bits = (
+            batch.filter(F.col(key_col).isNotNull())
             .select(
                 F.explode(
                     bloom_bit_positions(F.col(key_col), m_bits, k_hashes)
@@ -59,13 +58,12 @@ def run_streaming_bloom_bits(
             )
             .distinct()
         )
-        cur = read_current_or_none(spark, bits_store, id_col="pos")
-        if cur is not None:
-            new_bits = new_bits.join(cur.select("pos"), "pos", "left_anti")
         # empty for an all-NULL, fully-duplicate or saturated batch
-        append_nonempty(new_bits, bits_store, "pos", batch_id)
+        return unseen(spark, bits, bits_store, "pos")
 
-    return drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
+    return run_partials(
+        landing_stream(spark, landing_dir, schema), bits_store, checkpoint_dir, new_bits
+    )
 
 
 def current_bloom_prefilter_stats(

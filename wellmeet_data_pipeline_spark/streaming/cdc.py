@@ -32,11 +32,10 @@ from wellmeet_data_pipeline_spark.operators.dedup import (
     cdc_apply_latest,
     latest_per_key,
 )
-from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
 from wellmeet_data_pipeline_spark.streaming.pipeline import (
-    append_nonempty,
-    drain,
     landing_stream,
+    read_partials,
+    run_partials,
 )
 
 
@@ -51,16 +50,13 @@ def run_streaming_cdc_apply(
 ) -> list[StreamingQueryProgress]:
     """Drain the changelog landing stream (availableNow), appending each
     batch's per-key latest rows (tombstones included) to the store."""
-    stream = landing_stream(spark, landing_dir, schema)
     orders = list(order_cols)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # same reducer (and tie-breaking) as the batch operator — the
-        # batch-vs-stream equivalence depends on sharing it
-        latest = latest_per_key(batch_df, [key_col], orders)
-        append_nonempty(latest, store_path, key_col, batch_id)
-
-    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
+    # same reducer (and tie-breaking) as the batch operator — the
+    # batch-vs-stream equivalence depends on sharing it
+    return run_partials(
+        landing_stream(spark, landing_dir, schema), store_path, checkpoint_dir,
+        lambda batch: latest_per_key(batch, [key_col], orders),
+    )
 
 
 def current_state(
@@ -79,9 +75,7 @@ def current_state(
     batches re-deliver the same data, so their re-appended rows are exact
     copies and first-wins collapses them; partials from DISTINCT batches
     all survive into the changelog-order reduction."""
-    store = read_current_or_none(
-        spark, store_path, id_col=[key_col, "_batch_seq"], batch_col="_batch_seq"
-    )
+    store = read_partials(spark, store_path, [key_col])
     if store is None:
         raise FileNotFoundError(store_path)
     return cdc_apply_latest(

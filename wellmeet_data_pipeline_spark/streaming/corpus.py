@@ -35,7 +35,7 @@ from wellmeet_data_pipeline_spark.sinks.merge import (
     read_current,
     read_current_or_none,
 )
-from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream, unseen
 
 
 def run_corpus_pipeline(
@@ -158,13 +158,7 @@ def run_corpus_pipeline(
         # dropDuplicates keeps an arbitrary row, so a foreachBatch replay
         # could persist a different doc for the same fingerprint
         keyed = dedup_keep_first(keyed, "fingerprint", id_col)
-        existing = read_current_or_none(spark, store_path, id_col="fingerprint")
-        if existing is not None:
-            fresh = keyed.join(
-                existing.select("fingerprint"), "fingerprint", "left_anti"
-            )
-        else:
-            fresh = keyed
+        fresh = unseen(spark, keyed, store_path, "fingerprint")
         buckets = None
         if near_dup or ref_index_path is not None:
             buckets = minhash_band_buckets(
@@ -228,13 +222,10 @@ def run_corpus_pipeline(
             merge_append(
                 buckets.join(fresh.select(id_col), id_col, "left_semi"),
                 sig_store_path,
-                id_col=id_col,
                 partition_col=None,
                 batch_seq=batch_id,
             )
-        merge_append(
-            fresh, store_path, id_col="fingerprint", partition_col=None, batch_seq=batch_id
-        )
+        merge_append(fresh, store_path, partition_col=None, batch_seq=batch_id)
 
     return drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
 

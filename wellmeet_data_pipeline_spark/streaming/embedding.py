@@ -40,7 +40,7 @@ def run_embedding_pipeline(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         embedded = embed_text(batch_df.dropDuplicates([id_col]), text_col=text_col, dim=dim)
-        merge_append(embedded, store_path, id_col=id_col, partition_col=None, batch_seq=batch_id)
+        merge_append(embedded, store_path, partition_col=None, batch_seq=batch_id)
 
     return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
@@ -100,6 +100,6 @@ def run_rag_index_pipeline(
             "chunk_key",
             F.concat_ws(":", F.col(id_col).cast("string"), F.col("chunk_no").cast("string")),
         )
-        merge_append(keyed, store_path, id_col="chunk_key", partition_col=None, batch_seq=batch_id)
+        merge_append(keyed, store_path, partition_col=None, batch_seq=batch_id)
 
     return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)

@@ -47,7 +47,7 @@ from wellmeet_data_pipeline_spark.sinks.merge import (
     read_current,
     read_current_or_none,
 )
-from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream, unseen
 
 
 def run_exactsubstr_dedup(
@@ -77,9 +77,7 @@ def run_exactsubstr_dedup(
         # row's batch seq under a fresh checkpoint, letting first-wins
         # pick a version where no copy of a duplicated span survives
         # anywhere (review catch).
-        done = read_current_or_none(spark, out_store, id_col=id_col)
-        if done is not None:
-            deduped = deduped.join(done.select(id_col), id_col, "left_anti")
+        deduped = unseen(spark, deduped, out_store, id_col)
         # Empty/whitespace-only docs never enter _span_frames (no tokens,
         # nothing to scrub) — but they MUST still land in the out store,
         # or the done-skip above never learns them and every
@@ -151,16 +149,8 @@ def run_exactsubstr_dedup(
             new_grams = new_grams.join(
                 stored.select("gram"), "gram", "left_anti"
             )
-        merge_append(
-            new_grams,
-            gram_store,
-            id_col="gram",
-            partition_col=None,
-            batch_seq=batch_id,
-        )
-        merge_append(
-            cleaned, out_store, id_col=id_col, partition_col=None, batch_seq=batch_id
-        )
+        merge_append(new_grams, gram_store, partition_col=None, batch_seq=batch_id)
+        merge_append(cleaned, out_store, partition_col=None, batch_seq=batch_id)
 
     return drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
 

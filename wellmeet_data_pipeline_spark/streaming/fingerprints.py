@@ -30,11 +30,7 @@ from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
-from wellmeet_data_pipeline_spark.streaming.pipeline import (
-    append_nonempty,
-    drain,
-    landing_stream,
-)
+from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream, run_partials
 
 
 def run_streaming_fingerprint_registry(
@@ -51,16 +47,13 @@ def run_streaming_fingerprint_registry(
     first-wins compound identity."""
     from wellmeet_data_pipeline_spark.operators.dedup import winnowing_fingerprints
 
-    stream = landing_stream(spark, landing_dir, schema)
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # empty for all-NULL or too-short docs
-        fps = winnowing_fingerprints(
-            batch_df.filter(F.col("text").isNotNull()), k=k, w=w
-        )
-        append_nonempty(fps, store, ["doc_id", "pos", "fp"], batch_id)
-
-    return drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
+    # empty for all-NULL or too-short docs
+    return run_partials(
+        landing_stream(spark, landing_dir, schema), store, checkpoint_dir,
+        lambda batch: winnowing_fingerprints(
+            batch.filter(F.col("text").isNotNull()), k=k, w=w
+        ),
+    )
 
 
 def current_fingerprint_matches(

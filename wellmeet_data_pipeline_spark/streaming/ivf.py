@@ -60,11 +60,11 @@ def init_ivf_store(
     if dim_row is not None and dim_row[0] is not None:
         q = q.filter(F.size("__q") == dim_row[0])
     seeds = ivf_seed_centroids(q, k)
-    merge_append(seeds, seeds_path, id_col="__sid", partition_col=None, batch_seq=0)
+    merge_append(seeds, seeds_path, partition_col=None, batch_seq=0)
     spark = initial_vecs.sparkSession
     persisted = read_current(spark, seeds_path, id_col="__sid")
     assigned = _ivf_assign(q, persisted.select("__sid", "__sq"), 0)
-    merge_append(assigned, assign_path, id_col="__id", partition_col=None, batch_seq=0)
+    merge_append(assigned, assign_path, partition_col=None, batch_seq=0)
 
 
 def run_ivf_maintenance(
@@ -96,13 +96,7 @@ def run_ivf_maintenance(
         if dim_row is not None:
             q = q.filter(F.size("__q") == dim_row[0])
         assigned = _ivf_assign(q, seeds, 1)
-        merge_append(
-            assigned,
-            assign_path,
-            id_col="__id",
-            partition_col=None,
-            batch_seq=batch_id + 1,
-        )
+        merge_append(assigned, assign_path, partition_col=None, batch_seq=batch_id + 1)
 
     return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 

@@ -38,12 +38,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
-from wellmeet_data_pipeline_spark.sinks.merge import (
-    merge_append,
-    read_current,
-    read_current_or_none,
+from wellmeet_data_pipeline_spark.sinks.merge import read_current
+from wellmeet_data_pipeline_spark.streaming.pipeline import (
+    landing_stream,
+    run_partials,
+    unseen,
 )
-from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream
 
 
 def _normalize_edges(df: DataFrame, id_a: str, id_b: str) -> DataFrame:
@@ -70,23 +70,15 @@ def run_streaming_kcore_edges(
     id_a: str = "id_a",
     id_b: str = "id_b",
 ) -> list[StreamingQueryProgress]:
-    """Landing edge batches -> deduped canonical edge store, availableNow."""
-    stream = landing_stream(spark, landing_dir, schema)
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        new = _normalize_edges(batch_df, id_a, id_b)
-        stored = read_current_or_none(
-            spark, edge_store, id_col=["id_a", "id_b"]
-        )
-        if stored is not None:
-            new = new.join(
-                stored.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
-            )
-        merge_append(
-            new, edge_store, id_col="id_a", partition_col=None, batch_seq=batch_id
-        )
-
-    return drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
+    """Landing edge batches -> deduped canonical edge store, availableNow.
+    A batch with no new edge (self-loops only, or all re-delivered)
+    commits nothing."""
+    return run_partials(
+        landing_stream(spark, landing_dir, schema), edge_store, checkpoint_dir,
+        lambda batch: unseen(
+            spark, _normalize_edges(batch, id_a, id_b), edge_store, ["id_a", "id_b"]
+        ),
+    )
 
 
 def current_kcore(

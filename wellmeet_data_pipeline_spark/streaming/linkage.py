@@ -27,11 +27,7 @@ from pyspark.sql.types import StructType
 
 from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
-from wellmeet_data_pipeline_spark.streaming.pipeline import (
-    append_nonempty,
-    drain,
-    landing_stream,
-)
+from wellmeet_data_pipeline_spark.streaming.pipeline import landing_stream, run_partials
 
 _REGISTRY_SCHEMA = "entity_id long, entity_name string"
 
@@ -52,9 +48,7 @@ def run_streaming_fuzzy_upsert(
     1-short variant was registered first)."""
     from wellmeet_data_pipeline_spark.operators.linkage import fuzzy_link_edit1
 
-    stream = landing_stream(spark, landing_dir, schema)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def inserts(batch_df: DataFrame) -> DataFrame:
         # exact within-batch dedup: keep the lowest record id per name.
         # NULL ids are dropped too — entity_id is the registry identity
         # (NULL join keys never match, so a NULL-id record would bypass
@@ -108,11 +102,11 @@ def run_streaming_fuzzy_upsert(
                 .distinct()
             )
             recs = recs.join(matched, "entity_id", "left_anti")
-        append_nonempty(
-            recs.select("entity_id", "entity_name"), store_path, "entity_id", batch_id
-        )
+        return recs.select("entity_id", "entity_name")
 
-    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
+    return run_partials(
+        landing_stream(spark, landing_dir, schema), store_path, checkpoint_dir, inserts
+    )
 
 
 def current_entities(spark: SparkSession, store_path: str) -> DataFrame:

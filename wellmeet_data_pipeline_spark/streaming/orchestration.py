@@ -27,8 +27,8 @@ from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.operators.projections import fill_rds_defaults, require_fields
 from wellmeet_data_pipeline_spark.pipelines import ingest_reviews
 from wellmeet_data_pipeline_spark.schemas import RESTAURANT
-from wellmeet_data_pipeline_spark.sinks.merge import merge_append, read_current_or_none
-from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream
+from wellmeet_data_pipeline_spark.sinks.merge import merge_append
+from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream, unseen
 
 
 def _read_backlog_or_none(spark: SparkSession, path: str) -> DataFrame | None:
@@ -151,16 +151,10 @@ def run_orchestration(
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         valid = fill_rds_defaults(require_fields(batch_df, ["place_id", "name"]))
         valid = valid.dropDuplicates(["place_id"])
-        cur = read_current_or_none(spark, restaurant_store, id_col="place_id")
-        existing = (
-            cur.select("place_id") if cur is not None
-            else local_frame(spark, [], "place_id string")
-        )
-        fresh = valid.join(existing, "place_id", "left_anti")
+        fresh = unseen(spark, valid, restaurant_store, "place_id")
         # K5's one-Batch-job-per-restaurant → seed frame over the NEW keys
         if max_keys_per_batch is None:
-            merge_append(fresh, restaurant_store, id_col="place_id",
-                         partition_col=None, batch_seq=batch_id)
+            merge_append(fresh, restaurant_store, partition_col=None, batch_seq=batch_id)
             new_place_ids = [r["place_id"] for r in fresh.select("place_id").collect()]
             if new_place_ids:
                 ingest_reviews(
@@ -177,8 +171,7 @@ def run_orchestration(
         # store commit replays with fresh unchanged and the re-appended
         # todo marks collapse in _read_pending's distinct.
         _append_marks(fresh.select("place_id"), backlog_store, "todo")
-        merge_append(fresh, restaurant_store, id_col="place_id", partition_col=None,
-                     batch_seq=batch_id)
+        merge_append(fresh, restaurant_store, partition_col=None, batch_seq=batch_id)
         pending = _read_pending(spark, backlog_store)
         if pending is None:
             return

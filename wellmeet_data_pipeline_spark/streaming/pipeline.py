@@ -14,8 +14,15 @@ micro-batches:
                     cross-batch id dedup via watermark + dropDuplicates;
                     state size is in drain()'s progress (numRowsTotal)
   T4 idempotency    foreachBatch -> merge_append sink (exactly-once per id
-                    through the dedup-on-read view); partial-count stores
-                    write through append_nonempty
+                    through the dedup-on-read view); every partial store
+                    is one run_partials body (foreachBatch -> a batch's
+                    partial -> append_nonempty -> drain) read back by
+                    read_partials under identity (*keys, batch seq), so
+                    a replayed batch re-appends its own identity and
+                    vanishes on read
+  K2 insert-if-     unseen(frame, store, key): the rows whose key the
+     absent         store does not hold yet (left anti-join; the frame
+                    itself before the store's first commit)
   T5 backpressure   maxFilesPerTrigger replaces the [:10] caps and sleeps
   T6 late data      explicit watermark instead of the silent newest-first
                     assumption (naver_crawler.py:243-247); the rows it
@@ -25,13 +32,19 @@ micro-batches:
 
 from __future__ import annotations
 
+from collections.abc import Callable, Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
-from wellmeet_data_pipeline_spark.sinks.merge import merge_append
+from wellmeet_data_pipeline_spark.sinks.merge import (
+    BATCH_COL,
+    merge_append,
+    read_current_or_none,
+)
 
 
 def landing_stream(
@@ -66,9 +79,7 @@ def drain(writer: DataStreamWriter, checkpoint_dir: str) -> list[StreamingQueryP
     return query.recentProgress
 
 
-def append_nonempty(
-    frame: DataFrame, store: str, id_col: str | list[str], batch_seq: int
-) -> None:
+def append_nonempty(frame: DataFrame, store: str, batch_seq: int) -> None:
     """merge_append one micro-batch's rows unless there are none.  A
     zero-row first commit would leave a zero-part store (the
     store-poisoning case read_current_or_none's docstring warns about),
@@ -78,9 +89,48 @@ def append_nonempty(
     try:
         if frame.isEmpty():
             return
-        merge_append(frame, store, id_col=id_col, partition_col=None, batch_seq=batch_seq)
+        merge_append(frame, store, partition_col=None, batch_seq=batch_seq)
     finally:
         frame.unpersist()
+
+
+def run_partials(
+    stream: DataFrame,
+    store: str,
+    checkpoint_dir: str,
+    partial: Callable[[DataFrame], DataFrame],
+) -> list[StreamingQueryProgress]:
+    """T4: the one body of every partial store.  Each micro-batch appends
+    `partial(batch)` under its batch id (empty partials commit nothing);
+    runs one availableNow activation and returns its progress."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        append_nonempty(partial(batch_df), store, batch_id)
+
+    return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
+
+
+def read_partials(
+    spark: SparkSession, store: str, keys: Sequence[str]
+) -> DataFrame | None:
+    """The run_partials store deduped on (*keys, batch seq): one row per
+    key per batch, so a replayed batch's re-appended partials collapse
+    while distinct batches' partials all survive for the caller's
+    rollup.  None before the first commit."""
+    return read_current_or_none(spark, store, id_col=[*keys, BATCH_COL])
+
+
+def unseen(
+    spark: SparkSession, frame: DataFrame, store: str, key: str | list[str]
+) -> DataFrame:
+    """K2 insert-if-absent: the rows of `frame` whose `key` the store does
+    not hold yet (left anti-join against the first-wins view); `frame`
+    itself before the store's first commit."""
+    cur = read_current_or_none(spark, store, id_col=key)
+    if cur is None:
+        return frame
+    keys = [key] if isinstance(key, str) else key
+    return frame.join(cur.select(*keys), key, "left_anti")
 
 
 def run_ingest_pipeline(
@@ -101,8 +151,7 @@ def run_ingest_pipeline(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         fresh = batch_df.dropDuplicates([id_col])  # D1 within the batch
-        merge_append(fresh, store_path, id_col=id_col, partition_col=partition_col,
-                     batch_seq=batch_id)
+        merge_append(fresh, store_path, partition_col=partition_col, batch_seq=batch_id)
 
     return drain(valid.writeStream.foreachBatch(write_batch), checkpoint_dir)
 

@@ -45,7 +45,7 @@ from wellmeet_data_pipeline_spark.operators.retrieval import (
     bm25_rank_cut,
 )
 from wellmeet_data_pipeline_spark.sinks.merge import merge_append, read_current
-from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream
+from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream, unseen
 
 
 def run_lexical_index_pipeline(
@@ -61,7 +61,6 @@ def run_lexical_index_pipeline(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         from wellmeet_data_pipeline_spark.operators.dedup import dedup_keep_first
-        from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
 
         deduped = dedup_keep_first(batch_df, id_col, text_col)
         # first-version-wins at the DOC grain, not just the posting-key
@@ -72,11 +71,7 @@ def run_lexical_index_pipeline(
         # a crash between the postings and doclen writes self-heals,
         # because the doc stays "new" until doclen lands and
         # dedup-on-read collapses the re-appended postings.
-        seen = read_current_or_none(spark, f"{store_path}/doclen", id_col=id_col)
-        if seen is not None:
-            deduped = deduped.join(
-                seen.select(id_col), id_col, "left_anti"
-            )
+        deduped = unseen(spark, deduped, f"{store_path}/doclen", id_col)
         toks = _doc_tokens(deduped, text_col, id_col)
         postings = (
             toks.groupBy(id_col, "term")
@@ -90,10 +85,9 @@ def run_lexical_index_pipeline(
         # (dl = 0) — the doclen family is what defines N and avgdl, and
         # the batch scorer counts every document toward both
         doclen = _doc_lengths(deduped, text_col, id_col)
-        merge_append(postings, f"{store_path}/postings", id_col="posting_key",
-                     partition_col=None, batch_seq=batch_id)
-        merge_append(doclen, f"{store_path}/doclen", id_col=id_col,
-                     partition_col=None, batch_seq=batch_id)
+        merge_append(postings, f"{store_path}/postings", partition_col=None,
+                     batch_seq=batch_id)
+        merge_append(doclen, f"{store_path}/doclen", partition_col=None, batch_seq=batch_id)
 
     return drain(
         landing_stream(spark, landing_dir, schema).writeStream.foreachBatch(write_batch),

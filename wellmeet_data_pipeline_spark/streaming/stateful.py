@@ -228,21 +228,18 @@ def run_streaming_transitions(
     partial-count store contract shared with the CUSUM / PSI / hot-key
     monitors (streaming/analytics.py)."""
     from wellmeet_data_pipeline_spark.streaming.pipeline import (
-        append_nonempty,
-        drain,
         landing_stream,
+        run_partials,
     )
 
     stream = landing_stream(spark, landing_dir, schema)
-    trans = transition_stream(stream, entity_col, ts_col, id_col, state_col)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        counts = batch_df.groupBy("from_state", "to_state").agg(
+    return run_partials(
+        transition_stream(stream, entity_col, ts_col, id_col, state_col),
+        store_path, checkpoint_dir,
+        lambda batch: batch.groupBy("from_state", "to_state").agg(
             F.count("*").cast("long").alias("n_trans")
-        )
-        append_nonempty(counts, store_path, "from_state", batch_id)
-
-    return drain(trans.writeStream.foreachBatch(write_batch), checkpoint_dir)
+        ),
+    )
 
 
 def current_transition_probs(spark, store_path: str) -> DataFrame:
@@ -255,11 +252,9 @@ def current_transition_probs(spark, store_path: str) -> DataFrame:
     from wellmeet_data_pipeline_spark.operators.stats import (
         transition_probs_from_counts,
     )
-    from wellmeet_data_pipeline_spark.sinks.merge import read_current_or_none
+    from wellmeet_data_pipeline_spark.streaming.pipeline import read_partials
 
-    cur = read_current_or_none(
-        spark, store_path, id_col=["from_state", "to_state", "_batch_seq"]
-    )
+    cur = read_partials(spark, store_path, ["from_state", "to_state"])
     if cur is None:
         return local_frame(
             spark, [], "from_state string, to_state string, n_trans bigint, p_micro bigint"

@@ -95,10 +95,7 @@ def run_streaming_domain_caps(
             "domain",
             (F.col("__r") <= cap).cast("int").alias("keep"),
         ).unionByName(non_url)
-        merge_append(
-            decisions, decision_store, id_col=id_col, partition_col=None,
-            batch_seq=batch_id,
-        )
+        merge_append(decisions, decision_store, partition_col=None, batch_seq=batch_id)
 
     return drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
 
