@@ -148,7 +148,7 @@ def patch_merge_append_to_kill():
 
     merge_mod.merge_append = commit_then_die
     # bound at module import: all four twins (bloom, kcore, psi, cusum)
-    # write through pipeline.run_partials -> append_nonempty
+    # write through pipeline.run_partials -> merge_append
     pipeline_mod.merge_append = commit_then_die
 
 

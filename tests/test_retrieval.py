@@ -254,6 +254,28 @@ def test_lexical_index_replay_idempotent(spark, tmp_path):
     assert [(r.doc_id, r.dl) for r in dl] == [(1, 3)]
 
 
+def test_lexical_index_of_token_free_docs_scores_nothing(spark, tmp_path):
+    """An index whose landed documents hold no token commits no posting
+    part file; scoring it returns no rows instead of failing."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from wellmeet_data_pipeline_spark.streaming.retrieval import (
+        bm25_topk_from_store,
+        run_lexical_index_pipeline,
+    )
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "b1.json").write_text(json.dumps([{"doc_id": 1, "text": " !! "}]))
+    store = str(tmp_path / "store")
+    run_lexical_index_pipeline(
+        spark, str(landing), store, str(tmp_path / "ckpt"), StructType.fromDDL("doc_id long, text string")
+    )
+    assert bm25_topk_from_store(spark, store, QUERIES).collect() == []
+
+
 def test_hybrid_from_stores_matches_batch(spark, tmp_path):
     """Hybrid retrieval served from the streamed lexical + embedding
     stores equals the batch BM25+cosine RRF fusion on the same corpus."""
@@ -602,8 +624,10 @@ def test_thread_pool_jobs_keep_caller_job_group(spark, run):
     assert set(tracker.getJobIdsForGroup(None)) - before == set()
 
 
-# BM25 corner corpus: two NULL ids, NULL / empty / whitespace-
-# only texts, punctuation the normalization strips
+# BM25 corner corpus: three NULL ids, NULL / empty / whitespace-
+# only texts, punctuation the normalization strips; "table" is a
+# feedback candidate of every query asking "fast" that also occurs in a
+# NULL-id document, so its df is 2 (doc 0 and the NULL-id group)
 EDGE_DOCS = [
     (0, "fast query scan fast table"),
     (1, "join hash join merge join"),
@@ -615,6 +639,7 @@ EDGE_DOCS = [
     (None, "fast join orphan"),
     (None, "fast again"),
     (7, "fast fast fast"),
+    (None, "table lamp"),
 ]
 
 EDGE_QUERIES = {
@@ -627,20 +652,17 @@ EDGE_QUERIES = {
 }
 
 
-def _duck_bm25(docs_parquet, queries):
-    """(query_id, doc_id, score_int) from the registry's DuckDB BM25
-    oracle CTEs over `docs_parquet`, with the query map normalized the
-    way bm25_scores normalizes it."""
+def _duck_oracle(sql, docs_parquet, queries):
+    """Rows of a registry DuckDB oracle over `docs_parquet`, with its
+    pinned query map replaced by `queries` normalized the way the
+    operators normalize them."""
     import duckdb
 
     from wellmeet_data_pipeline_spark.plans.queries_core import _NORM_SQL
-    from wellmeet_data_pipeline_spark.plans.queries_retrieval import (
-        _BM25_CTES,
-        _RETRIEVAL_QT_VALUES,
-    )
+    from wellmeet_data_pipeline_spark.plans.queries_retrieval import _RETRIEVAL_QT_VALUES
 
     pinned = f"qt(query_id, term) AS (VALUES {_RETRIEVAL_QT_VALUES})"
-    assert pinned in _BM25_CTES
+    assert pinned in sql
     rows = [(q, t) for q, ts in sorted(queries.items()) for t in ts]
     raw = (
         "VALUES " + ", ".join(f"({q}, '{t}')" for q, t in rows)
@@ -648,21 +670,36 @@ def _duck_bm25(docs_parquet, queries):
         else "SELECT CAST(NULL AS INTEGER), CAST(NULL AS VARCHAR) WHERE false"
     )
     norm = _NORM_SQL.replace("lower(text)", "lower(term)")
-    ctes = _BM25_CTES.replace(
+    sql = sql.replace(
         pinned,
         f"qt AS (SELECT query_id, {norm} AS term FROM ({raw}) v(query_id, term))",
     )
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs_parquet}/*.parquet'")
-    return sorted(con.execute(f"WITH {ctes} SELECT query_id, doc_id, s FROM bs").fetchall())
+    return sorted(con.execute(sql).fetchall())
+
+
+def _duck_bm25(docs_parquet, queries):
+    """(query_id, doc_id, score_int) from the registry's DuckDB BM25
+    oracle CTEs."""
+    from wellmeet_data_pipeline_spark.plans.queries_retrieval import _BM25_CTES
+
+    return _duck_oracle(
+        f"WITH {_BM25_CTES} SELECT query_id, doc_id, s FROM bs", docs_parquet, queries
+    )
+
+
+def _edge_docs(spark, tmp_path):
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(EDGE_DOCS, "doc_id long, text string").coalesce(1).write.parquet(path)
+    return path
 
 
 @pytest.mark.parametrize("case", sorted(EDGE_QUERIES))
 def test_bm25_edges_match_duckdb_oracle(spark, tmp_path, case):
     """bm25_scores equals the registry oracle's scores on every corner:
     NULL ids count toward df (as one group) but are never scored."""
-    path = str(tmp_path / "docs.parquet")
-    spark.createDataFrame(EDGE_DOCS, "doc_id long, text string").coalesce(1).write.parquet(path)
+    path = _edge_docs(spark, tmp_path)
     queries = EDGE_QUERIES[case]
     got = sorted(
         tuple(r)
@@ -675,27 +712,98 @@ def test_bm25_edges_match_duckdb_oracle(spark, tmp_path, case):
         assert got  # the case scores something, so equality is not vacuous
 
 
-def test_bm25_request_job_count(spark):
-    """One BM25 request runs at most 6 Spark jobs: the stats aggregate
-    while the plan is built (2) and the collect (4: two shuffles, the
-    broadcast and the result)."""
-    import inspect
+@pytest.mark.parametrize(
+    "op", ["bm25_prf_topk", "qld_topk"], ids=["prf", "qld"]
+)
+@pytest.mark.parametrize("case", sorted(EDGE_QUERIES))
+def test_prf_qld_edges_match_duckdb_oracle(spark, tmp_path, op, case):
+    """bm25_prf_topk and qld_topk equal their registry oracles on the
+    BM25 corner corpus: NULL-id rows count toward df and cf (the NULL
+    group as one document) but are never ranked."""
+    from wellmeet_data_pipeline_spark.operators import retrieval
+    from wellmeet_data_pipeline_spark.plans.queries import REGISTRY
 
+    path = _edge_docs(spark, tmp_path)
+    queries = EDGE_QUERIES[case]
+    kwargs = {"k": 5, "fb_docs": 5, "fb_terms": 3} if op == "bm25_prf_topk" else {"k": 10}
+    got = sorted(
+        tuple(r)
+        for r in getattr(retrieval, op)(spark.read.parquet(path), queries, **kwargs).collect()
+    )
+    assert got == _duck_oracle(REGISTRY[op].oracle, path, queries)
+    if case not in ("empty_map", "absent_term"):
+        assert got
+
+
+def test_eval_bm25_judges_null_id_group_like_oracle(spark, tmp_path):
+    """retrieval_eval_bm25 equals its oracle when the NULL-id rows hold
+    two terms of a pinned query: the oracle judges the NULL-id group as
+    one relevant document, so that query's n_rel counts it."""
+    import duckdb
+
+    from wellmeet_data_pipeline_spark.plans.queries import REGISTRY
+
+    sf = str(tmp_path / "sf")
+    docs = EDGE_DOCS + [(None, "stream window"), (8, "stream window batch")]
+    spark.createDataFrame(docs, "doc_id long, text string").coalesce(1).write.parquet(
+        sf + "/documents.parquet"
+    )
+    spec = REGISTRY["retrieval_eval_bm25"]
+    got = sorted(tuple(r) for r in spec.fn(spark, sf).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet/*.parquet'")
+    assert got == sorted(con.execute(spec.oracle).fetchall())
+    assert {r[0]: r[1] for r in got}[2] == 2  # doc 8 and the NULL-id group
+
+
+# (registry query, its bound): bm25_topk runs the stats aggregate while
+# the plan is built (2) and the collect (4: two shuffles, the broadcast
+# and the result); the others are the counts measured on this plan
+_REQUEST_JOBS = {
+    "bm25_topk": 6,
+    "bm25_prf_topk": 15,
+    "qld_topk": 7,
+    "retrieval_eval_bm25": 11,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_REQUEST_JOBS))
+def test_bm25_request_job_count(spark, name):
+    """One lexical request runs at most its pinned number of Spark jobs."""
     from conftest import SHARED_SF_DIR
     from wellmeet_data_pipeline_spark.catalog import table
+    from wellmeet_data_pipeline_spark.plans.queries import REGISTRY
 
     docs = table(spark, SHARED_SF_DIR, "documents")
     queries = {0: ["fast", "query"], 1: ["join"], 2: ["stream", "window", "batch", "hash"]}
     sc = spark.sparkContext
-    sc.setJobGroup("bm25-jobs", "bm25 request job count")
+    group = f"lexical-jobs-{name}"
+    sc.setJobGroup(group, "lexical request job count")
     try:
-        rows = bm25_topk(docs, queries, k=10).collect()
+        if name == "bm25_topk":
+            rows = bm25_topk(docs, queries, k=10).collect()
+        else:
+            rows = REGISTRY[name].fn(spark, SHARED_SF_DIR).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert rows
-    assert len(sc.statusTracker().getJobIdsForGroup("bm25-jobs")) <= 6
-    assert "localCheckpoint" not in inspect.getsource(bm25_scores)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= _REQUEST_JOBS[name]
+
+
+def test_lexical_plan_is_written_once():
+    """Every lexical scorer goes through bm25_scores' plan: the old
+    frame-joining scorer is gone, and neither the batch nor the streamed
+    scorer checkpoints or runs a thread pool."""
+    import inspect
+
+    from wellmeet_data_pipeline_spark.operators import retrieval
+    from wellmeet_data_pipeline_spark.streaming import retrieval as streamed
+
+    assert not hasattr(retrieval, "_bm25_score_frames")
+    for mod in (retrieval, streamed):
+        src = inspect.getsource(mod)
+        assert "localCheckpoint" not in src and "ThreadPoolExecutor" not in src, mod
 
 
 def test_doc_lengths_null_text_is_zero_without_ansi(spark):

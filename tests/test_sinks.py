@@ -94,6 +94,33 @@ def test_merge_append_replay_same_batch(spark, tmp_path):
     assert read_current(spark, store).count() == 1
 
 
+def test_merge_append_zero_row_batch_commits_no_part_file(spark, tmp_path):
+    """A zero-row batch writes no part file: under an explicit seq it
+    commits nothing (its staging directory is removed), under a claimed
+    seq an empty batch directory, so the reader's pin moves past it."""
+    import glob
+    import os
+
+    from wellmeet_data_pipeline_spark.sinks.merge import committed_seq_pin
+
+    store = str(tmp_path / "store")
+    empty = _reviews(spark, [])
+    merge_append(_reviews(spark, [("r1", "p1", "v1")]), store, partition_col=None, batch_seq=0)
+    parts = sorted(glob.glob(store + "/**/*.parquet", recursive=True))
+    assert merge_append(empty, store, partition_col=None, batch_seq=1) == 1
+    assert merge_append(empty, store, partition_col=None, batch_seq=0) == 0
+    assert sorted(glob.glob(store + "/**/*.parquet", recursive=True)) == parts
+    assert not glob.glob(store + "/batch_commit=1") and not os.listdir(store + "/_staging")
+
+    claimed = str(tmp_path / "claimed")
+    merge_append(_reviews(spark, [("r1", "p1", "v1")]), claimed, batch_seq=None)
+    seq = merge_append(empty, claimed, batch_seq=None)
+    assert os.listdir(os.path.join(claimed, f"batch_commit={seq}")) == []
+    assert committed_seq_pin(claimed) == seq
+    merge_append(_reviews(spark, [("r2", "p1", "v1")]), claimed, batch_seq=None)
+    assert {r["id"] for r in read_current(spark, claimed).collect()} == {"r1", "r2"}
+
+
 def test_http_sink_errors_as_data(spark):
     df = spark.createDataFrame(
         [("1", "ok"), ("2", "boom"), ("3", "ok")], "id string, content string"

@@ -182,9 +182,9 @@ def test_partial_store_helpers(spark, tmp_path, case):
 
 def test_merge_append_store_contract_is_structural():
     """The write takes no identity and the batch column is a constant;
-    in streaming/ only run_partials appends partials, and no module
-    spells the batch column itself."""
-    import ast
+    run_partials appends each partial straight through merge_append (no
+    emptiness probe of its own: merge_append commits nothing for an
+    empty batch), and no module in streaming/ spells the batch column."""
     import glob
     import inspect
 
@@ -195,20 +195,14 @@ def test_merge_append_store_contract_is_structural():
     assert not {"id_col", "batch_col"} & params(merge.merge_append)
     for fn in (merge.read_current, merge.read_current_or_none, merge.compact):
         assert "batch_col" not in params(fn), fn.__name__
-    assert "id_col" not in params(pipeline.append_nonempty)
+    assert not hasattr(pipeline, "append_nonempty")
 
-    callers = []
+    body = inspect.getsource(pipeline.run_partials)
+    assert "merge_append(partial(batch_df)" in body and "isEmpty" not in body
     for path in sorted(glob.glob(os.path.join(os.path.dirname(pipeline.__file__), "*.py"))):
         with open(path) as fh:
             src = fh.read()
         assert '"_batch_seq"' not in src and "'_batch_seq'" not in src, path
-        for top in ast.parse(src).body:
-            for node in ast.walk(top):
-                if isinstance(node, ast.Call) and "append_nonempty" in (
-                    getattr(node.func, "id", None), getattr(node.func, "attr", None)
-                ):
-                    callers.append((os.path.basename(path), getattr(top, "name", None)))
-    assert callers == [("pipeline.py", "run_partials")]
 
 
 def test_embedding_pipeline_and_near_dups(spark, tmp_path):
@@ -265,8 +259,10 @@ def test_full_orchestration_dag(spark, tmp_path):
             ]
         return fetch
 
+    backlog = str(tmp_path / "backlog")
     _drop(landing, "r1.json", [rest("p1", "집밥"), rest(None, "invalid"), rest("p2", "국수")])
-    run_orchestration(spark, str(landing), rest_store, rev_store, ckpt, make_review_fetcher())
+    run_orchestration(spark, str(landing), rest_store, rev_store, ckpt, make_review_fetcher(),
+                      backlog_store=backlog)
 
     from wellmeet_data_pipeline_spark.sinks.merge import read_current
 
@@ -278,9 +274,108 @@ def test_full_orchestration_dag(spark, tmp_path):
 
     # second activation: p2 re-landed (no new reviews crawled), p3 new
     _drop(landing, "r2.json", [rest("p2", "국수"), rest("p3", "곱창")])
-    run_orchestration(spark, str(landing), rest_store, rev_store, ckpt, make_review_fetcher())
+    run_orchestration(spark, str(landing), rest_store, rev_store, ckpt, make_review_fetcher(),
+                      backlog_store=backlog)
     assert read_current(spark, rest_store, id_col="place_id").count() == 3
     assert read_current(spark, rev_store).count() == 6  # only p3's crawl ran
+
+
+def test_orchestration_crash_before_review_ingest_loses_no_reviews(spark, tmp_path):
+    """A crash after the restaurant-store commit but before the review
+    ingest loses no review crawl, capped or not: the todo marks are
+    durable before the store commit, so the restarted activation (whose
+    anti-join finds every place already stored) still fetches them."""
+    from pyspark.errors import StreamingQueryException
+
+    from wellmeet_data_pipeline_spark.sinks.merge import read_current, read_current_or_none
+    from wellmeet_data_pipeline_spark.streaming.orchestration import run_orchestration
+
+    def rest(pid, name):
+        return {
+            "place_id": pid, "name": name, "thumbnail_url": "", "category": "한식",
+            "page": 1, "origin_address": "서울특별시 마포구 마포대로 109",
+            "address": "서울특별시 마포구 마포대로 109", "latitude": None, "longitude": None,
+        }
+
+    failing = {"on": True}
+
+    def fetch(place_id, page):
+        if failing["on"]:
+            raise RuntimeError("fetcher down")
+        return [
+            {"author": "a", "content": f"review {i} of {place_id}", "visit_date": "d",
+             "place_id": place_id}
+            for i in range(2)
+        ]
+
+    for cap in (None, 1):
+        root = tmp_path / f"cap_{cap}"
+        landing = root / "landing"
+        landing.mkdir(parents=True)
+        rest_store, rev_store = str(root / "rest"), str(root / "rev")
+        ckpt, backlog = str(root / "ckpt"), str(root / "backlog")
+        _drop(landing, "r1.json", [rest("p1", "집밥"), rest("p2", "국수")])
+
+        def activate():
+            return run_orchestration(
+                spark, str(landing), rest_store, rev_store, ckpt, fetch,
+                backlog_store=backlog, max_keys_per_batch=cap,
+            )
+
+        failing["on"] = True
+        with pytest.raises(StreamingQueryException):
+            activate()
+        assert read_current(spark, rest_store, id_col="place_id").count() == 2
+        assert read_current_or_none(spark, rev_store) is None
+
+        failing["on"] = False
+        activate()
+        revs = read_current(spark, rev_store, id_col=["place_id", "id"])
+        assert revs.count() == 4, cap
+        assert {r["place_id"] for r in revs.collect()} == {"p1", "p2"}
+
+
+def test_replay_commits_no_empty_part_file(spark, tmp_path):
+    """Replaying a landed file under a fresh checkpoint writes rows that
+    are all anti-joined away: neither the lexical index nor ExactSubstr's
+    two stores may gain a part file for them."""
+    from pyspark.sql.types import StructType
+
+    from wellmeet_data_pipeline_spark.streaming.exactsubstr import run_exactsubstr_dedup
+    from wellmeet_data_pipeline_spark.streaming.retrieval import run_lexical_index_pipeline
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _drop(landing, "b1.json", [
+        {"doc_id": 1, "text": "the quick brown fox jumps over the lazy dog"},
+        {"doc_id": 2, "text": "quick brown fox ran away"},
+    ])
+    schema = StructType.fromDDL("doc_id long, text string")
+    lex = str(tmp_path / "lex")
+    grams, out = str(tmp_path / "grams"), str(tmp_path / "out")
+
+    def run(ckpt):
+        run_lexical_index_pipeline(spark, str(landing), lex, str(tmp_path / f"lex_{ckpt}"), schema)
+        run_exactsubstr_dedup(
+            spark, str(landing), grams, out, str(tmp_path / f"xs_{ckpt}"), schema
+        )
+
+    def listing():
+        return {
+            store: sorted(
+                os.path.relpath(os.path.join(root, f), store)
+                for root, _dirs, files in os.walk(store)
+                for f in files
+                if f.endswith(".parquet")
+            )
+            for store in (lex + "/postings", lex + "/doclen", grams, out)
+        }
+
+    run("c1")
+    before = listing()
+    assert all(before.values()), before
+    run("c2")
+    assert listing() == before
 
 
 def test_session_window_stream_matches_batch(spark, tmp_path):

@@ -25,22 +25,27 @@ Scale/determinism notes shared by every operator here:
 - rankings are ordered by the integer score (never the float), ties
   broken by doc id — stable across partitionings and engines.
 
-Plan shape: bm25_scores reads the corpus through ONE tokenize
-projection (id, tokens).  One global aggregate over it brings N,
-total_dl and the df of each distinct query term back to the driver —
-a handful of numbers.  Scoring then keeps only the documents sharing a
-query term, explodes their matched terms with tf and dl on the row, and
-fans them out to the queries through a broadcast local frame, so no
-corpus-grain frame ever crosses a shuffle: the shuffles carry matched
-(query, doc) rows, and the final rank window partitions on query_id.
-Query-side frames are catalog.local_frame LocalRelations, which scan
-without a Spark job.  qld_topk and bm25_prf_topk still build the
-corpus-grain (doc, term) stream and aggregate it map-side after a
-broadcast semi-join on the query's own terms.
+Plan shape: every lexical scorer — bm25_scores, bm25_prf_topk,
+qld_topk, the registry's BM25 eval query and the streamed index's
+scorer — plans a query the same way.  The corpus is read
+through ONE tokenize projection (id, __toks).  Step 1, _corpus_stats:
+one global aggregate over it brings N, total_dl and each query term's
+statistic (df, or cf for QLD) back to the driver — a handful of
+numbers.  Step 2, _matched: a lazy frame keeps only the documents
+sharing a query term and explodes their matched terms with tf and dl on
+the row.  Scoring fans those rows out to the queries through a
+broadcast local frame, so no corpus-grain frame ever crosses a shuffle:
+the shuffles carry matched (query, doc) rows, and the final rank window
+partitions on query_id.  Query-side frames are catalog.local_frame
+LocalRelations, which scan without a Spark job, and nothing is
+checkpointed.  The streamed index (streaming/retrieval.py) supplies the
+same two steps from its stores: one aggregate, and postings ⋈ doclen as
+the matched frame.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from typing import Mapping, Sequence
 
 import pandas as pd
@@ -88,15 +93,116 @@ def _tokens(text_col: str) -> Column:
     )
 
 
-def _query_terms_df(spark, queries: Mapping[int, Sequence[str]]) -> DataFrame:
-    """Literal (query_id, term) frame from the pinned query map.  Terms
-    are lowercased through the same normalization as the corpus so a
-    caller-supplied 'Fast' matches the indexed 'fast'."""
+def _query_terms(spark, queries: Mapping[int, Sequence[str]]) -> list[tuple[int, str]]:
+    """(query_id, term) rows of the pinned query map, each term lowercased
+    through the corpus normalization so a caller-supplied 'Fast' matches
+    the indexed 'fast'; terms that normalize to "" are dropped.  The
+    normalization runs on a local frame, so the collect runs no job."""
     rows = [(int(q), t) for q, terms in sorted(queries.items()) for t in terms]
-    qt = local_frame(spark, rows, "query_id long, term string")
-    return qt.select(
+    qt = local_frame(spark, rows, "query_id long, term string").select(
         F.col("query_id").cast("int").alias("query_id"),
         normalized_text(F.col("term")).alias("term"),
+    )
+    return [(r.query_id, r.term) for r in qt.collect() if r.term]
+
+
+def _token_frame(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, __toks): the one tokenize projection every lexical plan reads."""
+    return docs.select(F.col(id_col), _tokens(text_col).alias("__toks"))
+
+
+def _tf(term: Column) -> Column:
+    """Occurrences of `term` in the row's __toks."""
+    return F.size(F.filter("__toks", lambda x: x == term)).cast("long")
+
+
+def _df(term: str, id_col: str) -> Column:
+    """Aggregate: the documents whose __toks hold `term`.  The NULL-id
+    rows together count as one document, as a group-by on the id would."""
+    has = F.array_contains("__toks", term)
+    doc_id = F.col(id_col)
+    return F.count_if(has & doc_id.isNotNull()) + F.coalesce(
+        F.max((has & doc_id.isNull()).cast("long")), F.lit(0)
+    )
+
+
+def _corpus_stats(toks: DataFrame, per_term: Sequence[Column]) -> tuple[int, int, list]:
+    """Step 1 of the lexical plan: ONE aggregate over the tokenize
+    projection brings N (every row, NULL and empty texts included),
+    total_dl and the value of each `per_term` aggregate to the driver."""
+    row = toks.agg(
+        F.count("*").alias("n_docs"),
+        F.coalesce(F.sum(F.size("__toks")), F.lit(0)).alias("total_dl"),
+        *per_term,
+    ).first()
+    return row["n_docs"], row["total_dl"], list(row[2:])
+
+
+def _matched(toks: DataFrame, terms: Sequence[str], id_col: str) -> DataFrame:
+    """Step 2 of the lexical plan, lazy: one (id, term, tf, dl) row per
+    document and distinct term of `terms` it holds.  Only documents
+    sharing a term are exploded, and a NULL-id row is never matched."""
+    doc_id = F.col(id_col)
+    terms_arr = F.array(*[F.lit(t) for t in terms]).cast("array<string>")
+    return (
+        toks.filter(doc_id.isNotNull() & F.arrays_overlap("__toks", terms_arr))
+        .select(
+            doc_id,
+            "__toks",
+            F.explode(F.array_intersect("__toks", terms_arr)).alias("term"),
+        )
+        .select(
+            doc_id,
+            "term",
+            _tf(F.col("term")).alias("tf"),
+            F.size("__toks").cast("long").alias("dl"),
+        )
+    )
+
+
+def _bm25_score(
+    matched: DataFrame,
+    qt: Sequence[tuple[int, str]],
+    df: Mapping[str, int],
+    n_docs: int,
+    total_dl: int,
+    id_col: str,
+    k1: float,
+    b: float,
+) -> DataFrame:
+    """BM25 over a matched (id, term, tf, dl) frame: a broadcast local
+    (query_id, term, df) frame fans the matched rows out to the queries
+    that asked, N and total_dl enter as literals, and the contributions
+    sum exactly per (query, id).  Returns (query_id, id, score,
+    score_int, n_terms): n_terms counts the query's terms the document
+    holds (a repeated query term each time); the optimizer drops it
+    from the aggregate when no consumer reads it."""
+    qdf = local_frame(
+        matched.sparkSession,
+        [(q, t, df[t]) for q, t in qt],
+        "query_id int, term string, df long",
+    )
+    ci = _bm25_contribution(
+        F.col("tf"),
+        F.col("dl"),
+        F.col("df"),
+        F.lit(n_docs).cast("long"),
+        F.lit(total_dl).cast("long"),
+        k1,
+        b,
+    )
+    per_doc = (
+        matched.join(F.broadcast(qdf), "term")
+        .select("query_id", F.col(id_col), ci.alias("__ci"))
+        .groupBy("query_id", id_col)
+        .agg(F.sum("__ci").alias("score_int"), F.count("*").alias("n_terms"))
+    )
+    return per_doc.select(
+        "query_id",
+        id_col,
+        (F.col("score_int").cast("double") / F.lit(float(MICRO))).alias("score"),
+        "score_int",
+        "n_terms",
     )
 
 
@@ -118,70 +224,23 @@ def bm25_scores(
     exact bigint product, one correctly-rounded IEEE division — so both
     engines see bit-identical inputs.
 
-    Plan: the query terms are normalized on a local frame (no job), and
-    ONE aggregate over the tokenize projection returns N, total_dl and
-    the df of every distinct query term.  df counts documents holding
-    the term; the NULL-id rows together count as one document, as a
-    group-by on the id would.  Scoring is lazy: documents sharing a
-    term with the queries explode their matched terms with tf and dl
-    already on the row, and a broadcast (query_id, term, df) frame
-    fans them out to the queries that asked; N and total_dl enter as
-    literals.  A NULL-id row counts toward N, total_dl and df but is
-    never scored.  `id_col` is the corpus key: rows repeating an id
-    count toward df, and score, once per row.
+    Plan: the lexical plan's two steps (_corpus_stats for N, total_dl
+    and each distinct query term's df, then the lazy _matched frame),
+    scored by _bm25_score.  A NULL-id row counts toward N, total_dl and
+    df but is never scored.  `id_col` is the corpus key: rows repeating
+    an id count toward df, and score, once per row.
 
     Returns (query_id int, doc_id, score double, score_int bigint) for
     every document sharing at least one term with the query; score_int
     is the exact micro-grid sum the caller should rank on."""
-    spark = docs.sparkSession
-    qt = [(r.query_id, r.term) for r in _query_terms_df(spark, queries).collect()]
-    terms = sorted({t for _, t in qt if t})
-    doc_id = F.col(id_col)
-    toks = docs.select(doc_id, _tokens(text_col).alias("__toks"))
-    has = [F.array_contains("__toks", t) for t in terms]
-    stats = toks.agg(
-        F.count("*").alias("n_docs"),
-        F.coalesce(F.sum(F.size("__toks")), F.lit(0)).alias("total_dl"),
-        *[
-            F.count_if(h & doc_id.isNotNull())
-            + F.coalesce(F.max((h & doc_id.isNull()).cast("long")), F.lit(0))
-            for h in has
-        ],
-    ).first()
-    df = dict(zip(terms, stats[2:]))
-    qdf = local_frame(
-        spark,
-        [(q, t, df[t]) for q, t in qt if t],
-        "query_id int, term string, df long",
-    )
-    terms_arr = F.array(*[F.lit(t) for t in terms]).cast("array<string>")
-    matched = (
-        toks.filter(doc_id.isNotNull() & F.arrays_overlap("__toks", terms_arr))
-        .select(
-            doc_id,
-            "__toks",
-            F.explode(F.array_intersect("__toks", terms_arr)).alias("term"),
-        )
-        .select(
-            doc_id,
-            "term",
-            F.size(F.filter("__toks", lambda x: x == F.col("term"))).cast("long").alias("tf"),
-            F.size("__toks").cast("long").alias("dl"),
-        )
-    )
-    ci = _bm25_contribution(
-        F.col("tf"),
-        F.col("dl"),
-        F.col("df"),
-        F.lit(stats["n_docs"]).cast("long"),
-        F.lit(stats["total_dl"]).cast("long"),
-        k1,
-        b,
-    )
-    return _sum_contributions(
-        matched.join(F.broadcast(qdf), "term").select("query_id", doc_id, ci.alias("__ci")),
-        id_col,
-    )
+    qt = _query_terms(docs.sparkSession, queries)
+    terms = sorted({t for _, t in qt})
+    toks = _token_frame(docs, text_col, id_col)
+    n_docs, total_dl, dfs = _corpus_stats(toks, [_df(t, id_col) for t in terms])
+    return _bm25_score(
+        _matched(toks, terms, id_col), qt, dict(zip(terms, dfs)), n_docs, total_dl,
+        id_col, k1, b,
+    ).drop("n_terms")
 
 
 def _bm25_contribution(
@@ -190,8 +249,7 @@ def _bm25_contribution(
     """One (query term, doc) BM25 contribution on the micro grid, as a
     BIGINT column expression.  The idf is snapped to the micro grid
     BEFORE it enters the product, exactly as the oracle does, so the
-    ln() 1-ulp caveat is confined to the snap boundary.  bm25_scores and
-    _bm25_score_frames both build their contributions here."""
+    ln() 1-ulp caveat is confined to the snap boundary."""
     d = lambda c: c.cast("double")  # noqa: E731
     one = F.lit(1.0)
     idf_int = F.floor(
@@ -204,46 +262,6 @@ def _bm25_contribution(
     k1c = F.lit(k1) + one
     tfn = (d(tf) * k1c) / (d(tf) + F.lit(k1) * ((one - F.lit(b)) + F.lit(b) * dlr))
     return F.floor(idf_d * tfn * F.lit(float(MICRO)) + F.lit(0.5)).cast("long")
-
-
-def _sum_contributions(contrib: DataFrame, id_col: str) -> DataFrame:
-    """(query_id, id, __ci) rows -> the exact per-(query, doc) score."""
-    per_doc = contrib.groupBy("query_id", id_col).agg(F.sum("__ci").alias("score_int"))
-    return per_doc.select(
-        "query_id",
-        id_col,
-        (F.col("score_int").cast("double") / F.lit(float(MICRO))).alias("score"),
-        "score_int",
-    )
-
-
-def _bm25_score_frames(
-    qt: DataFrame,
-    tfq: DataFrame,
-    dl: DataFrame,
-    dfreq: DataFrame,
-    stats: DataFrame,
-    id_col: str,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """BM25 scores over pre-built index frames — the streaming
-    lexical-index store (streaming/retrieval.py) and the PRF passes
-    route here.  Frames: qt(query_id, term), tfq(id, term, tf),
-    dl(id, dl), dfreq(term, df), stats(n_docs, total_dl) — tfq/dfreq
-    need only cover the query's terms.  The contribution expression is
-    bm25_scores' own (_bm25_contribution), so the tiers score
-    bit-identically by construction."""
-    j = (
-        qt.join(tfq, "term")
-        .join(F.broadcast(dfreq), "term")
-        .join(dl, id_col)
-        .crossJoin(F.broadcast(stats))
-    )
-    ci = _bm25_contribution(
-        F.col("tf"), F.col("dl"), F.col("df"), F.col("n_docs"), F.col("total_dl"), k1, b
-    )
-    return _sum_contributions(j.select("query_id", id_col, ci.alias("__ci")), id_col)
 
 
 def bm25_topk(
@@ -635,94 +653,49 @@ def bm25_prf_topk(
     most frequent terms (summed tf over the feedback docs; ties break
     term-ascending) that are (a) not already query terms and (b) not
     quasi-stopwords (corpus df * df_cap_denom <= n_docs), then score the
-    EXPANDED query and cut top-k.  Both passes route through
-    _bm25_score_frames, so first- and second-pass scores live on the
-    same exact micro grid.
+    EXPANDED query and cut top-k.  Both passes score through
+    _bm25_score, so first- and second-pass scores live on the same exact
+    micro grid.
 
-    Scale shape: the corpus (doc, term) frame is consumed three times
-    (pass-1 tf, candidate-term corpus df, pass-2 tf) — checkpointed
-    once; every join against it is a broadcast semi-join on a bounded
-    term set (query terms, then candidate terms from <= fb_docs docs per
-    query), so nothing corpus-grain ever shuffles.  Feedback-doc term
-    frames are fb_docs-bounded.  Output (query_id, doc_id, score, rank).
-    """
-    qt = F.broadcast(_query_terms_df(docs.sparkSession, queries))
-    # dl as the shuffle-free _doc_lengths projection, left lazy: the old
-    # groupBy-over-toks form cost one eager-checkpoint job; consumers of
-    # the projection pay one cheap scan+regex pass instead (r13
-    # optimization round, guide §2.4 / §1.2 — fewer serial jobs)
-    dl = _doc_lengths(docs, text_col, id_col)
-    # guide §2.6 (overlap independent jobs, r14): the toks and stats
-    # eager checkpoints are independent (stats reads docs + the dl
-    # projection, never toks) but ran as two serial driver-blocking
-    # jobs; a 2-thread pool overlaps them (the customer_rfm_segments
-    # pattern).  Both inputs are plain scans, so the threads cannot race
-    # a shared lazy materialization.  Each callable carries the caller's
-    # local properties (job group, job description) into its pool thread.
-    from concurrent.futures import ThreadPoolExecutor
+    Plan: bm25_scores' aggregate for N, total_dl and the query terms' df;
+    pass 1 over the lazy matched frame; one collect of the feedback
+    candidates ((query, term, summed tf) rows, bounded by fb_docs
+    documents per query); ONE more aggregate for the candidates' df
+    (the same _df rule, so a NULL-id document counts once); the
+    expansion is chosen on the driver, and pass 2 scores the expanded
+    query with every df already known.  Output (query_id, doc_id,
+    score, rank)."""
+    qt = _query_terms(docs.sparkSession, queries)
+    terms = sorted({t for _, t in qt})
+    toks = _token_frame(docs, text_col, id_col)
+    n_docs, total_dl, dfs = _corpus_stats(toks, [_df(t, id_col) for t in terms])
+    df = dict(zip(terms, dfs))
 
-    from pyspark import inheritable_thread_target
+    def score(q_terms):
+        ts = sorted({t for _, t in q_terms})
+        return _bm25_score(_matched(toks, ts, id_col), q_terms, df, n_docs, total_dl,
+                           id_col, k1, b)
 
-    inherit = inheritable_thread_target(docs.sparkSession)
-    with ThreadPoolExecutor(2) as ex:
-        f_toks = ex.submit(
-            inherit(
-                lambda: _doc_tokens(docs, text_col, id_col).localCheckpoint(eager=True)
-            )
-        )
-        f_stats = ex.submit(
-            inherit(
-                lambda: docs.agg(F.count("*").alias("n_docs"))
-                .crossJoin(dl.agg(F.coalesce(F.sum("dl"), F.lit(0)).alias("total_dl")))
-                .localCheckpoint(eager=True)
-            )
-        )
-        toks, stats = f_toks.result(), f_stats.result()
-
-    def _score(qt_frame):
-        # tfq stays an EAGER checkpoint: a lazy-tfq variant (hoping
-        # ReusedExchange would dedupe its two consumers) measured
-        # 7.66s vs 5.65s min-of-3 — the dfreq broadcast subtree executes
-        # before AQE can reuse the exchange, so the semi-join+agg ran
-        # twice per pass (r13 optimization round, measured and kept)
-        tfq = (
-            toks.join(F.broadcast(qt_frame.select("term").distinct()), "term")
-            .groupBy(id_col, "term")
-            .agg(F.count("*").alias("tf"))
-            .localCheckpoint(eager=True)
-        )
-        dfreq = tfq.groupBy("term").agg(F.count("*").alias("df"))
-        return _bm25_score_frames(qt_frame, tfq, dl, dfreq, stats, id_col, k1=k1, b=b)
-
-    top1 = bm25_rank_cut(_score(qt), id_col, fb_docs).select("query_id", id_col)
-    cand = (
-        toks.join(top1, id_col)
+    top1 = bm25_rank_cut(score(qt), id_col, fb_docs).select("query_id", id_col)
+    asked = set(qt)
+    cand = [
+        (r.query_id, r.term, r.stf)
+        for r in docs.join(F.broadcast(top1), id_col)
+        .select("query_id", F.explode(_tokens(text_col)).alias("term"))
         .groupBy("query_id", "term")
-        .agg(F.count("*").cast("long").alias("__stf"))
-        .join(qt, ["query_id", "term"], "left_anti")
-    )
-    df_c = (
-        toks.join(F.broadcast(cand.select("term").distinct()), "term")
-        .groupBy("term")
-        .agg(F.countDistinct(id_col).alias("__cdf"))
-    )
-    capped = (
-        cand.join(F.broadcast(df_c), "term")
-        .crossJoin(F.broadcast(stats.select("n_docs")))
-        .filter(F.col("__cdf") * df_cap_denom <= F.col("n_docs"))
-    )
-    wexp = Window.partitionBy("query_id").orderBy(
-        F.col("__stf").desc(), F.col("term").asc()
-    )
-    exp = (
-        capped.withColumn("__rn", F.row_number().over(wexp))
-        .filter(F.col("__rn") <= fb_terms)
-        .select("query_id", "term")
-    )
-    qt2 = F.broadcast(
-        qt.select("query_id", "term").unionByName(exp).distinct().localCheckpoint(eager=True)
-    )
-    return bm25_rank_cut(_score(qt2), id_col, k)
+        .agg(F.count("*").alias("stf"))
+        .collect()
+        if (r.query_id, r.term) not in asked
+    ]
+    cterms = sorted({t for _, t, _ in cand})
+    df.update(zip(cterms, _corpus_stats(toks, [_df(t, id_col) for t in cterms])[2]))
+    expansion: dict[int, list[str]] = {}
+    for q, t, _ in sorted(cand, key=lambda c: (c[0], -c[2], c[1])):
+        picked = expansion.setdefault(q, [])
+        if df[t] * df_cap_denom <= n_docs and len(picked) < fb_terms:
+            picked.append(t)
+    qt2 = sorted(asked | {(q, t) for q, ts in expansion.items() for t in ts})
+    return bm25_rank_cut(score(qt2), id_col, k)
 
 
 def qld_topk(
@@ -754,79 +727,51 @@ def qld_topk(
     score_int = sum of matched micro terms + n_q * micro length term is
     a pure BIGINT.
 
-    Scale shape identical to bm25_scores: the corpus (doc, term) frame
-    is never shuffled — dl is a map-side-combined count, tf/cf aggregate
-    only tokens surviving the broadcast semi-join on query terms.
+    Plan: bm25_scores' lexical plan — ONE aggregate brings T and each
+    query term's cf (NULL-id rows included) to the driver, and the lazy
+    matched frame carries tf and dl; n_q rides on the broadcast local
+    (query_id, term, cf, n_q) frame.  A repeated id sums its rows'
+    matched terms and takes its shortest row's length term.
 
     Returns (query_id, doc_id, score double, rank int), rank 1..k by
     score_int desc, doc_id asc."""
-    toks = _doc_tokens(docs, text_col, id_col)
-    qt = F.broadcast(_query_terms_df(docs.sparkSession, queries))
-    # shuffle-free dl projection (see _doc_lengths) — no eager job
-    dl = _doc_lengths(docs, text_col, id_col)
-    tfq = (
-        toks.join(F.broadcast(qt.select("term").distinct()), "term")
-        .groupBy(id_col, "term")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=True)
+    qt = _query_terms(docs.sparkSession, queries)
+    terms = sorted({t for _, t in qt})
+    toks = _token_frame(docs, text_col, id_col)
+    # a term's count in a row is the size array_remove takes off, which
+    # codegens; a filter lambda per term is interpreted
+    _, total_tok, cfs = _corpus_stats(
+        toks,
+        [
+            F.coalesce(F.sum(F.size("__toks") - F.size(F.array_remove("__toks", t))), F.lit(0))
+            for t in terms
+        ],
     )
-    cf = tfq.groupBy("term").agg(F.sum("tf").cast("long").alias("cf"))
-    tot = dl.agg(F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("total_tok"))
-    nq = (
-        qt.join(F.broadcast(cf), "term")
-        .groupBy("query_id")
-        .agg(F.count("*").cast("long").alias("n_q"))
+    cf = {t: c for t, c in zip(terms, cfs) if c}
+    seen = [(q, t) for q, t in qt if t in cf]
+    n_q = Counter(q for q, _ in seen)
+    qcf = local_frame(
+        docs.sparkSession,
+        [(q, t, cf[t], n_q[q]) for q, t in seen],
+        "query_id int, term string, cf long, n_q long",
     )
     d = lambda c: c.cast("double")  # noqa: E731
-    matched = (
-        qt.join(tfq, "term")
-        .join(F.broadcast(cf), "term")
-        .crossJoin(F.broadcast(tot))
+    snap = lambda x: F.floor(x * F.lit(float(MICRO)) + F.lit(0.5)).cast("long")  # noqa: E731
+    scored = (
+        _matched(toks, sorted(cf), id_col)
+        .join(F.broadcast(qcf), "term")
         .select(
             "query_id",
             id_col,
-            F.floor(
-                F.log(
-                    F.lit(1.0)
-                    + d(F.col("tf") * F.col("total_tok"))
-                    / d(F.lit(mu) * F.col("cf"))
-                )
-                * F.lit(float(MICRO))
-                + F.lit(0.5)
-            ).cast("long").alias("__mi"),
+            snap(
+                F.log(F.lit(1.0) + d(F.col("tf") * F.lit(total_tok).cast("long"))
+                      / d(F.lit(mu) * F.col("cf")))
+            ).alias("__mi"),
+            (F.col("n_q") * snap(F.log(d(F.lit(mu)) / d(F.col("dl") + F.lit(mu)))))
+            .alias("__len"),
         )
         .groupBy("query_id", id_col)
-        .agg(F.sum("__mi").cast("long").alias("__match"))
+        .agg((F.sum("__mi") + F.max("__len")).cast("long").alias("score_int"))
+        .withColumn("score", F.col("score_int").cast("double") / F.lit(float(MICRO)))
     )
-    scored = (
-        matched.join(dl, id_col)
-        .join(F.broadcast(nq), "query_id")
-        .select(
-            "query_id",
-            id_col,
-            (
-                F.col("__match")
-                + F.col("n_q")
-                * F.floor(
-                    F.log(d(F.lit(mu)) / d(F.col("dl") + F.lit(mu)))
-                    * F.lit(float(MICRO))
-                    + F.lit(0.5)
-                ).cast("long")
-            ).cast("long").alias("score_int"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_int").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            id_col,
-            (F.col("score_int").cast("double") / F.lit(float(MICRO))).alias(
-                "score"
-            ),
-            F.col("rank").cast("int"),
-        )
-    )
+    return bm25_rank_cut(scored, id_col, k)

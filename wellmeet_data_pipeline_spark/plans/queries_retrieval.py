@@ -3,6 +3,9 @@ package facade plans/queries.py for the registry contract."""
 
 from __future__ import annotations
 
+from collections import Counter
+
+from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.plans.queries_core import (  # noqa: F401
     DataFrame,
     F,
@@ -2212,49 +2215,50 @@ _DCG_TERM_SQL = (
 )
 def q_retrieval_eval_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wellmeet_data_pipeline_spark.operators.retrieval import (
-        _bm25_score_frames,
-        _doc_lengths,
-        _doc_tokens,
-        _query_terms_df,
+        _bm25_score,
+        _corpus_stats,
+        _df,
+        _matched,
+        _query_terms,
+        _token_frame,
         bm25_rank_cut,
         ir_eval_metrics,
     )
 
-    # Build the BM25 index frames inline (the bm25_prf_topk pattern)
-    # instead of calling bm25_topk + a SECOND tokenize pass for qrels:
-    # tfq's rows are exactly the distinct matched (doc, term) pairs, so
-    # the qrels leg derives from the SAME checkpointed frame — the old
-    # form re-ran scan → normalize → explode → broadcast-semi-join →
-    # corpus-grain distinct just to recount them (r13 optimization
-    # round, guide §2.1; min-of-3 same box 5.92 → 4.66s, rows
-    # identical).  The semi-join-before-distinct scale rule is preserved
-    # inside tfq's construction.
+    # bm25_scores' lexical plan serves the run AND the qrels: one
+    # per-(query, doc) aggregate carries the score and n_terms, the
+    # pinned query's (distinct) terms the doc holds, so run and qrels
+    # share one exchange and the collect tokenizes the corpus once.  A
+    # NULL-id document is never matched, while the oracle's group-by
+    # judges the NULL-id rows as one document: the aggregate also brings
+    # each term's "held by a NULL-id row" count, and the queries with
+    # >= 2 such terms get a (query, NULL) judgment.
     d = table(spark, sf_dir, "documents")
-    qt = F.broadcast(_query_terms_df(spark, _RETRIEVAL_QUERIES))
-    toks = _doc_tokens(d, "text", "doc_id")
-    dl = _doc_lengths(d, "text", "doc_id")
-    tfq = (
-        toks.join(F.broadcast(qt.select("term").distinct()), "term")
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=True)
+    qt = _query_terms(spark, _RETRIEVAL_QUERIES)
+    terms = sorted({t for _, t in qt})
+    toks = _token_frame(d, "text", "doc_id")
+    null_id = F.col("doc_id").isNull()
+    n_docs, total_dl, st = _corpus_stats(
+        toks,
+        [_df(t, "doc_id") for t in terms]
+        + [F.count_if(F.array_contains("__toks", t) & null_id) for t in terms],
     )
-    dfreq = tfq.groupBy("term").agg(F.count("*").alias("df"))
-    stats = d.agg(F.count("*").alias("n_docs")).crossJoin(
-        dl.agg(F.coalesce(F.sum("dl"), F.lit(0)).alias("total_dl"))
+    df, in_null = dict(zip(terms, st)), dict(zip(terms, st[len(terms):]))
+    scored = _bm25_score(
+        _matched(toks, terms, "doc_id"), qt, df, n_docs, total_dl, "doc_id", 1.2, 0.75
     )
-    run = bm25_rank_cut(
-        _bm25_score_frames(qt, tfq, dl, dfreq, stats, "doc_id"), "doc_id", 10
-    )
+    held = Counter(q for q, t in qt if in_null[t])
+    null_rel = [(q,) for q, n in sorted(held.items()) if n >= 2]
     qrels = (
-        qt.select("query_id", "term")
-        .distinct()
-        .join(tfq.select("doc_id", "term"), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.count("*").alias("__m"))
-        .filter(F.col("__m") >= 2)
+        scored.filter(F.col("n_terms") >= 2)
         .select("query_id", "doc_id")
+        .unionByName(
+            local_frame(spark, null_rel, "query_id int").select(
+                "query_id", F.lit(None).cast(d.schema["doc_id"].dataType).alias("doc_id")
+            )
+        )
     )
+    run = bm25_rank_cut(scored, "doc_id", 10)
     return ir_eval_metrics(run, qrels, k=10)
 
 

@@ -44,6 +44,7 @@ import shutil
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -140,8 +141,17 @@ def merge_append(
     get distinct seqs, so the read view's survivor choice stays
     deterministic).  Passing an explicit int keeps the single-writer /
     streaming contract where the caller manages epochs (foreachBatch
-    batch ids are already unique per stream).  Returns the seq used."""
-    if batch_seq is None:
+    batch ids are already unique per stream).  Returns the seq used.
+
+    A zero-row batch commits no part file (the staged parts' footers
+    are summed on the driver, no Spark job): under an explicit seq it
+    commits nothing at all, so replays and all-filtered batches never
+    grow the store; under a claimed seq it commits an empty batch
+    directory, so `committed_seq_pin` still advances past the claim.  A
+    store whose every batch was empty has no part file — read it with
+    `read_current_or_none`."""
+    claimed = batch_seq is None
+    if claimed:
         batch_seq = claim_batch_seq(path, writer_id)
     # Stage into a private directory, then atomically rename the finished
     # directory to `<path>/batch_commit=<seq>`.  A plain concurrent
@@ -159,6 +169,11 @@ def merge_append(
         writer = writer.partitionBy(partition_col)
     writer.parquet(staging)
     final_dir = os.path.join(path, f"{BATCH_DIR_KEY}={batch_seq}")
+    if _staged_rows(staging) == 0:
+        shutil.rmtree(staging)
+        if claimed:
+            os.mkdir(final_dir)
+        return batch_seq
     try:
         os.rename(staging, final_dir)
     except OSError:
@@ -179,6 +194,16 @@ def merge_append(
                 os.rename(os.path.join(root, f), os.path.join(dest, f))
         shutil.rmtree(staging, ignore_errors=True)
     return batch_seq
+
+
+def _staged_rows(staging: str) -> int:
+    """Rows in a staged batch, summed from its parquet footers."""
+    return sum(
+        pq.read_metadata(os.path.join(root, f)).num_rows
+        for root, _dirs, files in os.walk(staging)
+        for f in files
+        if not f.startswith(("_", "."))
+    )
 
 
 def committed_seq_pin(path: str, stale_claim_seconds: float = STALE_CLAIM_SECONDS):

@@ -62,13 +62,13 @@ def _append_marks(keys: DataFrame, backlog_store: str, op: str) -> None:
     )
 
 
-def _take_chunk(todo: DataFrame, max_keys: int) -> list[str]:
-    """First `max_keys` place_ids in deterministic order — the ONE bounded
-    driver materialization of the fan-out."""
-    return [
-        r["place_id"]
-        for r in todo.orderBy("place_id").limit(max_keys).collect()
-    ]
+def _take_chunk(todo: DataFrame, max_keys: int | None) -> list[str]:
+    """First `max_keys` place_ids (all of them for None) in deterministic
+    order — the ONE driver materialization of the fan-out."""
+    todo = todo.orderBy("place_id")
+    if max_keys is not None:
+        todo = todo.limit(max_keys)
+    return [r["place_id"] for r in todo.collect()]
 
 
 def _ingest_capped(
@@ -77,10 +77,11 @@ def _ingest_capped(
     backlog_store: str,
     review_store: str,
     review_fetcher: Callable[[str, int], list[dict]],
-    max_keys: int,
+    max_keys: int | None,
     batch_seq: int,
 ) -> None:
-    """Ingest up to `max_keys` pending keys, marking them done afterwards.
+    """Ingest up to `max_keys` pending keys (all for None), marking them
+    done afterwards.
 
     At-least-once order: the 'todo' marks are already durable (appended by
     the caller before this runs); the chunk is ingested (review merge is
@@ -101,12 +102,12 @@ def drain_backlog(
     backlog_store: str,
     review_store: str,
     review_fetcher: Callable[[str, int], list[dict]],
-    max_keys_per_batch: int,
+    max_keys_per_batch: int | None,
     start_seq: int = 1_000_000,
 ) -> None:
-    """Drain any carried-over fan-out backlog to empty, one capped chunk
-    per round — every driver collect stays <= max_keys_per_batch."""
-    if max_keys_per_batch < 1:
+    """Drain any carried-over fan-out backlog to empty, one chunk of at
+    most max_keys_per_batch keys (None: no cap) per round."""
+    if max_keys_per_batch is not None and max_keys_per_batch < 1:
         raise ValueError(f"max_keys_per_batch must be >= 1, got {max_keys_per_batch}")
     round_no = 0
     while True:
@@ -127,41 +128,31 @@ def run_orchestration(
     review_store: str,
     checkpoint_dir: str,
     review_fetcher: Callable[[str, int], list[dict]],
+    backlog_store: str,
     max_keys_per_batch: int | None = None,
-    backlog_store: str | None = None,
 ) -> list[StreamingQueryProgress]:
     """availableNow activation of the whole §3.3 DAG; returns the
     stream's progress (drain), read after the post-stream backlog drain.
 
+    Every new place_id's review fan-out is an obligation in the
+    append-only `backlog_store` log before the restaurant store commits
+    it, so a crash anywhere in a batch loses no review crawl.
     `max_keys_per_batch` bounds the one driver-side materialization (the
-    new-key list driving the per-key review fan-out): each micro-batch
-    ingests at most that many keys and persists the overflow to
-    `backlog_store`, which later batches — and a final post-stream drain —
-    keep draining under the same cap.  Without the cap a backfill-sized
-    batch would build a driver list proportional to the batch (the
+    key list driving the per-key review fan-out): each micro-batch
+    ingests at most that many pending keys and leaves the overflow in the
+    log, which later batches — and a final post-stream drain — keep
+    draining under the same cap.  None means no cap: a backfill-sized
+    batch then builds a driver list proportional to the batch (the
     reference's one-Batch-job-per-restaurant loop has the same unbounded
     fan-out, lambda_function.py:145-183)."""
-    if max_keys_per_batch is not None:
-        if backlog_store is None:
-            raise ValueError("max_keys_per_batch requires backlog_store")
-        if max_keys_per_batch < 1:
-            raise ValueError(f"max_keys_per_batch must be >= 1, got {max_keys_per_batch}")
+    if max_keys_per_batch is not None and max_keys_per_batch < 1:
+        raise ValueError(f"max_keys_per_batch must be >= 1, got {max_keys_per_batch}")
     stream = landing_stream(spark, restaurant_landing_dir, RESTAURANT)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         valid = fill_rds_defaults(require_fields(batch_df, ["place_id", "name"]))
         valid = valid.dropDuplicates(["place_id"])
         fresh = unseen(spark, valid, restaurant_store, "place_id")
-        # K5's one-Batch-job-per-restaurant → seed frame over the NEW keys
-        if max_keys_per_batch is None:
-            merge_append(fresh, restaurant_store, partition_col=None, batch_seq=batch_id)
-            new_place_ids = [r["place_id"] for r in fresh.select("place_id").collect()]
-            if new_place_ids:
-                ingest_reviews(
-                    spark, new_place_ids, review_fetcher, review_store,
-                    batch_seq=batch_id,
-                )
-            return
         # durable FIRST — and specifically BEFORE the restaurant-store
         # commit: `fresh` is an anti join against the store, so a crash
         # after the store commit but before the todo-append would replay
@@ -176,17 +167,15 @@ def run_orchestration(
         if pending is None:
             return
         # materialize BEFORE _ingest_capped appends done-marks: the
-        # pending lineage reads the log being appended to
+        # pending lineage reads the log being appended to; K5's
+        # one-Batch-job-per-restaurant becomes one seed frame per chunk
         _ingest_capped(
             spark, pending.localCheckpoint(eager=True), backlog_store, review_store,
             review_fetcher, max_keys_per_batch, batch_id,
         )
 
     progress = drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
-    if max_keys_per_batch is not None:
-        drain_backlog(
-            spark, backlog_store, review_store, review_fetcher, max_keys_per_batch
-        )
+    drain_backlog(spark, backlog_store, review_store, review_fetcher, max_keys_per_batch)
     return progress
 
 

@@ -16,7 +16,7 @@ micro-batches:
   T4 idempotency    foreachBatch -> merge_append sink (exactly-once per id
                     through the dedup-on-read view); every partial store
                     is one run_partials body (foreachBatch -> a batch's
-                    partial -> append_nonempty -> drain) read back by
+                    partial -> merge_append -> drain) read back by
                     read_partials under identity (*keys, batch seq), so
                     a replayed batch re-appends its own identity and
                     vanishes on read
@@ -79,21 +79,6 @@ def drain(writer: DataStreamWriter, checkpoint_dir: str) -> list[StreamingQueryP
     return query.recentProgress
 
 
-def append_nonempty(frame: DataFrame, store: str, batch_seq: int) -> None:
-    """merge_append one micro-batch's rows unless there are none.  A
-    zero-row first commit would leave a zero-part store (the
-    store-poisoning case read_current_or_none's docstring warns about),
-    and a later one burns an empty commit.  The frame is persisted
-    because the emptiness probe and the write both consume it."""
-    frame = frame.persist()
-    try:
-        if frame.isEmpty():
-            return
-        merge_append(frame, store, partition_col=None, batch_seq=batch_seq)
-    finally:
-        frame.unpersist()
-
-
 def run_partials(
     stream: DataFrame,
     store: str,
@@ -101,11 +86,12 @@ def run_partials(
     partial: Callable[[DataFrame], DataFrame],
 ) -> list[StreamingQueryProgress]:
     """T4: the one body of every partial store.  Each micro-batch appends
-    `partial(batch)` under its batch id (empty partials commit nothing);
-    runs one availableNow activation and returns its progress."""
+    `partial(batch)` under its batch id (merge_append commits nothing for
+    an empty partial); runs one availableNow activation and returns its
+    progress."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        append_nonempty(partial(batch_df), store, batch_id)
+        merge_append(partial(batch_df), store, partition_col=None, batch_seq=batch_id)
 
     return drain(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 

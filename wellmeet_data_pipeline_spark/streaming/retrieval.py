@@ -10,10 +10,12 @@ Landing docs -> per-batch postings (doc, term, tf) + document lengths
                        so N and avgdl match the batch scorer's corpus
                        definition exactly)
 
-Queries then score against the growing store through the SAME exact
-micro-grid BM25 core the batch operator uses
-(operators/retrieval.py:_bm25_contribution), so stream-built and
-batch-built rankings are bit-identical on identical corpora — pinned by
+Queries then score against the growing store through the batch
+operator's lexical plan (operators/retrieval.py): one driver aggregate
+over the store brings N, total_dl and each query term's df, postings ⋈
+doclen is the matched (doc, term, tf, dl) frame, and _bm25_score scores
+it — so stream-built and batch-built rankings are bit-identical on
+identical corpora, pinned by
 tests/test_retrieval.py::test_lexical_index_stream_matches_batch.
 
 Contract: documents are immutable once ingested — first version wins at
@@ -26,9 +28,9 @@ merge-append family.
 
 Scale: postings are the classic inverted-index build — each micro-batch
 shuffles only its own (doc, term) rows (map-side combined), the store
-stays partitioned by the hash of its key files, and scoring probes read
-the postings of the query's terms only (predicate pushdown on `term`
-after the broadcast semi-join)."""
+stays partitioned by the hash of its key files, and scoring reads the
+postings of the query's terms only (a filter on `term` after the
+dedup-on-read view)."""
 
 from __future__ import annotations
 
@@ -37,14 +39,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.types import StructType
 
+from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.operators.retrieval import (
-    _bm25_score_frames,
+    _bm25_score,
     _doc_lengths,
     _doc_tokens,
-    _query_terms_df,
+    _query_terms,
     bm25_rank_cut,
 )
-from wellmeet_data_pipeline_spark.sinks.merge import merge_append, read_current
+from wellmeet_data_pipeline_spark.sinks.merge import (
+    merge_append,
+    read_current,
+    read_current_or_none,
+)
 from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream, unseen
 
 
@@ -105,21 +112,32 @@ def bm25_topk_from_store(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Top-k BM25 against the streamed index — same contract and same
-    scoring core as the batch operators/retrieval.py:bm25_topk."""
-    postings = read_current(spark, f"{store_path}/postings", id_col="posting_key")
+    lexical plan as the batch operators/retrieval.py:bm25_topk.  The one
+    aggregate runs over the doclen rows (N, total_dl) and the query
+    terms' postings (df: one posting per document and term)."""
+    qt = _query_terms(spark, queries)
+    terms = sorted({t for _, t in qt})
+    postings = read_current_or_none(spark, f"{store_path}/postings", id_col="posting_key")
+    if postings is None:  # no document holding a token has landed yet
+        return local_frame(spark, [], f"query_id int, {id_col} long, score double, rank int")
+    postings = postings.filter(F.col("term").isin(terms))
     doclen = read_current(spark, f"{store_path}/doclen", id_col=id_col).select(
         id_col, "dl"
     )
-    qt = F.broadcast(_query_terms_df(spark, queries))
-    tfq = postings.join(F.broadcast(qt.select("term").distinct()), "term").select(
-        id_col, "term", "tf"
+    stats = (
+        doclen.select("dl", F.lit(None).cast("string").alias("term"))
+        .unionByName(postings.select(F.lit(None).cast("long").alias("dl"), "term"))
+        .agg(
+            F.count("dl"),
+            F.coalesce(F.sum("dl"), F.lit(0)),
+            *[F.count_if(F.col("term") == t) for t in terms],
+        )
+        .first()
     )
-    dfreq = tfq.groupBy("term").agg(F.count("*").alias("df"))
-    stats = doclen.agg(
-        F.count("*").alias("n_docs"),
-        F.coalesce(F.sum("dl"), F.lit(0)).alias("total_dl"),
+    matched = postings.join(doclen, id_col).select(id_col, "term", "tf", "dl")
+    scored = _bm25_score(
+        matched, qt, dict(zip(terms, stats[2:])), stats[0], stats[1], id_col, k1, b
     )
-    scored = _bm25_score_frames(qt, tfq, doclen, dfreq, stats, id_col, k1=k1, b=b)
     return bm25_rank_cut(scored, id_col, k)
 
 
