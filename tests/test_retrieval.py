@@ -32,27 +32,31 @@ DOCS = [
 QUERIES = {0: ["fast", "scan"], 1: ["join"]}
 
 
-def _py_bm25(docs, queries, k1=1.2, b=0.75):
-    """Independent reference: same normalization (lowercase, strip
-    punctuation, split on whitespace), exact micro-grid snapping."""
+def _py_tokens(text):
+    """The corpus normalization in Python: lowercase, strip punctuation,
+    split on whitespace."""
     import re
 
-    tok = {}
-    for i, t in docs:
-        if t is None:
-            tok[i] = []
-        else:
-            norm = re.sub(r"\s+", " ", re.sub(r"[^\w\s]", "", t.lower())).strip()
-            tok[i] = [w for w in norm.split(" ") if w]
-    n_docs = len(docs)
-    total_dl = sum(len(v) for v in tok.values())
+    if text is None:
+        return []
+    norm = re.sub(r"\s+", " ", re.sub(r"[^\w\s]", "", text.lower())).strip()
+    return [w for w in norm.split(" ") if w]
+
+
+def _py_bm25(docs, queries, k1=1.2, b=0.75):
+    """Independent reference: same normalization, exact micro-grid
+    snapping, and the documented per-row rule: every row counts toward
+    N, total_dl and df, and a repeated id sums its rows' scores."""
+    rows = [(i, _py_tokens(t)) for i, t in docs]
+    n_docs = len(rows)
+    total_dl = sum(len(ws) for _, ws in rows)
     df = {}
-    for ws in tok.values():
+    for _, ws in rows:
         for w in set(ws):
             df[w] = df.get(w, 0) + 1
     out = {}
     for q, terms in queries.items():
-        for d, ws in tok.items():
+        for d, ws in rows:
             s = 0
             for t in terms:
                 tf = ws.count(t)
@@ -65,7 +69,7 @@ def _py_bm25(docs, queries, k1=1.2, b=0.75):
                 tfn = (tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + b * dlr))
                 s += math.floor(idf * tfn * MICRO + 0.5)
             if s:
-                out[(q, d)] = s
+                out[(q, d)] = out.get((q, d), 0) + s
     return out
 
 
@@ -819,3 +823,183 @@ def test_doc_lengths_null_text_is_zero_without_ansi(spark):
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
     assert dl == {0: 5, 1: 5, 2: 6, 3: 0, 4: 0, 5: 8}
+
+
+# texts for the tokenizer pins: NULL, empty, whitespace-only,
+# punctuation-only, repeated terms and non-ASCII letters (which the
+# ASCII \w of the normalization strips)
+TOKEN_TEXTS = [
+    None,
+    "",
+    "   \t\n ",
+    "!!! ... ,,,",
+    "fast FAST, fast! scan",
+    "café naïve Ünïcode 東京 東京",
+    "\x0bword\x0b",
+    "a  b   a",
+]
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_tokens_and_tf_match_filter_lambda_forms(spark, ansi):
+    """_tokens (array_remove) and _tf (the size array_remove takes off)
+    give exactly the rows of the interpreted filter-lambda forms they
+    replace, with ANSI mode on and off."""
+    from wellmeet_data_pipeline_spark.functions.text import normalized_text
+    from wellmeet_data_pipeline_spark.operators.retrieval import _tf, _tokens
+
+    def lambda_tokens(c):
+        return F.coalesce(
+            F.filter(F.split(normalized_text(F.col(c)), " "), lambda x: x != F.lit("")),
+            F.array().cast("array<string>"),
+        )
+
+    def lambda_tf(term):
+        return F.size(F.filter("__toks", lambda x: x == term)).cast("long")
+
+    df = spark.createDataFrame(list(enumerate(TOKEN_TEXTS)), "doc_id long, text string")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        rows = df.select(
+            "doc_id", _tokens("text").alias("new"), lambda_tokens("text").alias("old")
+        ).collect()
+        terms = sorted({t for r in rows for t in r.old}) + ["", "zzzabsent"]
+        toks = df.select(_tokens("text").alias("__toks"))
+        tfs = toks.select(
+            F.array(*[_tf(F.lit(t)) for t in terms]).alias("new"),
+            F.array(*[lambda_tf(F.lit(t)) for t in terms]).alias("old"),
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert [r.new for r in rows] == [r.old for r in rows]
+    assert {r.doc_id for r in rows if r.new == []} == {0, 1, 2, 3}
+    assert [r.new for r in tfs] == [r.old for r in tfs]
+    assert max(max(r.new) for r in tfs) == 3  # "fast" three times in one row
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_lexical_plans_tokenize_once_per_scan_without_lambdas(spark, tmp_path):
+    """Every lexical scorer's executed plan evaluates the tokenize
+    expression once per corpus scan (no filter pushed below the tokenize
+    projection re-evaluates it) and runs no interpreted lambda."""
+    from conftest import SHARED_SF_DIR
+    from wellmeet_data_pipeline_spark.operators.retrieval import bm25_prf_topk, qld_topk
+    from wellmeet_data_pipeline_spark.plans.queries import REGISTRY
+
+    docs = spark.read.parquet(_edge_docs(spark, tmp_path))
+    q = {0: ["fast", "scan"], 1: ["join"]}
+    plans = {
+        "bm25_scores": _executed(bm25_scores(docs, q)),
+        "qld_topk": _executed(qld_topk(docs, q)),
+        "bm25_prf_topk": _executed(bm25_prf_topk(docs, q)),
+        "retrieval_eval_bm25": _executed(
+            REGISTRY["retrieval_eval_bm25"].fn(spark, SHARED_SF_DIR)
+        ),
+    }
+    assert plans["bm25_scores"].count("FileScan") == 1
+    for name, plan in plans.items():
+        assert "lambdafunction" not in plan, name
+        assert plan.count("split(") == plan.count("FileScan") >= 1, name
+
+
+# Py4J commands the caller's thread sends to build one bm25_topk plan,
+# its stats aggregate included: 820 measured with PySpark's call-site
+# capture off, 2,096 with it on (local[4], sf0.001)
+_BM25_BUILD_ROUND_TRIPS = 1_000
+
+
+def test_bm25_plan_build_py4j_round_trip_budget(spark, monkeypatch):
+    """Building one fixed bm25_topk plan stays within its pinned Py4J
+    round-trip budget, counted at the client's send_command on the
+    building thread (py4j's finalizer thread sends its object releases
+    asynchronously, whenever the garbage collector frees them)."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    from conftest import SHARED_SF_DIR
+    from wellmeet_data_pipeline_spark.catalog import table
+
+    docs = table(spark, SHARED_SF_DIR, "documents")
+    queries = {0: ["fast", "query"], 1: ["join"], 2: ["stream", "window", "batch", "hash"]}
+    bm25_topk(docs, queries, k=10)  # warm-up: first-call lookups are not per request
+    calls = [0]
+    me = threading.get_ident()
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += threading.get_ident() == me
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    bm25_topk(docs, queries, k=10)
+    assert 0 < calls[0] <= _BM25_BUILD_ROUND_TRIPS, calls[0]
+
+
+# a corpus repeating the non-NULL id 1
+REPEATED_ID_DOCS = [
+    (1, "fast scan fast"),
+    (1, "join fast"),
+    (2, "scan table"),
+    (3, "join join hash"),
+]
+REPEATED_ID_QUERIES = {0: ["fast", "scan"], 1: ["join", "hash"]}
+
+
+def _py_qld(docs, queries, mu=2000):
+    """QLD by the documented per-row rule: every row counts toward T and
+    cf, each row holding a query term adds its matched terms, and a
+    repeated id takes its shortest matched row's length term once."""
+    rows = [(i, _py_tokens(t)) for i, t in docs]
+    total = sum(len(ws) for _, ws in rows)
+    cf = {}
+    for _, ws in rows:
+        for w in ws:
+            cf[w] = cf.get(w, 0) + 1
+    snap = lambda x: math.floor(x * MICRO + 0.5)  # noqa: E731
+    out = {}
+    for q, terms in queries.items():
+        seen = [t for t in terms if t in cf]
+        per_id = {}
+        for d, ws in rows:
+            held = [t for t in seen if t in ws]
+            if d is None or not held:
+                continue
+            mi = sum(snap(math.log(1.0 + ws.count(t) * total / (mu * cf[t]))) for t in held)
+            ln = len(seen) * snap(math.log(mu / (len(ws) + mu)))
+            s, l = per_id.get(d, (0, ln))
+            per_id[d] = (s + mi, max(l, ln))
+        for d, (s, l) in per_id.items():
+            out[(q, d)] = s + l
+    return out
+
+
+def test_repeated_id_follows_per_row_rule(spark):
+    """bm25_scores and qld_topk score a corpus that repeats a non-NULL id
+    by the documented per-row rule (each row counts toward N, df and cf
+    and is matched on its own; the id's score sums its rows), against
+    the pure-Python references."""
+    from wellmeet_data_pipeline_spark.operators.retrieval import qld_topk
+
+    df = spark.createDataFrame(REPEATED_ID_DOCS, "doc_id long, text string")
+    bm = {
+        (r.query_id, r.doc_id): r.score_int
+        for r in bm25_scores(df, REPEATED_ID_QUERIES).collect()
+    }
+    assert bm == _py_bm25(REPEATED_ID_DOCS, REPEATED_ID_QUERIES)
+    assert (0, 1) in bm and (1, 1) in bm  # both rows of id 1 are matched
+
+    want = _py_qld(REPEATED_ID_DOCS, REPEATED_ID_QUERIES)
+    got = qld_topk(df, REPEATED_ID_QUERIES, k=10).collect()
+    assert {(r.query_id, r.doc_id): r.score for r in got} == {
+        k: v / MICRO for k, v in want.items()
+    }
+    for q in REPEATED_ID_QUERIES:
+        ranked = sorted((-v, d) for (qq, d), v in want.items() if qq == q)
+        assert [r.doc_id for r in sorted(got, key=lambda r: r.rank) if r.query_id == q] == [
+            d for _, d in ranked
+        ]

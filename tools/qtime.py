@@ -2,7 +2,11 @@
 
 Fresh session, pricing_summary warmup (same as bench.py), then for each
 named query: optional .explain("formatted") capture to a file, and
-min-of-N timing of the same collect() action bench.py times.  Usage:
+min-of-N timing of the same collect() action bench.py times, printed
+beside the fewest Py4J round trips (driver -> JVM commands) one run
+sent from the timing thread, plan building and collect together; py4j's
+finalizer thread, which releases JVM objects asynchronously, is not
+counted.  Usage:
 
     python tools/qtime.py [--sf SF_DIR] [--runs N] [--explain-dir DIR] q1 q2 ...
 
@@ -20,9 +24,12 @@ import io
 import json
 import os
 import sys
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from py4j.clientserver import ClientServerConnection  # noqa: E402
 
 from bench import SharedFrames  # noqa: E402
 from wellmeet_data_pipeline_spark.plans.queries import REGISTRY  # noqa: E402
@@ -43,7 +50,16 @@ def main() -> None:
     REGISTRY["pricing_summary"].fn(spark, args.sf).collect()
 
     frames = SharedFrames(args.sf)
-    out: dict[str, float] = {}
+    round_trips = [0]
+    thread = threading.get_ident()
+    send = ClientServerConnection.send_command
+
+    def counting(conn, command):
+        round_trips[0] += threading.get_ident() == thread
+        return send(conn, command)
+
+    ClientServerConnection.send_command = counting
+    out: dict[str, dict] = {}
     for name in args.queries:
         kwargs = frames.kwargs(spark, name)
         spark.sparkContext.setJobDescription(f"qtime:{name}")
@@ -56,14 +72,16 @@ def main() -> None:
             path = os.path.join(args.explain_dir, f"{name}{args.suffix}.txt")
             with open(path, "w") as fh:
                 fh.write(buf.getvalue())
-        best = None
+        best = trips = None
         for _ in range(args.runs):
+            round_trips[0] = 0
             t0 = time.perf_counter()
             REGISTRY[name].fn(spark, args.sf, **kwargs).collect()
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
-        out[name] = round(best, 3)
-        print(f"{name}: {out[name]}s", flush=True)
+            trips = round_trips[0] if trips is None else min(trips, round_trips[0])
+        out[name] = {"s": round(best, 3), "py4j_round_trips": trips}
+        print(f"{name}: {out[name]['s']}s, {trips} py4j round trips", flush=True)
     print(json.dumps(out))
 
 

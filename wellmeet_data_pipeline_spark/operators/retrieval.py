@@ -27,25 +27,30 @@ Scale/determinism notes shared by every operator here:
 
 Plan shape: every lexical scorer — bm25_scores, bm25_prf_topk,
 qld_topk, the registry's BM25 eval query and the streamed index's
-scorer — plans a query the same way.  The corpus is read
-through ONE tokenize projection (id, __toks).  Step 1, _corpus_stats:
-one global aggregate over it brings N, total_dl and each query term's
-statistic (df, or cf for QLD) back to the driver — a handful of
-numbers.  Step 2, _matched: a lazy frame keeps only the documents
-sharing a query term and explodes their matched terms with tf and dl on
-the row.  Scoring fans those rows out to the queries through a
-broadcast local frame, so no corpus-grain frame ever crosses a shuffle:
-the shuffles carry matched (query, doc) rows, and the final rank window
-partitions on query_id.  Query-side frames are catalog.local_frame
-LocalRelations, which scan without a Spark job, and nothing is
-checkpointed.  The streamed index (streaming/retrieval.py) supplies the
-same two steps from its stores: one aggregate, and postings ⋈ doclen as
-the matched frame.
+scorer — plans a query the same way.  The corpus is read through ONE
+tokenize projection (id, __toks), built from compiled array kernels
+(split, then array_remove of the empty terms; a term's tf is the size
+array_remove takes off) with no interpreted lambda.  Step 1,
+_corpus_stats: one global aggregate over it brings N, total_dl and each
+query term's statistic (df, or cf for QLD) back to the driver — a
+handful of numbers.  Step 2, _matched: a lazy frame explodes
+array_intersect(__toks, terms), so only the documents sharing a query
+term yield rows, each matched term with tf and dl on the row.  No
+filter on __toks sits above the projection, so none is pushed below it
+and each scan tokenizes every document once.  Scoring fans those rows
+out to the queries through a broadcast local frame, so no corpus-grain
+frame ever crosses a shuffle: the shuffles carry matched (query, doc)
+rows, and the final rank window partitions on query_id.  Query-side
+frames are catalog.local_frame LocalRelations, which scan without a
+Spark job, and nothing is checkpointed.  The streamed index
+(streaming/retrieval.py) supplies the same two steps from its stores:
+one aggregate, and postings ⋈ doclen as the matched frame.
 """
 
 from __future__ import annotations
 
 from collections import Counter
+from itertools import accumulate
 from typing import Mapping, Sequence
 
 import pandas as pd
@@ -88,7 +93,7 @@ def _tokens(text_col: str) -> Column:
     array with empty terms dropped — empty, never NULL, for NULL text:
     size(NULL) is -1 in a session with ANSI mode off."""
     return F.coalesce(
-        F.filter(F.split(normalized_text(F.col(text_col)), " "), lambda x: x != F.lit("")),
+        F.array_remove(F.split(normalized_text(F.col(text_col)), " "), ""),
         F.array().cast("array<string>"),
     )
 
@@ -111,9 +116,11 @@ def _token_frame(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return docs.select(F.col(id_col), _tokens(text_col).alias("__toks"))
 
 
-def _tf(term: Column) -> Column:
-    """Occurrences of `term` in the row's __toks."""
-    return F.size(F.filter("__toks", lambda x: x == term)).cast("long")
+def _tf(term: Column | str) -> Column:
+    """Occurrences of `term` in the row's __toks: the elements
+    array_remove takes off (a compiled kernel; a filter lambda would be
+    interpreted per element)."""
+    return (F.size("__toks") - F.size(F.array_remove("__toks", term))).cast("long")
 
 
 def _df(term: str, id_col: str) -> Column:
@@ -140,12 +147,15 @@ def _corpus_stats(toks: DataFrame, per_term: Sequence[Column]) -> tuple[int, int
 
 def _matched(toks: DataFrame, terms: Sequence[str], id_col: str) -> DataFrame:
     """Step 2 of the lexical plan, lazy: one (id, term, tf, dl) row per
-    document and distinct term of `terms` it holds.  Only documents
-    sharing a term are exploded, and a NULL-id row is never matched."""
+    document and distinct term of `terms` it holds.  The explode of the
+    intersection emits nothing for a document sharing no term, so no
+    pre-filter on __toks is needed (the optimizer would push one below
+    the tokenize projection and tokenize every document twice).  A
+    NULL-id row is never matched."""
     doc_id = F.col(id_col)
     terms_arr = F.array(*[F.lit(t) for t in terms]).cast("array<string>")
     return (
-        toks.filter(doc_id.isNotNull() & F.arrays_overlap("__toks", terms_arr))
+        toks.filter(doc_id.isNotNull())
         .select(
             doc_id,
             "__toks",
@@ -366,12 +376,10 @@ def readability_scores(
     regexp_count over the scan, no Python, no shuffle; at 100 TB it
     fuses with whatever projection reads the text."""
     c = F.col(text_col)
-    # count NON-EMPTY tokens (filter, not trim): trim() strips only
+    # count NON-EMPTY tokens (array_remove, not trim): trim() strips only
     # spaces, so leading/trailing tabs/newlines would otherwise mint
     # phantom empty tokens and whitespace-only docs would score
-    w_cnt = F.size(
-        F.filter(F.split(c, r"\s+"), lambda x: x != "")
-    ).cast("long")
+    w_cnt = F.size(F.array_remove(F.split(c, r"\s+"), "")).cast("long")
     s_raw = F.regexp_count(c, F.lit(r"[.!?]+")).cast("long")
     syl = F.regexp_count(F.lower(c), F.lit("[aeiouy]+")).cast("long")
     s_cnt = F.greatest(s_raw, F.lit(1).cast("long"))
@@ -499,10 +507,11 @@ def ir_eval_metrics(
 
     Plan: the run is cut at k (top-k lists, tiny), hit-joined against
     qrels on (query, doc), and reduced with one map-side-combined
-    aggregation per side; ideal DCG folds over sequence(1, min(n_rel,
-    k)) in-row (k-bounded).  Queries with relevant docs but no hits
-    report zeros; queries absent from qrels are out of scope (recall
-    undefined at n_rel = 0).
+    aggregation per side; ideal DCG is the min(n_rel, k)-th of k prefix
+    sums of the discount, computed once on the driver through a local
+    frame (the same Spark ln(), no job) and looked up in-row.  Queries
+    with relevant docs but no hits report zeros; queries absent from
+    qrels are out of scope (recall undefined at n_rel = 0).
 
     Output: (query, n_rel, n_hits, recall_micro, mrr_micro,
     ndcg_micro)."""
@@ -527,10 +536,11 @@ def ir_eval_metrics(
         "first_rank",
         F.coalesce(F.col("dcg_micro"), F.lit(0)).cast("long").alias("dcg_micro"),
     )
-    idcg = F.aggregate(
-        F.sequence(F.lit(1), F.least(F.col("n_rel"), F.lit(k)).cast("int")),
-        F.lit(0).cast("long"),
-        lambda acc, r: acc + _dcg_term_micro(r),
+    discounts = local_frame(run.sparkSession, [(r,) for r in range(1, k + 1)], "r int")
+    ideal = accumulate(r[0] for r in discounts.select(_dcg_term_micro(F.col("r"))).collect())
+    idcg = F.element_at(
+        F.array(*[F.lit(v) for v in ideal]).cast("array<bigint>"),
+        F.least(F.col("n_rel"), F.lit(k)).cast("int"),
     )
     return base.withColumn("idcg_micro", idcg).select(
         query_col,
@@ -738,14 +748,8 @@ def qld_topk(
     qt = _query_terms(docs.sparkSession, queries)
     terms = sorted({t for _, t in qt})
     toks = _token_frame(docs, text_col, id_col)
-    # a term's count in a row is the size array_remove takes off, which
-    # codegens; a filter lambda per term is interpreted
     _, total_tok, cfs = _corpus_stats(
-        toks,
-        [
-            F.coalesce(F.sum(F.size("__toks") - F.size(F.array_remove("__toks", t))), F.lit(0))
-            for t in terms
-        ],
+        toks, [F.coalesce(F.sum(_tf(t)), F.lit(0)) for t in terms]
     )
     cf = {t: c for t, c in zip(terms, cfs) if c}
     seen = [(q, t) for q, t in qt if t in cf]

@@ -544,9 +544,7 @@ def _hashed_ngram_features(docs: DataFrame, text_col: str, id_col: str) -> DataF
     # ~2.5x slower for sha-per-element at 64x smoke), while the
     # projection gets whole-stage codegen AND subexpression elimination
     # across feature_bucket's four nibble reads of one sha2.
-    words = F.filter(
-        F.split(normalized_text(F.col(text_col)), " "), lambda x: x != F.lit("")
-    )
+    words = F.array_remove(F.split(normalized_text(F.col(text_col)), " "), "")
     # materialize the array once: Catalyst does no CSE inside lambda
     # bodies, so the bigram transform must reference a column, not the
     # normalization regex (the shingles_df pitfall)

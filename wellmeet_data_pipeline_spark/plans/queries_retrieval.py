@@ -2561,9 +2561,7 @@ def q_token_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     base = d.select(
-        F.filter(
-            F.split(normalized_text(F.col("text")), " "), lambda x: x != ""
-        ).alias("w")
+        F.array_remove(F.split(normalized_text(F.col("text")), " "), "").alias("w")
     ).localCheckpoint(eager=True)  # words feed unigram, bigram AND scalar
     # consumers; without this each re-runs the normalization scan
     uni = base.select(F.explode("w").alias("term"))

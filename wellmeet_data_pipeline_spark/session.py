@@ -13,6 +13,16 @@ local test runs:
 - shuffle partitions default to cores locally; on a real cluster this
   should be ~2-3x total executor cores (or left to AQE's coalescing with
   a high initial number).
+- Python call-site capture off (spark.python.sql.dataFrameDebugging.enabled
+  = false).  With it on, PySpark's default, every DataFrame and
+  functions.* call pays about four Py4J round trips (active session,
+  stack-depth conf, origin set and clear) and a Python stack walk to
+  record where it was called from: building one bm25_topk plan sent
+  2,096 round trips with it on and 856 with it off.  The only loss is
+  the Python file/line in analysis-error messages;
+  get_spark(extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+  "true"}) turns it back on.  PySpark reads it once per process, from
+  the first active session.
 """
 
 from __future__ import annotations
@@ -42,6 +52,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local mode: keep the UI off and the driver lean
         .config("spark.ui.enabled", "false")
