@@ -70,10 +70,10 @@ def rest(pid, name):
     }
 
 
-# on_batch consumes its micro-batch in two writes (the todo-mark append
-# and the restaurant-store commit), each a fresh scan of the batch, and
-# numInputRows adds up the rows of every scan: each landed row counts twice.
-SCANS_PER_BATCH = 2
+# on_batch consumes its micro-batch in one write (the restaurant-store
+# commit), and numInputRows adds up the rows of every scan of the batch:
+# each landed row counts once.
+SCANS_PER_BATCH = 1
 
 
 def n_input_rows(progress):
@@ -109,8 +109,8 @@ except Exception:
 assert died, "second activation should have failed (task attempts exhausted)"
 
 # restart: checkpoint replays the failed batch; third fetch attempt succeeds.
-# The durable todo-marks (appended before the restaurant commit) carry the
-# obligation across the crash.  Only r2.json's one restaurant replays.
+# p3 is stored with no done mark, so it is still pending after the crash.
+# Only r2.json's one restaurant replays.
 assert n_input_rows(activate()) == SCANS_PER_BATCH * 1
 
 # batch 3: p2 re-landed (no re-crawl) + p4 new

@@ -184,12 +184,14 @@ def test_merge_append_store_contract_is_structural():
     """The write takes no identity and the batch column is a constant;
     run_partials appends each partial straight through merge_append (no
     emptiness probe of its own: merge_append commits nothing for an
-    empty batch), and no module in streaming/ spells the batch column."""
+    empty batch), no module in streaming/ spells the batch column or
+    appends outside merge_append, and the orchestration keeps no todo
+    log of its own (the restaurant store is its fan-out ledger)."""
     import glob
     import inspect
 
     from wellmeet_data_pipeline_spark.sinks import merge
-    from wellmeet_data_pipeline_spark.streaming import pipeline
+    from wellmeet_data_pipeline_spark.streaming import orchestration, pipeline
 
     params = lambda fn: set(inspect.signature(fn).parameters)
     assert not {"id_col", "batch_col"} & params(merge.merge_append)
@@ -203,6 +205,12 @@ def test_merge_append_store_contract_is_structural():
         with open(path) as fh:
             src = fh.read()
         assert '"_batch_seq"' not in src and "'_batch_seq'" not in src, path
+        # every streaming store goes through merge_append
+        assert '.write.mode("append")' not in src, path
+    # the restaurant store is the fan-out ledger: no todo marks, no op
+    # column, and a drain that stops on a short round needs no probe
+    src = inspect.getsource(orchestration)
+    assert "todo" not in src.lower() and "_op" not in src and "isEmpty" not in src
 
 
 def test_embedding_pipeline_and_near_dups(spark, tmp_path):
@@ -282,9 +290,9 @@ def test_full_orchestration_dag(spark, tmp_path):
 
 def test_orchestration_crash_before_review_ingest_loses_no_reviews(spark, tmp_path):
     """A crash after the restaurant-store commit but before the review
-    ingest loses no review crawl, capped or not: the todo marks are
-    durable before the store commit, so the restarted activation (whose
-    anti-join finds every place already stored) still fetches them."""
+    ingest loses no review crawl, capped or not: a stored place with no
+    done mark is pending, so the restarted activation (whose anti-join
+    finds every place already stored) still fetches them."""
     from pyspark.errors import StreamingQueryException
 
     from wellmeet_data_pipeline_spark.sinks.merge import read_current, read_current_or_none
@@ -769,7 +777,7 @@ def test_streaming_corpus_ref_index_composes_with_near_dup_store(spark, tmp_path
 def test_orchestration_fanout_capped_and_fully_drained(spark, tmp_path):
     """VERDICT r3 #7: with max_keys_per_batch set, a backfill-sized batch
     never materializes more than the cap of keys driver-side; overflow
-    carries through the backlog store and every key's reviews are
+    stays pending (stored, no done mark) and every key's reviews are
     eventually ingested (post-stream drain)."""
     import json
 
@@ -820,33 +828,133 @@ def test_orchestration_fanout_capped_and_fully_drained(spark, tmp_path):
     revs = read_current(spark, rev_store)
     assert revs.count() == 8  # every key's reviews eventually ingested
     assert {r["place_id"] for r in revs.collect()} == {f"p{i:02d}" for i in range(8)}
-    # backlog fully drained: every todo mark has a done mark
-    from wellmeet_data_pipeline_spark.streaming.orchestration import _read_pending
-
-    pending = _read_pending(spark, backlog)
-    assert pending is None or pending.count() == 0
+    # backlog fully drained: every stored place has a done mark
+    assert _pending(spark, rest_store, backlog) == set()
 
 
-def test_backlog_compaction_preserves_pending(spark, tmp_path):
-    from wellmeet_data_pipeline_spark.streaming.orchestration import (
-        _append_marks,
-        _read_pending,
-        compact_backlog,
-    )
+def _pending(spark, rest_store, done_store):
+    """Stored places with no done mark: the orchestration's pending set."""
+    from wellmeet_data_pipeline_spark.streaming.pipeline import unseen
 
-    log = str(tmp_path / "bl_log")
-    out = str(tmp_path / "bl_compacted")
-    keys = spark.createDataFrame([(f"p{i}",) for i in range(6)], "place_id string")
-    _append_marks(keys, log, "todo")
-    _append_marks(keys.filter("place_id < 'p3'"), log, "done")
-    # duplicate marks from a replay must not resurrect done keys
-    _append_marks(keys.filter("place_id = 'p1'"), log, "todo")
+    stored = read_current(spark, rest_store, "place_id").select("place_id")
+    return {r["place_id"] for r in unseen(spark, stored, done_store, "place_id").collect()}
 
-    compact_backlog(spark, log, out)
-    assert {r["place_id"] for r in _read_pending(spark, out).collect()} == {
-        "p3", "p4", "p5",
+
+def test_done_store_compaction_preserves_pending(spark, tmp_path):
+    """The done store is an ordinary merge-append store: sinks.merge.compact
+    rewrites it to a NEW path and pending is unchanged, a replayed
+    duplicate done mark included."""
+    from wellmeet_data_pipeline_spark.catalog import local_frame
+    from wellmeet_data_pipeline_spark.sinks.merge import compact, merge_append
+
+    rest_store = str(tmp_path / "rest")
+    done = str(tmp_path / "done")
+    out = str(tmp_path / "done_compacted")
+    marks = lambda ids: local_frame(spark, [(k,) for k in ids], "place_id string")
+    merge_append(marks([f"p{i}" for i in range(6)]), rest_store, partition_col=None, batch_seq=0)
+    merge_append(marks(["p0", "p1", "p2"]), done, partition_col=None, batch_seq=0)
+    # a replayed round re-appends its done mark under a later seq
+    merge_append(marks(["p1"]), done, partition_col=None, batch_seq=1)
+
+    assert _pending(spark, rest_store, done) == {"p3", "p4", "p5"}
+    compact(spark, done, out, id_col="place_id", partition_col=None)
+    assert _pending(spark, rest_store, out) == {"p3", "p4", "p5"}
+    assert spark.read.parquet(out).count() == 3  # the duplicate mark collapsed
+
+
+def _rest(pid):
+    return {
+        "place_id": pid, "name": f"n{pid}", "thumbnail_url": "", "category": "한식",
+        "page": 1, "origin_address": "서울특별시 마포구 마포대로 109",
+        "address": "서울특별시 마포구 마포대로 109", "latitude": None, "longitude": None,
     }
-    assert spark.read.parquet(out).count() == 3  # pending-only, marks cancelled
+
+
+def _review_fetcher():
+    # built per call: a nested function ships to the Python workers by
+    # value, while a module-level one would need this test module there
+    def fetch(place_id, page):
+        return [{"author": "a", "content": f"review {i} of {place_id}", "visit_date": "d",
+                 "place_id": place_id} for i in range(2)]
+
+    return fetch
+
+
+def test_orchestration_fans_out_stored_places_without_done_mark(spark, tmp_path):
+    """The restaurant store is the list of review obligations: places
+    stored by discover_restaurants (no done mark) get their reviews on
+    the next activation, as every saved restaurant does in the reference
+    (submit-aws-batch-lambda/lambda_function.py:165-183)."""
+    from wellmeet_data_pipeline_spark.pipelines import discover_restaurants
+    from wellmeet_data_pipeline_spark.streaming.orchestration import run_orchestration
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    rest_store, rev_store = str(tmp_path / "rest"), str(tmp_path / "rev")
+    ckpt, backlog = str(tmp_path / "ckpt"), str(tmp_path / "done")
+
+    def search(query, page):
+        return [{"place_id": f"d{page}", "name": "n", "thumbnail_url": "", "category": "c",
+                 "page": page, "origin_address": "서울특별시 마포구 마포대로 109"}]
+
+    discover_restaurants(spark, ["q"], search, rest_store, pages=2)
+    _drop(landing, "r1.json", [_rest("p1")])
+    run_orchestration(spark, str(landing), rest_store, rev_store, ckpt, _review_fetcher(),
+                      backlog_store=backlog, max_keys_per_batch=2)
+    revs = read_current(spark, rev_store, id_col=["place_id", "id"])
+    assert sorted(r["place_id"] for r in revs.collect()) == ["d1", "d1", "d2", "d2", "p1", "p1"]
+    assert _pending(spark, rest_store, backlog) == set()
+
+
+def test_overflowing_activations_commit_each_review_batch_once(spark, tmp_path):
+    """Drain rounds of two activations that each overflow the cap never
+    share a review batch directory: a shared one would be filled by two
+    write jobs through merge_append's per-file fallback, losing the
+    batch's all-or-nothing visibility."""
+    import re
+
+    from wellmeet_data_pipeline_spark.streaming.orchestration import run_orchestration
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    rest_store, rev_store = str(tmp_path / "rest"), str(tmp_path / "rev")
+    ckpt, backlog = str(tmp_path / "ckpt"), str(tmp_path / "done")
+    for act in range(2):
+        _drop(landing, f"r{act}.json", [_rest(f"p{act}a"), _rest(f"p{act}b")])
+        run_orchestration(spark, str(landing), rest_store, rev_store, ckpt, _review_fetcher(),
+                          backlog_store=backlog, max_keys_per_batch=1)
+
+    jobs_per_batch = {}
+    for root, _dirs, files in os.walk(rev_store):
+        batch = re.search(r"batch_commit=\d+", root)
+        for f in files:
+            job = re.match(r"part-\d+-([0-9a-f-]{36})", f)
+            if batch and job:
+                jobs_per_batch.setdefault(batch.group(0), set()).add(job.group(1))
+    assert len(jobs_per_batch) == 4, jobs_per_batch  # one round per place
+    assert all(len(jobs) == 1 for jobs in jobs_per_batch.values()), jobs_per_batch
+    assert read_current(spark, rev_store, id_col=["place_id", "id"]).count() == 8
+
+
+def test_steady_orchestration_activation_job_budget(spark, tmp_path):
+    """One steady activation — 4 one-restaurant files, cap 16 — runs at
+    most 23 Spark jobs.  Counted with the DAGScheduler's job counter:
+    job groups miss the jobs the stream's own thread launches."""
+    from wellmeet_data_pipeline_spark.streaming.orchestration import run_orchestration
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    stores = [str(tmp_path / d) for d in ("rest", "rev", "ckpt")]
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    for act in range(3):
+        for i in range(4):
+            _drop(landing, f"r{act}_{i}.json", [_rest(f"p{act}{i}")])
+        jobs_before = scheduler.nextJobId()
+        progress = run_orchestration(spark, str(landing), *stores, _review_fetcher(),
+                                     backlog_store=str(tmp_path / "done"), max_keys_per_batch=16)
+        jobs = scheduler.nextJobId() - jobs_before
+    assert sum(p.numInputRows for p in progress) == 4  # one scan of the batch
+    assert jobs <= 23, jobs
 
 
 def test_streaming_corpus_dsir_gate_drops_off_distribution_docs(spark, tmp_path):
@@ -1727,7 +1835,8 @@ def test_orchestration_soak_under_task_and_batch_faults(tmp_path):
     """r8 verdict item 5: the composed §3.3 DAG across >= 3 micro-batches
     with an induced once-failing task (absorbed by spark.task retries)
     and an induced batch-level crash (absorbed by checkpoint replay +
-    idempotent stores + durable-first todo marks).  Subprocess: the soak
+    idempotent stores; a stored place with no done mark stays pending).
+    Subprocess: the soak
     needs master local[4,2] (task retries), a SparkContext property the
     shared session can't change."""
     import subprocess

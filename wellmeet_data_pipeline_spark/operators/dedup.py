@@ -713,7 +713,6 @@ def minhash_verify_sha(
     bands: int = 4,
     shingle_n: int = 3,
     round_digits: int = 6,
-    materialize: bool = True,
     raw_counts: bool = False,
     shingle_base: DataFrame | None = None,
 ) -> DataFrame:
@@ -732,11 +731,11 @@ def minhash_verify_sha(
     topology at 100 TB: cheap banded recall, exact precision on the
     surviving droplet.
 
-    With `materialize` (default), the signature and distinct-shingle
-    frames are localCheckpoint'ed: both appear 3x in the lineage
-    (banding + two estimate sides; sizes + two intersection sides), and
-    materializing them replaces three normalize→explode→hash corpus
-    passes with one — measured 3.5x at sf0.1.  Both frames are tiny
+    The signature and distinct-shingle frames are localCheckpoint'ed:
+    both appear 3x in the lineage (banding + two estimate sides; sizes +
+    two intersection sides), and materializing them replaces three
+    normalize→explode→hash corpus passes with one — measured 3.5x at
+    sf0.1.  Both frames are tiny
     next to the corpus (n_docs × 16 hex prefixes; (doc, shingle)
     pairs), which is why persist-the-signatures is the standard step in
     every production MinHash pipeline.
@@ -755,23 +754,20 @@ def minhash_verify_sha(
         # holds it checkpointed, BOTH legs read it — signatures are
         # identical because min is idempotent over the distinct set, and
         # the exact-Jaccard leg consumed exactly this distinct frame
-        # anyway.  The caller owns the checkpoint, so the `materialize`
-        # lazy checkpoints are skipped for the shingle leg.
+        # anyway.  The caller owns the checkpoint, so only the signature
+        # leg gets a lazy checkpoint here.
         sig = minhash_signatures_sha(
             docs, text_col, id_col, num_hashes, shingle_n, shingle_base=shingle_base
-        )
+        ).localCheckpoint(eager=False)
         sh = shingle_base
-        if materialize:
-            sig = sig.localCheckpoint(eager=False)
     else:
         # fan out ONCE here so the signature and shingle legs share the same
         # repartition subtree (the inner fanout no-ops on the wide frame)
         docs = fanout_small_scan(docs)
-        sig = minhash_signatures_sha(docs, text_col, id_col, num_hashes, shingle_n)
-        sh = shingles_df(docs, text_col, id_col, shingle_n).distinct()
-        if materialize:
-            sig = sig.localCheckpoint(eager=False)
-            sh = sh.localCheckpoint(eager=False)
+        sig = minhash_signatures_sha(
+            docs, text_col, id_col, num_hashes, shingle_n
+        ).localCheckpoint(eager=False)
+        sh = shingles_df(docs, text_col, id_col, shingle_n).distinct().localCheckpoint(eager=False)
     pairs = _sha_band_pairs(sig, id_col, num_hashes, bands)
     sig_a = sig.select(
         F.col(id_col).alias("id_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(num_hashes)]

@@ -73,7 +73,6 @@ def _bigram_token_logprobs(
     id_col: str,
     alpha: float,
     round_digits: int,
-    materialize_lm: bool,
     docs_tokens: DataFrame | None = None,
     lm_tokens: DataFrame | None = None,
 ) -> DataFrame:
@@ -101,16 +100,15 @@ def _bigram_token_logprobs(
         .groupBy("prev", "term")
         .agg(F.count("*").alias("c2"))
     )
-    if materialize_lm:
-        # c1 feeds THREE consumers (self-prob join, prev-prob join, the
-        # totals scalar) and c2 one more — without materialization each
-        # consumer re-runs the whole LM token-explode lineage, i.e. 13
-        # scans of the corpus in the executed plan.  The count frames are
-        # vocabulary-sized, so checkpointing them (the repo's standard
-        # multi-consumer idiom, cf. corpus_end_to_end) collapses the plan
-        # to one LM pass per count frame + one pass over the scored docs.
-        c1 = c1.localCheckpoint(eager=True)
-        c2 = c2.localCheckpoint(eager=True)
+    # c1 feeds THREE consumers (self-prob join, prev-prob join, the
+    # totals scalar) and c2 one more — without materialization each
+    # consumer re-runs the whole LM token-explode lineage, i.e. 13
+    # scans of the corpus in the executed plan.  The count frames are
+    # vocabulary-sized, so checkpointing them (the repo's standard
+    # multi-consumer idiom, cf. corpus_end_to_end) collapses the plan
+    # to one LM pass per count frame + one pass over the scored docs.
+    c1 = c1.localCheckpoint(eager=True)
+    c2 = c2.localCheckpoint(eager=True)
     totals = c1.agg(
         F.sum("c1").alias("lm_total"), F.count("*").alias("lm_vocab")
     )
@@ -150,7 +148,6 @@ def min_k_prob_score(
     id_col: str = "doc_id",
     alpha: float = 0.1,
     round_digits: int = 6,
-    materialize_lm: bool = True,
     docs_tokens: DataFrame | None = None,
     lm_tokens: DataFrame | None = None,
 ) -> DataFrame:
@@ -171,7 +168,6 @@ def min_k_prob_score(
         id_col,
         alpha,
         round_digits,
-        materialize_lm,
         docs_tokens=docs_tokens,
         lm_tokens=lm_tokens,
     )
@@ -202,7 +198,6 @@ def ngram_lm_score(
     head_nll: float = 5.0,
     tail_nll: float = 7.5,
     round_digits: int = 6,
-    materialize_lm: bool = True,
     docs_tokens: DataFrame | None = None,
     lm_tokens: DataFrame | None = None,
 ) -> DataFrame:
@@ -241,7 +236,6 @@ def ngram_lm_score(
         id_col,
         alpha,
         round_digits,
-        materialize_lm,
         docs_tokens=docs_tokens,
         lm_tokens=lm_tokens,
     )

@@ -23,7 +23,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wellmeet_data_pipeline_spark.catalog import local_frame
 from wellmeet_data_pipeline_spark.functions.enrichment import GeoFn, geocode_with_cache
 from wellmeet_data_pipeline_spark.operators.projections import (
     fill_rds_defaults,
@@ -33,11 +32,9 @@ from wellmeet_data_pipeline_spark.operators.projections import (
 )
 from wellmeet_data_pipeline_spark.operators.joins import insert_if_absent
 from wellmeet_data_pipeline_spark.schemas import RESTAURANT, REVIEW
-from wellmeet_data_pipeline_spark.sinks.merge import (
-    merge_append,
-    read_current_or_none,
-)
-from wellmeet_data_pipeline_spark.sources.ingest import fetch_rows, incremental_ingest, seed_frame
+from wellmeet_data_pipeline_spark.sinks.merge import merge_append
+from wellmeet_data_pipeline_spark.sources.ingest import fetch_rows, seed_frame
+from wellmeet_data_pipeline_spark.streaming.pipeline import unseen
 from wellmeet_data_pipeline_spark.functions.text import clean_address
 
 
@@ -63,12 +60,7 @@ def discover_restaurants(
         )
     projected = projected.select([f.name for f in RESTAURANT.fields])
 
-    cur = read_current_or_none(spark, store_path, id_col="place_id")
-    existing = (
-        cur.select("place_id") if cur is not None
-        else local_frame(spark, [], "place_id string")
-    )
-    fresh = incremental_ingest(projected.filter(F.col("place_id").isNotNull()), existing, "place_id")
+    fresh = unseen(spark, projected.filter(F.col("place_id").isNotNull()), store_path, "place_id")
     merge_append(fresh, store_path, partition_col=None, batch_seq=batch_seq)
     return fresh
 
@@ -92,12 +84,7 @@ def ingest_reviews(
     seeds = seed_frame(spark, place_ids, pages)
     raw = fetch_rows(seeds, fetcher, raw_schema)
     reviews = project_review(raw)
-    cur = read_current_or_none(spark, store_path, id_col=["place_id", "id"])
-    existing = (
-        cur.select("place_id", "id") if cur is not None
-        else local_frame(spark, [], "place_id string, id string")
-    )
-    fresh = incremental_ingest(reviews, existing, ["place_id", "id"])
+    fresh = unseen(spark, reviews, store_path, ["place_id", "id"])
     merge_append(fresh, store_path, partition_col="place_id", batch_seq=batch_seq)
     return fresh
 

@@ -102,11 +102,7 @@ def claim_batch_seq(path: str, writer_id: str = "", max_attempts: int = 1000) ->
         # started life in explicit-seq mode): claiming one of those seqs
         # would make merge_append treat the new batch as already-committed
         # and silently drop it
-        existing += [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(path)
-            if d.startswith(f"{BATCH_DIR_KEY}=") and d.split("=", 1)[1].isdigit()
-        ]
+        existing += committed_seqs(path)
         seq = max(existing, default=-1) + 1
         try:
             fd = os.open(
@@ -121,6 +117,19 @@ def claim_batch_seq(path: str, writer_id: str = "", max_attempts: int = 1000) ->
     raise RuntimeError(
         f"could not claim a batch seq after {max_attempts} attempts at {commits}"
     )
+
+
+def committed_seqs(path: str) -> list[int]:
+    """The seqs of the store's committed `batch_commit=<seq>` directories
+    (none before the store exists); a driver-side listing, no Spark job."""
+    if not os.path.isdir(path):
+        return []
+    prefix = f"{BATCH_DIR_KEY}="
+    return [
+        int(d[len(prefix):])
+        for d in os.listdir(path)
+        if d.startswith(prefix) and d[len(prefix):].isdigit()
+    ]
 
 
 def merge_append(

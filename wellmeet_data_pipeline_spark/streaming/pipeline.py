@@ -45,6 +45,7 @@ from wellmeet_data_pipeline_spark.sinks.merge import (
     merge_append,
     read_current_or_none,
 )
+from wellmeet_data_pipeline_spark.sources.ingest import incremental_ingest
 
 
 def landing_stream(
@@ -115,8 +116,7 @@ def unseen(
     cur = read_current_or_none(spark, store, id_col=key)
     if cur is None:
         return frame
-    keys = [key] if isinstance(key, str) else key
-    return frame.join(cur.select(*keys), key, "left_anti")
+    return incremental_ingest(frame, cur, key)
 
 
 def run_ingest_pipeline(
