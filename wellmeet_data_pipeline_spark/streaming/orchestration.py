@@ -46,7 +46,6 @@ def _fan_out(
     review_store: str,
     review_fetcher: Callable[[str, int], list[dict]],
     max_keys: int | None,
-    min_seq: int,
 ) -> int:
     """One fan-out round: ingest the reviews of the first `max_keys`
     pending places (all of them for None), then mark them done; returns
@@ -67,7 +66,7 @@ def _fan_out(
     chunk = [r["place_id"] for r in pending.collect()]
     if chunk:
         committed = committed_seqs(review_store) + committed_seqs(backlog_store)
-        seq = max([min_seq, *(s + 1 for s in committed)])
+        seq = 1 + max(committed, default=-1)
         ingest_reviews(spark, chunk, review_fetcher, review_store, batch_seq=seq)
         done = local_frame(spark, [(k,) for k in chunk], "place_id string")
         merge_append(done, backlog_store, partition_col=None, batch_seq=seq)
@@ -81,17 +80,15 @@ def drain_backlog(
     review_store: str,
     review_fetcher: Callable[[str, int], list[dict]],
     max_keys_per_batch: int | None,
-    start_seq: int = 1_000_000,
 ) -> None:
     """Fan out every pending place, one round of at most
     max_keys_per_batch keys (None: no cap) at a time, until a round
-    comes back short of the cap.  Rounds commit under seqs of at least
-    `start_seq`."""
+    comes back short of the cap."""
     if max_keys_per_batch is not None and max_keys_per_batch < 1:
         raise ValueError(f"max_keys_per_batch must be >= 1, got {max_keys_per_batch}")
     while _fan_out(
         spark, restaurant_store, backlog_store, review_store, review_fetcher,
-        max_keys_per_batch, start_seq,
+        max_keys_per_batch,
     ) == max_keys_per_batch:
         pass
 
@@ -131,7 +128,7 @@ def run_orchestration(
         merge_append(fresh, restaurant_store, partition_col=None, batch_seq=batch_id)
         _fan_out(
             spark, restaurant_store, backlog_store, review_store, review_fetcher,
-            max_keys_per_batch, batch_id,
+            max_keys_per_batch,
         )
 
     progress = drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
