@@ -101,7 +101,7 @@ def test_merge_append_zero_row_batch_commits_no_part_file(spark, tmp_path):
     import glob
     import os
 
-    from wellmeet_data_pipeline_spark.sinks.merge import committed_seq_pin
+    from wellmeet_data_pipeline_spark.sinks.merge import committed_seq_pin, read_current_or_none
 
     store = str(tmp_path / "store")
     empty = _reviews(spark, [])
@@ -119,6 +119,14 @@ def test_merge_append_zero_row_batch_commits_no_part_file(spark, tmp_path):
     assert committed_seq_pin(claimed) == seq
     merge_append(_reviews(spark, [("r2", "p1", "v1")]), claimed, batch_seq=None)
     assert {r["id"] for r in read_current(spark, claimed).collect()} == {"r1", "r2"}
+
+    # a store with no part file is "not yet created": a missing path, an
+    # empty directory, a store holding only an empty claimed batch
+    only_empty = str(tmp_path / "only_empty")
+    merge_append(empty, only_empty, batch_seq=None)
+    os.mkdir(tmp_path / "empty_dir")
+    for path in ("missing", "empty_dir", "only_empty"):
+        assert read_current_or_none(spark, str(tmp_path / path)) is None, path
 
 
 def test_http_sink_errors_as_data(spark):
@@ -146,9 +154,59 @@ def test_compact_materializes_dedup(spark, tmp_path):
     merge_append(_reviews(spark, [("r1", "p1", "v1"), ("r2", "p1", "v1")]), store, batch_seq=0)
     merge_append(_reviews(spark, [("r2", "p1", "v2"), ("r3", "p2", "v1")]), store, batch_seq=1)
     compact(spark, store, out)
-    cur = read_current(spark, out)
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = scheduler.nextJobId()
+    cur = read_current(spark, out)  # no batch_commit level, same footer read
+    assert scheduler.nextJobId() == jobs
     rows = {r["id"]: r["content"] for r in cur.collect()}
     assert rows == {"r1": "v1", "r2": "v1", "r3": "v1"}
+    assert sorted(cur.collect()) == sorted(read_current(spark, store).collect())
+
+
+def test_read_current_partition_key_reads_back_as_written(spark, tmp_path):
+    """A partition key reads back as the string that was written, whatever
+    ids the store holds.  Partition-type inference would read "007" as 7
+    while every id is numeric (so a read of place "7" returned place
+    "007"'s rows), as bigint past 2**31, and a filter on "abc" would fail
+    its cast under ANSI mode."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType
+
+    store = str(tmp_path / "store")
+    written = set()
+    for seq, pid in enumerate(["007", "3000000000", "abc"]):
+        merge_append(_reviews(spark, [(f"r{seq}", pid, "v")]), store, batch_seq=seq)
+        written.add(pid)
+        cur = read_current(spark, store)
+        assert cur.schema["place_id"].dataType == StringType(), pid
+        assert {r["place_id"] for r in cur.collect()} == written
+        assert cur.filter(F.col("place_id") == "7").count() == 0
+        assert cur.filter(F.col("place_id") == "abc").count() == len({"abc"} & written)
+
+
+def test_read_current_plans_without_a_spark_job(spark, tmp_path):
+    """Planning read_current starts no Spark job: the read schema comes
+    from one part-file footer, not from schema inference.  The
+    save-reviews read of one place through project_payloads runs at most
+    2.  Counted with the DAGScheduler's job counter."""
+    from pyspark.sql import functions as F
+
+    from wellmeet_data_pipeline_spark.pipelines import ingest_reviews, project_payloads
+
+    def fetch(place_id, page):
+        return [{"author": "a", "content": f"review {i} of {place_id}", "visit_date": "d",
+                 "place_id": place_id} for i in range(3)]
+
+    store = str(tmp_path / "rev")
+    for seq, places in enumerate([["p1", "p2"], ["p2", "p3"]]):
+        ingest_reviews(spark, places, fetch, store, batch_seq=seq)
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = scheduler.nextJobId()
+    cur = read_current(spark, store, id_col=["place_id", "id"])
+    assert scheduler.nextJobId() == jobs
+    rows = project_payloads(cur.filter(F.col("place_id") == "p2"), 10).collect()
+    assert len(rows) == 3
+    assert scheduler.nextJobId() - jobs <= 2
 
 
 def test_compact_parquet_reduces_file_count(spark, tmp_path):

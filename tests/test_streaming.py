@@ -938,7 +938,7 @@ def test_overflowing_activations_commit_each_review_batch_once(spark, tmp_path):
 
 def test_steady_orchestration_activation_job_budget(spark, tmp_path):
     """One steady activation — 4 one-restaurant files, cap 16 — runs at
-    most 23 Spark jobs.  Counted with the DAGScheduler's job counter:
+    most 17 Spark jobs.  Counted with the DAGScheduler's job counter:
     job groups miss the jobs the stream's own thread launches."""
     from wellmeet_data_pipeline_spark.streaming.orchestration import run_orchestration
 
@@ -954,7 +954,7 @@ def test_steady_orchestration_activation_job_budget(spark, tmp_path):
                                      backlog_store=str(tmp_path / "done"), max_keys_per_batch=16)
         jobs = scheduler.nextJobId() - jobs_before
     assert sum(p.numInputRows for p in progress) == 4  # one scan of the batch
-    assert jobs <= 23, jobs
+    assert jobs <= 17, jobs
 
 
 def test_streaming_corpus_dsir_gate_drops_off_distribution_docs(spark, tmp_path):

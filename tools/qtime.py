@@ -6,7 +6,9 @@ min-of-N timing of the same collect() action bench.py times, printed
 beside the fewest Py4J round trips (driver -> JVM commands) one run
 sent from the timing thread, plan building and collect together; py4j's
 finalizer thread, which releases JVM objects asynchronously, is not
-counted.  Usage:
+counted.  Beside them goes the fewest Spark jobs one run started over
+plan building and collect (the DAGScheduler's `nextJobId()` delta), so a
+job that starts while a plan is built shows up.  Usage:
 
     python tools/qtime.py [--sf SF_DIR] [--runs N] [--explain-dir DIR] q1 q2 ...
 
@@ -50,6 +52,7 @@ def main() -> None:
     REGISTRY["pricing_summary"].fn(spark, args.sf).collect()
 
     frames = SharedFrames(args.sf)
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     round_trips = [0]
     thread = threading.get_ident()
     send = ClientServerConnection.send_command
@@ -72,16 +75,22 @@ def main() -> None:
             path = os.path.join(args.explain_dir, f"{name}{args.suffix}.txt")
             with open(path, "w") as fh:
                 fh.write(buf.getvalue())
-        best = trips = None
+        best = trips = jobs = None
         for _ in range(args.runs):
+            # the job counter is read outside the timed, counted span
+            first_job = scheduler.nextJobId()
             round_trips[0] = 0
             t0 = time.perf_counter()
             REGISTRY[name].fn(spark, args.sf, **kwargs).collect()
             dt = time.perf_counter() - t0
+            run_trips = round_trips[0]
+            run_jobs = scheduler.nextJobId() - first_job
             best = dt if best is None else min(best, dt)
-            trips = round_trips[0] if trips is None else min(trips, round_trips[0])
-        out[name] = {"s": round(best, 3), "py4j_round_trips": trips}
-        print(f"{name}: {out[name]['s']}s, {trips} py4j round trips", flush=True)
+            trips = run_trips if trips is None else min(trips, run_trips)
+            jobs = run_jobs if jobs is None else min(jobs, run_jobs)
+        out[name] = {"s": round(best, 3), "py4j_round_trips": trips, "spark_jobs": jobs}
+        print(f"{name}: {out[name]['s']}s, {trips} py4j round trips, {jobs} spark jobs",
+              flush=True)
     print(json.dumps(out))
 
 

@@ -34,6 +34,15 @@ the highest contiguous committed claim (`committed_seq_pin`), so a batch
 is never consumed before every earlier claimed batch is final: no torn
 batches, no first-wins survivor flips.  On an object store the rename
 maps to a manifest/conditional-PUT commit; the pin logic is unchanged.
+
+Read schema: `read_current` passes the store's schema to the parquet
+reader instead of letting Spark infer it, which runs one Spark job per
+call.  The schema comes from the footer of the store's first part file
+in path order (the file inference would read): the data columns are the
+row schema Spark's writer recorded there, then the file's `key=value`
+path levels follow, `batch_commit` as bigint and every other partition
+key (`place_id`) as string.  A partition key therefore reads back as the
+string that was written, whatever ids the store holds.
 """
 
 from __future__ import annotations
@@ -47,6 +56,7 @@ import uuid
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructType
 
 # Partition-style directory key for the per-batch commit unit
 # (`<store>/batch_commit=<seq>/...`).  Deliberately NOT underscore-prefixed
@@ -67,6 +77,10 @@ BATCH_COL = "_batch_seq"
 # finish a batch within the lease or give up and re-claim; the same
 # contract every lease-based commit protocol carries.
 STALE_CLAIM_SECONDS = 900.0
+
+# The footer key under which Spark's parquet writer records the row schema
+# of the data columns (the partition columns live in the path).
+_SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def claim_batch_seq(path: str, writer_id: str = "", max_attempts: int = 1000) -> int:
@@ -255,6 +269,55 @@ def committed_seq_pin(path: str, stale_claim_seconds: float = STALE_CLAIM_SECOND
     return pin
 
 
+def _listed(name: str) -> bool:
+    """Whether Spark's file listing keeps this name: it skips `.`-names,
+    `_`-names that are not `key=value` levels (`_staging`, `_commits`,
+    `_SUCCESS`) and in-flight `._COPYING_` files."""
+    return not (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _first_part_file(root: str) -> str | None:
+    """The first part file under `root` in full-path order — the file
+    whose footer Spark's own schema inference reads — or None when the
+    store has none (missing path, empty directory, empty batches)."""
+    try:
+        with os.scandir(root) as it:
+            entries = [e for e in it if _listed(e.name)]
+    except (FileNotFoundError, NotADirectoryError):
+        return None
+    # a directory sorts as "<name>/", which is how its files' paths sort
+    for e in sorted(entries, key=lambda e: e.name + "/" if e.is_dir() else e.name):
+        found = _first_part_file(e.path) if e.is_dir() else e.path
+        if found:
+            return found
+    return None
+
+
+def _store_schema(path: str) -> StructType | None:
+    """The store's read schema, built on the driver from one footer: the
+    data columns are the Spark row schema the writer recorded in the
+    first part file, then come that file's `key=value` path levels —
+    `batch_commit` as bigint, every other partition key as string, so a
+    key reads back as the string that was written.  None when the store
+    has no part file, or its first part was not written by Spark."""
+    part = _first_part_file(path)
+    if part is None:
+        return None
+    row_schema = (pq.read_metadata(part).metadata or {}).get(_SPARK_ROW_SCHEMA_KEY)
+    if row_schema is None:
+        return None
+    schema = StructType.fromJson(json.loads(row_schema))
+    for level in os.path.relpath(os.path.dirname(part), path).split(os.sep):
+        key, eq, _ = level.partition("=")
+        if eq:
+            schema = schema.add(key, LongType() if key == BATCH_DIR_KEY else StringType())
+    return schema
+
+
 def read_current(
     spark: SparkSession,
     path: str,
@@ -272,9 +335,20 @@ def read_current(
     via directory rename), and for multi-writer stores the read pins to
     `committed_seq_pin` so a batch never becomes visible before every
     earlier claimed batch is final — a reader racing a commit sees the old
-    snapshot or the new one, never a mix."""
+    snapshot or the new one, never a mix.
+
+    The read schema is built on the driver from one part-file footer
+    (`_store_schema`), so planning the view starts no Spark job (schema
+    inference runs one per call).  Partition keys such as the review
+    store's `place_id` read back as the strings that were written: "007"
+    stays "007", where inference would read 7 while every id is numeric.
+    A store with no part file, or whose first part carries no Spark row
+    schema, falls back to `spark.read.parquet` (inference), whose
+    no-part-file errors `read_current_or_none` maps to None."""
     pin = committed_seq_pin(path, stale_claim_seconds)
-    df = spark.read.parquet(path)
+    schema = _store_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     if pin is not None and BATCH_DIR_KEY in df.columns:
         df = df.filter(F.col(BATCH_DIR_KEY) <= pin)  # partition-pruned
     keys = [id_col] if isinstance(id_col, str) else list(id_col)
