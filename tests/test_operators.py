@@ -9,7 +9,6 @@ from wellmeet_data_pipeline_spark.operators.dedup import (
     shingles_df,
 )
 from wellmeet_data_pipeline_spark.operators.joins import (
-    anti_new_rows,
     high_water_mark_filter,
     insert_if_absent,
 )
@@ -27,13 +26,6 @@ def test_dedup_keep_first_is_deterministic(spark):
     )
     out = {r["key"]: r["val"] for r in dedup_keep_first(df, "key", "seq").collect()}
     assert out == {"k1": "first", "k2": "only"}
-
-
-def test_anti_new_rows(spark):
-    new = spark.createDataFrame([("a",), ("b",), ("c",)], "place_id string")
-    seen = spark.createDataFrame([("b",)], "place_id string")
-    got = {r["place_id"] for r in anti_new_rows(new, seen, "place_id").collect()}
-    assert got == {"a", "c"}
 
 
 def test_insert_if_absent_dedups_batch_then_filters(spark):

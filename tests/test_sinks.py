@@ -1,3 +1,9 @@
+import re
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
 from wellmeet_data_pipeline_spark.sinks.http import post_partitioned, post_report
 from wellmeet_data_pipeline_spark.sinks.merge import merge_append, read_current
 
@@ -37,7 +43,7 @@ def test_claim_batch_seq_concurrent_writers_get_distinct_seqs(tmp_path):
         try:
             barrier.wait()
             for _ in range(5):
-                seqs.append(claim_batch_seq(store, writer_id=f"w{i}"))
+                seqs.append(claim_batch_seq(store))
         except Exception as e:  # pragma: no cover - failure reporting
             errs.append(e)
 
@@ -67,7 +73,7 @@ def test_merge_append_concurrent_double_commit(spark, tmp_path):
 
     def commit(name, df):
         barrier.wait()
-        got[name] = merge_append(df, store, batch_seq=None, writer_id=name)
+        got[name] = merge_append(df, store, batch_seq=None)
 
     t1 = threading.Thread(target=commit, args=("w1", b1))
     t2 = threading.Thread(target=commit, args=("w2", b2))
@@ -80,7 +86,7 @@ def test_merge_append_concurrent_double_commit(spark, tmp_path):
 
     # replay of the losing batch claims a FRESH seq; the view is unchanged
     loser_df = b1 if winner == "w2" else b2
-    seq3 = merge_append(loser_df, store, batch_seq=None, writer_id="replay")
+    seq3 = merge_append(loser_df, store, batch_seq=None)
     assert seq3 == 2
     cur2 = {r["id"]: r["content"] for r in read_current(spark, store).collect()}
     assert cur2 == cur
@@ -121,12 +127,29 @@ def test_merge_append_zero_row_batch_commits_no_part_file(spark, tmp_path):
     assert {r["id"] for r in read_current(spark, claimed).collect()} == {"r1", "r2"}
 
     # a store with no part file is "not yet created": a missing path, an
-    # empty directory, a store holding only an empty claimed batch
+    # empty directory, a store holding only an empty claimed batch.  That
+    # is decided on the driver (no Spark job), and read_current raises an
+    # error naming the store
     only_empty = str(tmp_path / "only_empty")
     merge_append(empty, only_empty, batch_seq=None)
     os.mkdir(tmp_path / "empty_dir")
-    for path in ("missing", "empty_dir", "only_empty"):
-        assert read_current_or_none(spark, str(tmp_path / path)) is None, path
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    for name in ("missing", "empty_dir", "only_empty"):
+        path = str(tmp_path / name)
+        jobs = scheduler.nextJobId()
+        assert read_current_or_none(spark, path) is None, name
+        assert scheduler.nextJobId() == jobs, name
+        with pytest.raises(FileNotFoundError, match=re.escape(path)):
+            read_current(spark, path)
+
+    # a part file without Spark's row schema is not "not yet created":
+    # both readers raise, naming the store
+    foreign = tmp_path / "foreign"
+    foreign.mkdir()
+    pq.write_table(pa.table({"id": ["r1"]}), foreign / "part-0.parquet")
+    for read in (read_current, read_current_or_none):
+        with pytest.raises(ValueError, match=re.escape(str(foreign))):
+            read(spark, str(foreign))
 
 
 def test_http_sink_errors_as_data(spark):
@@ -156,11 +179,27 @@ def test_compact_materializes_dedup(spark, tmp_path):
     compact(spark, store, out)
     scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     jobs = scheduler.nextJobId()
-    cur = read_current(spark, out)  # no batch_commit level, same footer read
+    cur = read_current(spark, out)  # an ordinary store: batch_commit=0
     assert scheduler.nextJobId() == jobs
     rows = {r["id"]: r["content"] for r in cur.collect()}
     assert rows == {"r1": "v1", "r2": "v1", "r3": "v1"}
     assert sorted(cur.collect()) == sorted(read_current(spark, store).collect())
+
+
+@pytest.mark.parametrize("partition_col", ["place_id", None])
+def test_compacted_store_takes_further_appends(spark, tmp_path, partition_col):
+    """A compacted store is an ordinary store: after one more append its
+    view holds every compacted row and the appended one, partitioned or
+    not, and the compacted rows stay first-wins over a replayed id."""
+    from wellmeet_data_pipeline_spark.sinks.merge import compact
+
+    store, out = str(tmp_path / "store"), str(tmp_path / "compacted")
+    merge_append(_reviews(spark, [("r1", "p1", "v1"), ("r2", "p2", "v1")]), store, partition_col, 0)
+    merge_append(_reviews(spark, [("r2", "p2", "v2"), ("r3", "p3", "v1")]), store, partition_col, 1)
+    compact(spark, store, out)
+    merge_append(_reviews(spark, [("r3", "p3", "v9"), ("r4", "p4", "v1")]), out, partition_col, None)
+    rows = {r["id"]: (r["place_id"], r["content"]) for r in read_current(spark, out).collect()}
+    assert rows == {"r1": ("p1", "v1"), "r2": ("p2", "v1"), "r3": ("p3", "v1"), "r4": ("p4", "v1")}
 
 
 def test_read_current_partition_key_reads_back_as_written(spark, tmp_path):
@@ -207,22 +246,6 @@ def test_read_current_plans_without_a_spark_job(spark, tmp_path):
     rows = project_payloads(cur.filter(F.col("place_id") == "p2"), 10).collect()
     assert len(rows) == 3
     assert scheduler.nextJobId() - jobs <= 2
-
-
-def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    from wellmeet_data_pipeline_spark.sinks.compact import compact_parquet
-
-    src, dst = str(tmp_path / "many"), str(tmp_path / "few")
-    df = spark.range(0, 1000).withColumnRenamed("id", "k")
-    df.repartition(40).write.parquet(src)  # simulate micro-batch fragmentation
-    n_files = compact_parquet(spark, src, dst, target_rows_per_file=500, sort_cols=["k"])
-    assert n_files == 2
-    import glob
-
-    assert len(glob.glob(dst + "/part-*.parquet")) == 2
-    out = spark.read.parquet(dst)
-    assert out.count() == 1000
-    assert sorted(r["k"] for r in out.collect()) == list(range(1000))
 
 
 def test_write_training_shards_layout_and_order(spark, tmp_path):
@@ -276,13 +299,13 @@ def test_merge_reader_never_sees_torn_batch(spark, tmp_path):
 
     store = str(tmp_path / "store")
     base = _reviews(spark, [(f"r{i}", "p1", "old") for i in range(60)])
-    merge_append(base, store, batch_seq=None, writer_id="base")
+    merge_append(base, store, batch_seq=None)
 
     new = _reviews(spark, [(f"n{i}", "p1", "new") for i in range(60)])
     done = threading.Event()
 
     def commit():
-        merge_append(new, store, batch_seq=None, writer_id="w2")
+        merge_append(new, store, batch_seq=None)
         done.set()
 
     t = threading.Thread(target=commit)
@@ -310,10 +333,10 @@ def test_merge_reader_pins_to_contiguous_committed_prefix(spark, tmp_path):
     from wellmeet_data_pipeline_spark.sinks.merge import claim_batch_seq
 
     store = str(tmp_path / "store")
-    slow_seq = claim_batch_seq(store, writer_id="slow")  # in-flight writer
+    slow_seq = claim_batch_seq(store)  # in-flight writer
     assert slow_seq == 0
     fast = _reviews(spark, [("rX", "p1", "fast"), ("r2", "p1", "fast")])
-    assert merge_append(fast, store, batch_seq=None, writer_id="fast") == 1
+    assert merge_append(fast, store, batch_seq=None) == 1
     # batch 1 is committed but batch 0 is claimed and unfinished: pin = -1
     assert read_current(spark, store).count() == 0
     slow = _reviews(spark, [("rX", "p1", "slow")])
@@ -330,17 +353,15 @@ def test_merge_reader_skips_stale_abandoned_claim(spark, tmp_path):
     from wellmeet_data_pipeline_spark.sinks.merge import claim_batch_seq
 
     store = str(tmp_path / "store")
-    dead_seq = claim_batch_seq(store, writer_id="dead")
+    dead_seq = claim_batch_seq(store)
     claim = os.path.join(store, "_commits", f"{dead_seq:020d}.commit")
     os.utime(claim, (1, 1))  # crashed long ago
     live = _reviews(spark, [("r1", "p1", "v1")])
-    merge_append(live, store, batch_seq=None, writer_id="live")
+    merge_append(live, store, batch_seq=None)
     # default lease (900s): claim 0 long stale -> skipped, batch 1 visible
     assert read_current(spark, store).count() == 1
     # a FRESH unfinished claim still blocks (fresh mtime)
-    claim_batch_seq(store, writer_id="slow2")
-    merge_append(
-        _reviews(spark, [("r9", "p1", "v9")]), store, batch_seq=None, writer_id="w9"
-    )
+    claim_batch_seq(store)
+    merge_append(_reviews(spark, [("r9", "p1", "v9")]), store, batch_seq=None)
     cur = {r["id"] for r in read_current(spark, store).collect()}
     assert cur == {"r1"}  # seq 3 invisible while seq 2 is in flight

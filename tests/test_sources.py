@@ -56,6 +56,11 @@ def test_incremental_ingest_anti_join(spark):
     existing = spark.createDataFrame([("p1-1-0",), ("p1-1-2",)], "id string")
     got = {r["id"] for r in incremental_ingest(rows, existing).collect()}
     assert got == {"p1-1-1"}
+    # a named key column, as the J1 anti join of new places uses it
+    new = spark.createDataFrame([("a",), ("b",), ("c",)], "place_id string")
+    seen = spark.createDataFrame([("b",)], "place_id string")
+    got = {r["place_id"] for r in incremental_ingest(new, seen, "place_id").collect()}
+    assert got == {"a", "c"}
 
 
 def test_paginated_datasource(spark):
@@ -76,13 +81,13 @@ def test_paginated_datasource(spark):
 
 
 def test_jdbc_plan_insert_if_absent(spark):
-    from wellmeet_data_pipeline_spark.sinks.jdbc import plan_insert_if_absent
+    from wellmeet_data_pipeline_spark.operators.joins import insert_if_absent
 
     incoming = spark.createDataFrame(
         [("r1", "a1"), ("r2", "a2")], "name string, address string"
     )
     existing = spark.createDataFrame([("r2", "a2")], "name string, address string")
-    got = plan_insert_if_absent(incoming, existing, ["name", "address"]).collect()
+    got = insert_if_absent(incoming, existing, ["name", "address"]).collect()
     assert [r["name"] for r in got] == ["r1"]
 
 

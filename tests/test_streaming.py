@@ -186,17 +186,31 @@ def test_merge_append_store_contract_is_structural():
     emptiness probe of its own: merge_append commits nothing for an
     empty batch), no module in streaming/ spells the batch column or
     appends outside merge_append, and the orchestration keeps no todo
-    log of its own (the restaurant store is its fan-out ledger)."""
+    log of its own (the restaurant store is its fan-out ledger).  There is
+    one store format: no second compaction module, no knob no caller
+    sets, and one schema-passing reader call with no exception-text
+    matching."""
     import glob
     import inspect
 
-    from wellmeet_data_pipeline_spark.sinks import merge
+    from wellmeet_data_pipeline_spark import sinks
+    from wellmeet_data_pipeline_spark.sinks import http, jdbc, merge, shards
     from wellmeet_data_pipeline_spark.streaming import orchestration, pipeline
 
     params = lambda fn: set(inspect.signature(fn).parameters)
     assert not {"id_col", "batch_col"} & params(merge.merge_append)
     for fn in (merge.read_current, merge.read_current_or_none, merge.compact):
         assert "batch_col" not in params(fn), fn.__name__
+    assert not os.path.exists(os.path.join(os.path.dirname(sinks.__file__), "compact.py"))
+    knobs = {"stale_claim_seconds", "writer_id", "max_attempts", "target_rows_per_file"}
+    for mod in (http, jdbc, merge, shards):
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if fn.__module__ == mod.__name__:
+                assert not knobs & params(fn), f"{mod.__name__}.{name}"
+    assert "partition_col" not in params(merge.compact)
+    merge_src = inspect.getsource(merge)
+    assert "AnalysisException" not in merge_src
+    assert merge_src.count("spark.read") == 1 and "spark.read.schema(" in merge_src
     assert not hasattr(pipeline, "append_nonempty")
 
     body = inspect.getsource(pipeline.run_partials)
@@ -475,8 +489,9 @@ def test_stateful_dedup_deterministic_survivor(spark, tmp_path):
 
 def test_corpus_store_compaction_preserves_view(spark, tmp_path):
     """After several micro-batches fragment the store, the maintenance
-    compaction must (1) shrink the file count to the target and
-    (2) leave the dedup-on-read view byte-identical."""
+    compaction must (1) shrink the file count (AQE coalesces the view's
+    exchange into one output file here) and (2) leave the dedup-on-read
+    view byte-identical."""
     import glob
     import json
 
@@ -507,9 +522,8 @@ def test_corpus_store_compaction_preserves_view(spark, tmp_path):
     assert len(glob.glob(store + "/batch_commit=*/*.parquet")) >= 3
 
     compacted = str(tmp_path / "c_store_compacted")
-    compact(spark, store, compacted, id_col="fingerprint", partition_col=None,
-            target_rows_per_file=12)
-    assert len(glob.glob(compacted + "/*.parquet")) == 1
+    compact(spark, store, compacted, id_col="fingerprint")
+    assert len(glob.glob(compacted + "/**/*.parquet", recursive=True)) == 1
     after = {(r["doc_id"], r["text"]) for r in read_corpus(spark, compacted).collect()}
     assert after == before
 
@@ -843,9 +857,12 @@ def _pending(spark, rest_store, done_store):
 def test_done_store_compaction_preserves_pending(spark, tmp_path):
     """The done store is an ordinary merge-append store: sinks.merge.compact
     rewrites it to a NEW path and pending is unchanged, a replayed
-    duplicate done mark included."""
+    duplicate done mark included.  The compacted store then serves as the
+    backlog store of an activation whose rounds append to it: no place
+    already done is fetched again."""
     from wellmeet_data_pipeline_spark.catalog import local_frame
     from wellmeet_data_pipeline_spark.sinks.merge import compact, merge_append
+    from wellmeet_data_pipeline_spark.streaming.orchestration import run_orchestration
 
     rest_store = str(tmp_path / "rest")
     done = str(tmp_path / "done")
@@ -857,9 +874,20 @@ def test_done_store_compaction_preserves_pending(spark, tmp_path):
     merge_append(marks(["p1"]), done, partition_col=None, batch_seq=1)
 
     assert _pending(spark, rest_store, done) == {"p3", "p4", "p5"}
-    compact(spark, done, out, id_col="place_id", partition_col=None)
+    compact(spark, done, out, id_col="place_id")
     assert _pending(spark, rest_store, out) == {"p3", "p4", "p5"}
     assert spark.read.parquet(out).count() == 3  # the duplicate mark collapsed
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    rev_store = str(tmp_path / "rev")
+    # a cap of 1 makes three rounds, each reading the done marks the
+    # previous round appended to the compacted store
+    run_orchestration(spark, str(landing), rest_store, rev_store, str(tmp_path / "ckpt"),
+                      _review_fetcher(), backlog_store=out, max_keys_per_batch=1)
+    revs = read_current(spark, rev_store, id_col=["place_id", "id"]).collect()
+    assert sorted(r["place_id"] for r in revs) == ["p3", "p3", "p4", "p4", "p5", "p5"]
+    assert _pending(spark, rest_store, out) == set()
 
 
 def _rest(pid):

@@ -1,4 +1,5 @@
-"""Join operators (SURVEY.md §2.4 J1-J4).
+"""Join operators (SURVEY.md §2.4 J2-J4; J1's anti join is
+`sources.ingest.incremental_ingest`).
 
 The reference's joins are all Python set/loop probes (degenerate hash
 joins).  Here every one is a declarative DataFrame join so Catalyst picks
@@ -14,15 +15,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def anti_new_rows(incoming: DataFrame, existing_keys: DataFrame, key: str | Sequence[str]) -> DataFrame:
-    """J1 (restaurant-crawler/restaurant-crawler.py:370-375): keep only rows
-    whose key is not already present.  The reference loads the full key set
-    into a Python set; at scale the seen-set may itself be huge, so we do NOT
-    unconditionally broadcast — Catalyst/AQE decides from size stats."""
-    keys = [key] if isinstance(key, str) else list(key)
-    return incoming.join(existing_keys.select(*keys), on=keys, how="left_anti")
 
 
 def insert_if_absent(incoming: DataFrame, existing: DataFrame, key: Sequence[str]) -> DataFrame:

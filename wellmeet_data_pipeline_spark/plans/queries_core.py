@@ -63,7 +63,6 @@ from wellmeet_data_pipeline_spark.operators.dedup import (
     ngram_jaccard_pairs,
 )
 from wellmeet_data_pipeline_spark.operators.joins import (
-    anti_new_rows,
     enrich_dimension,
     high_water_mark_filter,
     insert_if_absent,
@@ -85,6 +84,7 @@ from wellmeet_data_pipeline_spark.operators.windows import (
     sliding_window_agg,
     tumbling_window_agg,
 )
+from wellmeet_data_pipeline_spark.sources.ingest import incremental_ingest
 
 
 @dataclass(frozen=True)
@@ -164,7 +164,7 @@ def flagship_incremental_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_events = high_water_mark_filter(keyed, "ts", _HWM)
     seen = keyed.filter(F.col("ts") <= F.lit(_HWM).cast("timestamp")).select("surrogate")
     fresh = dedup_keep_first(new_events, "surrogate", "event_id")
-    incoming = anti_new_rows(fresh, seen, "surrogate")
+    incoming = incremental_ingest(fresh, seen, "surrogate")
     cust = table(spark, sf_dir, "customer")
     joined = enrich_dimension(
         incoming.withColumnRenamed("user_id", "c_custkey"), cust, "c_custkey"
@@ -311,7 +311,7 @@ def q_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     rich = table(spark, sf_dir, "customer").filter(F.col("c_acctbal") >= 1000).select(
         F.col("c_custkey").alias("o_custkey")
     )
-    return anti_new_rows(orders, rich, "o_custkey").select(
+    return incremental_ingest(orders, rich, "o_custkey").select(
         "o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("o_totalprice")
     )
 

@@ -9,9 +9,9 @@ The reference probes MySQL per row then inserts with one commit
              partition — R8's batch-commit, per partition)
 
 No JDBC driver jar ships in this container, so the composition is
-factored to be testable without one: `plan_insert_if_absent` is pure
-DataFrame logic (tested), and `write_insert_if_absent` wires the real
-reader/writer.
+factored to be testable without one: the plan is
+`operators.joins.insert_if_absent`, pure DataFrame logic (tested), and
+`write_insert_if_absent` wires the real reader/writer around it.
 """
 
 from __future__ import annotations
@@ -21,13 +21,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from wellmeet_data_pipeline_spark.operators.joins import insert_if_absent
-
-
-def plan_insert_if_absent(
-    incoming: DataFrame, existing: DataFrame, key: Sequence[str]
-) -> DataFrame:
-    """The pure plan: rows safe to insert (K2 without the I/O)."""
-    return insert_if_absent(incoming, existing, key)
 
 
 def write_insert_if_absent(
@@ -42,7 +35,7 @@ def write_insert_if_absent(
     """K2 end-to-end against a live database.  Returns rows written."""
     props = dict(properties or {})
     existing = spark.read.jdbc(url, table, properties=props).select(*key)
-    fresh = plan_insert_if_absent(incoming, existing, key)
+    fresh = insert_if_absent(incoming, existing, key)
     n = fresh.count()
     if n:
         fresh.write.option("batchsize", str(batchsize)).jdbc(

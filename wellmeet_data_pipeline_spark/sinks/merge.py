@@ -23,8 +23,10 @@ interface stays the same.
 At scale: appends are per-partition files (no read-modify-write of a
 growing object, which is O(total) per batch in the reference); the
 dedup-on-read window shuffles only when the view is queried, and a
-periodic compaction job (`compact`) rewrites partitions to materialize
-the dedup.
+periodic compaction job (`compact`) materializes the dedup into a new
+store.  There is one store format: `compact` writes its output through
+`merge_append` as batch 0, so a compacted store takes further appends
+and reads exactly like any other.
 
 Commit protocol (round 10): every batch is staged under a private
 `_staging/<seq>-<uuid>` directory (its own FileOutputCommitter — racing
@@ -42,7 +44,9 @@ in path order (the file inference would read): the data columns are the
 row schema Spark's writer recorded there, then the file's `key=value`
 path levels follow, `batch_commit` as bigint and every other partition
 key (`place_id`) as string.  A partition key therefore reads back as the
-string that was written, whatever ids the store holds.
+string that was written, whatever ids the store holds.  A store with no
+part file is "not created yet": `read_current` raises for it and
+`read_current_or_none` returns None, both decided on the driver.
 """
 
 from __future__ import annotations
@@ -78,12 +82,15 @@ BATCH_COL = "_batch_seq"
 # contract every lease-based commit protocol carries.
 STALE_CLAIM_SECONDS = 900.0
 
+# Claims `claim_batch_seq` may lose to other writers before it gives up.
+_CLAIM_ATTEMPTS = 1000
+
 # The footer key under which Spark's parquet writer records the row schema
 # of the data columns (the partition columns live in the path).
 _SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def claim_batch_seq(path: str, writer_id: str = "", max_attempts: int = 1000) -> int:
+def claim_batch_seq(path: str) -> int:
     """Optimistic multi-writer commit claim: atomically reserve the next
     batch sequence number for a store via exclusive-create of a marker
     file under `{path}/_commits/` (O_EXCL — two writers racing for the
@@ -106,7 +113,7 @@ def claim_batch_seq(path: str, writer_id: str = "", max_attempts: int = 1000) ->
     like any other retry."""
     commits = os.path.join(path, "_commits")
     os.makedirs(commits, exist_ok=True)
-    for _ in range(max_attempts):
+    for _ in range(_CLAIM_ATTEMPTS):
         existing = [
             int(f.split(".", 1)[0])
             for f in os.listdir(commits)
@@ -125,11 +132,10 @@ def claim_batch_seq(path: str, writer_id: str = "", max_attempts: int = 1000) ->
             )
         except FileExistsError:
             continue  # lost the race for this seq — re-read, try the next
-        with os.fdopen(fd, "w") as fh:
-            json.dump({"writer": writer_id}, fh)
+        os.close(fd)
         return seq
     raise RuntimeError(
-        f"could not claim a batch seq after {max_attempts} attempts at {commits}"
+        f"could not claim a batch seq after {_CLAIM_ATTEMPTS} attempts at {commits}"
     )
 
 
@@ -151,7 +157,6 @@ def merge_append(
     path: str,
     partition_col: str | None = "place_id",
     batch_seq: int | None = 0,
-    writer_id: str = "",
 ) -> int:
     """K1: append-only write; `batch_seq` (stamped as BATCH_COL) records
     arrival order so the read side can keep the FIRST version per id
@@ -175,7 +180,7 @@ def merge_append(
     `read_current_or_none`."""
     claimed = batch_seq is None
     if claimed:
-        batch_seq = claim_batch_seq(path, writer_id)
+        batch_seq = claim_batch_seq(path)
     # Stage into a private directory, then atomically rename the finished
     # directory to `<path>/batch_commit=<seq>`.  A plain concurrent
     # write.mode("append").parquet(path) is NOT safe: racing Spark jobs
@@ -229,7 +234,7 @@ def _staged_rows(staging: str) -> int:
     )
 
 
-def committed_seq_pin(path: str, stale_claim_seconds: float = STALE_CLAIM_SECONDS):
+def committed_seq_pin(path: str):
     """Highest claimed seq such that every NON-STALE claim at or below it
     has a committed batch directory — the snapshot boundary a reader may
     consume without survivor flips (r9 verdict item 5).
@@ -263,7 +268,7 @@ def committed_seq_pin(path: str, stale_claim_seconds: float = STALE_CLAIM_SECOND
             claim_age = now - os.path.getmtime(claim_path)
         except OSError:
             claim_age = 0.0  # claim vanished mid-scan: treat as in-flight
-        if claim_age > stale_claim_seconds:
+        if claim_age > STALE_CLAIM_SECONDS:
             continue  # abandoned claim: burned seq, skip for contiguity
         break  # in-flight writer below the pin: stop here
     return pin
@@ -297,24 +302,25 @@ def _first_part_file(root: str) -> str | None:
     return None
 
 
-def _store_schema(path: str) -> StructType | None:
+def _path_keys(path: str, part: str) -> list[str]:
+    """The keys of the `key=value` directory levels between the store
+    root and one of its part files."""
+    rel = os.path.relpath(os.path.dirname(part), path)
+    return [level.partition("=")[0] for level in rel.split(os.sep) if "=" in level]
+
+
+def _store_schema(path: str, part: str) -> StructType:
     """The store's read schema, built on the driver from one footer: the
     data columns are the Spark row schema the writer recorded in the
-    first part file, then come that file's `key=value` path levels —
-    `batch_commit` as bigint, every other partition key as string, so a
-    key reads back as the string that was written.  None when the store
-    has no part file, or its first part was not written by Spark."""
-    part = _first_part_file(path)
-    if part is None:
-        return None
+    store's first part file `part`, then come that file's `key=value`
+    path levels — `batch_commit` as bigint, every other partition key as
+    string, so a key reads back as the string that was written."""
     row_schema = (pq.read_metadata(part).metadata or {}).get(_SPARK_ROW_SCHEMA_KEY)
     if row_schema is None:
-        return None
+        raise ValueError(f"store {path}: part file {part} carries no Spark row schema")
     schema = StructType.fromJson(json.loads(row_schema))
-    for level in os.path.relpath(os.path.dirname(part), path).split(os.sep):
-        key, eq, _ = level.partition("=")
-        if eq:
-            schema = schema.add(key, LongType() if key == BATCH_DIR_KEY else StringType())
+    for key in _path_keys(path, part):
+        schema = schema.add(key, LongType() if key == BATCH_DIR_KEY else StringType())
     return schema
 
 
@@ -322,7 +328,6 @@ def read_current(
     spark: SparkSession,
     path: str,
     id_col: str | list[str] = "id",
-    stale_claim_seconds: float = STALE_CLAIM_SECONDS,
 ) -> DataFrame:
     """Dedup-on-read view: first-arrived row per id wins (D4 enabled — the
     reference commented this out, storage_manager.py:47-54).  Accepts a
@@ -342,50 +347,40 @@ def read_current(
     inference runs one per call).  Partition keys such as the review
     store's `place_id` read back as the strings that were written: "007"
     stays "007", where inference would read 7 while every id is numeric.
-    A store with no part file, or whose first part carries no Spark row
-    schema, falls back to `spark.read.parquet` (inference), whose
-    no-part-file errors `read_current_or_none` maps to None."""
-    pin = committed_seq_pin(path, stale_claim_seconds)
-    schema = _store_schema(path)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    df = reader.parquet(path)
-    if pin is not None and BATCH_DIR_KEY in df.columns:
+    A store with no part file raises FileNotFoundError naming the path
+    (`read_current_or_none` maps exactly that case to None), and one
+    whose first part carries no Spark row schema raises ValueError."""
+    pin = committed_seq_pin(path)
+    part = _first_part_file(path)
+    if part is None:
+        raise FileNotFoundError(f"store {path} has no part file (not created yet)")
+    df = spark.read.schema(_store_schema(path, part)).parquet(path)
+    if pin is not None:
         df = df.filter(F.col(BATCH_DIR_KEY) <= pin)  # partition-pruned
     keys = [id_col] if isinstance(id_col, str) else list(id_col)
     w = Window.partitionBy(*keys).orderBy(F.col(BATCH_COL).asc())
-    df = (
+    # the commit-unit partition key is physical layout, not data — hide it
+    return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .drop("__rn", BATCH_COL)
+        .drop("__rn", BATCH_COL, BATCH_DIR_KEY)
     )
-    # the commit-unit partition key is physical layout, not data — hide it
-    # (compacted stores have no batch_commit directories and no column)
-    if BATCH_DIR_KEY in df.columns:
-        df = df.drop(BATCH_DIR_KEY)
-    return df
 
 
-def compact(spark: SparkSession, path: str, out_path: str, id_col: str = "id",
-            partition_col: str | None = "place_id",
-            target_rows_per_file: int | None = None) -> None:
-    """Materialize the dedup-on-read view (periodic maintenance job).
-    `target_rows_per_file` additionally bounds output file sizes — a
-    store fed one file set per micro-batch accumulates small files
-    whose count, not bytes, dominates scan planning at 100 TB; the
-    maintenance pass is where that debt gets paid."""
-    cur = read_current(spark, path, id_col).withColumn(BATCH_COL, F.lit(0))
-    persisted = None
-    if target_rows_per_file:
-        from wellmeet_data_pipeline_spark.sinks.compact import evenly_sized
-
-        persisted = cur
-        cur, _ = evenly_sized(cur, target_rows_per_file)
-    writer = cur.write.mode("overwrite")
-    if partition_col:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(out_path)
-    if persisted is not None:
-        persisted.unpersist()
+def compact(spark: SparkSession, path: str, out_path: str, id_col: str | list[str] = "id") -> None:
+    """Materialize the dedup-on-read view into a NEW store (periodic
+    maintenance job): one `merge_append` of the view as batch 0,
+    partitioned by the source's partition key (read from its first part
+    file's path), so the output is an ordinary store that takes further
+    appends.  The view ends in a window exchange whose partitions AQE
+    coalesces, so a store fragmented into one file set per micro-batch
+    comes out as a few files.  A re-run into the same `out_path` (after a
+    crash, say) replays batch 0 like any explicit-seq retry.  Rewriting a
+    path while it is read is undefined on every object store: swap
+    readers to `out_path` instead."""
+    cur = read_current(spark, path, id_col)
+    keys = [k for k in _path_keys(path, _first_part_file(path)) if k != BATCH_DIR_KEY]
+    merge_append(cur, out_path, keys[0] if keys else None, batch_seq=0)
 
 
 def read_current_or_none(
@@ -393,23 +388,14 @@ def read_current_or_none(
     path: str,
     id_col: str | list[str] = "id",
 ):
-    """read_current with ONLY the store-not-yet-created cases mapped to
-    None: missing path, or an existing directory holding no parquet parts
-    (an all-filtered first batch under AQE can commit _SUCCESS with zero
-    files → UNABLE_TO_INFER_SCHEMA).  Everything else — transient
-    object-store errors, corrupt footers, permissions — PROPAGATES:
-    swallowing it would silently disable dedup for the batch and admit
-    duplicates permanently."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return read_current(spark, path, id_col)
-    except AnalysisException as e:
-        msg = str(e)
-        if (
-            "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-        ):
-            return None
-        raise
+    """read_current, or None exactly when the store is not created yet:
+    it has no part file (missing path, empty directory, only empty
+    claimed batches — an all-filtered first batch commits no part).
+    Decided on the driver from a directory listing, so a not-yet-created
+    store costs no Spark job.  Everything else — transient object-store
+    errors, corrupt footers, permissions — PROPAGATES: swallowing it
+    would silently disable dedup for the batch and admit duplicates
+    permanently."""
+    if _first_part_file(path) is None:
+        return None
+    return read_current(spark, path, id_col)

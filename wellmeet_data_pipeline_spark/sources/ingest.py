@@ -63,6 +63,9 @@ def incremental_ingest(
     order-dependent stop-at-first-seen loop (naver_crawler.py:243-247) so
     results don't depend on feed order.  Accepts a compound key — review
     identity is scoped per place ({place_id}.json in the reference), so
-    review ingest keys on (place_id, id), not the hash alone."""
+    review ingest keys on (place_id, id), not the hash alone.  J1
+    (restaurant-crawler.py:370-375) loads the seen keys into a Python set;
+    at scale the seen-set may itself be huge, so the join is NOT
+    unconditionally broadcast — Catalyst/AQE decides from size stats."""
     keys = [key] if isinstance(key, str) else list(key)
     return new_rows.join(existing_keys.select(*keys), keys, "left_anti")
