@@ -17,6 +17,7 @@ from wellmeet_data_pipeline_spark.operators.projections import (
     project_review_api_payload,
 )
 from wellmeet_data_pipeline_spark.operators.setops import union_all
+from wellmeet_data_pipeline_spark.sources.ingest import incremental_ingest
 
 
 def test_dedup_keep_first_is_deterministic(spark):
@@ -26,6 +27,14 @@ def test_dedup_keep_first_is_deterministic(spark):
     )
     out = {r["key"]: r["val"] for r in dedup_keep_first(df, "key", "seq").collect()}
     assert out == {"k1": "first", "k2": "only"}
+
+
+def test_anti_new_rows(spark):
+    # the J1 anti join of new places: incremental_ingest on a named key column
+    new = spark.createDataFrame([("a",), ("b",), ("c",)], "place_id string")
+    seen = spark.createDataFrame([("b",)], "place_id string")
+    got = {r["place_id"] for r in incremental_ingest(new, seen, "place_id").collect()}
+    assert got == {"a", "c"}
 
 
 def test_insert_if_absent_dedups_batch_then_filters(spark):

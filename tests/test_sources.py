@@ -56,11 +56,6 @@ def test_incremental_ingest_anti_join(spark):
     existing = spark.createDataFrame([("p1-1-0",), ("p1-1-2",)], "id string")
     got = {r["id"] for r in incremental_ingest(rows, existing).collect()}
     assert got == {"p1-1-1"}
-    # a named key column, as the J1 anti join of new places uses it
-    new = spark.createDataFrame([("a",), ("b",), ("c",)], "place_id string")
-    seen = spark.createDataFrame([("b",)], "place_id string")
-    got = {r["place_id"] for r in incremental_ingest(new, seen, "place_id").collect()}
-    assert got == {"a", "c"}
 
 
 def test_paginated_datasource(spark):
