@@ -127,6 +127,7 @@ def test_drain_raises_when_a_batch_fails(spark, tmp_path):
 _HELPER_CASES = [
     "unseen_missing_store",
     "unseen_zero_part_store",
+    "unseen_empty_claimed_batches",
     "unseen_one_key",
     "unseen_compound_key",
     "read_partials_before_commit",
@@ -141,13 +142,18 @@ def _helper_case(spark, store, case):
 
     frame = spark.createDataFrame([(1, "a"), (1, "b"), (2, "a")], "k long, v string")
     rows = lambda df: None if df is None else sorted(map(tuple, df.collect()))
-    if case == "unseen_missing_store":
-        return unseen(spark, frame, store, "k") is frame, True
     if case == "unseen_zero_part_store":
         # an all-filtered first batch can commit _SUCCESS and no part file
         os.makedirs(store)
         open(os.path.join(store, "_SUCCESS"), "w").close()
-        return unseen(spark, frame, store, ["k", "v"]) is frame, True
+    if case == "unseen_empty_claimed_batches":
+        for _ in range(2):
+            merge_append(frame.limit(0), store, partition_col=None, batch_seq=None)
+    if case in ("unseen_missing_store", "unseen_zero_part_store", "unseen_empty_claimed_batches"):
+        scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+        jobs = scheduler.nextJobId()
+        got = unseen(spark, frame, store, ["k", "v"]) is frame
+        return (got, scheduler.nextJobId() - jobs), (True, 0)
     stored = spark.createDataFrame([(1, "a", 9)], "k long, v string, extra int")
     if case == "unseen_one_key":
         merge_append(stored, store, partition_col=None, batch_seq=0)
@@ -172,12 +178,70 @@ def _helper_case(spark, store, case):
 
 @pytest.mark.parametrize("case", _HELPER_CASES)
 def test_partial_store_helpers(spark, tmp_path, case):
-    """unseen returns every row before the store's first commit (missing
-    or zero-part store) and anti-joins on one or a compound key after
+    """unseen returns the frame itself, with no Spark job, before the
+    store's first part file (a missing path, a zero-part directory, only
+    empty claimed batches) and anti-joins on one or a compound key after
     it; read_partials is None before the first commit and keeps one row
     per (keys, batch seq) after it."""
     got, want = _helper_case(spark, str(tmp_path / "store"), case)
     assert got == want
+
+
+def _keyset_case(spark, store, case):
+    """(frame, key, want) after building one store of
+    test_unseen_matches_first_wins_anti_join."""
+    from wellmeet_data_pipeline_spark.sinks.merge import claim_batch_seq, merge_append
+
+    rows = lambda data: spark.createDataFrame(data, "place_id string, id string, v string")
+    if case == "repeated_key":
+        merge_append(rows([("p1", "a", "v0")]), store, partition_col=None, batch_seq=0)
+        merge_append(rows([("p1", "a", "v1"), ("p2", "b", "v1")]), store, partition_col=None,
+                     batch_seq=1)
+        frame = rows([("p9", "a", "new"), ("p9", "b", "new"), ("p9", "c", "new")])
+        return frame, "id", [("p9", "c", "new")]
+    if case == "null_key":
+        merge_append(rows([("p1", None, "v0"), ("p1", "a", "v0")]), store, partition_col=None,
+                     batch_seq=0)
+        frame = rows([("p2", None, "new"), ("p2", "a", "new"), ("p2", "b", "new")])
+        return frame, "id", [("p2", None, "new"), ("p2", "b", "new")]
+    if case == "compound_key":
+        # the review store's layout: place_id is a partition key
+        merge_append(rows([("p1", "a", "v0"), ("p2", "b", "v0")]), store, batch_seq=0)
+        merge_append(rows([("p1", "a", "v1")]), store, batch_seq=1)
+        frame = rows([("p1", "a", "new"), ("p1", "b", "new"), ("p2", "a", "new"),
+                      ("p2", "b", "new")])
+        return frame, ["place_id", "id"], [("p1", "b", "new"), ("p2", "a", "new")]
+    # seq 0 is claimed by a live writer and not committed, so the pin
+    # stays below seq 1's committed batch: its keys are not stored yet
+    assert claim_batch_seq(store) == 0
+    assert merge_append(rows([("p1", "a", "v1")]), store, partition_col=None,
+                        batch_seq=None) == 1
+    frame = rows([("p1", "a", "new"), ("p1", "b", "new")])
+    return frame, "id", [("p1", "a", "new"), ("p1", "b", "new")]
+
+
+@pytest.mark.parametrize(
+    "case", ["repeated_key", "null_key", "compound_key", "uncommitted_claim_below_committed"]
+)
+def test_unseen_matches_first_wins_anti_join(spark, tmp_path, case):
+    """unseen anti-joins against the store's committed key set and
+    returns exactly the rows the anti-join against read_current's
+    first-wins view returns: a key repeated across batches, a NULL key
+    (never matched), a compound key over a partition column, and a
+    committed batch above the pin (invisible to both).  Its plan holds no
+    window; the view's does."""
+    from wellmeet_data_pipeline_spark.sinks.merge import read_current
+    from wellmeet_data_pipeline_spark.sources.ingest import incremental_ingest
+    from wellmeet_data_pipeline_spark.streaming.pipeline import unseen
+
+    store = str(tmp_path / "store")
+    frame, key, want = _keyset_case(spark, store, case)
+    got = unseen(spark, frame, store, key)
+    ref = incremental_ingest(frame, read_current(spark, store, id_col=key), key)
+    rows = lambda df: sorted(map(tuple, df.select(*frame.columns).collect()), key=repr)
+    assert rows(got) == rows(ref) == sorted(want, key=repr)
+    plan = lambda df: df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Window" not in plan(got) and "Window" in plan(ref)
 
 
 def test_merge_append_store_contract_is_structural():
@@ -933,6 +997,59 @@ def test_orchestration_fans_out_stored_places_without_done_mark(spark, tmp_path)
     assert sorted(r["place_id"] for r in revs.collect()) == ["d1", "d1", "d2", "d2", "p1", "p1"]
     assert _pending(spark, rest_store, backlog) == set()
 
+    # no new landing file, so no micro-batch runs: the activation still
+    # fetches a place discover_restaurants stored since the last one
+    discover_restaurants(spark, ["q"], search, rest_store, pages=3, batch_seq=1)
+    run_orchestration(spark, str(landing), rest_store, rev_store, ckpt, _review_fetcher(),
+                      backlog_store=backlog, max_keys_per_batch=2)
+    revs = read_current(spark, rev_store, id_col=["place_id", "id"])
+    assert sorted(r["place_id"] for r in revs.collect()) == [
+        "d1", "d1", "d2", "d2", "d3", "d3", "p1", "p1"]
+    assert _pending(spark, rest_store, backlog) == set()
+
+
+@pytest.mark.parametrize("new_places, cap, want_rounds", [
+    (2, 16, [2]),  # steady: the stream's short round is the only one
+    (5, 2, [2, 2, 1]),  # the stream's full round is drained on to a short one
+    (2, 2, [2, 0]),  # a full round is followed by one that finds nothing
+    (5, None, [5]),  # no cap: one round takes every pending place
+])
+def test_orchestration_stream_round_counts_as_a_drain_round(
+    spark, tmp_path, monkeypatch, new_places, cap, want_rounds
+):
+    """drain_backlog runs after the stream only when the stream's last
+    fan-out round took a full cap: a steady activation whose round is
+    short runs exactly one round, and one with more new places than the
+    cap still fetches every place."""
+    import wellmeet_data_pipeline_spark.streaming.orchestration as orch
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    rest_store, rev_store = str(tmp_path / "rest"), str(tmp_path / "rev")
+    ckpt, backlog = str(tmp_path / "ckpt"), str(tmp_path / "done")
+
+    def activate():
+        orch.run_orchestration(spark, str(landing), rest_store, rev_store, ckpt,
+                               _review_fetcher(), backlog_store=backlog, max_keys_per_batch=cap)
+
+    _drop(landing, "r0.json", [_rest("p0")])
+    activate()  # the stores exist from here on: the next activation is steady
+    rounds = []
+    real_fan_out = orch._fan_out
+
+    def spy_fan_out(*a, **kw):
+        rounds.append(real_fan_out(*a, **kw))
+        return rounds[-1]
+
+    monkeypatch.setattr(orch, "_fan_out", spy_fan_out)
+    places = [f"p1{i}" for i in range(new_places)]
+    _drop(landing, "r1.json", [_rest(p) for p in places])
+    activate()
+    assert rounds == want_rounds
+    revs = read_current(spark, rev_store, id_col=["place_id", "id"]).collect()
+    assert sorted(r["place_id"] for r in revs) == sorted(["p0", *places] * 2)
+    assert _pending(spark, rest_store, backlog) == set()
+
 
 def test_overflowing_activations_commit_each_review_batch_once(spark, tmp_path):
     """Drain rounds of two activations that each overflow the cap never
@@ -966,8 +1083,10 @@ def test_overflowing_activations_commit_each_review_batch_once(spark, tmp_path):
 
 def test_steady_orchestration_activation_job_budget(spark, tmp_path):
     """One steady activation — 4 one-restaurant files, cap 16 — runs at
-    most 17 Spark jobs.  Counted with the DAGScheduler's job counter:
-    job groups miss the jobs the stream's own thread launches."""
+    most 10 Spark jobs: the stream's short fan-out round is its only one,
+    and every store existence test reads a key set, not a first-wins
+    view.  Counted with the DAGScheduler's job counter: job groups miss
+    the jobs the stream's own thread launches."""
     from wellmeet_data_pipeline_spark.streaming.orchestration import run_orchestration
 
     landing = tmp_path / "landing"
@@ -982,7 +1101,7 @@ def test_steady_orchestration_activation_job_budget(spark, tmp_path):
                                      backlog_store=str(tmp_path / "done"), max_keys_per_batch=16)
         jobs = scheduler.nextJobId() - jobs_before
     assert sum(p.numInputRows for p in progress) == 4  # one scan of the batch
-    assert jobs <= 17, jobs
+    assert jobs <= 10, jobs
 
 
 def test_streaming_corpus_dsir_gate_drops_off_distribution_docs(spark, tmp_path):

@@ -47,6 +47,10 @@ key (`place_id`) as string.  A partition key therefore reads back as the
 string that was written, whatever ids the store holds.  A store with no
 part file is "not created yet": `read_current` raises for it and
 `read_current_or_none` returns None, both decided on the driver.
+
+`read_keys_or_none` shares `read_current`'s pinned, footer-schema scan
+but keeps only the key columns, with no window: an insert-if-absent
+anti-join needs which keys are present, not which row of each key wins.
 """
 
 from __future__ import annotations
@@ -324,6 +328,21 @@ def _store_schema(path: str, part: str) -> StructType:
     return schema
 
 
+def _committed_rows(spark: SparkSession, path: str) -> DataFrame | None:
+    """The pinned, footer-schema scan both readers start from: every
+    committed row up to `committed_seq_pin`, `BATCH_COL` and the
+    `batch_commit` partition key included; None, decided on the driver,
+    when the store has no part file."""
+    pin = committed_seq_pin(path)
+    part = _first_part_file(path)
+    if part is None:
+        return None
+    df = spark.read.schema(_store_schema(path, part)).parquet(path)
+    if pin is not None:
+        df = df.filter(F.col(BATCH_DIR_KEY) <= pin)  # partition-pruned
+    return df
+
+
 def read_current(
     spark: SparkSession,
     path: str,
@@ -350,13 +369,9 @@ def read_current(
     A store with no part file raises FileNotFoundError naming the path
     (`read_current_or_none` maps exactly that case to None), and one
     whose first part carries no Spark row schema raises ValueError."""
-    pin = committed_seq_pin(path)
-    part = _first_part_file(path)
-    if part is None:
+    df = _committed_rows(spark, path)
+    if df is None:
         raise FileNotFoundError(f"store {path} has no part file (not created yet)")
-    df = spark.read.schema(_store_schema(path, part)).parquet(path)
-    if pin is not None:
-        df = df.filter(F.col(BATCH_DIR_KEY) <= pin)  # partition-pruned
     keys = [id_col] if isinstance(id_col, str) else list(id_col)
     w = Window.partitionBy(*keys).orderBy(F.col(BATCH_COL).asc())
     # the commit-unit partition key is physical layout, not data — hide it
@@ -365,6 +380,18 @@ def read_current(
         .filter(F.col("__rn") == 1)
         .drop("__rn", BATCH_COL, BATCH_DIR_KEY)
     )
+
+
+def read_keys_or_none(spark: SparkSession, path: str, key: str | list[str]) -> DataFrame | None:
+    """The `key` columns of every committed row up to the pin, duplicates
+    included, or None when the store has no part file.  The key set
+    `read_current` would hold, without its first-wins window: which row
+    wins never changes which keys are present, so an existence test (an
+    anti-join) needs no shuffle of the store."""
+    df = _committed_rows(spark, path)
+    if df is None:
+        return None
+    return df.select(*([key] if isinstance(key, str) else key))
 
 
 def compact(spark: SparkSession, path: str, out_path: str, id_col: str | list[str] = "id") -> None:

@@ -17,7 +17,12 @@ with no done mark, so a crash anywhere after the store commit loses no
 crawl by construction.  A round collects at most `max_keys_per_batch`
 pending keys in place_id order — the only driver-side materialization
 — ingests their reviews (J1; K5's job-per-restaurant collapses into
-partition-per-key scheduling), then marks them done.
+partition-per-key scheduling), then marks them done.  Pending is an
+anti-join of key sets (`unseen` of the stored place_ids against the done
+marks), so a round reads neither store through its first-wins window.
+The stream's own round counts as a drain round: `drain_backlog` runs
+after the stream only when no micro-batch ran or the last round took a
+full cap.
 """
 
 from __future__ import annotations
@@ -34,7 +39,7 @@ from wellmeet_data_pipeline_spark.schemas import RESTAURANT
 from wellmeet_data_pipeline_spark.sinks.merge import (
     committed_seqs,
     merge_append,
-    read_current_or_none,
+    read_keys_or_none,
 )
 from wellmeet_data_pipeline_spark.streaming.pipeline import drain, landing_stream, unseen
 
@@ -56,10 +61,10 @@ def _fan_out(
     idempotent on (place_id, id)).  The round's seq lies above every
     batch either store has committed, so no round — a replay, or another
     activation's drain — ever commits into an existing batch directory."""
-    stored = read_current_or_none(spark, restaurant_store, id_col="place_id")
+    stored = read_keys_or_none(spark, restaurant_store, "place_id")
     if stored is None:
         return 0
-    pending = unseen(spark, stored.select("place_id"), backlog_store, "place_id")
+    pending = unseen(spark, stored.distinct(), backlog_store, "place_id")
     pending = pending.orderBy("place_id")
     if max_keys is not None:
         pending = pending.limit(max_keys)
@@ -83,7 +88,8 @@ def drain_backlog(
 ) -> None:
     """Fan out every pending place, one round of at most
     max_keys_per_batch keys (None: no cap) at a time, until a round
-    comes back short of the cap."""
+    comes back short of the cap: a short round took every place pending
+    when it read the stores, so nothing it could see is left."""
     if max_keys_per_batch is not None and max_keys_per_batch < 1:
         raise ValueError(f"max_keys_per_batch must be >= 1, got {max_keys_per_batch}")
     while _fan_out(
@@ -104,7 +110,7 @@ def run_orchestration(
     max_keys_per_batch: int | None = None,
 ) -> list[StreamingQueryProgress]:
     """availableNow activation of the whole §3.3 DAG; returns the
-    stream's progress (drain), read after the post-stream backlog drain.
+    stream's progress (drain), read after any post-stream backlog drain.
 
     Every place in `restaurant_store` owes one review crawl until
     `backlog_store` (a merge-append store of done marks) holds its
@@ -112,27 +118,33 @@ def run_orchestration(
     `max_keys_per_batch` bounds the one driver-side materialization (the
     key list driving the per-key review fan-out): each micro-batch
     ingests at most that many pending places and leaves the rest
-    pending, which later batches — and a final post-stream drain — keep
-    draining under the same cap.  None means no cap: a backfill-sized
+    pending, which later batches keep draining under the same cap.  The
+    stream's last round counts as a drain round, so `drain_backlog` runs
+    after the stream only when that round took a full cap, or when no
+    micro-batch ran (no new landing file: places another writer stored
+    still get their crawl).  None means no cap: a backfill-sized
     batch then builds a driver list proportional to the batch (the
     reference's one-Batch-job-per-restaurant loop has the same unbounded
     fan-out, lambda_function.py:145-183)."""
     if max_keys_per_batch is not None and max_keys_per_batch < 1:
         raise ValueError(f"max_keys_per_batch must be >= 1, got {max_keys_per_batch}")
     stream = landing_stream(spark, restaurant_landing_dir, RESTAURANT)
+    rounds: list[int] = []  # places each micro-batch's fan-out round took
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         valid = fill_rds_defaults(require_fields(batch_df, ["place_id", "name"]))
         valid = valid.dropDuplicates(["place_id"])
         fresh = unseen(spark, valid, restaurant_store, "place_id")
         merge_append(fresh, restaurant_store, partition_col=None, batch_seq=batch_id)
-        _fan_out(
+        rounds.append(_fan_out(
+            spark, restaurant_store, backlog_store, review_store, review_fetcher,
+            max_keys_per_batch,
+        ))
+
+    progress = drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
+    if not rounds or rounds[-1] == max_keys_per_batch:
+        drain_backlog(
             spark, restaurant_store, backlog_store, review_store, review_fetcher,
             max_keys_per_batch,
         )
-
-    progress = drain(stream.writeStream.foreachBatch(on_batch), checkpoint_dir)
-    drain_backlog(
-        spark, restaurant_store, backlog_store, review_store, review_fetcher, max_keys_per_batch
-    )
     return progress

@@ -21,8 +21,10 @@ micro-batches:
                     a replayed batch re-appends its own identity and
                     vanishes on read
   K2 insert-if-     unseen(frame, store, key): the rows whose key the
-     absent         store does not hold yet (left anti-join; the frame
-                    itself before the store's first commit)
+     absent         store does not hold yet (left anti-join against the
+                    store's committed key set, read with no first-wins
+                    window; the frame itself before the store's first
+                    commit)
   T5 backpressure   maxFilesPerTrigger replaces the [:10] caps and sleeps
   T6 late data      explicit watermark instead of the silent newest-first
                     assumption (naver_crawler.py:243-247); the rows it
@@ -44,6 +46,7 @@ from wellmeet_data_pipeline_spark.sinks.merge import (
     BATCH_COL,
     merge_append,
     read_current_or_none,
+    read_keys_or_none,
 )
 from wellmeet_data_pipeline_spark.sources.ingest import incremental_ingest
 
@@ -111,12 +114,14 @@ def unseen(
     spark: SparkSession, frame: DataFrame, store: str, key: str | list[str]
 ) -> DataFrame:
     """K2 insert-if-absent: the rows of `frame` whose `key` the store does
-    not hold yet (left anti-join against the first-wins view); `frame`
-    itself before the store's first commit."""
-    cur = read_current_or_none(spark, store, id_col=key)
-    if cur is None:
+    not hold yet — a left anti-join against the store's committed key set
+    (`read_keys_or_none`: the pinned scan of the key columns, no
+    first-wins window, since which row wins never changes which keys are
+    present); `frame` itself before the store's first commit."""
+    stored = read_keys_or_none(spark, store, key)
+    if stored is None:
         return frame
-    return incremental_ingest(frame, cur, key)
+    return incremental_ingest(frame, stored, key)
 
 
 def run_ingest_pipeline(
